@@ -52,7 +52,7 @@ object Clustering {
     * vectors on id (which would shuffle the whole corpus twice). */
   private def assignFull(emb: DataFrame, idCol: String, vecCol: String,
                          k: Int, iters: Int,
-                         trainSample: Int = 0): DataFrame = {
+                         trainSample: Int): DataFrame = {
     // Each Lloyd iteration re-scans only the TRAINING SAMPLE (persisted
     // and unpersisted inside trainCentroids); `base` itself is a cheap
     // projection read twice lazily (bottom-k scan + final assignment) —

@@ -203,7 +203,37 @@ object TsdbBlockWriter {
   private[tsdbblock] def writeBlockPresorted(dir: String,
       seriesIt: Iterator[SeriesData],
       compaction: CompactionMeta = CompactionMeta(),
-      maxTimeCeil: Option[Long] = None): (Long, Long, Long) = {
+      maxTimeCeil: Option[Long] = None): (Long, Long, Long) =
+    try assembleBlock(dir, seriesIt, compaction, maxTimeCeil)
+    catch {
+      // a block that failed mid-stream (a rejected series, a chunk ref
+      // past 4 GiB) must not stay behind for a reader to pick up
+      case t: Throwable => removePartialBlock(dir); throw t
+    }
+
+  /** Delete what [[assembleBlock]] writes, then the directory if that
+    * leaves it empty — a pre-existing directory's other files stay. */
+  private def removePartialBlock(dir: String): Unit =
+    Seq(Paths.get(dir, "chunks", "000001"), Paths.get(dir, "chunks"),
+        Paths.get(dir, "index"), Paths.get(dir, "tombstones"),
+        Paths.get(dir, "meta.json"), Paths.get(dir)).foreach { p =>
+      try Files.deleteIfExists(p)
+      catch { case _: java.nio.file.DirectoryNotEmptyException => () }
+    }
+
+  /** A chunk ref is `segment << 32 | offset` and every chunk goes to
+    * segment 0, so an offset past 32 bits would spill into the segment
+    * field and point the index at the wrong file — refuse it instead. */
+  private[sources] def chunkRef(offset: Long): Long = {
+    require(offset <= 0xFFFFFFFFL,
+      s"chunk offset $offset exceeds the 4 GiB a single chunks segment " +
+        "can address; write smaller blocks (a shorter block range)")
+    offset
+  }
+
+  private def assembleBlock(dir: String, seriesIt: Iterator[SeriesData],
+      compaction: CompactionMeta,
+      maxTimeCeil: Option[Long]): (Long, Long, Long) = {
     Files.createDirectories(Paths.get(dir, "chunks"))
 
     // ---- chunks segment 000001 (chunk refs carry segment INDEX 0:
@@ -220,7 +250,7 @@ object TsdbBlockWriter {
       putBytes(h.toBytes)
     }
     def putChunk(encoding: Int, data: Array[Byte]): Long = {
-      val ref = chunksOff // segment 0 in the high 32 bits
+      val ref = chunkRef(chunksOff) // segment 0 in the high 32 bits
       // CRC (Castagnoli) covers encoding byte + data
       val body = new Array[Byte](1 + data.length)
       body(0) = encoding.toByte
@@ -240,7 +270,7 @@ object TsdbBlockWriter {
     val metasBuf =
       scala.collection.mutable.ArrayBuffer.empty[Seq[ChunkMeta]]
     var numSamples = 0L
-    seriesIt.foreach { s =>
+    try seriesIt.foreach { s =>
       val metas = Seq.newBuilder[ChunkMeta]
       var off = 0
       while (off < s.ts.length) {
@@ -272,8 +302,7 @@ object TsdbBlockWriter {
       labelsBuf += s.labels
       metasBuf += sorted
       numSamples += s.ts.length.toLong + s.hists.size
-    }
-    chunksOut.close()
+    } finally chunksOut.close()
     val series = labelsBuf // skeleton view: labels by series position
     val chunkMetas = metasBuf
 

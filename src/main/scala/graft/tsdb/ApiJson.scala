@@ -59,9 +59,13 @@ object ApiJson {
       .filterNot(Set("t", TsdbSchema.TimeCol, TsdbSchema.ValueCol))
     val pair = concat(lit("["), tsSec(col("t")), lit(",\""),
       col(TsdbSchema.ValueCol).cast("string"), lit("\"]"))
-    rv.withColumn("_pair", struct(col("t"), pair.as("p")))
+    val grouped = rv.withColumn("_pair", struct(col("t"), pair.as("p")))
       .groupBy(labels.map(c => col(s"`$c`")): _*)
       .agg(array_sort(collect_list(col("_pair"))).as("_pairs"))
+    // a label-less frame aggregates globally, which yields one row even
+    // over no input — no samples is no series, not an empty one
+    if (labels.isEmpty) grouped.where(size(col("_pairs")) > 0)
+    else grouped
   }
 
   /** The time-sorted pair array of a [[matrixGrouped]] frame rendered

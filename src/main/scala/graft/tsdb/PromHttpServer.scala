@@ -67,6 +67,8 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
                            // reset detection sees the reset
                            createdZeroIngestion: Boolean = false) {
 
+  import PromHttpServer.{MixedTier, Rejection, Routed, UnsupportedHist}
+
   @volatile private var wide: DataFrame = initial
   private var server: HttpServer = _
   private val startedAt: Long = System.currentTimeMillis()
@@ -234,7 +236,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     * back empty). A per-selector split evaluation would need a mixed
     * vector merge the response shape doesn't carry. */
   private def routesToHistHead(ast: PromQL.Expr,
-                               allowNameless: Boolean = true): Boolean =
+                               allowNameless: Boolean): Boolean =
     histHead.nonEmpty && {
       val selNameMs = PromQL.selectorsOf(ast)
         .map(_.filter(m => m.name == "__name__" || m.name == "name"))
@@ -267,7 +269,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     * other straddling shape with the loud 422 mixed-tier error,
     * matching Prometheus's own refusal to combine a histogram and a
     * float sample arithmetically. */
-  private[tsdb] def straddlesTiers(e: PromQL.Expr): Boolean =
+  private def straddlesTiers(e: PromQL.Expr): Boolean =
     histHead.nonEmpty && {
       val tiers = PromQL.selectorsOf(e)
         .map(_.filter(m => m.name == "__name__" || m.name == "name"))
@@ -369,7 +371,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       floatOnlyStored(nameMs).nonEmpty
   }
 
-  private[tsdb] def anySelectorSpans(e: PromQL.Expr): Boolean =
+  private def anySelectorSpans(e: PromQL.Expr): Boolean =
     histHead.nonEmpty && PromQL.selectorsOf(e).exists(selectorSpansStores)
 
   /** Whether a BARE selector must read BOTH stores — the union gate
@@ -382,8 +384,8 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     *   - a NAMELESS selector (`{job="x"}`) when a hist head exists —
     *     both stores hold matching series (previously it silently
     *     read only the float store).
-    * The float share is per-series time-shadowed ([[floatShareInstant]]
-    * /[[floatShareRange]]), so the union can never double-count. */
+    * The float share is per-series time-shadowed ([[Span.floatShare]]),
+    * so the union can never double-count. */
   private def selectorUnionsStores(ms: Seq[graft.model.Matcher]): Boolean =
     histHead.nonEmpty && {
       val nameMs = ms.filter(m => m.name == "__name__" || m.name == "name")
@@ -399,8 +401,8 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     * names, unmigrated series of a partially-migrated name, and
     * pre-migration history) serves. The mixed-type AGGREGATION paths
     * no longer stop at this raw-axis carve: their float share is the
-    * PER-STEP carved selector frame ([[floatShareInstant]]/
-    * [[floatShareRange]], re-entered through [[PromQL.aggFrame]]), so
+    * PER-STEP carved selector frame ([[Span.floatShare]], re-entered
+    * through [[PromQL.aggFrame]]), so
     * the former staleness-boundary residual (a step within lookback
     * after a series' migration seeing its last pre-migration sample —
     * a spurious mixed group for sum/avg, a one-lookback double count
@@ -600,9 +602,8 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
 
   /** The BOTH-STORES test for a bare selector inside a shaped
     * expression: spanning name matchers, or a nameless selector some
-    * native series may match ([[namelessMayMatchHist]]). Shared by
-    * [[mixedAggShape]] and [[spanningShaped]] so the gate and the
-    * evaluator can never disagree. */
+    * native series may match ([[namelessMayMatchHist]]) — the leaf
+    * test of [[spanningShaped]]. */
   private def shapedBothStores(arg: PromQL.Expr): Option[PromQL.Selector] =
     arg match {
       case s @ PromQL.Selector(ms, None, _, _)
@@ -650,118 +651,6 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     "irate", "idelta", "changes", "resets", "deriv", "predict_linear",
     "holt_winters", "double_exponential_smoothing", "last_over_time",
     "first_over_time", "ts_of_last_over_time", "ts_of_first_over_time")
-
-  /** SHAPED expressions over ONE selector SPANNING both stores —
-    * Prometheus 3's mixed-type semantics for the well-defined shapes:
-    * sum/avg per-group exclusive ([[exclusiveShares]]), count additive
-    * ([[PromQLHist.combineCountShares]]), min/max/topk/bottomk rank
-    * the float share and skip histograms with an info annotation
-    * (emitted only when the hist share actually had rows, as
-    * Prometheus annotates). None = not a supported spanning shape —
-    * the caller 422s. */
-  /** Mixed-type-aggregation SHAPES over a selector reading BOTH
-    * stores: the spanning name-matcher case, and the NAMELESS bare
-    * selector (`sum({job="x"})` — both stores hold matching series;
-    * float-only evaluation silently dropped the native share, the
-    * same class one axis over). `by` and `without` grouping forms are
-    * twins throughout — Prometheus 3 applies the same mixed-type rule
-    * to both (the `without` arm used to 422, a pinned gap, closed). */
-  private[tsdb] def mixedAggShape(e: PromQL.Expr): Boolean = {
-    def bothStores(arg: PromQL.Expr): Boolean =
-      shapedBothStores(arg).nonEmpty
-    e match {
-      case PromQL.AggBy("sum" | "avg" | "count" | "min" | "max" |
-          "group" | "stddev" | "stdvar", _, arg, None) =>
-        bothStores(arg)
-      case PromQL.AggBy("quantile", _, arg, Some(_)) => bothStores(arg)
-      case PromQL.AggWithout("sum" | "avg" | "count" | "min" | "max" |
-          "group" | "stddev" | "stdvar", _, arg, None) =>
-        bothStores(arg)
-      case PromQL.AggWithout("quantile", _, arg, Some(_)) =>
-        bothStores(arg)
-      case PromQL.RankK("topk" | "bottomk" | "limitk", _, arg, _, _) =>
-        bothStores(arg)
-      case PromQL.LimitRatio(_, arg) => bothStores(arg)
-      case PromQL.Fn("sort" | "sort_desc" | "absent", arg, _) =>
-        bothStores(arg)
-      case PromQL.CountValues(_, arg, _, _) => bothStores(arg)
-      // SUBQUERY inners over a both-stores bare selector — must gate
-      // BEFORE the range-selector arms (those commit on the op name)
-      case PromQL.Fn(op, arg, _)
-          if subqueryBothStores(arg).nonEmpty &&
-            (op == "count_over_time" || op == "present_over_time" ||
-              op == "sum_over_time" || op == "avg_over_time" ||
-              SubqueryFloatInfoOps(op) || SubqueryFloatWarnOps(op)) =>
-        true
-      // the over-time WINDOW family — the same silent class one axis
-      // over (the range window instead of the instant lookback):
-      // `absent_over_time({user="x"}[5m])` evaluated on the float
-      // tier alone answered 1 while native samples filled the window
-      case PromQL.Fn("count_over_time" | "present_over_time" |
-          "absent_over_time", arg, _) =>
-        shapedBothStoresRange(arg).nonEmpty
-      // type-EXCLUSIVE range shapes: each tier evaluates its own
-      // share, a (series, window) with both kinds drops + warning
-      case PromQL.Fn("sum_over_time" | "avg_over_time" | "rate" |
-          "increase" | "delta", arg, _) =>
-        shapedBothStoresRange(arg).nonEmpty
-      // type-PRESERVING raw-sample picks: winner by sample time
-      case PromQL.Fn("last_over_time" | "first_over_time" |
-          "ts_of_last_over_time" | "ts_of_first_over_time", arg, _) =>
-        shapedBothStoresRange(arg).nonEmpty
-      // float-only range shapes: histogram samples skipped + info
-      // (Prometheus's rule) or excluded + warning (engine pin)
-      case PromQL.Fn(op, arg, _)
-          if FloatOnlyOverTime(op) || FloatWarnOverTime(op) =>
-        shapedBothStoresRange(arg).nonEmpty
-      // VECTOR-SCALAR wrappers recurse: `count_over_time({user="x"}
-      // [5m]) > 3` — every alert's shape — must read both stores
-      // exactly like its inner shape; the wrapper was the last silent
-      // float-only reading (the float rows take scalarOp, histogram
-      // rows scale under * and /, and skip + info elsewhere). A
-      // wrapped BARE both-stores selector (`{user="x"} > 5`) counts
-      // too — the union frame filters per kind.
-      case PromQL.BinOp(_, _, l, PromQL.ScalarLit(_), _, _, _, _) =>
-        mixedAggShape(l) || shapedBothStores(l).nonEmpty
-      case PromQL.BinOp(_, _, PromQL.ScalarLit(_), r, _, _, _, _) =>
-        mixedAggShape(r) || shapedBothStores(r).nonEmpty
-      // VALUE MAPS (`abs({user="x"})`, `clamp`, the clock/trig
-      // family) recurse too: the float share maps, histogram samples
-      // skip + info (Prometheus's rule; `timestamp` would compute on
-      // histograms — excluded + warning, pinned: the hist selector
-      // frame carries no sample time)
-      case PromQL.Fn(op, arg, _) if ValueMapOverMixed(op) =>
-        mixedAggShape(arg) || shapedBothStores(arg).nonEmpty
-      // LABEL transforms (`label_replace`/`label_join`) and the
-      // sort_by_label pair are payload-AGNOSTIC row transforms: they
-      // apply to the stitched union verbatim
-      case PromQL.StrFn(_, arg, _) =>
-        mixedAggShape(arg) || shapedBothStores(arg).nonEmpty
-      // SET OPS between lattice-evaluable and/or PURELY-FLOAT sides:
-      // `{user="x"} or {user="y"}`, `{user="x"} unless float_maint` —
-      // previously the float tier evaluated the whole expression and
-      // the native share vanished from every side (the straddlesTiers
-      // split path only catches NAME-resolved mixing)
-      case PromQL.SetOp(_, _, l, r, _) =>
-        def latticeSide(x: PromQL.Expr): Boolean =
-          mixedAggShape(x) || shapedBothStores(x).nonEmpty
-        (latticeSide(l) || latticeSide(r)) &&
-          (latticeSide(l) || pureFloatSide(l)) &&
-          (latticeSide(r) || pureFloatSide(r))
-      // VECTOR-VECTOR binops between FLOAT-VALUED sides — the SLO
-      // shape (`count_over_time(a[5m]) / on(k) count_over_time(
-      // b[5m])`): each side composes through the lattice (or a
-      // complete float reading), the keyed one-to-one kernel joins
-      // them. Group modifiers stay out (the split lattice's rule).
-      case PromQL.BinOp(_, _, l, r, _, "", _, Seq())
-          if !l.isInstanceOf[PromQL.ScalarLit] &&
-            !r.isInstanceOf[PromQL.ScalarLit] =>
-        def side(x: PromQL.Expr): Boolean =
-          mixedFloatRule(x) || pureFloatSide(x)
-        (mixedFloatRule(l) || mixedFloatRule(r)) && side(l) && side(r)
-      case _ => false
-    }
-  }
 
   /** A side whose FLOAT-TIER evaluation is the complete truth: every
     * selector is name-bearing and resolves to NO pushed-native metric
@@ -842,32 +731,42 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     TsdbSchema.alignLabelSpellings(hv, fv).unionByName(
       TsdbSchema.alignLabelSpellings(fv, hv), allowMissingColumns = true)
 
-  /** The mixed-type evaluator behind [[mixedAggShape]]. The FLOAT
-    * share of every shape re-enters the float tier's pre-evaluated-
-    * frame kernels ([[PromQL.aggFrame]]/[[PromQL.rankFrame]]/
+  /** The mixed-type evaluator: Prometheus 3's semantics for SHAPED
+    * expressions over a selector reading BOTH stores (a spanning name
+    * matcher, or a nameless selector some native series may match).
+    * The FLOAT share of every shape re-enters the float tier's pre-
+    * evaluated-frame kernels ([[PromQL.aggFrame]]/[[PromQL.rankFrame]]/
     * [[PromQL.instantFn]]) over the selector's PER-STEP carved share
-    * ([[floatShareInstant]]/[[floatShareRange]], via `floatSel`):
-    * store ownership is decided at each evaluation step's offset-
-    * resolved reference time, so a pre-migration float sample still
-    * inside lookback of a post-migration step drops EXACTLY — the
-    * raw-axis input carve ([[floatShareView]]) left a one-lookback
-    * residual that spuriously marked sum/avg groups mixed and
-    * double-counted `count` (round-18 judge item, closed). */
-  private def spanningShaped(e: PromQL.Expr,
-      evalHist: PromQL.Expr => DataFrame,
-      floatSel: PromQL.Selector => DataFrame,
-      absentFn: PromQL.Selector => DataFrame,
-      floatEval: PromQL.Expr => DataFrame,
-      absentBoth: (DataFrame, DataFrame) => DataFrame,
-      floatSubFold: (String, PromQL.Subquery, Seq[Double]) => DataFrame)
+    * ([[Span.floatShare]]): store ownership is decided at each
+    * evaluation step's offset-resolved reference time, so a
+    * pre-migration float sample still inside lookback of a
+    * post-migration step drops EXACTLY — the raw-axis input carve
+    * ([[floatShareView]]) left a one-lookback residual that spuriously
+    * marked sum/avg groups mixed and double-counted `count`. None = not
+    * a shape this lattice composes; [[route]] decides what that means.
+    * `by` and `without` grouping forms are twins throughout. */
+  private def spanningShaped(e: PromQL.Expr, span: Span)
       : Option[(DataFrame, Seq[String], Seq[String])] = {
-    def rec(x: PromQL.Expr) = spanningShaped(x, evalHist, floatSel,
-      absentFn, floatEval, absentBoth, floatSubFold)
-    def histHasRows(arg: PromQL.Expr): Boolean = !evalHist(arg).isEmpty
+    def rec(x: PromQL.Expr) = spanningShaped(x, span)
+    // the two sides of a binary shape: at least one composes through
+    // `side` (the lattice); a side that does not is admitted only when
+    // its float-tier reading is complete ([[pureFloatSide]]) — with no
+    // lattice side at all the expression is not a mixed shape
+    def latticePair(l: PromQL.Expr, r: PromQL.Expr,
+        side: PromQL.Expr => Option[(DataFrame, Seq[String], Seq[String])]) = {
+      val (ls, rs) = (side(l), side(r))
+      def orFloat(x: PromQL.Expr,
+                  s: Option[(DataFrame, Seq[String], Seq[String])]) =
+        s.orElse(
+          if (pureFloatSide(x)) Some((span.floatEval(x), Nil, Nil)) else None)
+      if (ls.isEmpty && rs.isEmpty) None
+      else for (a <- orFloat(l, ls); b <- orFloat(r, rs)) yield (a, b)
+    }
+    def histHasRows(arg: PromQL.Expr): Boolean = !span.hist(arg).isEmpty
     def floatAgg(sel: PromQL.Selector, op: String,
                  by: Option[Seq[String]], without: Option[Seq[String]],
                  param: Option[Double]): DataFrame =
-      PromQL.aggFrame(floatSel(sel), op, by, without, param)
+      PromQL.aggFrame(span.floatShare(sel), op, by, without, param)
     // (aggregation op, grouping, selector) for the by/without twins —
     // Prometheus 3 applies the same mixed-type rule to both forms
     def aggShape(x: PromQL.Expr): Option[(String, Option[Seq[String]],
@@ -884,11 +783,11 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
         val (op, by, without, param, sel) = aggShapeE.get
         (op, param) match {
           case ("sum" | "avg", None) =>
-            val (out, mixedWarn) = exclusiveShares(evalHist(e),
+            val (out, mixedWarn) = exclusiveShares(span.hist(e),
               floatAgg(sel, op, by, without, None))
             Some((out, mixedWarn, Nil))
           case ("count", None) =>
-            Some((PromQLHist.combineCountShares(evalHist(e),
+            Some((PromQLHist.combineCountShares(span.hist(e),
               floatAgg(sel, "count", by, without, None)), Nil, Nil))
           case ("min" | "max" | "stddev" | "stdvar", None) =>
             Some((floatAgg(sel, op, by, without, None), Nil,
@@ -907,19 +806,19 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
               case _ => e // unreachable: aggShape matched
             }
             Some((PromQLHist.combineCountShares(
-                evalHist(histCount),
+                span.hist(histCount),
                 floatAgg(sel, "count", by, without, None))
               .withColumn(TsdbSchema.ValueCol, lit(1.0)), Nil, Nil))
           case _ => None
         }
       case PromQL.RankK(op @ ("topk" | "bottomk"), k, arg, by, w) =>
         shapedBothStores(arg).map { sel =>
-          (PromQL.rankFrame(floatSel(sel), op, k, by, w), Nil,
+          (PromQL.rankFrame(span.floatShare(sel), op, k, by, w), Nil,
             if (histHasRows(sel)) skippedInfo(op) else Nil)
         }
       case PromQL.Fn(op @ ("sort" | "sort_desc"), arg, params) =>
         shapedBothStores(arg).map { sel =>
-          (PromQL.instantFn(op, floatSel(sel), params, 0L), Nil,
+          (PromQL.instantFn(op, span.floatShare(sel), params, 0L), Nil,
             if (histHasRows(sel)) skippedInfo(op) else Nil)
         }
       // the TYPE-AGNOSTIC samplers run over the stitched UNION
@@ -929,25 +828,25 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       case PromQL.RankK("limitk", k, arg, by, w) =>
         shapedBothStores(arg).map { sel =>
           (PromQLHist.limitKFrame(
-            unionShares(evalHist(sel), floatSel(sel)), k, by, w),
+            unionShares(span.hist(sel), span.floatShare(sel)), k, by, w),
             Nil, Nil)
         }
       case PromQL.LimitRatio(r, arg) =>
         shapedBothStores(arg).map { sel =>
           (PromQLHist.limitRatioFrame(
-            unionShares(evalHist(sel), floatSel(sel)), r), Nil, Nil)
+            unionShares(span.hist(sel), span.floatShare(sel)), r), Nil, Nil)
         }
       // absent over a both-stores selector: 1 exactly when NEITHER
       // store has a matching sample — the float tier alone answered
       // absent = 1 for nameless selectors whose native series exist
       // (silently wrong, the alerting primitive inverted)
       case PromQL.Fn("absent", arg, _) =>
-        shapedBothStores(arg).map { sel => (absentFn(sel), Nil, Nil) }
+        shapedBothStores(arg).map { sel => (span.absent(sel), Nil, Nil) }
       // count_values consumes float values only — Prometheus 3 skips
       // the histogram share with the info annotation
       case PromQL.CountValues(lbl, arg, by, w) =>
         shapedBothStores(arg).map { sel =>
-          (PromQL.countValuesFrame(floatSel(sel), lbl, by, w), Nil,
+          (PromQL.countValuesFrame(span.floatShare(sel), lbl, by, w), Nil,
             if (histHasRows(sel)) skippedInfo("count_values") else Nil)
         }
       // the sample-type-AGNOSTIC window family over a both-stores
@@ -970,36 +869,36 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       // window-family composition on the subquery GRID: the float
       // share's inner evaluates per grid step through the per-step
       // carved union axis (the evalRangeFn hook behind
-      // `floatSubFold`), so a straddling series contributes each grid
+      // [[Span.subqueryFold]]), so a straddling series contributes each grid
       // point from exactly ONE store and the boundary step never
       // double-counts. These cases must precede the range-selector
       // arms below (those commit on the op name).
       case fn @ PromQL.Fn("count_over_time", arg, params)
           if subqueryBothStores(arg).nonEmpty =>
-        Some((PromQLHist.combineSeriesShares(evalHist(fn),
-          floatSubFold("count_over_time", subqueryBothStores(arg).get,
+        Some((PromQLHist.combineSeriesShares(span.hist(fn),
+          span.subqueryFold("count_over_time", subqueryBothStores(arg).get,
             params), how = "sum"), Nil, Nil))
       case PromQL.Fn("present_over_time", arg, params)
           if subqueryBothStores(arg).nonEmpty =>
         // the hist tier folds subquery COUNTS — presence is the count
         // clamped to 1 (its own range-selector rule)
-        val hPresent = evalHist(PromQL.Fn("count_over_time", arg, Nil))
+        val hPresent = span.hist(PromQL.Fn("count_over_time", arg, Nil))
           .withColumn(TsdbSchema.ValueCol, lit(1.0))
         Some((PromQLHist.combineSeriesShares(hPresent,
-          floatSubFold("present_over_time", subqueryBothStores(arg).get,
+          span.subqueryFold("present_over_time", subqueryBothStores(arg).get,
             params), how = "max"), Nil, Nil))
       case fn @ PromQL.Fn(op @ ("sum_over_time" | "avg_over_time"),
           arg, params) if subqueryBothStores(arg).nonEmpty =>
         val (out, mixed) = PromQLHist.exclusiveSeriesShares(
-          evalHist(fn),
-          floatSubFold(op, subqueryBothStores(arg).get, params))
+          span.hist(fn),
+          span.subqueryFold(op, subqueryBothStores(arg).get, params))
         Some((out, if (mixed) mixedRangeWarning else Nil, Nil))
       case PromQL.Fn(op, arg, params)
           if subqueryBothStores(arg).nonEmpty &&
             (SubqueryFloatInfoOps(op) || SubqueryFloatWarnOps(op)) =>
-        val histHas = !evalHist(
+        val histHas = !span.hist(
           PromQL.Fn("count_over_time", arg, Nil)).isEmpty
-        val f = floatSubFold(op, subqueryBothStores(arg).get, params)
+        val f = span.subqueryFold(op, subqueryBothStores(arg).get, params)
         if (SubqueryFloatWarnOps(op))
           Some((f, if (histHas) excludedNativeWarning(op) else Nil,
             Nil))
@@ -1007,17 +906,17 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
           Some((f, Nil, if (histHas) skippedInfo(op) else Nil))
       case fn @ PromQL.Fn("count_over_time", arg, _) =>
         shapedBothStoresRange(arg).map { _ =>
-          (PromQLHist.combineSeriesShares(evalHist(fn), floatEval(fn),
+          (PromQLHist.combineSeriesShares(span.hist(fn), span.floatEval(fn),
             how = "sum"), Nil, Nil)
         }
       case fn @ PromQL.Fn("present_over_time", arg, _) =>
         shapedBothStoresRange(arg).map { _ =>
-          (PromQLHist.combineSeriesShares(evalHist(fn), floatEval(fn),
+          (PromQLHist.combineSeriesShares(span.hist(fn), span.floatEval(fn),
             how = "max"), Nil, Nil)
         }
       case fn @ PromQL.Fn("absent_over_time", arg, _) =>
         shapedBothStoresRange(arg).map { _ =>
-          (absentBoth(evalHist(fn), floatEval(fn)), Nil, Nil)
+          (span.absentBoth(span.hist(fn), span.floatEval(fn)), Nil, Nil)
         }
       // type-EXCLUSIVE range shapes (sum/avg_over_time fold whole
       // histograms, rate/increase apply bucket-level reset detection,
@@ -1031,7 +930,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
           "increase" | "delta", arg, _) =>
         shapedBothStoresRange(arg).map { _ =>
           val (out, mixed) = PromQLHist.exclusiveSeriesShares(
-            evalHist(fn), floatEval(fn))
+            span.hist(fn), span.floatEval(fn))
           (out, if (mixed) mixedRangeWarning else Nil, Nil)
         }
       // type-PRESERVING raw-sample picks over a both-stores selector:
@@ -1047,8 +946,8 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
           val ts = PromQL.Fn(
             if (op == "last_over_time") "ts_of_last_over_time"
             else "ts_of_first_over_time", arg, Nil)
-          (PromQLHist.pickByTimeShares(evalHist(fn), evalHist(ts),
-            floatEval(fn), floatEval(ts),
+          (PromQLHist.pickByTimeShares(span.hist(fn), span.hist(ts),
+            span.floatEval(fn), span.floatEval(ts),
             latest = op == "last_over_time"), Nil, Nil)
         }
       // the ts_of extractors are sample-type-AGNOSTIC (the timestamp
@@ -1058,7 +957,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       case fn @ PromQL.Fn(op @ ("ts_of_last_over_time" |
           "ts_of_first_over_time"), arg, _) =>
         shapedBothStoresRange(arg).map { _ =>
-          (PromQLHist.combineSeriesShares(evalHist(fn), floatEval(fn),
+          (PromQLHist.combineSeriesShares(span.hist(fn), span.floatEval(fn),
             how = if (op == "ts_of_last_over_time") "max" else "min",
             keepName = true), Nil, Nil)
         }
@@ -1071,13 +970,13 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       case fn @ PromQL.Fn(op, arg, _)
           if FloatOnlyOverTime(op) || FloatWarnOverTime(op) =>
         shapedBothStoresRange(arg).map { sel =>
-          val histHas = !evalHist(
+          val histHas = !span.hist(
             PromQL.Fn("count_over_time", sel, Nil)).isEmpty
           if (FloatWarnOverTime(op))
-            (floatEval(fn),
+            (span.floatEval(fn),
               if (histHas) excludedNativeWarning(op) else Nil, Nil)
           else
-            (floatEval(fn), Nil,
+            (span.floatEval(fn), Nil,
               if (histHas) skippedInfo(op) else Nil)
         }
       // VECTOR-SCALAR wrappers recurse into the lattice —
@@ -1132,29 +1031,21 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
         rec(arg).map { case (df, w, i) =>
           (PromQL.strFn(name, df, strs), w, i)
         }
-      // VECTOR-VECTOR binops between float-valued sides: compose each
-      // side, strip any (empty-by-contract) histogram column, and
-      // join through the float tier's keyed one-to-one kernel; the
-      // sides' annotations ride out
+      // VECTOR-VECTOR binops between FLOAT-VALUED sides — the SLO
+      // shape (`count_over_time(a[5m]) / on(k) count_over_time(b[5m])`):
+      // at least one side composes through the lattice to a float
+      // frame, the other too or is a complete float reading
+      // ([[pureFloatSide]]); the float tier's keyed one-to-one kernel
+      // joins them and the sides' annotations ride out. Group
+      // modifiers stay out (the split lattice's rule).
       case PromQL.BinOp(op, onK, l, r, bool, "", ign, Seq())
           if !l.isInstanceOf[PromQL.ScalarLit] &&
             !r.isInstanceOf[PromQL.ScalarLit] =>
-        def side(x: PromQL.Expr)
-            : Option[(DataFrame, Seq[String], Seq[String])] =
-          rec(x).orElse(
-            if (pureFloatSide(x)) Some((floatEval(x), Nil, Nil))
-            else None)
-        def floatOnly(df: DataFrame): DataFrame =
-          if (df.columns.contains(PromQLHist.HistCol))
-            df.where(col(PromQLHist.HistCol).isNull)
-              .drop(PromQLHist.HistCol)
-          else df
+        def floatSide(x: PromQL.Expr) = rec(x)
+          .filterNot(_._1.columns.contains(PromQLHist.HistCol))
         for {
-          (ld0, lw, li) <- side(l)
-          (rd0, rw, ri) <- side(r)
+          ((ld, lw, li), (rd, rw, ri)) <- latticePair(l, r, floatSide)
         } yield {
-          val ld = floatOnly(ld0)
-          val rd = floatOnly(rd0)
           val extra = Seq("bucket", "t").filter(c =>
             ld.columns.contains(c) && rd.columns.contains(c))
           (PromQL.binOpFrames(op, onK, ign, ld, rd, bool, extra),
@@ -1162,308 +1053,274 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
         }
       // SET OPS: the membership joins are payload-agnostic
       // ([[PromQLHist.setOpFrames]]), so union frames, float frames
-      // and composed mixed results all compose directly; a side the
-      // lattice cannot evaluate is admitted only when its float-tier
-      // reading is complete ([[pureFloatSide]])
+      // and composed mixed results all compose directly
+      // (`{user="x"} or {user="y"}`, `{user="x"} unless float_maint`)
       case PromQL.SetOp(op, on, l, r, ign) =>
-        def side(x: PromQL.Expr)
-            : Option[(DataFrame, Seq[String], Seq[String])] =
-          rec(x).orElse(
-            if (pureFloatSide(x)) Some((floatEval(x), Nil, Nil))
-            else None)
         for {
-          (ld, lw, li) <- side(l)
-          (rd, rw, ri) <- side(r)
+          ((ld, lw, li), (rd, rw, ri)) <- latticePair(l, r, rec)
         } yield (PromQLHist.setOpFrames(op, ld, rd, on, ign),
           lw ++ rw, li ++ ri)
       // a BARE both-stores selector under a wrapper: the stitched
       // union frame itself (the router's bare case, reachable here
       // only through the recursion above)
       case s: PromQL.Selector if shapedBothStores(s).nonEmpty =>
-        Some((unionShares(evalHist(s), floatSel(s)), Nil, Nil))
+        Some((unionShares(span.hist(s), span.floatShare(s)), Nil, Nil))
       case _ => None
     }
   }
 
-  private def spanningShapedInstant(e: PromQL.Expr, at: Long)
-      : Option[(DataFrame, Seq[String], Seq[String])] =
-    spanningShaped(e,
-      a => PromQLHist.evalStrict(a, histHead.get, at, lookbackMs,
-        histNLes),
-      s => floatShareInstant(s, at),
-      // absent, instant form: the union's emptiness probed IN-PLAN
-      // (count-agg gate, the float tier's own absent shape) — a
-      // single `{<Eq-matcher labels>} 1` row iff both stores match
-      // nothing at the resolved instant
-      s => {
-        val u = unionShares(
-          PromQLHist.evalStrict(s, histHead.get, at, lookbackMs,
-            histNLes),
-          floatShareInstant(s, at))
+  /** Where one expression evaluates: the instant `start` (`step` 0,
+    * `end` = `start`) or the grid `start`..`end` by `step`, over a
+    * shadow-carved float view and a lookback. The query endpoints pass
+    * the served head ([[floatShareView]]) and the server lookback; the
+    * rules tier passes its group's accumulated view (wide + earlier
+    * recorded-rule samples). Every store read of [[route]] and its
+    * evaluators goes through here, so one evaluator serves the instant
+    * endpoint, the range endpoint and the rules tier. */
+  private final class Span(val start: Long, val end: Long, val step: Long,
+                           val floatView: DataFrame, val lb: Long) {
+    def instant: Boolean = step == 0L
+
+    /** `e` on the native-histogram head. Instant: un-anchored range
+      * selectors pin `@ start` ([[PromQLHist.evalStrict]]), so
+      * rate/…_over_time select a real window. */
+    def hist(e: PromQL.Expr): DataFrame =
+      if (instant)
+        PromQLHist.evalStrict(e, histHead.get, start, lb, histNLes)
+      else
+        PromQLHist.evalRange(e, histHead.get, start, end, step, lb,
+          histNLes)
+
+    /** `e` on the float view — the float tier's own answer. */
+    def float(e: PromQL.Expr): DataFrame =
+      if (instant)
+        PromQL.evalStrict(e, floatView, start, lb, start = start,
+          end = start)
+      else PromQL.evalRange(e, floatView, start, end, step, lb)
+
+    def floatEval(e: PromQL.Expr): DataFrame = PromQL.toValueShape(float(e))
+
+    /** The offset/@-resolved sample reference time of a selector —
+      * [[PromQL.resolveAt]] (the evaluators' own `@` rule) shifted by
+      * the selector's offset. With an `@` anchor every step samples ONE
+      * pinned window, so the reference is the resolved constant;
+      * without, an instant samples at `start − offset` and each grid
+      * step `t` at `t − offset`. */
+    def sampleRef(s: PromQL.Selector): Column =
+      if (s.atMod.nonEmpty)
+        lit(PromQL.resolveAt(s.atMod, end, start, end) - s.offsetMs)
+      else if (instant) lit(start - s.offsetMs)
+      else col("t") - s.offsetMs
+
+    /** The float store's share of a both-stores selector: the selector
+      * evaluated on the float view MINUS the rows native series SHADOW
+      * — per SERIES and per TIME ([[Shadowing.dropShadowed]]): a
+      * migrated series keeps its float history at evaluation steps
+      * BEFORE its first native sample (the native store has nothing
+      * there) and yields to the native store from that step on;
+      * never-migrated series (float-only names, or unmigrated label
+      * sets of a migrated name) serve in full. Exactly remote read's
+      * shadowing rule, so the two surfaces return the same sample set.
+      *
+      * The shadow axis is the selector's reference time
+      * ([[sampleRef]]), not the bare evaluation step: the evaluators
+      * sample the window (refT − lookback, refT], so store ownership is
+      * decided at refT. Shadowing on the step itself silently emptied
+      * `migrated_m offset 1w` queried from inside the ownership window
+      * and double-counted dual writes when an @ anchor resolved into
+      * the native band from a step outside it.
+      *
+      * BOTH carve axes apply: the INPUT is the sample-axis carved view
+      * (an in-band dual-write float is a shadow PERMANENTLY, exactly as
+      * remote read and the raw matrices treat it), and the OUTPUT
+      * filters per reference time (a pre-migration sample still inside
+      * lookback of an owned step must yield to the native store). */
+    def floatShare(s: PromQL.Selector): DataFrame =
+      dropShadowedFrame(floatEval(s), sampleRef(s))
+
+    /** `absent` over a both-stores selector: a `{<Eq-matcher labels>} 1`
+      * row wherever BOTH stores match nothing — an instant probes the
+      * union's emptiness in-plan (the float tier's own absent shape), a
+      * grid anti-joins the union's present steps. */
+    def absent(s: PromQL.Selector): DataFrame = {
+      val u = unionShares(hist(s), floatShare(s))
+      if (instant)
         u.agg(count(lit(1)).as("_n")).where(col("_n") === 0)
-          .select(lit(at).as(TsdbSchema.TimeCol) +:
+          .select(lit(start).as(TsdbSchema.TimeCol) +:
             PromQL.absentLabelCols(s) :+
             lit(1.0d).as(TsdbSchema.ValueCol): _*)
-      },
-      x => PromQL.toValueShape(PromQL.evalStrict(x, floatShareView, at,
-        lookbackMs, start = at, end = at)),
-      // absent_over_time, instant form: each tier's own absent frame
-      // is its store's emptiness probe (≤ 1 row) — the window is
-      // absent overall iff BOTH probes fired
-      (hA, fA) => if (hA.isEmpty) fA.limit(0) else fA,
-      // subquery folds: the float share's inner grid evaluates over
-      // the carved view AND the per-step ownership axis (the same
-      // reference-time rule as floatShareRange — the inner selector's
-      // offset/@ resolve through sampleRefRange)
-      (op, sq, params) => PromQL.subqueryFold(op, sq.arg, sq.rangeMs,
-        sq.stepMs,
-        sqEnd = PromQL.resolveAt(sq.atMod, at, at, at) - sq.offsetMs,
-        floatShareView, lookbackMs, params,
-        evalRangeFn = (x, w, s0, e0, st0, lb0) =>
-          dropShadowedFrame(PromQL.toValueShape(
-            PromQL.evalRange(x, w, s0, e0, st0, lb0)),
-            x match {
-              case s: PromQL.Selector => sampleRefRange(s, s0, e0)
-              case _ => col("t")
-            })))
-
-  private[tsdb] def spanningShapedRange(e: PromQL.Expr, start: Long,
-                                        end: Long, step: Long)
-      : Option[(DataFrame, Seq[String], Seq[String])] =
-    spanningShapedRangeOver(e, start, end, step, floatShareView,
-      lookbackMs)
-
-  /** [[spanningShapedRange]] over an EXPLICIT (already shadow-carved)
-    * float view and lookback — the RULES tier evaluates the same
-    * lattice against the group's accumulated view (wide + earlier
-    * recorded-rule samples), exactly like the split-tier path. */
-  private def spanningShapedRangeOver(e: PromQL.Expr, start: Long,
-      end: Long, step: Long, carvedFloat: DataFrame, lb: Long)
-      : Option[(DataFrame, Seq[String], Seq[String])] =
-    spanningShaped(e,
-      a => PromQLHist.evalRange(a, histHead.get, start, end, step,
-        lb, histNLes),
-      s => dropShadowedFrame(PromQL.toValueShape(
-        PromQL.evalRange(s, carvedFloat, start, end, step, lb)),
-        sampleRefRange(s, start, end)),
-      // absent, range form: grid anti-join against the union's
-      // present steps (the float tier's per-step absent shape)
-      s => {
-        val u = unionShares(
-          PromQLHist.evalRange(s, histHead.get, start, end, step,
-            lb, histNLes),
-          dropShadowedFrame(PromQL.toValueShape(
-            PromQL.evalRange(s, carvedFloat, start, end, step, lb)),
-            sampleRefRange(s, start, end)))
-        val nSteps = (end - start) / step
-        spark.range(nSteps + 1)
+      else
+        spark.range((end - start) / step + 1)
           .select((lit(start) + col("id") * step).as("t"))
           .join(u.select(col("t")).distinct(), Seq("t"), "left_anti")
           .select(col("t") +: PromQL.absentLabelCols(s) :+
             lit(1.0d).as(TsdbSchema.ValueCol): _*)
-      },
-      x => PromQL.toValueShape(PromQL.evalRange(x, carvedFloat,
-        start, end, step, lb)),
-      // absent_over_time, range form: each tier's per-step absent
-      // frame lists ITS store's empty steps — keep the steps BOTH
-      // tiers report (grid-sized semi join)
-      (hA, fA) => fA.join(hA.select(col("t")).distinct(), Seq("t"),
-        "left_semi"),
-      // subquery folds, range mode: an @-anchored subquery pins to ONE
-      // fold exploded across the grid (the float tier's own rule);
-      // un-anchored folds fan inner points to covering outer steps
-      (op, sq, params) => {
-        val hook: (PromQL.Expr, DataFrame, Long, Long, Long, Long) =>
-            DataFrame = (x, w, s0, e0, st0, lb0) =>
-          dropShadowedFrame(PromQL.toValueShape(
-            PromQL.evalRange(x, w, s0, e0, st0, lb0)),
-            x match {
-              case s: PromQL.Selector => sampleRefRange(s, s0, e0)
-              case _ => col("t")
-            })
-        sq.atMod match {
-          case Some(_) =>
-            val t0 = PromQL.resolveAt(sq.atMod, end, start, end)
-            PromQL.subqueryFold(op, sq.arg, sq.rangeMs, sq.stepMs,
-              sqEnd = t0 - sq.offsetMs, carvedFloat, lb, params, hook)
-              .withColumn("t",
-                explode(sequence(lit(start), lit(end), lit(step))))
-          case None =>
-            PromQL.subqueryFoldRange(op, sq.arg, sq.rangeMs, sq.stepMs,
-              sq.offsetMs, carvedFloat, start, end, step, lb, params,
-              hook)
-        }
-      })
-
-  /** STATIC mirror of the [[splitEval]] lattice: can `x` evaluate
-    * through split-tier decomposition, and — when `needFloat` — to a
-    * FLOAT-valued frame? The RULES tier gates on this BEFORE running
-    * a plan (the health=err rendering needs the answer statically):
-    * an alert / recording value must be a float vector, while an
-    * and/unless MEMBERSHIP side may be any shape (set ops never
-    * consult values); `or` APPENDS right-side rows, so for `or` the
-    * right side inherits the float requirement — a histogram-valued
-    * right side would leak NULL-value rows + a hist column into the
-    * float-only rules machinery (round-17 review find). Covers the
-    * silencing pattern (`histogram_count(native) > 3 unless
-    * on(instance) maintenance_mode`) and the flat split-tier float
-    * arithmetic class (`histogram_count(native) / float_m > 0.5`). */
-  private[tsdb] def splitEvaluable(x: PromQL.Expr, needFloat: Boolean): Boolean =
-    x match {
-      case _ if !straddlesTiers(x) && !anySelectorSpans(x) =>
-        if (routesToHistHead(x, allowNameless = false))
-          PromQLHist.floatEvaluable(x) ||
-            (!needFloat && PromQLHist.histEvaluable(x))
-        else true // the float tier evaluates (or rejects loudly)
-      case PromQL.SetOp(op, _, l, r, _) =>
-        splitEvaluable(l, needFloat) &&
-          splitEvaluable(r, needFloat = needFloat && op == "or")
-      case PromQL.BinOp(_, _, l, PromQL.ScalarLit(_), _, "", _, Seq()) =>
-        splitEvaluable(l, needFloat = true)
-      case PromQL.BinOp(_, _, PromQL.ScalarLit(_), r, _, "", _, Seq()) =>
-        splitEvaluable(r, needFloat = true)
-      case PromQL.BinOp(op, _, l, r, bool, "", _, Seq()) =>
-        def histValuedSide(y: PromQL.Expr): Boolean =
-          !straddlesTiers(y) && !anySelectorSpans(y) &&
-            routesToHistHead(y, allowNameless = false) &&
-            PromQLHist.histEvaluable(y) && !PromQLHist.floatEvaluable(y)
-        (splitEvaluable(l, needFloat = true) &&
-          splitEvaluable(r, needFloat = true)) ||
-          (!needFloat && !bool && (op == "*" || op == "/") &&
-            histValuedSide(l) && splitEvaluable(r, needFloat = true)) ||
-          (!needFloat && !bool && op == "*" &&
-            histValuedSide(r) && splitEvaluable(l, needFloat = true))
-      case _ => false
     }
 
-  /** A straddling rule the rules tier CAN evaluate split-tier to a
-    * float vector — everything else straddling stays health=err. */
-  private[tsdb] def splittableRule(e: PromQL.Expr): Boolean =
-    straddlesTiers(e) && !anySelectorSpans(e) &&
-      splitEvaluable(e, needFloat = true)
+    /** `absent_over_time` from each tier's own absent frame: absent
+      * overall where BOTH tiers report absence — an instant's frames
+      * are emptiness probes (≤ 1 row), a grid keeps the steps both
+      * tiers list (grid-sized semi join). */
+    def absentBoth(hA: DataFrame, fA: DataFrame): DataFrame =
+      if (instant) { if (hA.isEmpty) fA.limit(0) else fA }
+      else fA.join(hA.select(col("t")).distinct(), Seq("t"), "left_semi")
 
-  /** A rule expression the MIXED lattice evaluates to a FLOAT-ONLY
-    * vector — the rules tier routes these through
-    * [[spanningShapedRangeOver]] instead of the float view alone
-    * (where `absent_over_time({user="x"}[5m])` answered 1 while
-    * native samples filled the window — the alerting primitive
-    * inverted INSIDE an alert, the query endpoints' round-19 class on
-    * the rules axis). Float-only by construction: a COMPARISON
-    * wrapper over any lattice shape (histogram rows skip), or a
-    * directly float-valued mixed shape (count/group/presence/absence/
-    * ts_of/count_values and the float-share+annotation family).
-    * Shapes whose result can carry histogram rows (sum/avg, limitk,
-    * rate, the raw picks) keep their existing routing — the rules
-    * machinery is float-valued. */
-  private[tsdb] def mixedFloatRule(e: PromQL.Expr): Boolean = e match {
-    case PromQL.BinOp(op, _, l, PromQL.ScalarLit(_), _, _, _, _)
-        if CmpOpSet(op) =>
-      mixedAggShape(l) || shapedBothStores(l).nonEmpty
-    case PromQL.BinOp(op, _, PromQL.ScalarLit(_), r, _, _, _, _)
-        if CmpOpSet(op) =>
-      mixedAggShape(r) || shapedBothStores(r).nonEmpty
-    case PromQL.BinOp(_, _, l, PromQL.ScalarLit(_), _, _, _, _) =>
-      mixedFloatRule(l)
-    case PromQL.BinOp(_, _, PromQL.ScalarLit(_), r, _, _, _, _) =>
-      mixedFloatRule(r)
-    case PromQL.AggBy("count" | "group" | "min" | "max" | "stddev" |
-        "stdvar" | "quantile", _, _, _) => mixedAggShape(e)
-    case PromQL.AggWithout("count" | "group" | "min" | "max" |
-        "stddev" | "stdvar" | "quantile", _, _, _) => mixedAggShape(e)
-    case PromQL.RankK("topk" | "bottomk", _, _, _, _) =>
-      mixedAggShape(e)
-    case PromQL.Fn("sort" | "sort_desc" | "absent" | "count_over_time" |
-        "present_over_time" | "absent_over_time" |
-        "ts_of_last_over_time" | "ts_of_first_over_time", _, _) =>
-      mixedAggShape(e)
-    case PromQL.CountValues(_, _, _, _) => mixedAggShape(e)
-    case PromQL.Fn(op, _, _)
-        if FloatOnlyOverTime(op) || FloatWarnOverTime(op) =>
-      mixedAggShape(e)
-    // value maps always emit a FLOAT-only frame (histogram rows skip)
-    case PromQL.Fn(op, _, _) if ValueMapOverMixed(op) =>
-      mixedAggShape(e)
-    // label transforms preserve payloads: float-valued iff the inner is
-    case PromQL.StrFn(_, arg, _) => mixedFloatRule(arg)
-    // set ops keep the LEFT side's rows (`and`/`unless`) or both
-    // (`or`): float-valued when the kept side(s) are
-    case PromQL.SetOp(op, _, l, r, _) =>
-      mixedAggShape(e) && {
-        def fl(x: PromQL.Expr): Boolean =
-          mixedFloatRule(x) || pureFloatSide(x)
-        if (op == "or") fl(l) && fl(r) else fl(l)
-      }
-    // vector-vector binops: the gate only admits float-valued sides
-    case PromQL.BinOp(_, _, l, r, _, "", _, Seq())
-        if !l.isInstanceOf[PromQL.ScalarLit] &&
-          !r.isInstanceOf[PromQL.ScalarLit] =>
-      mixedAggShape(e)
-    // subquery folds in the float-warn bucket are float-valued too
-    // (rate/last/… — the float share answers, annotated)
-    case PromQL.Fn(op, arg, _)
-        if subqueryBothStores(arg).nonEmpty &&
-          SubqueryFloatWarnOps(op) =>
-      mixedAggShape(e)
-    case _ => false
+    /** A float-share subquery fold: the inner grid evaluates over the
+      * carved view AND the per-step ownership axis (the inner
+      * selector's offset/@ resolve through [[sampleRef]]). On a grid
+      * an @-anchored subquery pins to ONE fold exploded across the grid
+      * (the float tier's own rule); un-anchored folds fan inner points
+      * to covering outer steps. */
+    def subqueryFold(op: String, sq: PromQL.Subquery,
+                     params: Seq[Double]): DataFrame = {
+      val hook: (PromQL.Expr, DataFrame, Long, Long, Long, Long) =>
+          DataFrame = (x, w, s0, e0, st0, lb0) =>
+        dropShadowedFrame(PromQL.toValueShape(
+          PromQL.evalRange(x, w, s0, e0, st0, lb0)),
+          x match {
+            case s: PromQL.Selector =>
+              new Span(s0, e0, st0, w, lb0).sampleRef(s)
+            case _ => col("t")
+          })
+      if (instant || sq.atMod.nonEmpty) {
+        val fold = PromQL.subqueryFold(op, sq.arg, sq.rangeMs, sq.stepMs,
+          sqEnd = PromQL.resolveAt(sq.atMod, end, start, end) - sq.offsetMs,
+          floatView, lb, params, hook)
+        if (instant) fold
+        else fold.withColumn("t",
+          explode(sequence(lit(start), lit(end), lit(step))))
+      } else
+        PromQL.subqueryFoldRange(op, sq.arg, sq.rangeMs, sq.stepMs,
+          sq.offsetMs, floatView, start, end, step, lb, params, hook)
+    }
   }
 
-  /** The float store's share of a both-stores selector: the selector
-    * evaluated on the wide head MINUS the rows native series SHADOW —
-    * per SERIES and per TIME ([[Shadowing.dropShadowed]]): a migrated
-    * series keeps its float history at evaluation steps BEFORE its
-    * first native sample (the native store has nothing there) and
-    * yields to the native store from that step on; never-migrated
-    * series (float-only names, or unmigrated label sets of a migrated
-    * name) serve in full. Exactly remote read's shadowing rule, so the
-    * two surfaces return the same sample set.
-    *
-    * The shadow axis is the selector's OFFSET/@-RESOLVED sample
-    * reference time ([[sampleRefInstant]]/[[sampleRefRange]]), not the
-    * bare evaluation step: the evaluators sample the window
-    * (refT − lookback, refT] with refT = (@ anchor | step) − offset,
-    * so store ownership is decided at refT. Shadowing on the step
-    * itself silently emptied `migrated_m offset 1w` queried from
-    * inside the ownership window (the pre-migration float sample
-    * dropped although the native store has nothing there) and
-    * double-counted dual writes when an @ anchor resolved into the
-    * native band from a step outside it (round-18 judge find).
-    *
-    * BOTH carve axes apply: the INPUT is the sample-axis carved view
-    * ([[floatShareView]] — an in-band dual-write float is a shadow
-    * PERMANENTLY, exactly as remote read and the raw matrices treat
-    * it; evaluating over the raw store would let it serve as the
-    * "latest" sample at a post-rollback step where remote read at
-    * the same resolved window never returns it), and the OUTPUT
-    * filters per reference time (a pre-migration sample still inside
-    * lookback of an owned step must yield to the native store). */
-  private def floatShareInstant(s: PromQL.Selector, at: Long): DataFrame =
-    dropShadowedFrame(PromQL.toValueShape(
-      PromQL.evalStrict(s, floatShareView, at, lookbackMs,
-        start = at, end = at)),
-      sampleRefInstant(s, at))
-
-  private def floatShareRange(s: PromQL.Selector, start: Long, end: Long,
-                              step: Long): DataFrame =
-    dropShadowedFrame(PromQL.toValueShape(
-      PromQL.evalRange(s, floatShareView, start, end, step, lookbackMs)),
-      sampleRefRange(s, start, end))
-
-  /** The offset/@-resolved sample reference time of a selector at the
-    * instant endpoint — [[PromQL.resolveAt]] (the evaluators' own `@`
-    * rule; start() ≡ end() ≡ the instant there) shifted by the
-    * selector's offset. A plain selector resolves to `at` itself. */
-  private def sampleRefInstant(s: PromQL.Selector, at: Long): Column =
-    lit(PromQL.resolveAt(s.atMod, at, at, at) - s.offsetMs)
-
-  /** Range-mode twin: with an `@` anchor every step samples ONE pinned
-    * window, so the reference time is the resolved constant; without,
-    * each grid step `t` samples at `t − offset`. */
-  private def sampleRefRange(s: PromQL.Selector, start: Long,
-                             end: Long): Column = s.atMod match {
-    case Some(_) =>
-      lit(PromQL.resolveAt(s.atMod, end, start, end) - s.offsetMs)
-    case None => col("t") - s.offsetMs
+  /** THE routing decision, made once for the query endpoints and the
+    * rules tier alike: which store answers `ast` — the float store, the
+    * native-histogram head, or both under Prometheus 3's mixed-type
+    * rules — evaluated over `span`. The evaluators are their own gates:
+    * [[spanningShaped]] and [[splitEval]] answer None for a shape they
+    * cannot compose, the hist tier throws its IllegalArgumentException
+    * for one it cannot build. Left = a typed rejection — a
+    * straddling/spanning expression with no well-defined composition
+    * (mixed-tier), or a native-only expression the hist tier has no
+    * reading for (unsupported-hist): evaluating either on one store
+    * would answer silently partial or silently empty. */
+  private def route(ast: PromQL.Expr, span: Span)
+      : Either[Rejection, Routed] = {
+    def answer(t: (DataFrame, Seq[String], Seq[String])) =
+      Routed(t._1, t._2, t._3)
+    ast match {
+      // no native head: the float tier answers alone, no Spark job first
+      case _ if histHead.isEmpty => oneStore(ast, span)
+      // a BARE selector reading BOTH stores (spanning name matchers, a
+      // MIGRATED metric with float history, or a nameless selector with
+      // a hist head): the union of both stores' vectors (`value` and
+      // `histogram` entries side by side; the float share per-series
+      // time-shadowed, so a migrated series answers float history
+      // before its first native sample, native after, never both)
+      case s @ PromQL.Selector(ms, None, _, _) if selectorUnionsStores(ms) =>
+        Right(Routed(span.hist(s).unionByName(span.floatShare(s),
+          allowMissingColumns = true), Nil, Nil))
+      // ...and its RAW-SAMPLES twin at the instant endpoint: both
+      // stores' raw matrices, the float share shadowed on the SAMPLE
+      // time axis — exactly remote read's rule
+      case s @ PromQL.Selector(ms, Some(_), _, _)
+          if span.instant && selectorUnionsStores(ms) =>
+        val at = span.start
+        Right(Routed(PromQLHist.rawRange(s, histHead.get, at, at, at)
+          .unionByName(dropShadowedFrame(PromQL.rawRange(s, wide, at, at,
+            at), col("t")), allowMissingColumns = true), Nil, Nil))
+      // SHAPED expressions over a SPANNING selector: the mixed-type
+      // lattice where well-defined, everything else rejected loudly
+      case _ if anySelectorSpans(ast) =>
+        spanningShaped(ast, span).map(answer).toRight(MixedTier)
+      // MULTI-OPERAND expressions whose selectors STRADDLE the stores
+      // decompose through the split-tier lattice, each leaf on ITS OWN
+      // store (a migrated metric's hist leaf evaluates native-only, the
+      // excluded float share rides as the warning); whole-expression
+      // routing would answer silently PARTIAL
+      case _ if straddlesTiers(ast) =>
+        splitEval(ast, span).map(Routed(_, migrationWarnings(ast), Nil))
+          .toRight(MixedTier)
+      // NAMELESS shapes over both stores (`sum({job="x"})`,
+      // `count_over_time({user="x"}[5m]) > 3`) compose through the
+      // mixed lattice; anything it does not compose reads one store
+      case _ =>
+        spanningShaped(ast, span).map(r => Right(answer(r)))
+          .getOrElse(oneStore(ast, span))
+    }
   }
+
+  /** [[route]] for an expression that reads ONE store: the hist head
+    * when every name-bearing selector resolves to a pushed-native
+    * metric (nameless only under a histogram_* call,
+    * [[namelessHistOk]]), else the float view. */
+  private def oneStore(ast: PromQL.Expr, span: Span)
+      : Either[Rejection, Routed] = {
+    val toHist = routesToHistHead(ast, allowNameless = false)
+    // a native answer carries the unstitched-migration warning: a
+    // migrated metric's float share is not in it
+    def native(df: DataFrame, infos: Seq[String] = Nil) =
+      Right(Routed(df, migrationWarnings(ast), infos))
+    def plain(df: DataFrame) = Right(Routed(df, Nil, Nil))
+    val at = span.start
+    ast match {
+      // a BARE range selector at the instant endpoint — Prometheus's
+      // RAW-SAMPLES query (`m[5m]`, what Grafana Explore and promtool
+      // issue when debugging): the matched samples with their ORIGINAL
+      // timestamps, as a matrix
+      case s @ PromQL.Selector(_, Some(_), _, _) if span.instant =>
+        if (toHist)
+          plain(PromQLHist.rawRange(s, histHead.get, at, at, at))
+        else plain(PromQL.rawRange(s, span.floatView, at, at, at))
+      // a BARE subquery (`expr[1h:5m]`) at the instant endpoint: the
+      // inner evaluated on the subquery's absolute grid — a matrix
+      case sq: PromQL.Subquery if span.instant =>
+        val inner = sq.arg
+        if ((PromQLHist.histEvaluable(inner) ||
+            PromQLHist.floatEvaluable(inner)) &&
+            routesToHistHead(inner, allowNameless = namelessHistOk(inner)))
+          native(PromQLHist.subqueryMatrix(sq, histHead.get, at, span.lb,
+            histNLes))
+        else if (toHist) Left(UnsupportedHist)
+        else plain(PromQL.subqueryMatrix(sq, span.floatView, at, span.lb,
+          start = at, end = at))
+      // hist-tier FLOAT-valued shapes (the histogram_* scalar family,
+      // count aggregations, and vector-scalar ops over them — every
+      // histogram alert's shape) evaluate over the PUSHED native head
+      // (Prometheus prefers the native histogram over classic buckets);
+      // nameless selectors only when the expression bottoms out in a
+      // histogram_* call (a nameless count or bare selector has a
+      // float reading and stays there)
+      case _ if PromQLHist.floatEvaluable(ast) &&
+          routesToHistHead(ast, allowNameless = namelessHistOk(ast)) =>
+        native(span.hist(ast))
+      case _ if !toHist => plain(span.float(ast))
+      // HISTOGRAM-valued shapes (bare selector / rate / sum / avg over a
+      // pushed-native metric) answer in the API's native-histogram form
+      case _ if PromQLHist.histEvaluable(ast) => native(span.hist(ast))
+      // `group` over a pure-native vector is type-AGNOSTIC: one row per
+      // group, value 1 — the hist count reshaped
+      case PromQL.AggBy("group", by, garg, None)
+          if PromQLHist.histEvaluable(garg) =>
+        native(span.hist(PromQL.AggBy("count", by, garg, None))
+          .withColumn(TsdbSchema.ValueCol, lit(1.0)))
+      // value-ranked/statistic shapes over a pure-native vector:
+      // Prometheus 3 SKIPS histogram samples — the empty vector + info
+      case _ if rankedOverHist(ast).nonEmpty =>
+        native(emptyVector, skippedInfo(rankedOverHist(ast).get))
+      // every name-bearing selector resolves to the hist head but no
+      // hist-tier reading exists: the float tier has no series for the
+      // metric, so evaluating there would answer an empty 200
+      case _ => Left(UnsupportedHist)
+    }
+  }
+
+  /** A float vector with no rows (instant or grid shape alike). */
+  private def emptyVector: DataFrame =
+    spark.range(0).select(col("id").as("t"),
+      col("id").cast("double").as(TsdbSchema.ValueCol))
 
   /** [[Shadowing.dropShadowed]] over a WIDE float frame, keyed on its
     * label columns, against the cached per-series since table.
@@ -1475,10 +1332,10 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     Shadowing.dropShadowed(fv, Shadowing.skeyOfWide(fv), evalTime,
       seriesSinceFrame)
 
-  /** The split-tier evaluation LATTICE, shared by the instant and
-    * range endpoints ([[sideInstant]]/[[sideRange]] instantiate it):
-    * a STRADDLING expression decomposes recursively through the
-    * shapes whose cross-store composition is well-defined —
+  /** The split-tier evaluation LATTICE for an expression whose
+    * selectors STRADDLE the two stores (one name pushed-native, one
+    * float/classic): it decomposes recursively through the shapes
+    * whose cross-store composition is well-defined —
     *   - set ops (pure label membership, [[PromQLHist.setOpFrames]]);
     *   - binary ops whose recursively-evaluated sides are BOTH
     *     float-valued ([[PromQL.binOpFrames]] — the
@@ -1490,14 +1347,13 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     *     operand (`histogram_count(native) / float_m > 0.5`) via
     *     [[PromQL.scalarOp]] —
     * and a NON-straddling node evaluates whole on its own store (the
-    * same gates as whole-expression routing). None = no well-defined
-    * composition (genuinely mixed-VALUE arithmetic, a spanning
-    * selector inside, an unsupported hist shape) — the caller 422s. */
-  private def splitEval(e: PromQL.Expr,
-      evalHist: PromQL.Expr => DataFrame,
-      evalFloat: PromQL.Expr => DataFrame,
-      rec: PromQL.Expr => Option[DataFrame],
-      extra: Seq[String]): Option[DataFrame] = {
+    * same gates as whole-expression routing). On a range span the
+    * shared grid column `t` joins the match keys. None = no
+    * well-defined composition (genuinely mixed-VALUE arithmetic, a
+    * spanning selector inside, an unsupported hist shape). */
+  private def splitEval(e: PromQL.Expr, span: Span): Option[DataFrame] = {
+    def rec(x: PromQL.Expr) = splitEval(x, span)
+    val extra = if (span.instant) Nil else Seq("t")
     def hasVal(df: DataFrame): Boolean =
       df.columns.contains(TsdbSchema.ValueCol) &&
         !df.columns.contains(PromQLHist.HistCol)
@@ -1534,41 +1390,13 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       case _ if straddlesTiers(e) || anySelectorSpans(e) => None
       case _ =>
         if (routesToHistHead(e, allowNameless = namelessHistOk(e)) &&
-            PromQLHist.floatEvaluable(e)) Some(evalHist(e))
+            PromQLHist.floatEvaluable(e)) Some(span.hist(e))
         else if (routesToHistHead(e, allowNameless = false) &&
-            PromQLHist.histEvaluable(e)) Some(evalHist(e))
+            PromQLHist.histEvaluable(e)) Some(span.hist(e))
         else if (routesToHistHead(e, allowNameless = false)) None
-        else Some(evalFloat(e))
+        else Some(span.floatEval(e))
     }
   }
-
-  /** Evaluate a (possibly straddling) expression for the INSTANT
-    * endpoint through the [[splitEval]] lattice. */
-  private def sideInstant(e: PromQL.Expr, at: Long): Option[DataFrame] =
-    splitEval(e,
-      he => PromQLHist.evalStrict(he, histHead.get, at, lookbackMs,
-        histNLes),
-      fe => PromQL.toValueShape(
-        PromQL.evalStrict(fe, floatShareView, at, lookbackMs,
-          start = at, end = at)),
-      rec = x => sideInstant(x, at), extra = Nil)
-
-  /** [[sideInstant]]'s query_range twin — each side on its own tier,
-    * the shared grid column `t` joins the match keys downstream.
-    * `floatView`/`lb` let the RULES tier substitute its accumulated
-    * view (wide + earlier recorded samples) and lookback — the
-    * query endpoints use the served head and server lookback. */
-  private[tsdb] def sideRange(e: PromQL.Expr, start: Long, end: Long,
-                              step: Long, floatView: DataFrame = wide,
-                              lb: Long = lookbackMs): Option[DataFrame] =
-    splitEval(e,
-      he => PromQLHist.evalRange(he, histHead.get, start, end, step,
-        lb, histNLes),
-      fe => PromQL.toValueShape(
-        PromQL.evalRange(fe, shadowCarved(floatView), start, end, step,
-          lb)),
-      rec = x => sideRange(x, start, end, step, floatView, lb),
-      extra = Seq("t"))
 
   /** Serialize an instant vector of ANY value shape: histogram rows
     * via the `histogram` response field, float rows via `value` — a
@@ -1578,9 +1406,9 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     * plan (limit n+1, so the collect stays limit-bounded, never
     * universe-bounded) and surfaced as the truncation warning. */
   private def vectorResponse(ex: HttpExchange, iv0: DataFrame, at: Long,
-                             limit: Option[Int] = None,
-                             warnings: Seq[String] = Nil,
-                             infos: Seq[String] = Nil): Unit = {
+                             limit: Option[Int],
+                             warnings: Seq[String],
+                             infos: Seq[String]): Unit = {
     import spark.implicits._
     def take(df: DataFrame): Array[String] =
       limit.filter(_ > 0).fold(df)(n => df.limit(n + 1))
@@ -1615,9 +1443,9 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
 
   /** [[vectorResponse]]'s matrix twin for query_range results. */
   private def matrixResponse(ex: HttpExchange, rv: DataFrame,
-                             limit: Option[Int] = None,
-                             warnings: Seq[String] = Nil,
-                             infos: Seq[String] = Nil): Unit = {
+                             limit: Option[Int],
+                             warnings: Seq[String],
+                             infos: Seq[String]): Unit = {
     import spark.implicits._
     def take(df: DataFrame): Array[String] =
       limit.filter(_ > 0).fold(df)(n => df.limit(n + 1))
@@ -1690,8 +1518,8 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
   private def respondCapped(ex: HttpExchange, resultType: String,
                             rows: Array[String],
                             limit: Option[Int],
-                            warnings: Seq[String] = Nil,
-                            infos: Seq[String] = Nil): Unit =
+                            warnings: Seq[String],
+                            infos: Seq[String]): Unit =
     limit.filter(_ > 0) match {
       case Some(n) if rows.length > n =>
         ok(ex, s"""{"resultType":"$resultType","result":[${
@@ -2037,197 +1865,30 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     val limit = p.first("limit").map(_.toInt)
     require(limit.forall(_ >= 0), "limit must be non-negative")
     val ast = PromQL.parse(q)
+    val r = route(ast, new Span(at, at, 0L, floatShareView, lookbackMs))
+      .fold(rej => throw rej.http(q), identity)
     ast match {
-      // a selector reading BOTH stores (spanning name matchers, a
-      // MIGRATED metric with float history, or a nameless selector
-      // with a hist head): bare → union of both stores' instant
-      // vectors (`value` and `histogram` entries side by side; the
-      // float share per-series time-shadowed so a migrated series
-      // answers float history before its first native sample, native
-      // after, never both)
-      case s @ PromQL.Selector(ms, None, _, _)
-          if selectorUnionsStores(ms) =>
-        val hv = PromQLHist.evalStrict(s, histHead.get, at, lookbackMs,
-          histNLes)
-        vectorResponse(ex, hv.unionByName(floatShareInstant(s, at),
-          allowMissingColumns = true), at, limit)
-        return
-      // ...and its RAW-SAMPLES twin: a bare both-stores RANGE selector
-      // unions both stores' raw matrices; the float share shadows on
-      // the SAMPLE time axis — exactly remote read's rule
-      case s @ PromQL.Selector(ms, Some(_), _, _)
-          if selectorUnionsStores(ms) =>
-        matrixResponse(ex,
-          PromQLHist.rawRange(s, histHead.get, at, at, at).unionByName(
-            dropShadowedFrame(PromQL.rawRange(s, wide, at, at, at),
-              col("t")),
-            allowMissingColumns = true), limit)
-        return
-      // SHAPED expressions over a SPANNING selector: Prometheus 3's
-      // mixed-type aggregation semantics where well-defined (sum/avg
-      // drop mixed groups with a warning, count counts both kinds,
-      // min/max/topk/bottomk rank floats and skip histograms with an
-      // info annotation); everything else 422s loudly
-      case e if anySelectorSpans(e) =>
-        spanningShapedInstant(e, at) match {
-          case Some((df, warns, infos)) =>
-            vectorResponse(ex, df, at, limit, warnings = warns,
-              infos = infos)
-            return
-          case None =>
-            throw new PromHttpServer.UnsupportedMixedTierExpr(q)
-        }
-      // MULTI-OPERAND expressions whose selectors STRADDLE the two
-      // stores (one side pushed-native, one float/classic) decompose
-      // recursively through the split-tier lattice ([[splitEval]]):
-      // set ops, binary ops between float-valued sides
-      // (`histogram_count(native) / float_m`, comparisons included),
-      // hist × ÷ float-vector, and vector-scalar wrappers — each leaf
-      // on ITS OWN store. Whole-expression routing would answer
-      // silently PARTIAL from the float tier; shapes with no
-      // well-defined composition 422 loudly.
-      case e if straddlesTiers(e) =>
-        sideInstant(e, at) match {
-          case Some(df) =>
-            // a migrated metric's hist LEAF evaluates native-only —
-            // the excluded float share rides as the warning here too
-            vectorResponse(ex, df, at, limit,
-              warnings = migrationWarnings(e))
-            return
-          case None =>
-            throw new PromHttpServer.UnsupportedMixedTierExpr(q)
-        }
-      // NAMELESS shaped aggregations while a hist head exists — the
-      // spanning class one axis over (`sum({job="x"})`): both stores
-      // hold matching series, so the mixed-type semantics apply;
-      // previously the float tier answered alone and the native share
-      // silently vanished
-      case e if mixedAggShape(e) =>
-        spanningShapedInstant(e, at) match {
-          case Some((df, warns, infos)) =>
-            vectorResponse(ex, df, at, limit, warnings = warns,
-              infos = infos)
-            return
-          case None =>
-            throw new PromHttpServer.UnsupportedMixedTierExpr(q)
-        }
-      // a BARE range selector — Prometheus's RAW-SAMPLES query
-      // (`m[5m]`, resultType `matrix`, what Grafana Explore and
-      // promtool issue when debugging): the matched samples with
-      // their ORIGINAL timestamps. Previously a 400 (float tier's
-      // wrap-it error) / 422 (hist head) — a loud gap, closed.
-      case s @ PromQL.Selector(_, Some(_), _, _) =>
-        if (routesToHistHead(s, allowNameless = false))
-          matrixResponse(ex,
-            PromQLHist.rawRange(s, histHead.get, at, at, at), limit)
-        else
-          matrixResponse(ex,
-            PromQL.rawRange(s, floatShareView, at, at, at), limit)
-        return
-      // a BARE subquery (`expr[1h:5m]`): the inner evaluated on the
-      // subquery's absolute grid — a matrix, Prometheus's instant-
-      // endpoint contract for range-vector-typed expressions
-      case sq: PromQL.Subquery =>
-        val inner = sq.arg
-        if ((PromQLHist.histEvaluable(inner) ||
-            PromQLHist.floatEvaluable(inner)) &&
-            routesToHistHead(inner,
-              allowNameless = namelessHistOk(inner)))
-          matrixResponse(ex, PromQLHist.subqueryMatrix(sq, histHead.get,
-            at, lookbackMs, histNLes), limit,
-            warnings = migrationWarnings(inner))
-        else if (routesToHistHead(inner, allowNameless = false))
-          throw new PromHttpServer.UnsupportedHistExpr(q)
-        else
-          matrixResponse(ex, PromQL.subqueryMatrix(sq, floatShareView,
-            at, lookbackMs, start = at, end = at), limit)
-        return
-      // hist-tier float-evaluable shapes (the histogram_* scalar
-      // family, count aggregations, and vector-scalar ops over them —
-      // every histogram alert's shape) evaluate over the PUSHED
-      // native-histogram head when one exists (Prometheus prefers the
-      // native histogram over classic buckets when both are present);
-      // the results are FLOAT vectors, so the response shape is the
-      // standard one
-      // nameless selectors keep the head routing only when the
-      // expression BOTTOMS OUT in a histogram_* call — including
-      // through vector-scalar ops (namelessHistOk); a nameless count
-      // or bare selector has a float reading and stays there
-      case e if PromQLHist.floatEvaluable(e) && routesToHistHead(e,
-          allowNameless = namelessHistOk(e)) =>
-        // evalStrict, not eval: the instant endpoint has no data
-        // window, so un-anchored range selectors pin @ at (otherwise
-        // rate/…_over_time select over the empty (at, at) range and
-        // silently answer nothing — the float tier's evalStrict fix).
-        // A MIGRATED metric's excluded float share rides as a warning.
-        vectorResponse(ex, PromQLHist.evalStrict(ast, histHead.get, at,
-          lookbackMs, nLes = histNLes), at, limit,
-          warnings = migrationWarnings(e))
-        return
-      // HISTOGRAM-valued shapes (bare selector / rate / sum / avg over
-      // a pushed-native metric) answer with the API's native-histogram
-      // form — `"histogram": [ts, {count, sum, buckets}]` — exactly
-      // Prometheus's response for such queries; previously these
-      // shapes fell to the float tier and silently returned empty.
-      // Name-bearing selectors only (a nameless bare selector has a
-      // real float-tier reading and stays there).
-      case e if PromQLHist.histEvaluable(e) && routesToHistHead(e,
-          allowNameless = false) =>
-        vectorResponse(ex, PromQLHist.evalStrict(ast, histHead.get, at,
-          lookbackMs, nLes = histNLes), at, limit,
-          warnings = migrationWarnings(e))
-        return
-      // `group` over a pure-native vector is type-AGNOSTIC: one row
-      // per group, value 1 (Prometheus's group semantics) — the hist
-      // count reshaped, never a 422
-      case e @ PromQL.AggBy("group", by, garg, None)
-          if PromQLHist.histEvaluable(garg) &&
-            routesToHistHead(e, allowNameless = false) =>
-        vectorResponse(ex,
-          PromQLHist.evalStrict(PromQL.AggBy("count", by, garg, None),
-              histHead.get, at, lookbackMs, nLes = histNLes)
-            .withColumn(TsdbSchema.ValueCol, lit(1.0)),
-          at, limit, warnings = migrationWarnings(e))
-        return
-      // topk/bottomk/min/max/stddev/stdvar/quantile/sort over a
-      // pure-native vector: Prometheus 3 SKIPS histogram samples in
-      // value-ranked/statistic shapes with an info annotation — the
-      // answer is the empty vector + info, never the former 422 and
-      // never a silent empty
-      case e if routesToHistHead(e, allowNameless = false) &&
-          rankedOverHist(e).nonEmpty =>
-        ok(ex, """{"resultType":"vector","result":[]}""",
-          warnings = migrationWarnings(e),
-          infos = skippedInfo(rankedOverHist(e).get))
-        return
-      // every name-bearing selector resolves to the hist head but
-      // NEITHER gate accepts the shape: the float tier has no series
-      // for the metric, so evaluating there would answer an empty 200
-      // where Prometheus returns data or an error — reject LOUDLY
-      // (Prometheus's 422 `execution` class) and name the shape
-      case e if routesToHistHead(e, allowNameless = false) =>
-        throw new PromHttpServer.UnsupportedHistExpr(q)
-      case _ =>
-    }
-    val df = PromQL.evalStrict(ast, floatShareView, at, lookbackMs,
-      start = at, end = at)
-    // resultType comes from the AST's STATIC type, not the frame's
-    // column shape: a no-label one-element vector (e.g. `vector(1)`)
-    // evaluates to a (time, value)-only frame yet is a vector
-    if (PromQL.isScalarTyped(ast)) {
-      // scalar result type: one (time, value) row
-      val r = df.collect()
-      val v = if (r.isEmpty) "NaN" else fmt(r.head.getDouble(1))
-      ok(ex, s"""{"resultType":"scalar","result":[${sec(at)},"$v"]}""")
-    } else
+      // a range-vector-typed expression (a bare range selector's raw
+      // samples, a bare subquery's grid) answers with a matrix —
+      // Prometheus's instant-endpoint contract
+      case PromQL.Selector(_, Some(_), _, _) | _: PromQL.Subquery =>
+        matrixResponse(ex, r.df, limit, r.warnings, r.infos)
+      // resultType comes from the AST's STATIC type, not the frame's
+      // column shape: a no-label one-element vector (e.g. `vector(1)`)
+      // evaluates to a (time, value)-only frame yet is a vector
+      case _ if PromQL.isScalarTyped(ast) =>
+        // scalar result type: one (time, value) row
+        val rows = r.df.collect()
+        val v = if (rows.isEmpty) "NaN" else fmt(rows.head.getDouble(1))
+        ok(ex, s"""{"resultType":"scalar","result":[${sec(at)},"$v"]}""")
       // an instant vector reports the EVALUATION time, not the sample
       // time (the API contract) — vectorResponse stamps it over
       // whatever the frame has
-      vectorResponse(ex, df, at, limit)
+      case _ => vectorResponse(ex, r.df, at, limit, r.warnings, r.infos)
+    }
   }
 
   private def queryRange(ex: HttpExchange, p: Params): Unit = {
-    import spark.implicits._
     val q = required(p, "query")
     val start = parseTime(required(p, "start"))
     val end = parseTime(required(p, "end"))
@@ -2239,101 +1900,11 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     val limit = p.first("limit").map(_.toInt)
     require(limit.forall(_ >= 0), "limit must be non-negative")
     val ast = PromQL.parse(q)
-    // pushed-native-histogram routing, same rule as the instant API:
-    // the histogram_* scalar family evaluates over the hist head (its
-    // range output carries the grid column `t` — matrix-ready)
-    val df = ast match {
-      // both-stores selector, range mode (spanning names, a MIGRATED
-      // metric, or nameless with a hist head): bare → both stores'
-      // matrices unioned (`values` + `histograms` entries; the float
-      // share per-series time-shadowed, so a migrated series answers
-      // float steps before its first native sample and native after)
-      case s @ PromQL.Selector(ms, None, _, _)
-          if selectorUnionsStores(ms) =>
-        val hv = PromQLHist.evalRange(s, histHead.get, start, end, step,
-          lookbackMs, histNLes)
-        matrixResponse(ex, hv.unionByName(
-          floatShareRange(s, start, end, step),
-          allowMissingColumns = true), limit)
-        return
-      // shaped over a SPANNING selector: Prometheus 3 mixed-type
-      // semantics for the well-defined shapes (the instant endpoint's
-      // twin), everything else 422
-      case e if anySelectorSpans(e) =>
-        spanningShapedRange(e, start, end, step) match {
-          case Some((sdf, warns, infos)) =>
-            matrixResponse(ex, sdf, limit, warnings = warns,
-              infos = infos)
-            return
-          case None =>
-            throw new PromHttpServer.UnsupportedMixedTierExpr(q)
-        }
-      // the instant endpoint's split-tier twin: straddling
-      // expressions decompose recursively through [[splitEval]] on
-      // the shared grid; shapes with no well-defined composition 422
-      case e if straddlesTiers(e) =>
-        sideRange(e, start, end, step) match {
-          case Some(sdf) =>
-            matrixResponse(ex, sdf, limit,
-              warnings = migrationWarnings(e))
-            return
-          case None =>
-            throw new PromHttpServer.UnsupportedMixedTierExpr(q)
-        }
-      // the instant endpoint's nameless-mixed-aggregation twin
-      case e if mixedAggShape(e) =>
-        spanningShapedRange(e, start, end, step) match {
-          case Some((sdf, warns, infos)) =>
-            matrixResponse(ex, sdf, limit, warnings = warns,
-              infos = infos)
-            return
-          case None =>
-            throw new PromHttpServer.UnsupportedMixedTierExpr(q)
-        }
-      case e if PromQLHist.floatEvaluable(e) && routesToHistHead(e,
-          allowNameless = namelessHistOk(e)) =>
-        matrixResponse(ex, PromQLHist.evalRange(ast, histHead.get, start,
-          end, step, lookbackMs, nLes = histNLes), limit,
-          warnings = migrationWarnings(e))
-        return
-      // histogram-valued range shapes: the matrix response carries
-      // the `histograms` pair list (Prometheus's native form)
-      case e if PromQLHist.histEvaluable(e) && routesToHistHead(e,
-          allowNameless = false) =>
-        matrixResponse(ex, PromQLHist.evalRange(ast, histHead.get, start,
-          end, step, lookbackMs, nLes = histNLes), limit,
-          warnings = migrationWarnings(e))
-        return
-      // `group` over a pure-native vector, range mode: the hist count
-      // grid reshaped to the constant 1
-      case e @ PromQL.AggBy("group", by, garg, None)
-          if PromQLHist.histEvaluable(garg) &&
-            routesToHistHead(e, allowNameless = false) =>
-        matrixResponse(ex,
-          PromQLHist.evalRange(PromQL.AggBy("count", by, garg, None),
-              histHead.get, start, end, step, lookbackMs,
-              nLes = histNLes)
-            .withColumn(TsdbSchema.ValueCol, lit(1.0)),
-          limit, warnings = migrationWarnings(e))
-        return
-      // rank/statistic shapes over a pure-native vector: empty matrix
-      // + info (the instant endpoint's skip-with-annotation twin)
-      case e if routesToHistHead(e, allowNameless = false) &&
-          rankedOverHist(e).nonEmpty =>
-        ok(ex, """{"resultType":"matrix","result":[]}""",
-          warnings = migrationWarnings(e),
-          infos = skippedInfo(rankedOverHist(e).get))
-        return
-      // the instant endpoint's loud-fallthrough twin: a hist-head
-      // expression neither gate accepts must never evaluate the empty
-      // float tier into a silent 200
-      case e if routesToHistHead(e, allowNameless = false) =>
-        throw new PromHttpServer.UnsupportedHistExpr(q)
-      case _ =>
-        PromQL.evalRange(ast, floatShareView, start, end, step,
-          lookbackMs)
-    }
-    matrixResponse(ex, df, limit)
+    // range outputs carry the grid column `t` — matrix-ready
+    val r = route(ast,
+      new Span(start, end, step, floatShareView, lookbackMs))
+      .fold(rej => throw rej.http(q), identity)
+    matrixResponse(ex, r.df, limit, r.warnings, r.infos)
   }
 
   /** The SERIES-METADATA view: the float head UNIONED with the pushed
@@ -2435,150 +2006,54 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       : Seq[(String, Seq[(String, String)], Long, Double, String)] = {
     val interval = g.intervalMs.getOrElse(rulesIntervalMs)
     val lastTick = (at / interval) * interval
-    // per-RULE tier routing: a rule whose every name-bearing selector
-    // resolves to the pushed-native head evaluates on the hist tier —
-    // previously `histogram_count({name=native}) > k` silently read
-    // the float tier empty and the alert could never fire. The routing
-    // is gated on the SAME floatEvaluable shape check the query
-    // endpoints use: the hist tier speaks a narrow grammar, and an
-    // unsupported shape (avg_over_time, vector-vector binops, …) must
-    // fall back to the float tier rather than throw and fail the WHOLE
-    // group's evaluation for /api/v1/rules, /api/v1/alerts and the
-    // notifier. A shape that passes the gate but still fails hist-tier
-    // PLAN BUILD falls back per rule, for the same reason.
-    def routedEvalRange(ast: PromQL.Expr, view: DataFrame, s: Long,
-                        e: Long, step: Long, lb: Long): DataFrame = ast match {
-      // straddling SILENCING and split-arithmetic rules evaluate
-      // SPLIT-TIER (the splittableRule gate admitted them past
-      // ruleHistError): the whole expression decomposes through the
-      // same [[splitEval]] lattice the query endpoints use — NEVER
-      // the float fallback, which would be the silently-wrong
-      // whole-expression evaluation round 16/17 closed
-      case _ if splittableRule(ast) =>
-        // the FLOAT leaves evaluate against the group's accumulated
-        // `view` (wide + earlier recorded-rule samples), not the bare
-        // served head — a recorded maintenance series must be able to
-        // silence (round-17 review find). FAILURE CONTAINMENT, per
-        // rule: a split that cannot build (a hist plan-build failure
-        // past the shape gate, or the gate raced by a concurrent
-        // push changing the stored-name sets) must not take down the
-        // WHOLE group's /api/v1/rules//alerts response and the
-        // notifier — but the float fallback would be the
-        // silently-wrong whole-expression evaluation this round
-        // closed, so the contained outcome is an EMPTY vector (rule
-        // inactive) + a stderr log, Prometheus's own per-rule-error
-        // blast radius.
-        try {
-          val out = sideRange(ast, s, e, step, floatView = view,
-            lb = lb) match {
-            // the rule's value must be a FLOAT vector: a histogram
-            // column here means the static gate and the evaluator
-            // disagree — contained, never silently leaked into the
-            // float-only rules machinery
-            case Some(df) if df.columns.contains(TsdbSchema.ValueCol) &&
-                !df.columns.contains(PromQLHist.HistCol) => df
-            case _ => throw new IllegalStateException(
-              "splittableRule admitted a rule its evaluator " +
-                "cannot split: " + PromQL.render(ast))
-          }
-          // a successful build clears any prior dynamic error
-          ruleEvalErrors.remove(PromQL.render(ast))
-          out
+    // every rule reads through [[route]] — the query endpoints' one
+    // decision, over the group's accumulated view (wide + earlier
+    // recorded-rule samples) — inside ONE per-rule containment block:
+    // a rejection, a histogram-typed value or a build failure leaves
+    // THIS rule empty (inactive; the rest of the group, /api/v1/alerts
+    // and the notifier keep evaluating) and lands in ruleEvalErrors, which
+    // /api/v1/rules renders as health=err + lastError until a later
+    // evaluation succeeds — Prometheus's per-rule-error blast radius,
+    // never a silently inactive "ok"
+    def ruleEval(ast: PromQL.Expr, view: DataFrame, s: Long, e: Long,
+                 step: Long, lb: Long): DataFrame = {
+      val key = PromQL.render(ast)
+      val outcome =
+        try route(ast, new Span(s, e, step, shadowCarved(view), lb)) match {
+          case Left(rej) => Left(rej.rule(key))
+          // a rule's value must be a FLOAT vector: an answer typed
+          // histogram (a hist column, even one empty on this grid)
+          // would leak NULL values into the float-only rules machinery
+          case Right(r) if r.df.columns.contains(PromQLHist.HistCol) =>
+            Left(UnsupportedHist.rule(key))
+          case Right(r) => Right((r.df, r.warnings ++ r.infos))
         } catch {
-          case scala.util.control.NonFatal(t) =>
-            // contained to THIS rule (empty vector, the group keeps
-            // evaluating) but NEVER silently "ok": the failure lands
-            // in the dynamic error channel and /api/v1/rules renders
-            // health=err + lastError until a later build succeeds
-            val msg = "split-tier rule evaluation failed " +
-              s"(rule inactive until it builds): $t"
-            ruleEvalErrors.put(PromQL.render(ast), msg)
-            System.err.println(s"$msg — ${PromQL.render(ast)}")
-            view.sparkSession.range(0)
-              .select(col("id").as("t"),
-                col("id").cast("double").as(TsdbSchema.ValueCol))
+          case NonFatal(t) =>
+            val msg =
+              s"rule evaluation failed (rule inactive until it builds): $t"
+            System.err.println(s"$msg — $key")
+            Left(msg)
         }
-      // FLOAT-VALUED mixed-lattice rules (`absent_over_time(
-      // {user="x"}[5m])`, `count_over_time({job="x"}[5m]) > 3`, …)
-      // evaluate through the SAME lattice the query endpoints use,
-      // against the group's accumulated view — the float-view
-      // fallback answered the inverted absence / the undercount
-      // INSIDE an alert, silently. Same per-rule containment as the
-      // split path: a build failure yields the empty vector +
-      // health=err, never a silently-wrong float-only evaluation.
-      case _ if mixedFloatRule(ast) =>
-        try {
-          spanningShapedRangeOver(ast, s, e, step, shadowCarved(view),
-            lb) match {
-            case Some((df, warns, infos)) =>
-              val out =
-                if (df.columns.contains(PromQLHist.HistCol))
-                  df.where(col(PromQLHist.HistCol).isNull)
-                    .drop(PromQLHist.HistCol)
-                else df
-              val key = PromQL.render(ast)
-              ruleEvalErrors.remove(key)
-              // the lattice's annotations surface per rule (the
-              // `evaluationWarning` extension) instead of vanishing —
-              // an excluded-native share must never make an alert
-              // silently inactive
-              val notes = warns ++ infos
-              if (notes.nonEmpty)
-                ruleEvalWarnings.put(key, notes.distinct.mkString("; "))
-              else ruleEvalWarnings.remove(key)
-              out
-            case None => throw new IllegalStateException(
-              "mixedFloatRule admitted a rule its evaluator " +
-                "cannot compose: " + PromQL.render(ast))
-          }
-        } catch {
-          case scala.util.control.NonFatal(t) =>
-            val msg = "mixed-lattice rule evaluation failed " +
-              s"(rule inactive until it builds): $t"
-            ruleEvalErrors.put(PromQL.render(ast), msg)
-            System.err.println(s"$msg — ${PromQL.render(ast)}")
-            view.sparkSession.range(0)
-              .select(col("id").as("t"),
-                col("id").cast("double").as(TsdbSchema.ValueCol))
-        }
-      case _ =>
-        if (PromQLHist.floatEvaluable(ast) &&
-            routesToHistHead(ast, allowNameless = false))
-          try PromQLHist.evalRange(ast, histHead.get, s, e, step, lb,
-            histNLes)
-          catch {
-            case _: IllegalArgumentException =>
-              PromQL.evalRange(ast, shadowCarved(view), s, e, step, lb)
-            // an INTERNAL invariant violation (IllegalStateException —
-            // e.g. the arithKeys dual-spelling guard) is NOT an
-            // unsupported-shape signal: the float fallback would be
-            // silently empty, and letting it escape would fail the
-            // WHOLE group's /api/v1/rules response. Contain per rule:
-            // empty vector + health=err via the dynamic error channel
-            case t: IllegalStateException =>
-              val msg = "hist-tier rule evaluation hit an internal " +
-                s"invariant (rule inactive until fixed): $t"
-              ruleEvalErrors.put(PromQL.render(ast), msg)
-              System.err.println(s"$msg — ${PromQL.render(ast)}")
-              view.sparkSession.range(0)
-                .select(col("id").as("t"),
-                  col("id").cast("double").as(TsdbSchema.ValueCol))
-          }
-        // the rules tier's float reads are shadow-carved too: a
-        // migrated series' dual-write float pushes must not fire a
-        // nameless/float rule the query surfaces would never show
-        else PromQL.evalRange(ast, shadowCarved(view), s, e, step, lb)
+      outcome match {
+        case Right((df, notes)) =>
+          ruleEvalErrors.remove(key)
+          // the evaluation's annotations surface per rule (the
+          // `evaluationWarning` extension) instead of vanishing — an
+          // excluded-native share must never make an alert silently
+          // inactive
+          if (notes.nonEmpty) ruleEvalWarnings.put(key, notes.distinct)
+          else ruleEvalWarnings.remove(key)
+          df
+        case Left(msg) =>
+          ruleEvalErrors.put(key, msg)
+          ruleEvalWarnings.remove(key)
+          emptyVector
+      }
     }
-    // hist-head rules with NO float-evaluable reading are excluded
-    // from evaluation entirely: the float fallback would read a store
-    // with no series for the metric and render the rule forever
-    // inactive — they surface health=err + lastError in /api/v1/rules
-    // instead (the router's 422, in the rules tier's error channel)
-    val evaluable = g.rules.filter(r => ruleHistError(exprOf(r)).isEmpty)
-    val (_, alertsDf) = AlertRules.evaluateGroup(evaluable, wide,
+    val (_, alertsDf) = AlertRules.evaluateGroup(g.rules, wide,
       start = lastTick - (rulesHorizonMs / interval) * interval,
       end = lastTick, stepMs = interval, lookbackMs = lookbackMs,
-      evalRangeFn = routedEvalRange)
+      evalRangeFn = ruleEval)
     alertsDf match {
       case None => Nil
       case Some(df) =>
@@ -2676,65 +2151,23 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     else alertmanagers.map(u => u -> AlertNotifier.post(u, payload)).toMap
   }
 
-  private def exprOf(r: AlertRules.Rule): String = r match {
-    case AlertRules.AlertRule(_, e, _, _, _, _) => e
-    case AlertRules.RecordingRule(_, e, _) => e
-  }
-
-  /** DYNAMIC rule-evaluation errors, keyed by the rule expression's
-    * canonical rendering: a split-tier rule whose evaluation could
-    * not be BUILT is contained to that rule (empty vector — the rest
-    * of the group keeps evaluating and the notifier keeps running)
-    * AND surfaced as health=err + lastError; a later successful build
-    * clears the entry. Never silently inactive-but-"ok" — the exact
-    * class [[ruleHistError]] pins statically, kept closed for
-    * build-time failures too. */
+  /** Rule-evaluation errors, keyed by the rule expression's canonical
+    * rendering: a rule [[route]] rejects, whose value is not a float
+    * vector, or whose evaluation could not be BUILT is contained to
+    * that rule (empty vector — the rest of the group keeps evaluating
+    * and the notifier keeps running) AND surfaced as health=err +
+    * lastError; a later successful evaluation clears the entry. */
   private val ruleEvalErrors =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Annotations the mixed-lattice rule evaluation produced (the
-    * excluded-native / mixed-samples warnings and skip infos) — a
-    * healthy rule renders them as the `evaluationWarning` extension
-    * field. Discarding them made a FloatWarnOverTime rule over a
-    * native-filled selector a silently-inactive health=ok alert
-    * (review find — the loud-partial pin violated exactly where it
-    * matters most). Keyed by rendered expr, refreshed per build. */
+  /** Annotations a healthy rule's evaluation produced (the
+    * excluded-native / mixed-samples warnings and skip infos) — rendered
+    * as the `evaluationWarning` extension field. Discarding them made a
+    * FloatWarnOverTime rule over a native-filled selector a
+    * silently-inactive health=ok alert. Keyed by rendered expr,
+    * refreshed per evaluation. */
   private val ruleEvalWarnings =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The RULES tier's twin of the router's 422 fallthrough: a rule
-    * whose every name-bearing selector resolves to the pushed-native
-    * head but whose shape has no float-evaluable hist-tier reading
-    * cannot evaluate meaningfully on EITHER tier — the float fallback
-    * is silently empty (the metric has no float series), rendering the
-    * rule forever inactive/"ok". Prometheus surfaces such rules as
-    * `health: err` with `lastError`; so does this. Parse errors are
-    * not this check's business (they surface at rule load). */
-  private def ruleHistError(expr: String): Option[String] =
-    try {
-      val ast = PromQL.parse(expr)
-      // TIER-STRADDLING rules (one selector pushed-native, one
-      // float/classic — or ONE selector spanning both stores) are the
-      // rules tier's silently-partial class: evaluated whole on the
-      // float tier, `float unless native` suppresses nothing and the
-      // rule mis-fires forever. The rules tier evaluates on ONE store
-      // per rule — pinned contract: straddling rules surface
-      // health=err + lastError, loudly.
-      if (splittableRule(ast)) None // evaluates split-tier
-      else if (mixedFloatRule(ast)) None // evaluates mixed-lattice
-      else if (straddlesTiers(ast) || anySelectorSpans(ast))
-        Some("expression mixes native-histogram and float metrics: " +
-          expr + " — rules evaluate on one store; split the rule " +
-          "per tier (and/or/unless with a float-valued left side, " +
-          "and float-valued split arithmetic like " +
-          "histogram_count(native) / float_m, ARE evaluated " +
-          "split-tier)")
-      else if (routesToHistHead(ast, allowNameless = false) &&
-          !PromQLHist.floatEvaluable(ast))
-        Some("unsupported expression over native-histogram series: " +
-          expr + " (no float-evaluable hist-tier reading)")
-      else None
-    } catch { case scala.util.control.NonFatal(_) => None }
+    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
 
   private def rulesEndpoint(ex: HttpExchange, p: Params,
                             alertsOnly: Boolean): Unit = {
@@ -2764,41 +2197,40 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
         }
         (state, items.mkString("[", ",", "]"))
       }
-      // health per rule: a hist-head rule with no evaluable reading
-      // renders err + lastError (excluded from evaluation above) —
-      // Prometheus's rule-error contract, never a silently-inactive
-      // ok. DYNAMIC build failures (the contained split-tier class)
-      // surface through the same channel via ruleEvalErrors. A
-      // healthy rule over a MIGRATED metric additionally surfaces the
-      // query endpoints' migration warning as `migrationWarning`
-      // (extension field — clients ignore unknown keys): the rules
-      // tier evaluates hist-routed names on the native store alone,
-      // so an alert over a just-migrated metric misses its
-      // pre-migration ticks inside the horizon — transient (the
-      // trailing horizon ages past the migration point) but never
-      // silent (round-18 judge item: the pin alone was not enough).
-      def health(e: String): String = ruleHistError(e).orElse {
-        try Option(ruleEvalErrors.get(PromQL.render(PromQL.parse(e))))
-        catch { case scala.util.control.NonFatal(_) => None }
-      } match {
-        case Some(msg) => s""""health":"err","lastError":${jstr(msg)}}"""
-        case None =>
-          val mw = try migrationWarnings(PromQL.parse(e))
-                   catch { case scala.util.control.NonFatal(_) => Nil }
-          val ew = try Option(
-              ruleEvalWarnings.get(PromQL.render(PromQL.parse(e))))
-            catch { case scala.util.control.NonFatal(_) => None }
-          val mwPart =
-            if (mw.isEmpty) ""
-            else s""","migrationWarning":${jstr(
-              mw.mkString("; ") + " — rule evaluation reads the " +
-                "native store for these names, so pre-migration " +
-                "ticks inside the rules horizon are not evaluated")}"""
-          // the mixed lattice's own annotations (excluded-native /
-          // mixed-samples / skip infos) — never silently dropped
-          val ewPart = ew.fold("")(w =>
-            s""","evaluationWarning":${jstr(w)}""")
-          s""""health":"ok"$mwPart$ewPart}"""
+      // health per rule, from the evaluation groupActive just ran: a
+      // rule route rejected or could not evaluate renders err +
+      // lastError — Prometheus's rule-error contract, never a
+      // silently-inactive ok. A healthy rule over a MIGRATED metric
+      // additionally surfaces the query endpoints' migration warning
+      // as `migrationWarning` (extension field — clients ignore
+      // unknown keys): the rules tier evaluates hist-routed names on
+      // the native store alone, so an alert over a just-migrated
+      // metric misses its pre-migration ticks inside the horizon —
+      // transient (the trailing horizon ages past the migration
+      // point) but never silent.
+      def health(e: String): String = {
+        val ast = try Some(PromQL.parse(e))
+                  catch { case NonFatal(_) => None }
+        val key = ast.map(PromQL.render)
+        key.flatMap(k => Option(ruleEvalErrors.get(k))) match {
+          case Some(msg) => s""""health":"err","lastError":${jstr(msg)}}"""
+          case None =>
+            val mw = ast.fold(Seq.empty[String])(migrationWarnings)
+            val mwPart =
+              if (mw.isEmpty) ""
+              else s""","migrationWarning":${jstr(
+                mw.mkString("; ") + " — rule evaluation reads the " +
+                  "native store for these names, so pre-migration " +
+                  "ticks inside the rules horizon are not evaluated")}"""
+            // the evaluation's own annotations (excluded-native /
+            // mixed-samples / skip infos) — never silently dropped
+            val ew = key.flatMap(k => Option(ruleEvalWarnings.get(k)))
+              .getOrElse(Nil).filterNot(mw.contains)
+            val ewPart =
+              if (ew.isEmpty) ""
+              else s""","evaluationWarning":${jstr(ew.mkString("; "))}"""
+            s""""health":"ok"$mwPart$ewPart}"""
+        }
       }
       val rulesJson = g.rules.map {
         case AlertRule(n, e, forMs, kffMs, rl, anns) =>
@@ -3444,4 +2876,40 @@ object PromHttpServer {
         "between float-valued sides, histogram × ÷ float-vector, and " +
         "sum/avg/count/min/max/topk/bottomk over a bare spanning " +
         "selector; rewrite anything else per tier)")
+
+  /** One routed answer: the result frame and the evaluation's
+    * annotations (mixed-type warnings, skipped-histogram infos, the
+    * unstitched-migration warning). */
+  private final case class Routed(df: DataFrame, warnings: Seq[String],
+                                  infos: Seq[String])
+
+  /** `route`'s typed rejection: the query endpoints
+    * answer it with the 422 `execution` error, the rules tier with
+    * health=err + lastError. */
+  private sealed trait Rejection {
+    def http(query: String): RuntimeException
+    def rule(expr: String): String
+  }
+
+  /** Straddling/spanning with no well-defined per-store composition. */
+  private case object MixedTier extends Rejection {
+    def http(query: String): RuntimeException =
+      new UnsupportedMixedTierExpr(query)
+    def rule(expr: String): String =
+      "expression mixes native-histogram and float metrics: " + expr +
+        " — rules evaluate on one store; split the rule per tier " +
+        "(and/or/unless with a float-valued left side, and " +
+        "float-valued split arithmetic like histogram_count(native) / " +
+        "float_m, ARE evaluated split-tier)"
+  }
+
+  /** Native-only with no hist-tier reading — or, for a rule, a
+    * histogram-valued answer where a float vector is required. */
+  private case object UnsupportedHist extends Rejection {
+    def http(query: String): RuntimeException =
+      new UnsupportedHistExpr(query)
+    def rule(expr: String): String =
+      "unsupported expression over native-histogram series: " + expr +
+        " (no float-evaluable hist-tier reading)"
+  }
 }

@@ -1310,16 +1310,23 @@ object PromQL {
   private def histQuantile(iv0: DataFrame, q: Double,
                            extra: Seq[String]): DataFrame = {
     val iv = toValueShape(iv0)
-    val leCol = TsdbSchema.labelColName("le")
-    require(iv.columns.contains(leCol),
-      "histogram_quantile needs an instant vector with an `le` label")
+    // a selector carries `labels.le`; an aggregation (`sum by (job,
+    // le)`) emits its keys bare — accept either spelling, as labelKey
+    // does
+    val leCol = Seq(TsdbSchema.labelColName("le"), "le")
+      .find(iv.columns.contains)
+      .getOrElse(throw new IllegalArgumentException(
+        "histogram_quantile needs an instant vector with an `le` label"))
     // the tumbling `bucket` (instant mode) or grid `t` (range mode,
     // via `extra`) is an implicit grouping key: each window's bucket
     // ladder interpolates independently
     val groups = iv.columns.filter(c =>
-      c.startsWith(TsdbSchema.LabelPrefix) && c != leCol &&
+      (c.startsWith(TsdbSchema.LabelPrefix) ||
+        !TsdbSchema.VectorReserved(c)) &&
+        c != leCol &&
         // Prometheus drops __name__ (with le) from the output vector
-        c != TsdbSchema.labelColName("__name__")).toSeq ++
+        c != TsdbSchema.labelColName("__name__") && c != "__name__")
+      .toSeq ++
       ("bucket" +: extra).distinct.filter(iv.columns.contains)
     // Prometheus writes the top bucket as le="+Inf", which a bare
     // double cast nulls out — map it explicitly
@@ -2535,7 +2542,7 @@ object PromQL {
       .agg(aggValue(op, param), count(lit(1)).as("_nin_"))
       .where(col("_nin_") > 0).drop("_nin_")
 
-  private def aggValue(op: String, param: Option[Double] = None): Column =
+  private def aggValue(op: String, param: Option[Double]): Column =
     op match {
       case "sum" => round(sum(col("value")), 6).as("value")
       case "avg" => round(avg(col("value")), 6).as("value")
@@ -2702,7 +2709,7 @@ object PromQL {
     * (the per-step grid column in range evaluation) pass through
     * verbatim. */
   private def keyed(iv0: DataFrame, on: Seq[String], as: String,
-                    extra: Seq[String] = Nil): DataFrame = {
+                    extra: Seq[String]): DataFrame = {
     val iv = toValueShape(iv0)
     require(iv.columns.contains(TsdbSchema.ValueCol),
       "set/binary operators need instant-vector operands")

@@ -1136,8 +1136,8 @@ object PromQLHist {
     * series-count-sized vectors (× grid steps) — the join is an
     * equi-join on those keys, never data-sized. */
   private def histArith(l0: DataFrame, r0: DataFrame,
-                        subtract: Boolean, on: Seq[String] = Nil,
-                        ignoring: Seq[String] = Nil): DataFrame = {
+                        subtract: Boolean, on: Seq[String],
+                        ignoring: Seq[String]): DataFrame = {
     // `on(keys)` replaces the default key set outright (result labels
     // = the on keys, as in Prometheus); `ignoring(keys)` subtracts
     val keys =

@@ -576,16 +576,22 @@ object RemoteRead {
       lw.string(1, n); lw.string(2, v)
       sw.bytes(1, lw.toBytes)
     }
-    hists.sortBy(_.time).foreach { h =>
+    hists.map { h =>
       // customValues/resetHint ride along: an NHCB (schema -53)
       // histogram served from a WAL frame keeps its bucket
       // BOUNDS in the sampled form, exactly as the chunked
       // path's HistChunk payload does
-      sw.bytes(4, RemoteWrite.encodeHistogram(RemoteWrite.SparseHist(
+      (h.time, RemoteWrite.encodeHistogram(RemoteWrite.SparseHist(
         h.time, Map.empty, h.count, h.sum, h.schema,
         h.zeroThreshold, h.zeroCount, h.positive, h.negative,
         h.customValues, h.counterResetHint)))
     }
+    // same-timestamp samples tie-break on their encoded bytes: the
+    // input order is whatever the shuffle delivered
+    .sortWith { case ((t1, b1), (t2, b2)) =>
+      t1 < t2 || (t1 == t2 && java.util.Arrays.compareUnsigned(b1, b2) < 0)
+    }
+    .foreach(e => sw.bytes(4, e._2))
     sw.toBytes
   }
 

@@ -43,7 +43,7 @@ object TsdbSchema {
 
   /** Non-label payload/grid columns a vector frame may carry — the
     * complement of the label universe for [[alignLabelSpellings]]. */
-  private val VectorReserved =
+  private[tsdb] val VectorReserved =
     Set(TimeCol, ValueCol, "hist", "t", "bucket", "rvalue", "rank")
 
   /** Unify the label SPELLINGS of two frames about to UNION (`or`

@@ -86,6 +86,9 @@ class BlockHistSpec extends SparkSpec {
       TsdbBlockWriter.writeBlock(dir, Seq(s))
     }
     assert(e.getMessage.contains("interleave"))
+    // the chunks written before the rejected series are gone with the
+    // block directory: no partial block for a reader to pick up
+    assert(!new java.io.File(dir).exists(), dir)
   }
 
   private def writeHistWal(walDir: String,

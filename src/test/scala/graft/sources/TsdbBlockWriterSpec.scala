@@ -35,6 +35,17 @@ class TsdbBlockWriterSpec extends SparkSpec {
     }
   }
 
+  test("a chunk offset past 4 GiB is refused, never written as a corrupt " +
+      "ref") {
+    // the ref's high 32 bits are the segment index: 0xFFFFFFFF is the
+    // last offset segment 0 can address
+    assert(TsdbBlockWriter.chunkRef(0xFFFFFFFFL) === 0xFFFFFFFFL)
+    val e = intercept[IllegalArgumentException] {
+      TsdbBlockWriter.chunkRef(0x100000000L)
+    }
+    assert(e.getMessage.contains("4 GiB"), e.getMessage)
+  }
+
   test("writeBlock → tsdb-block reader round-trips series exactly") {
     val dir = tmpDir("graft_blockw_")
     // 130 samples forces the 120-sample chunk split; labels unsorted on

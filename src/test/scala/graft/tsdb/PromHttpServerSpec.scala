@@ -2620,102 +2620,122 @@ class PromHttpServerSpec extends SparkSpec {
     } finally srv.stop()
   }
 
-  test("ROUTER-LATTICE property: the static split gate agrees with the " +
-      "dynamic evaluator over generated straddling expressions") {
-    // the round-17 judge's stretch item, pinned: the routing lattice
-    // has a STATIC mirror (splitEvaluable — the rules tier's health
-    // gate) and a DYNAMIC evaluator (splitEval via sideRange). A
-    // disagreement means a rule renders health=err on an evaluable
-    // expression, or IllegalStates at eval time. Property over
-    // generated expressions mixing a native and a float metric:
-    // static admit ⇔ dynamic Some (a single-tier LOUD reject counts
-    // as covered — it is never silent), every produced frame
-    // analyzes, and every rule-admitted expression is FLOAT-valued.
-    val srv = new PromHttpServer(spark, wide)
+  /** Serve `exprs` as one group of alerting rules on a 3s grid over
+    * 0..9s (float store `base`), apply `push`, and ask both surfaces
+    * about each expression over that grid. The rules tier and the query
+    * endpoints share one routing decision, so a rule is healthy only
+    * when query_range answers float values, errs with the same
+    * rejection as a query_range 422, and otherwise errs only for a
+    * histogram-typed value (whose samples may all miss this grid).
+    * Returns (expression, the rule's lastError — None when healthy —,
+    * query_range status and body). */
+  private def rulesAgreeWithQueryRange(
+      base: org.apache.spark.sql.DataFrame, exprs: Seq[String],
+      push: Int => Unit): Seq[(String, Option[String], Int, String)] = {
+    val yaml = "groups:\n  - name: g\n    interval: 3s\n    rules:\n" +
+      exprs.zipWithIndex.map { case (e, i) =>
+        s"      - alert: r$i\n        expr: '$e'\n"
+      }.mkString
+    val srv = new PromHttpServer(spark, base, rules = Some(yaml),
+      rulesHorizonMs = 9000L)
     val p = srv.start()
     try {
-      val h = RemoteWrite.SparseHist(
-        time = 1700L, labels = Map.empty, count = 4.0, sum = 10.0,
-        schema = 0, zeroThreshold = 0.0, zeroCount = 0.0,
-        positive = Seq((1, 2.0), (2, 2.0)), negative = Nil)
-      val wreq = RemoteWrite2.encodeRequest(Seq(RemoteWrite2.Rw2Series(
-        labels = Seq("__name__" -> "hm", "user" -> "a"),
-        histograms = Seq(h))))
-      val wr = client.send(
-        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p/api/v1/write"))
-          .header("Content-Type",
-            "application/x-protobuf;proto=io.prometheus.write.v2.Request")
-          .POST(HttpRequest.BodyPublishers.ofByteArray(wreq)).build(),
-        HttpResponse.BodyHandlers.ofByteArray())
-      assert(wr.statusCode() == 204)
-      import org.scalacheck.Gen
-      import PromQL._
-      def sel(n: String) = Selector(Seq(Matcher.Eq("name", n)), None, 0L)
-      val leaf: Gen[Expr] = Gen.oneOf[Expr](
-        sel("hm"), sel("up"),
-        Fn("histogram_count", sel("hm"), Nil),
-        Fn("histogram_sum", sel("hm"), Nil),
-        Fn("rate", sel("hm").copy(rangeMs = Some(2000L)), Nil),
-        AggBy("sum", Seq("user"), sel("up")),
-        AggBy("count", Seq("user"), sel("hm")))
-      def expr(depth: Int): Gen[Expr] =
-        if (depth == 0) leaf
-        else Gen.oneOf[Expr](
-          leaf,
-          Gen.lzy(for {
-            op <- Gen.oneOf("and", "or", "unless")
-            on <- Gen.oneOf(Seq.empty[String], Seq("user"))
-            a <- expr(depth - 1); b <- expr(depth - 1)
-          } yield SetOp(op, on, a, b)),
-          Gen.lzy(for {
-            op <- Gen.oneOf("+", "*", "/", ">", "<=")
-            on <- Gen.oneOf(Seq.empty[String], Seq("user"))
-            bool <- if (op == ">" || op == "<=") Gen.oneOf(true, false)
-                    else Gen.const(false)
-            a <- expr(depth - 1); b <- expr(depth - 1)
-          } yield BinOp(op, on, a, b, bool)),
-          Gen.lzy(for {
-            op <- Gen.oneOf(">", "/")
-            a <- expr(depth - 1)
-          } yield BinOp(op, Nil, a, ScalarLit(2.0))))
-      var checked = 0
-      var draws = 0
-      while (checked < 80 && draws < 1000) {
-        draws += 1
-        expr(2).apply(Gen.Parameters.default,
-            org.scalacheck.rng.Seed(1800L + draws)) match {
-          case Some(e) if srv.straddlesTiers(e) &&
-              !srv.anySelectorSpans(e) =>
-            checked += 1
-            val stat = srv.splitEvaluable(e, needFloat = false)
-            val dyn =
-              try Right(srv.sideRange(e, 1000L, 9000L, 4000L))
-              catch { case t: IllegalArgumentException => Left(t) }
-            dyn match {
-              case Right(Some(df)) =>
-                assert(stat,
-                  s"static gate rejects an evaluable split: ${render(e)}")
-                df.queryExecution.analyzed
-              case Right(None) =>
-                assert(!stat, "static gate admits an unsplittable " +
-                  s"expression: ${render(e)}")
-              case Left(_) => () // loud single-tier reject, never silent
-            }
-            if (srv.splittableRule(e)) dyn match {
-              case Right(Some(df)) =>
-                assert(df.columns.contains(TsdbSchema.ValueCol) &&
-                  !df.columns.contains(PromQLHist.HistCol),
-                  s"rule gate admitted a non-float result: ${render(e)}")
-              case Right(None) =>
-                fail("rule gate admitted an unsplittable expression: " +
-                  render(e))
-              case Left(_) => () // contained at rules runtime (health=err)
-            }
-          case _ => ()
+      push(p)
+      val (c, b) = getAt(p, "/api/v1/rules?time=9")
+      assert(c == 200, b)
+      val lastError = b.split(java.util.regex.Pattern.quote(
+          """{"type":"alerting","name":"""")).drop(1)
+        .map { r =>
+          val err = """"health":"err","lastError":""""
+          r.takeWhile(_ != '"') ->
+            Option(r.indexOf(err)).filter(_ >= 0).map(i =>
+              r.substring(i + err.length).takeWhile(_ != '"'))
+        }.toMap
+      exprs.zipWithIndex.map { case (e, i) =>
+        val (rc, rb) = getAt(p, "/api/v1/query_range?query=" +
+          java.net.URLEncoder.encode(e, UTF_8) + "&start=0&end=9&step=3")
+        val err = lastError(s"r$i")
+        val why = s"$e: rule lastError=$err, query_range $rc $rb"
+        err match {
+          case None =>
+            assert(rc == 200 && !rb.contains("\"histograms\""), why)
+          case Some(m) if rc == 422 =>
+            assert(Seq("mixes native-histogram",
+                "unsupported expression over native-histogram")
+              .exists(k => m.contains(k) && rb.contains(k)), why)
+          case Some(m) =>
+            assert(rc == 200 && m.startsWith(
+              "unsupported expression over native-histogram"), why)
         }
+        (e, err, rc, rb)
       }
-      assert(checked == 80, s"only $checked straddling samples in $draws")
     } finally srv.stop()
+  }
+
+  test("ROUTER property: over generated straddling expressions a rule is " +
+      "healthy only on a float answer, and errs on query_range's 422s") {
+    // the rules tier and the query endpoints share one routing
+    // decision, so for the same expression over the same grid a rule's
+    // health=err means the HTTP 422 (same rejection) or a
+    // histogram-typed answer — a rule's value must be a float vector.
+    // Property over generated expressions mixing a native and a float
+    // metric.
+    import org.scalacheck.Gen
+    import PromQL._
+    def sel(n: String) = Selector(Seq(Matcher.Eq("name", n)), None, 0L)
+    val leaf: Gen[Expr] = Gen.oneOf[Expr](
+      sel("hm"), sel("up"),
+      Fn("histogram_count", sel("hm"), Nil),
+      Fn("histogram_sum", sel("hm"), Nil),
+      Fn("rate", sel("hm").copy(rangeMs = Some(2000L)), Nil),
+      AggBy("sum", Seq("user"), sel("up")),
+      AggBy("count", Seq("user"), sel("hm")))
+    def expr(depth: Int): Gen[Expr] =
+      if (depth == 0) leaf
+      else Gen.oneOf[Expr](
+        leaf,
+        Gen.lzy(for {
+          op <- Gen.oneOf("and", "or", "unless")
+          on <- Gen.oneOf(Seq.empty[String], Seq("user"))
+          a <- expr(depth - 1); b <- expr(depth - 1)
+        } yield SetOp(op, on, a, b)),
+        Gen.lzy(for {
+          op <- Gen.oneOf("+", "*", "/", ">", "<=")
+          on <- Gen.oneOf(Seq.empty[String], Seq("user"))
+          bool <- if (op == ">" || op == "<=") Gen.oneOf(true, false)
+                  else Gen.const(false)
+          a <- expr(depth - 1); b <- expr(depth - 1)
+        } yield BinOp(op, on, a, b, bool)),
+        Gen.lzy(for {
+          op <- Gen.oneOf(">", "/")
+          a <- expr(depth - 1)
+        } yield BinOp(op, Nil, a, ScalarLit(2.0))))
+    // straddling = names both stores: hm is pushed native, up is float
+    val exprs = Iterator.from(1).take(1000)
+      .flatMap(d => expr(2).apply(Gen.Parameters.default,
+        org.scalacheck.rng.Seed(1800L + d)))
+      .map(render)
+      .filter(r => r.contains("\"hm\"") && r.contains("\"up\""))
+      .take(80).toSeq
+    assert(exprs.size == 80, s"only ${exprs.size} straddling samples")
+    // hm{a} (shares user=a with up) and hm{c} (no float twin), each
+    // with two samples inside one 2s window, so rates answer too
+    def hist(t: Long) = RemoteWrite.SparseHist(
+      time = t, labels = Map.empty, count = 4.0, sum = 10.0,
+      schema = 0, zeroThreshold = 0.0, zeroCount = 0.0,
+      positive = Seq((1, 2.0), (2, 2.0)), negative = Nil)
+    val wreq = RemoteWrite2.encodeRequest(Seq("a", "c").map(u =>
+      RemoteWrite2.Rw2Series(labels = Seq("__name__" -> "hm", "user" -> u),
+        histograms = Seq(hist(1700L), hist(8000L), hist(8500L)))))
+    val results = rulesAgreeWithQueryRange(wide, exprs, p => assert(client.send(
+      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p/api/v1/write"))
+        .header("Content-Type",
+          "application/x-protobuf;proto=io.prometheus.write.v2.Request")
+        .POST(HttpRequest.BodyPublishers.ofByteArray(wreq)).build(),
+      HttpResponse.BodyHandlers.ofByteArray()).statusCode() == 204))
+    // the sample exercises every outcome
+    assert(results.exists(_._2.isEmpty) && results.exists(_._3 == 422) &&
+      results.exists(r => r._2.nonEmpty && r._3 == 200))
   }
 
   test("TIME-AXIS coherence sweep: series/labels APIs, status/tsdb and " +
@@ -3919,80 +3939,61 @@ class PromHttpServerSpec extends SparkSpec {
     } finally srv.stop()
   }
 
-  test("GATE ⇔ EVALUATOR over the mixed lattice: every shape the gates " +
-      "admit composes, and every mixedFloatRule shape is float-valued " +
-      "(the hand-maintained lists cannot drift silently)") {
-    val srv = new PromHttpServer(spark, wide)
-    val p = srv.start()
-    try {
-      pushMigFixture(p) // hist head exists → the nameless gates live
-      val shapes = Seq(
-        """sum({user="a"})""", """avg without (k) ({user="a"})""",
-        """count({user="a"})""", """group({user="a"})""",
-        """min({user="a"})""", """quantile(0.9, {user="a"})""",
-        """topk(2, {user="a"})""", """limitk(2, {user="a"})""",
-        """limit_ratio(0.5, {user="a"})""",
-        """sort({user="a"})""", """absent({user="a"})""",
-        """count_values("v", {user="a"})""",
-        """count_over_time({user="a"}[5s])""",
-        """present_over_time({user="a"}[5s])""",
-        """absent_over_time({user="a"}[5s])""",
-        """sum_over_time({user="a"}[5s])""",
-        """avg_over_time({user="a"}[5s])""",
-        """rate({user="a"}[5s])""", """increase({user="a"}[5s])""",
-        """delta({user="a"}[5s])""",
-        """last_over_time({user="a"}[5s])""",
-        """first_over_time({user="a"}[5s])""",
-        """ts_of_last_over_time({user="a"}[5s])""",
-        """ts_of_first_over_time({user="a"}[5s])""",
-        """min_over_time({user="a"}[5s])""",
-        """stddev_over_time({user="a"}[5s])""",
-        """quantile_over_time(0.5, {user="a"}[5s])""",
-        """mad_over_time({user="a"}[5s])""",
-        """changes({user="a"}[5s])""", """resets({user="a"}[5s])""",
-        """irate({user="a"}[5s])""", """idelta({user="a"}[5s])""",
-        """deriv({user="a"}[5s])""",
-        """predict_linear({user="a"}[5s], 10)""",
-        """holt_winters({user="a"}[5s], 0.5, 0.3)""",
-        """abs({user="a"})""", """clamp({user="a"}, 0, 1)""",
-        """round({user="a"})""", """sgn({user="a"})""",
-        """timestamp({user="a"})""",
-        """label_replace({user="a"}, "d", "$1", "user", "(.*)")""",
-        """label_join({user="a"}, "d", "-", "user")""",
-        """count_over_time({user="a"}[5s]) > 1""",
-        """sum({user="a"}) * 2""",
-        """abs({user="a"}) <= bool 3""",
-        """{user="a"} > 1""", """2 * sum({user="a"})""",
-        """{user="a"} or {user="b"}""",
-        """count({user="a"}) and {user="a"}""",
-        """{user="a"} unless {user="b"}""",
-        """count({user="a"}) / count({user="a"})""",
-        """count_over_time({user="a"}[5s]) > bool count({user="a"})""",
-        """count_over_time({user="a"}[10s:5s])""",
-        """present_over_time({user="a"}[10s:5s])""",
-        """max_over_time({user="a"}[10s:5s])""",
-        """sum_over_time({user="a"}[10s:5s])""",
-        """rate({user="a"}[10s:5s])""",
-        """last_over_time({user="a"}[10s:5s])""")
-      for (q <- shapes) {
-        val e = graft.tsdb.PromQL.parse(q)
-        assert(srv.mixedAggShape(e), s"gate rejects: $q")
-        val ev = srv.spanningShapedRange(e, 1, 9, 4)
-        assert(ev.nonEmpty,
-          s"gate admitted but the evaluator cannot compose: $q")
-        if (srv.mixedFloatRule(e)) {
-          // the rules contract: after the hist-row drop the frame is
-          // float-valued
-          val df0 = ev.get._1
-          val df =
-            if (df0.columns.contains("hist"))
-              df0.where(df0("hist").isNull).drop("hist")
-            else df0
-          assert(df.columns.contains("value"),
-            s"mixedFloatRule shape without a float value column: $q")
-        }
-      }
-    } finally srv.stop()
+  test("MIXED-LATTICE shapes answer 200 on query_range, and each one's " +
+      "rule health agrees with that answer") {
+    val shapes = Seq(
+      """sum({user="a"})""", """avg without (k) ({user="a"})""",
+      """count({user="a"})""", """group({user="a"})""",
+      """min({user="a"})""", """quantile(0.9, {user="a"})""",
+      """topk(2, {user="a"})""", """limitk(2, {user="a"})""",
+      """limit_ratio(0.5, {user="a"})""",
+      """sort({user="a"})""", """absent({user="a"})""",
+      """count_values("v", {user="a"})""",
+      """count_over_time({user="a"}[5s])""",
+      """present_over_time({user="a"}[5s])""",
+      """absent_over_time({user="a"}[5s])""",
+      """sum_over_time({user="a"}[5s])""",
+      """avg_over_time({user="a"}[5s])""",
+      """rate({user="a"}[5s])""", """increase({user="a"}[5s])""",
+      """delta({user="a"}[5s])""",
+      """last_over_time({user="a"}[5s])""",
+      """first_over_time({user="a"}[5s])""",
+      """ts_of_last_over_time({user="a"}[5s])""",
+      """ts_of_first_over_time({user="a"}[5s])""",
+      """min_over_time({user="a"}[5s])""",
+      """stddev_over_time({user="a"}[5s])""",
+      """quantile_over_time(0.5, {user="a"}[5s])""",
+      """mad_over_time({user="a"}[5s])""",
+      """changes({user="a"}[5s])""", """resets({user="a"}[5s])""",
+      """irate({user="a"}[5s])""", """idelta({user="a"}[5s])""",
+      """deriv({user="a"}[5s])""",
+      """predict_linear({user="a"}[5s], 10)""",
+      """holt_winters({user="a"}[5s], 0.5, 0.3)""",
+      """abs({user="a"})""", """clamp({user="a"}, 0, 1)""",
+      """round({user="a"})""", """sgn({user="a"})""",
+      """timestamp({user="a"})""",
+      """label_replace({user="a"}, "d", "$1", "user", "(.*)")""",
+      """label_join({user="a"}, "d", "-", "user")""",
+      """count_over_time({user="a"}[5s]) > 1""",
+      """sum({user="a"}) * 2""",
+      """abs({user="a"}) <= bool 3""",
+      """{user="a"} > 1""", """2 * sum({user="a"})""",
+      """{user="a"} or {user="b"}""",
+      """count({user="a"}) and {user="a"}""",
+      """{user="a"} unless {user="b"}""",
+      """count({user="a"}) / count({user="a"})""",
+      """count_over_time({user="a"}[5s]) > bool count({user="a"})""",
+      """count_over_time({user="a"}[10s:5s])""",
+      """present_over_time({user="a"}[10s:5s])""",
+      """max_over_time({user="a"}[10s:5s])""",
+      """sum_over_time({user="a"}[10s:5s])""",
+      """rate({user="a"}[10s:5s])""",
+      """last_over_time({user="a"}[10s:5s])""")
+    // hist head exists → the nameless shapes read both stores
+    // the float store holds only the fixture's series, so no two
+    // metrics share a label set once an over-time fold drops the name
+    rulesAgreeWithQueryRange(wide.limit(0), shapes, p => pushMigFixture(p))
+      .foreach { case (q, _, rc, rb) => assert(rc == 200, s"$q: $rc $rb") }
   }
 
   test("TIME-AXIS property: the union path's instant answer equals the " +

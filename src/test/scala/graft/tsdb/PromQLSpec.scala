@@ -1119,6 +1119,34 @@ class PromQLSpec extends SparkSpec {
     assert(rq === Set(("/api", 18.00144)))
   }
 
+  test("histogram_quantile over sum by (job, le): the aggregation's bare " +
+      "le and job keys") {
+    // two instances of one job, each a cumulative ladder sampled at 60s
+    // and 300s: per-le increases sum to 10→2, 20→8, +Inf→10 over the
+    // job, so rank 9 of 10 lands in (20, +Inf] → the highest finite
+    // bound, 20 (Prometheus's rule for the +Inf bucket)
+    val rows = for {
+      inst <- Seq("i1", "i2")
+      (le, c) <- Seq(("10", 1.0), ("20", 4.0), ("+Inf", 5.0))
+      (t, mult) <- Seq((60000L, 0.0), (300000L, 1.0))
+    } yield (t, c * mult, "m_bucket", "api", inst, le)
+    val h = rows.toDF("time", "value", "labels.__name__", "labels.job",
+      "labels.instance", "labels.le")
+    val q = parse(
+      "histogram_quantile(0.9, sum by (job, le) (rate(m_bucket[5m])))")
+    val inst = PromQL.evalStrict(q, h, at = 300000L, lookbackMs = 300000L,
+        start = 300000L, end = 300000L)
+      .select(col("job"), col("value")).as[(String, Double)].collect()
+    assert(inst.toSeq === Seq(("api", 20.0)))
+    // the same ladder one step later keeps its window; the grid key `t`
+    // groups per step
+    val rng = PromQL.evalRange(q, h, start = 300000L, end = 301000L,
+        stepMs = 1000L, lookbackMs = 300000L)
+      .select(col("job"), col("t"), col("value"))
+      .as[(String, Long, Double)].collect().toSet
+    assert(rng === Set(("api", 300000L, 20.0), ("api", 301000L, 20.0)))
+  }
+
   test("topk/bottomk rank the instant vector") {
     val top = evalQ("""topk(1, {name="up"})""")
       .select(col("`labels.user`"), col("value")).as[(String, Double)].collect().toSet

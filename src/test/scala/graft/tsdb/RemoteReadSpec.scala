@@ -312,13 +312,16 @@ class RemoteReadSpec extends SparkSpec {
     // one collect) instead of one scan+shuffle+collect per query; a
     // huge-but-set sample limit forces the old per-query path, so the
     // two responses must be identical bytes — including a query whose
-    // slice is empty and rows matched by BOTH queries
+    // slice is empty, rows matched by BOTH queries, and two samples of
+    // one series at the SAME timestamp (their order is fixed by their
+    // bytes, not by whichever the shuffle delivers first)
     import graft.sources.tsdbblock.WalReader.WalHistogram
     val s = spark; import s.implicits._
     def mk(time: Long, cnt: Double) =
       WalHistogram(0L, time, 0, 0, 0.0, 0.0, cnt, cnt / 2,
         Seq((0, cnt)), Nil, Nil, isFloat = false)
     val hs = s.createDataset(
+      (Map("name" -> "rpc", "job" -> "j0"), mk(1000L, 9.0)) +:
       (0 until 6).map(i => (Map("name" -> "rpc", "job" -> s"j${i % 3}"),
         mk(1000L + i * 500L, 1.0 + i))))
     val req = encodeReadRequest(ReadRequest(Seq(
