@@ -129,9 +129,12 @@ object ApiJson {
     val labels = rv.columns.toSeq.filterNot(Set("t", "hist"))
     val pair = concat(lit("["), tsSec(col("t")), lit(","),
       histJson(col("hist")), lit("]"))
-    rv.withColumn("_pair", struct(col("t"), pair.as("p")))
+    val grouped = rv.withColumn("_pair", struct(col("t"), pair.as("p")))
       .groupBy(labels.map(c => col(s"`$c`")): _*)
       .agg(array_sort(collect_list(col("_pair"))).as("_pairs"))
+    // no histogram samples is no histogram series ([[matrixGrouped]])
+    if (labels.isEmpty) grouped.where(size(col("_pairs")) > 0)
+    else grouped
   }
 
   private def tsSec(t: Column): Column =

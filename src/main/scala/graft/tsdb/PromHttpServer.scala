@@ -374,6 +374,15 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
   private def anySelectorSpans(e: PromQL.Expr): Boolean =
     histHead.nonEmpty && PromQL.selectorsOf(e).exists(selectorSpansStores)
 
+  /** Whether some name-bearing selector of `e` resolves to a
+    * pushed-native metric — its answer is typed by that metric, not by
+    * the samples one grid happens to hold. */
+  private def namesNative(e: PromQL.Expr): Boolean =
+    PromQL.selectorsOf(e).exists { ms =>
+      val nameMs = ms.filter(m => m.name == "__name__" || m.name == "name")
+      nameMs.nonEmpty && stored(nameMs).nonEmpty
+    }
+
   /** Whether a BARE selector must read BOTH stores — the union gate
     * one level WIDER than [[selectorSpansStores]], covering every way
     * float-store rows can hide behind hist-head routing:
@@ -699,17 +708,20 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       val out = PromQL.scalarOp(df0, op, lit(s), flipped, bool)
       (if (CmpOpSet(op) && !bool) out else stripName(out), Nil)
     } else {
-      // ONE materialization feeds the probe and the output (the
-      // annotation's isEmpty would otherwise re-run the whole inner
-      // evaluation — these are series-sized result frames)
-      val df = df0.localCheckpoint(true)
+      val scales = op == "*" || (op == "/" && !flipped)
+      // the skip annotation's probe and the output share ONE
+      // materialization (the probe would otherwise re-run the whole
+      // inner evaluation — series-sized result frames); a scaling op
+      // needs no probe and stays lazy, so a caller that rejects its
+      // histogram-typed answer runs no job
+      val df = if (scales) df0 else df0.localCheckpoint(true)
       val histRows = df.where(col(PromQLHist.HistCol).isNotNull)
       val floatRows = PromQL.toValueShape(
           df.where(col(PromQLHist.HistCol).isNull))
         .drop(PromQLHist.HistCol)
       val f0 = PromQL.scalarOp(floatRows, op, lit(s), flipped, bool)
       val f = if (CmpOpSet(op) && !bool) f0 else stripName(f0)
-      if (op == "*" || (op == "/" && !flipped))
+      if (scales)
         (f.unionByName(
           PromQLHist.scaleHistFrame(histRows,
             if (op == "*") s else 1.0 / s),
@@ -746,21 +758,26 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     * a shape this lattice composes; [[route]] decides what that means.
     * `by` and `without` grouping forms are twins throughout. */
   private def spanningShaped(e: PromQL.Expr, span: Span)
-      : Option[(DataFrame, Seq[String], Seq[String])] = {
+      : Option[Routed] = {
     def rec(x: PromQL.Expr) = spanningShaped(x, span)
-    // the two sides of a binary shape: at least one composes through
-    // `side` (the lattice); a side that does not is admitted only when
-    // its float-tier reading is complete ([[pureFloatSide]]) — with no
-    // lattice side at all the expression is not a mixed shape
+    // the two sides of a binary shape: a side composes through `side`
+    // (the lattice) only when one of its selectors reads both stores;
+    // a side that does not is admitted only when its float-tier
+    // reading is complete ([[pureFloatSide]]) — with no lattice side
+    // at all the expression is not a mixed shape. Decided from the
+    // selectors first, so a pair that cannot qualify evaluates neither
+    // side, and a failing left side skips the right one.
     def latticePair(l: PromQL.Expr, r: PromQL.Expr,
-        side: PromQL.Expr => Option[(DataFrame, Seq[String], Seq[String])]) = {
-      val (ls, rs) = (side(l), side(r))
-      def orFloat(x: PromQL.Expr,
-                  s: Option[(DataFrame, Seq[String], Seq[String])]) =
-        s.orElse(
-          if (pureFloatSide(x)) Some((span.floatEval(x), Nil, Nil)) else None)
-      if (ls.isEmpty && rs.isEmpty) None
-      else for (a <- orFloat(l, ls); b <- orFloat(r, rs)) yield (a, b)
+                    side: PromQL.Expr => Option[Routed]) = {
+      def lattice(x: PromQL.Expr) =
+        PromQL.selectorsOf(x).exists(bothStoresSelectorMs)
+      def eval(x: PromQL.Expr) =
+        if (lattice(x)) side(x)
+        else Some(Routed(span.floatEval(x), Nil, Nil))
+      if ((lattice(l) || lattice(r)) && (lattice(l) || pureFloatSide(l)) &&
+          (lattice(r) || pureFloatSide(r)))
+        for (a <- eval(l); b <- eval(r)) yield (a, b)
+      else None
     }
     def histHasRows(arg: PromQL.Expr): Boolean = !span.hist(arg).isEmpty
     def floatAgg(sel: PromQL.Selector, op: String,
@@ -785,15 +802,15 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
           case ("sum" | "avg", None) =>
             val (out, mixedWarn) = exclusiveShares(span.hist(e),
               floatAgg(sel, op, by, without, None))
-            Some((out, mixedWarn, Nil))
+            Some(Routed(out, mixedWarn, Nil))
           case ("count", None) =>
-            Some((PromQLHist.combineCountShares(span.hist(e),
+            Some(Routed(PromQLHist.combineCountShares(span.hist(e),
               floatAgg(sel, "count", by, without, None)), Nil, Nil))
           case ("min" | "max" | "stddev" | "stdvar", None) =>
-            Some((floatAgg(sel, op, by, without, None), Nil,
+            Some(Routed(floatAgg(sel, op, by, without, None), Nil,
               if (histHasRows(sel)) skippedInfo(op) else Nil))
           case ("quantile", Some(q)) =>
-            Some((floatAgg(sel, op, by, without, Some(q)), Nil,
+            Some(Routed(floatAgg(sel, op, by, without, Some(q)), Nil,
               if (histHasRows(sel)) skippedInfo("quantile") else Nil))
           // `group` is type-agnostic like count: 1 per group of SERIES
           // across BOTH shares — the count combine with the value mapped
@@ -805,7 +822,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
                 PromQL.AggWithout("count", w2, arg, None)
               case _ => e // unreachable: aggShape matched
             }
-            Some((PromQLHist.combineCountShares(
+            Some(Routed(PromQLHist.combineCountShares(
                 span.hist(histCount),
                 floatAgg(sel, "count", by, without, None))
               .withColumn(TsdbSchema.ValueCol, lit(1.0)), Nil, Nil))
@@ -813,12 +830,12 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
         }
       case PromQL.RankK(op @ ("topk" | "bottomk"), k, arg, by, w) =>
         shapedBothStores(arg).map { sel =>
-          (PromQL.rankFrame(span.floatShare(sel), op, k, by, w), Nil,
+          Routed(PromQL.rankFrame(span.floatShare(sel), op, k, by, w), Nil,
             if (histHasRows(sel)) skippedInfo(op) else Nil)
         }
       case PromQL.Fn(op @ ("sort" | "sort_desc"), arg, params) =>
         shapedBothStores(arg).map { sel =>
-          (PromQL.instantFn(op, span.floatShare(sel), params, 0L), Nil,
+          Routed(PromQL.instantFn(op, span.floatShare(sel), params, 0L), Nil,
             if (histHasRows(sel)) skippedInfo(op) else Nil)
         }
       // the TYPE-AGNOSTIC samplers run over the stitched UNION
@@ -827,13 +844,13 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       // the mixed response renders both kinds side by side)
       case PromQL.RankK("limitk", k, arg, by, w) =>
         shapedBothStores(arg).map { sel =>
-          (PromQLHist.limitKFrame(
+          Routed(PromQLHist.limitKFrame(
             unionShares(span.hist(sel), span.floatShare(sel)), k, by, w),
             Nil, Nil)
         }
       case PromQL.LimitRatio(r, arg) =>
         shapedBothStores(arg).map { sel =>
-          (PromQLHist.limitRatioFrame(
+          Routed(PromQLHist.limitRatioFrame(
             unionShares(span.hist(sel), span.floatShare(sel)), r), Nil, Nil)
         }
       // absent over a both-stores selector: 1 exactly when NEITHER
@@ -841,12 +858,12 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       // absent = 1 for nameless selectors whose native series exist
       // (silently wrong, the alerting primitive inverted)
       case PromQL.Fn("absent", arg, _) =>
-        shapedBothStores(arg).map { sel => (span.absent(sel), Nil, Nil) }
+        shapedBothStores(arg).map { sel => Routed(span.absent(sel), Nil, Nil) }
       // count_values consumes float values only — Prometheus 3 skips
       // the histogram share with the info annotation
       case PromQL.CountValues(lbl, arg, by, w) =>
         shapedBothStores(arg).map { sel =>
-          (PromQL.countValuesFrame(span.floatShare(sel), lbl, by, w), Nil,
+          Routed(PromQL.countValuesFrame(span.floatShare(sel), lbl, by, w), Nil,
             if (histHasRows(sel)) skippedInfo("count_values") else Nil)
         }
       // the sample-type-AGNOSTIC window family over a both-stores
@@ -875,7 +892,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       // arms below (those commit on the op name).
       case fn @ PromQL.Fn("count_over_time", arg, params)
           if subqueryBothStores(arg).nonEmpty =>
-        Some((PromQLHist.combineSeriesShares(span.hist(fn),
+        Some(Routed(PromQLHist.combineSeriesShares(span.hist(fn),
           span.subqueryFold("count_over_time", subqueryBothStores(arg).get,
             params), how = "sum"), Nil, Nil))
       case PromQL.Fn("present_over_time", arg, params)
@@ -884,7 +901,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
         // clamped to 1 (its own range-selector rule)
         val hPresent = span.hist(PromQL.Fn("count_over_time", arg, Nil))
           .withColumn(TsdbSchema.ValueCol, lit(1.0))
-        Some((PromQLHist.combineSeriesShares(hPresent,
+        Some(Routed(PromQLHist.combineSeriesShares(hPresent,
           span.subqueryFold("present_over_time", subqueryBothStores(arg).get,
             params), how = "max"), Nil, Nil))
       case fn @ PromQL.Fn(op @ ("sum_over_time" | "avg_over_time"),
@@ -892,7 +909,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
         val (out, mixed) = PromQLHist.exclusiveSeriesShares(
           span.hist(fn),
           span.subqueryFold(op, subqueryBothStores(arg).get, params))
-        Some((out, if (mixed) mixedRangeWarning else Nil, Nil))
+        Some(Routed(out, if (mixed) mixedRangeWarning else Nil, Nil))
       case PromQL.Fn(op, arg, params)
           if subqueryBothStores(arg).nonEmpty &&
             (SubqueryFloatInfoOps(op) || SubqueryFloatWarnOps(op)) =>
@@ -900,23 +917,23 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
           PromQL.Fn("count_over_time", arg, Nil)).isEmpty
         val f = span.subqueryFold(op, subqueryBothStores(arg).get, params)
         if (SubqueryFloatWarnOps(op))
-          Some((f, if (histHas) excludedNativeWarning(op) else Nil,
+          Some(Routed(f, if (histHas) excludedNativeWarning(op) else Nil,
             Nil))
         else
-          Some((f, Nil, if (histHas) skippedInfo(op) else Nil))
+          Some(Routed(f, Nil, if (histHas) skippedInfo(op) else Nil))
       case fn @ PromQL.Fn("count_over_time", arg, _) =>
         shapedBothStoresRange(arg).map { _ =>
-          (PromQLHist.combineSeriesShares(span.hist(fn), span.floatEval(fn),
-            how = "sum"), Nil, Nil)
+          Routed(PromQLHist.combineSeriesShares(span.hist(fn),
+            span.floatEval(fn), how = "sum"), Nil, Nil)
         }
       case fn @ PromQL.Fn("present_over_time", arg, _) =>
         shapedBothStoresRange(arg).map { _ =>
-          (PromQLHist.combineSeriesShares(span.hist(fn), span.floatEval(fn),
-            how = "max"), Nil, Nil)
+          Routed(PromQLHist.combineSeriesShares(span.hist(fn),
+            span.floatEval(fn), how = "max"), Nil, Nil)
         }
       case fn @ PromQL.Fn("absent_over_time", arg, _) =>
         shapedBothStoresRange(arg).map { _ =>
-          (span.absentBoth(span.hist(fn), span.floatEval(fn)), Nil, Nil)
+          Routed(span.absentBoth(span.hist(fn), span.floatEval(fn)), Nil, Nil)
         }
       // type-EXCLUSIVE range shapes (sum/avg_over_time fold whole
       // histograms, rate/increase apply bucket-level reset detection,
@@ -931,7 +948,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
         shapedBothStoresRange(arg).map { _ =>
           val (out, mixed) = PromQLHist.exclusiveSeriesShares(
             span.hist(fn), span.floatEval(fn))
-          (out, if (mixed) mixedRangeWarning else Nil, Nil)
+          Routed(out, if (mixed) mixedRangeWarning else Nil, Nil)
         }
       // type-PRESERVING raw-sample picks over a both-stores selector:
       // the winner per (series, window) is the share whose own sample
@@ -946,7 +963,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
           val ts = PromQL.Fn(
             if (op == "last_over_time") "ts_of_last_over_time"
             else "ts_of_first_over_time", arg, Nil)
-          (PromQLHist.pickByTimeShares(span.hist(fn), span.hist(ts),
+          Routed(PromQLHist.pickByTimeShares(span.hist(fn), span.hist(ts),
             span.floatEval(fn), span.floatEval(ts),
             latest = op == "last_over_time"), Nil, Nil)
         }
@@ -957,7 +974,8 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       case fn @ PromQL.Fn(op @ ("ts_of_last_over_time" |
           "ts_of_first_over_time"), arg, _) =>
         shapedBothStoresRange(arg).map { _ =>
-          (PromQLHist.combineSeriesShares(span.hist(fn), span.floatEval(fn),
+          Routed(PromQLHist.combineSeriesShares(span.hist(fn),
+            span.floatEval(fn),
             how = if (op == "ts_of_last_over_time") "max" else "min",
             keepName = true), Nil, Nil)
         }
@@ -973,10 +991,10 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
           val histHas = !span.hist(
             PromQL.Fn("count_over_time", sel, Nil)).isEmpty
           if (FloatWarnOverTime(op))
-            (span.floatEval(fn),
+            Routed(span.floatEval(fn),
               if (histHas) excludedNativeWarning(op) else Nil, Nil)
           else
-            (span.floatEval(fn), Nil,
+            Routed(span.floatEval(fn), Nil,
               if (histHas) skippedInfo(op) else Nil)
         }
       // VECTOR-SCALAR wrappers recurse into the lattice —
@@ -984,16 +1002,16 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       // nested wrappers included; the inner shape's warnings/infos
       // ride out with the wrapper's own skip annotation
       case PromQL.BinOp(op, _, l, PromQL.ScalarLit(s), bool, _, _, _) =>
-        rec(l).map { case (df, w, i) =>
+        rec(l).map { case Routed(df, w, i) =>
           val (out, extraI) = scalarWrapMixed(df, op, s,
             flipped = false, bool = bool)
-          (out, w, i ++ extraI)
+          Routed(out, w, i ++ extraI)
         }
       case PromQL.BinOp(op, _, PromQL.ScalarLit(s), r, bool, _, _, _) =>
-        rec(r).map { case (df, w, i) =>
+        rec(r).map { case Routed(df, w, i) =>
           val (out, extraI) = scalarWrapMixed(df, op, s,
             flipped = true, bool = bool)
-          (out, w, i ++ extraI)
+          Routed(out, w, i ++ extraI)
         }
       // VALUE MAPS recurse into the lattice: the float rows map
       // through the float tier's instantFn, histogram rows SKIP with
@@ -1002,7 +1020,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       // compute on histograms, but the hist selector frame carries no
       // sample time, so the native share is EXCLUDED with a warning
       case PromQL.Fn(op, arg, params) if ValueMapOverMixed(op) =>
-        rec(arg).map { case (df0, w, i) =>
+        rec(arg).map { case Routed(df0, w, i) =>
           val hasHist = df0.columns.contains(PromQLHist.HistCol)
           // one materialization feeds the skip probe AND the output
           // (series-sized result frames — the probe would otherwise
@@ -1018,18 +1036,18 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
             !df.where(col(PromQLHist.HistCol).isNotNull).isEmpty
           val out = PromQL.instantFn(op, floatRows, params, 0L)
           if (op == "timestamp")
-            (out, w ++ (if (skipped) excludedNativeWarning(op) else Nil),
+            Routed(out, w ++ (if (skipped) excludedNativeWarning(op) else Nil),
               i)
           else
-            (out, w, i ++ (if (skipped)
+            Routed(out, w, i ++ (if (skipped)
               Seq(s"histogram samples ignored in $op") else Nil))
         }
       // LABEL transforms / sort_by_label: payload-agnostic row
       // transforms over the stitched union — histogram rows ride
       // unchanged beside float rows
       case PromQL.StrFn(name, arg, strs) =>
-        rec(arg).map { case (df, w, i) =>
-          (PromQL.strFn(name, df, strs), w, i)
+        rec(arg).map { case Routed(df, w, i) =>
+          Routed(PromQL.strFn(name, df, strs), w, i)
         }
       // VECTOR-VECTOR binops between FLOAT-VALUED sides — the SLO
       // shape (`count_over_time(a[5m]) / on(k) count_over_time(b[5m])`):
@@ -1042,13 +1060,14 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
           if !l.isInstanceOf[PromQL.ScalarLit] &&
             !r.isInstanceOf[PromQL.ScalarLit] =>
         def floatSide(x: PromQL.Expr) = rec(x)
-          .filterNot(_._1.columns.contains(PromQLHist.HistCol))
+          .filterNot(_.df.columns.contains(PromQLHist.HistCol))
         for {
-          ((ld, lw, li), (rd, rw, ri)) <- latticePair(l, r, floatSide)
+          (Routed(ld, lw, li), Routed(rd, rw, ri)) <-
+            latticePair(l, r, floatSide)
         } yield {
           val extra = Seq("bucket", "t").filter(c =>
             ld.columns.contains(c) && rd.columns.contains(c))
-          (PromQL.binOpFrames(op, onK, ign, ld, rd, bool, extra),
+          Routed(PromQL.binOpFrames(op, onK, ign, ld, rd, bool, extra),
             lw ++ rw, li ++ ri)
         }
       // SET OPS: the membership joins are payload-agnostic
@@ -1057,14 +1076,14 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       // (`{user="x"} or {user="y"}`, `{user="x"} unless float_maint`)
       case PromQL.SetOp(op, on, l, r, ign) =>
         for {
-          ((ld, lw, li), (rd, rw, ri)) <- latticePair(l, r, rec)
-        } yield (PromQLHist.setOpFrames(op, ld, rd, on, ign),
+          (Routed(ld, lw, li), Routed(rd, rw, ri)) <- latticePair(l, r, rec)
+        } yield Routed(PromQLHist.setOpFrames(op, ld, rd, on, ign),
           lw ++ rw, li ++ ri)
       // a BARE both-stores selector under a wrapper: the stitched
       // union frame itself (the router's bare case, reachable here
       // only through the recursion above)
       case s: PromQL.Selector if shapedBothStores(s).nonEmpty =>
-        Some((unionShares(span.hist(s), span.floatShare(s)), Nil, Nil))
+        Some(Routed(unionShares(span.hist(s), span.floatShare(s)), Nil, Nil))
       case _ => None
     }
   }
@@ -1208,8 +1227,6 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     * would answer silently partial or silently empty. */
   private def route(ast: PromQL.Expr, span: Span)
       : Either[Rejection, Routed] = {
-    def answer(t: (DataFrame, Seq[String], Seq[String])) =
-      Routed(t._1, t._2, t._3)
     ast match {
       // no native head: the float tier answers alone, no Spark job first
       case _ if histHead.isEmpty => oneStore(ast, span)
@@ -1234,7 +1251,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       // SHAPED expressions over a SPANNING selector: the mixed-type
       // lattice where well-defined, everything else rejected loudly
       case _ if anySelectorSpans(ast) =>
-        spanningShaped(ast, span).map(answer).toRight(MixedTier)
+        spanningShaped(ast, span).toRight(MixedTier)
       // MULTI-OPERAND expressions whose selectors STRADDLE the stores
       // decompose through the split-tier lattice, each leaf on ITS OWN
       // store (a migrated metric's hist leaf evaluates native-only, the
@@ -1247,7 +1264,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       // `count_over_time({user="x"}[5m]) > 3`) compose through the
       // mixed lattice; anything it does not compose reads one store
       case _ =>
-        spanningShaped(ast, span).map(r => Right(answer(r)))
+        spanningShaped(ast, span).map(Right(_))
           .getOrElse(oneStore(ast, span))
     }
   }
@@ -2021,11 +2038,23 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       val outcome =
         try route(ast, new Span(s, e, step, shadowCarved(view), lb)) match {
           case Left(rej) => Left(rej.rule(key))
-          // a rule's value must be a FLOAT vector: an answer typed
-          // histogram (a hist column, even one empty on this grid)
-          // would leak NULL values into the float-only rules machinery
+          // a rule's value must be a FLOAT vector: histogram samples in
+          // the answer would leak NULL values into the float-only rules
+          // machinery. An answer naming a native metric is typed
+          // histogram whatever this grid holds (`up > 2 or native`); a
+          // nameless selector is typed by the series it matches, so
+          // with no histogram sample on the grid its answer is the
+          // float vector query_range renders (`sum({job="x"})` where
+          // no native series has job="x")
+          case Right(r) if r.df.columns.contains(PromQLHist.HistCol) &&
+              (namesNative(ast) ||
+                !r.df.where(col(PromQLHist.HistCol).isNotNull).isEmpty) =>
+            Left((if (straddlesTiers(ast) || anySelectorSpans(ast))
+              MixedTier else UnsupportedHist).rule(key))
           case Right(r) if r.df.columns.contains(PromQLHist.HistCol) =>
-            Left(UnsupportedHist.rule(key))
+            val f = PromQL.toValueShape(r.df.drop(PromQLHist.HistCol))
+            Right((if (f.columns.contains(TsdbSchema.ValueCol)) f
+                   else emptyVector, r.warnings ++ r.infos))
           case Right(r) => Right((r.df, r.warnings ++ r.infos))
         } catch {
           case NonFatal(t) =>

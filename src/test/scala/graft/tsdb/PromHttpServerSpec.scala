@@ -2623,14 +2623,17 @@ class PromHttpServerSpec extends SparkSpec {
   /** Serve `exprs` as one group of alerting rules on a 3s grid over
     * 0..9s (float store `base`), apply `push`, and ask both surfaces
     * about each expression over that grid. The rules tier and the query
-    * endpoints share one routing decision, so a rule is healthy only
-    * when query_range answers float values, errs with the same
-    * rejection as a query_range 422, and otherwise errs only for a
-    * histogram-typed value (whose samples may all miss this grid).
-    * Returns (expression, the rule's lastError — None when healthy —,
+    * endpoints share one routing decision, so a healthy rule's
+    * query_range answer is 200 with float values only, and an
+    * unhealthy rule carries the same rejection as a query_range 422,
+    * or answers 200 with histogram samples (a rule's value must be a
+    * float vector) — or with none on this grid only where `histTyped`
+    * says the expression's value is typed histogram. Returns
+    * (expression, the rule's lastError — None when healthy —,
     * query_range status and body). */
   private def rulesAgreeWithQueryRange(
       base: org.apache.spark.sql.DataFrame, exprs: Seq[String],
+      histTyped: String => Boolean,
       push: Int => Unit): Seq[(String, Option[String], Int, String)] = {
     val yaml = "groups:\n  - name: g\n    interval: 3s\n    rules:\n" +
       exprs.zipWithIndex.map { case (e, i) =>
@@ -2656,16 +2659,17 @@ class PromHttpServerSpec extends SparkSpec {
           java.net.URLEncoder.encode(e, UTF_8) + "&start=0&end=9&step=3")
         val err = lastError(s"r$i")
         val why = s"$e: rule lastError=$err, query_range $rc $rb"
+        val floatAnswer = rc == 200 && !rb.contains("\"histograms\"")
+        val rejections = Seq("expression mixes native-histogram",
+          "unsupported expression over native-histogram")
         err match {
-          case None =>
-            assert(rc == 200 && !rb.contains("\"histograms\""), why)
+          case None => assert(floatAnswer, why)
           case Some(m) if rc == 422 =>
-            assert(Seq("mixes native-histogram",
-                "unsupported expression over native-histogram")
-              .exists(k => m.contains(k) && rb.contains(k)), why)
+            assert(rejections.exists(k => m.contains(k) && rb.contains(k)),
+              why)
           case Some(m) =>
-            assert(rc == 200 && m.startsWith(
-              "unsupported expression over native-histogram"), why)
+            assert(rc == 200 && rejections.exists(m.startsWith) &&
+              (!floatAnswer || histTyped(e)), why)
         }
         (e, err, rc, rb)
       }
@@ -2673,13 +2677,14 @@ class PromHttpServerSpec extends SparkSpec {
   }
 
   test("ROUTER property: over generated straddling expressions a rule is " +
-      "healthy only on a float answer, and errs on query_range's 422s") {
+      "healthy only on a float query_range answer, and every float-typed " +
+      "split is healthy") {
     // the rules tier and the query endpoints share one routing
-    // decision, so for the same expression over the same grid a rule's
-    // health=err means the HTTP 422 (same rejection) or a
-    // histogram-typed answer — a rule's value must be a float vector.
-    // Property over generated expressions mixing a native and a float
-    // metric.
+    // decision, so for the same expression over the same grid a rule is
+    // health=ok exactly when query_range answers 200 with float values
+    // only; health=err is the HTTP 422 (same rejection) or a histogram
+    // answer. Property over generated expressions mixing a native and a
+    // float metric.
     import org.scalacheck.Gen
     import PromQL._
     def sel(n: String) = Selector(Seq(Matcher.Eq("name", n)), None, 0L)
@@ -2710,14 +2715,41 @@ class PromHttpServerSpec extends SparkSpec {
           op <- Gen.oneOf(">", "/")
           a <- expr(depth - 1)
         } yield BinOp(op, Nil, a, ScalarLit(2.0))))
-    // straddling = names both stores: hm is pushed native, up is float
-    val exprs = Iterator.from(1).take(1000)
+    // which stores an expression names: hm is pushed native, up float
+    def names(x: Expr): (Boolean, Boolean) = {
+      val r = render(x)
+      (r.contains("\"hm\""), r.contains("\"up\""))
+    }
+    val asts = Iterator.from(1).take(1000)
       .flatMap(d => expr(2).apply(Gen.Parameters.default,
         org.scalacheck.rng.Seed(1800L + d)))
-      .map(render)
-      .filter(r => r.contains("\"hm\"") && r.contains("\"up\""))
+      .filter(names(_) == ((true, true)))
       .take(80).toSeq
-    assert(exprs.size == 80, s"only ${exprs.size} straddling samples")
+    assert(asts.size == 80, s"only ${asts.size} straddling samples")
+    val exprs = asts.map(render)
+    // the float-typed splits: set ops keep the left rows (`or` the
+    // right ones too), so those must be float; arithmetic and scalar
+    // wrappers need float operands; a single-store operand is typed by
+    // its own tier (a histogram membership side is fine). A rule over
+    // any of these must stay healthy.
+    def histOnly(x: Expr) = names(x) == ((true, false))
+    def floatSplit(x: Expr, needFloat: Boolean): Boolean = x match {
+      case _ if histOnly(x) => PromQLHist.floatEvaluable(x) ||
+        (!needFloat && PromQLHist.histEvaluable(x))
+      case _ if names(x) != ((true, true)) => true
+      case SetOp(op, _, l, r, _) =>
+        floatSplit(l, needFloat) && floatSplit(r, needFloat && op == "or")
+      case BinOp(_, _, l, ScalarLit(_), _, _, _, _) => floatSplit(l, true)
+      case BinOp(op, _, l, r, bool, _, _, _) =>
+        def histValued(y: Expr) = histOnly(y) &&
+          PromQLHist.histEvaluable(y) && !PromQLHist.floatEvaluable(y)
+        (floatSplit(l, true) && floatSplit(r, true)) ||
+          (!needFloat && !bool && (op == "*" || op == "/") &&
+            histValued(l) && floatSplit(r, true)) ||
+          (!needFloat && !bool && op == "*" && histValued(r) &&
+            floatSplit(l, true))
+      case _ => false
+    }
     // hm{a} (shares user=a with up) and hm{c} (no float twin), each
     // with two samples inside one 2s window, so rates answer too
     def hist(t: Long) = RemoteWrite.SparseHist(
@@ -2727,14 +2759,22 @@ class PromHttpServerSpec extends SparkSpec {
     val wreq = RemoteWrite2.encodeRequest(Seq("a", "c").map(u =>
       RemoteWrite2.Rw2Series(labels = Seq("__name__" -> "hm", "user" -> u),
         histograms = Seq(hist(1700L), hist(8000L), hist(8500L)))))
-    val results = rulesAgreeWithQueryRange(wide, exprs, p => assert(client.send(
-      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p/api/v1/write"))
-        .header("Content-Type",
-          "application/x-protobuf;proto=io.prometheus.write.v2.Request")
-        .POST(HttpRequest.BodyPublishers.ofByteArray(wreq)).build(),
-      HttpResponse.BodyHandlers.ofByteArray()).statusCode() == 204))
+    val results = rulesAgreeWithQueryRange(wide, exprs,
+      e => !floatSplit(asts(exprs.indexOf(e)), needFloat = true),
+      p => assert(client.send(
+        HttpRequest.newBuilder(
+            URI.create(s"http://127.0.0.1:$p/api/v1/write"))
+          .header("Content-Type",
+            "application/x-protobuf;proto=io.prometheus.write.v2.Request")
+          .POST(HttpRequest.BodyPublishers.ofByteArray(wreq)).build(),
+        HttpResponse.BodyHandlers.ofByteArray()).statusCode() == 204))
+    asts.zip(results).filter(a => floatSplit(a._1, needFloat = true))
+      .foreach { case (_, (e, err, rc, rb)) =>
+        assert(err.isEmpty, s"float-typed split $e: $err, $rc $rb")
+      }
     // the sample exercises every outcome
-    assert(results.exists(_._2.isEmpty) && results.exists(_._3 == 422) &&
+    assert(asts.exists(floatSplit(_, needFloat = true)) &&
+      results.exists(_._3 == 422) &&
       results.exists(r => r._2.nonEmpty && r._3 == 200))
   }
 
@@ -3939,8 +3979,9 @@ class PromHttpServerSpec extends SparkSpec {
     } finally srv.stop()
   }
 
-  test("MIXED-LATTICE shapes answer 200 on query_range, and each one's " +
-      "rule health agrees with that answer") {
+  test("MIXED-LATTICE shapes answer 200 on query_range, every float-typed " +
+      "one is a healthy rule, and each rule's health agrees with the " +
+      "answer") {
     val shapes = Seq(
       """sum({user="a"})""", """avg without (k) ({user="a"})""",
       """count({user="a"})""", """group({user="a"})""",
@@ -3992,8 +4033,64 @@ class PromHttpServerSpec extends SparkSpec {
     // hist head exists → the nameless shapes read both stores
     // the float store holds only the fixture's series, so no two
     // metrics share a label set once an over-time fold drops the name
-    rulesAgreeWithQueryRange(wide.limit(0), shapes, p => pushMigFixture(p))
-      .foreach { case (q, _, rc, rb) => assert(rc == 200, s"$q: $rc $rb") }
+    // the shapes whose value can carry histogram samples (type-exclusive
+    // folds and aggregations, raw picks, the type-agnostic samplers,
+    // label transforms, set ops and scaling over bare selectors); every
+    // other shape is float-typed — counts, rankings, presence/absence,
+    // timestamps, float-only folds, value maps, comparisons, float
+    // arithmetic — and must stay a healthy rule
+    val histTyped = Set(
+      """sum({user="a"})""", """avg without (k) ({user="a"})""",
+      """limitk(2, {user="a"})""", """limit_ratio(0.5, {user="a"})""",
+      """sum_over_time({user="a"}[5s])""",
+      """avg_over_time({user="a"}[5s])""",
+      """rate({user="a"}[5s])""", """increase({user="a"}[5s])""",
+      """delta({user="a"}[5s])""",
+      """last_over_time({user="a"}[5s])""",
+      """first_over_time({user="a"}[5s])""",
+      """label_replace({user="a"}, "d", "$1", "user", "(.*)")""",
+      """label_join({user="a"}, "d", "-", "user")""",
+      """sum({user="a"}) * 2""", """2 * sum({user="a"})""",
+      """{user="a"} or {user="b"}""", """{user="a"} unless {user="b"}""",
+      """sum_over_time({user="a"}[10s:5s])""")
+    assert(histTyped.subsetOf(shapes.toSet) && shapes.size == 58)
+    rulesAgreeWithQueryRange(wide.limit(0), shapes, histTyped,
+        p => pushMigFixture(p))
+      .foreach { case (q, err, rc, rb) =>
+        assert(rc == 200, s"$q: $rc $rb")
+        if (!histTyped(q)) assert(err.isEmpty, s"$q: $err, $rb")
+      }
+  }
+
+  test("NAMELESS histogram-typed rules stay healthy while no native " +
+      "sample matches") {
+    // a native series carrying `user` makes every nameless `user`
+    // selector read both stores; with no native sample matching, the
+    // answer is the float store's vector and the rule a healthy float
+    // rule, whatever the shape's type over histograms
+    val shapes = Seq("""sum({user="b"})""", """rate({user="b"}[5s])""",
+      """{user="b"} unless {user="c"}""")
+    val h = RemoteWrite.SparseHist(
+      time = 1700L, labels = Map.empty, count = 4.0, sum = 10.0,
+      schema = 0, zeroThreshold = 0.0, zeroCount = 0.0,
+      positive = Seq((1, 2.0), (2, 2.0)), negative = Nil)
+    val wreq = RemoteWrite2.encodeRequest(Seq(RemoteWrite2.Rw2Series(
+      labels = Seq("__name__" -> "hnm", "user" -> "a"),
+      histograms = Seq(h))))
+    val results = rulesAgreeWithQueryRange(wide, shapes, _ => false,
+      p => assert(
+      client.send(
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p/api/v1/write"))
+          .header("Content-Type",
+            "application/x-protobuf;proto=io.prometheus.write.v2.Request")
+          .POST(HttpRequest.BodyPublishers.ofByteArray(wreq)).build(),
+        HttpResponse.BodyHandlers.ofByteArray()).statusCode() == 204))
+    results.foreach { case (q, err, rc, rb) =>
+      assert(err.isEmpty && rc == 200, s"$q: $err, $rc $rb")
+    }
+    // up{b} = 2.0 answers the sum and survives the unless
+    assert(Seq(results(0), results(2)).forall(_._4.contains("\"2.0\"")),
+      results)
   }
 
   test("TIME-AXIS property: the union path's instant answer equals the " +
