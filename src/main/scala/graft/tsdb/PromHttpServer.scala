@@ -3,6 +3,8 @@ package graft.tsdb
 import java.net.InetSocketAddress
 import java.net.URLDecoder
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{ExecutorService, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -65,7 +67,11 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
                            // start_time_unix_nano AND remote-write
                            // 2.0's created_timestamp — so counter-
                            // reset detection sees the reset
-                           createdZeroIngestion: Boolean = false) {
+                           createdZeroIngestion: Boolean = false,
+                           // request handlers run on this many threads
+                           // (Prometheus's --query.max-concurrency
+                           // default); requests beyond it queue
+                           maxConcurrency: Int = 20) {
 
   import PromHttpServer.{MixedTier, Rejection, Routed, UnsupportedHist}
 
@@ -89,13 +95,22 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
   private var histAppends = 0
   private var exemplarAppends = 0
 
+  /** Serializes the appends to the heads. An append builds its next
+    * head — the union, and on a consolidating append the eager
+    * `localCheckpoint` — holding only this lock, then takes the server
+    * monitor just to publish the head and bump its version. Queries
+    * read the versions under the monitor, so they never wait out a
+    * consolidation. */
+  private val appendLock = new Object
+
   private def boundLineage(df: DataFrame, appends: Int): DataFrame =
     if (appends % ConsolidateEvery == 0) df.localCheckpoint(true) else df
 
-  private def appendWide(batch: DataFrame): Unit = synchronized {
-    wideAppends += 1
-    wide = boundLineage(
-      wide.unionByName(batch, allowMissingColumns = true), wideAppends)
+  private def appendWide(batch: DataFrame): Unit = appendLock.synchronized {
+    val n = wideAppends + 1
+    val next = boundLineage(
+      wide.unionByName(batch, allowMissingColumns = true), n)
+    synchronized { wide = next; wideAppends = n }
   }
 
   /** The served head (test hook: lineage-bound plan assertions). */
@@ -197,16 +212,20 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
           0L, h.time, h.resetHint, h.schema, h.zeroThreshold, h.zeroCount,
           h.count, h.sum, h.positive, h.negative, h.customValues,
           isFloat = false))))
-      synchronized {
-        histAppends += 1
-        histHead = Some(boundLineage(histHead.fold(wideH)(
-          _.unionByName(wideH, allowMissingColumns = true)), histAppends))
-        histSparseHead = Some(boundLineage(histSparseHead.map(_.toDF())
-            .fold(sparseRows.toDF())(_.unionByName(sparseRows.toDF())),
-            histAppends)
+      appendLock.synchronized {
+        val n = histAppends + 1
+        val nextHead = boundLineage(histHead.fold(wideH)(
+          _.unionByName(wideH, allowMissingColumns = true)), n)
+        val nextSparse = boundLineage(histSparseHead.map(_.toDF())
+            .fold(sparseRows.toDF())(_.unionByName(sparseRows.toDF())), n)
           .as[(Map[String, String],
-            graft.sources.tsdbblock.WalReader.WalHistogram)])
-        histMetricNames ++= sparse.flatMap(_.labels.get("__name__"))
+            graft.sources.tsdbblock.WalReader.WalHistogram)]
+        synchronized {
+          histHead = Some(nextHead)
+          histSparseHead = Some(nextSparse)
+          histAppends = n
+          histMetricNames ++= sparse.flatMap(_.labels.get("__name__"))
+        }
       }
     }
     sparse.size
@@ -1608,11 +1627,22 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
   def table: DataFrame = wide
 
   /** Bind 127.0.0.1:`port` (0 = ephemeral) and serve; returns the
-    * bound port. */
+    * bound port. Handlers run on a fresh pool of `maxConcurrency`
+    * daemon threads (`graft-http-<n>`); requests beyond the bound wait
+    * in the pool's queue — never refused, as queries wait at
+    * Prometheus's query gate — and a client that stalls mid-body ties
+    * up one thread, not the server. */
   def start(port: Int = 0): Int = synchronized {
     require(server == null, "server already started")
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.createContext("/", (ex: HttpExchange) => handle(ex))
+    pool = Executors.newFixedThreadPool(maxConcurrency, (r: Runnable) => {
+      val t = new Thread(r,
+        s"graft-http-${PromHttpServer.threadSeq.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+    server.setExecutor(pool)
     server.start()
     if (alertmanagers.nonEmpty && rules.nonEmpty) {
       // the notifier loop: evaluate + push firing alerts every rule
@@ -1630,18 +1660,40 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     server.getAddress.getPort
   }
 
-  def stop(): Unit = synchronized {
-    if (notifier != null) { notifier.cancel(); notifier = null }
-    if (server != null) { server.stop(0); server = null }
+  /** Stop serving: close the listener and every connection, then wait
+    * up to [[PromHttpServer.StopWaitMs]] for in-flight handlers before
+    * interrupting them. The wait is outside the monitor — a handler
+    * may need it to finish. */
+  def stop(): Unit = {
+    val handlers = synchronized {
+      if (notifier != null) { notifier.cancel(); notifier = null }
+      if (server != null) { server.stop(0); server = null }
+      val p = pool
+      pool = null
+      p
+    }
+    if (handlers != null) {
+      handlers.shutdown()
+      if (!handlers.awaitTermination(PromHttpServer.StopWaitMs,
+          TimeUnit.MILLISECONDS)) handlers.shutdownNow(): Unit
+    }
   }
 
   private var notifier: java.util.Timer = _
+  private var pool: ExecutorService = _
 
   // ---- dispatch ------------------------------------------------------
 
+  /** One request, under its own Spark job group (`graft-http-<seq>`,
+    * described by the path): its jobs are attributable, and the group
+    * is the handle a timeout or cancellation would use. Cleared after,
+    * so a pool thread's next request starts clean. */
   private def handle(ex: HttpExchange): Unit = {
+    val sc = spark.sparkContext
     try {
       val path = ex.getRequestURI.getPath
+      sc.setJobGroup(s"graft-http-${PromHttpServer.requestSeq.incrementAndGet()}",
+        path, interruptOnCancel = true)
       val body = ex.getRequestBody.readAllBytes()
       val params = parseParams(Option(ex.getRequestURI.getRawQuery),
         if (path == "/api/v1/write" || path == "/api/v1/read" ||
@@ -1720,7 +1772,10 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       case e: IllegalArgumentException =>
         err(ex, 400, "bad_data", String.valueOf(e.getMessage))
       case NonFatal(e) => err(ex, 422, "execution", String.valueOf(e))
-    } finally ex.close()
+    } finally {
+      sc.clearJobGroup()
+      ex.close()
+    }
   }
 
   // ---- admin API (`--web.enable-admin-api`) --------------------------
@@ -2548,11 +2603,11 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       val batch = rows.toDF("time", "value", "labels", "trace_id")
         .select(col("time") +: col("value") +: labelCols :+
           col("trace_id"): _*)
-      synchronized {
-        exemplarAppends += 1
-        exemplarHead = Some(boundLineage(exemplarHead.fold(batch)(
-          _.unionByName(batch, allowMissingColumns = true)),
-          exemplarAppends))
+      appendLock.synchronized {
+        val n = exemplarAppends + 1
+        val next = boundLineage(exemplarHead.fold(batch)(
+          _.unionByName(batch, allowMissingColumns = true)), n)
+        synchronized { exemplarHead = Some(next); exemplarAppends = n }
       }
     }
     rows.size
@@ -2866,6 +2921,14 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
 }
 
 object PromHttpServer {
+  /** JVM-wide counters: handler threads (`graft-http-<n>`) and request
+    * job groups stay unique across every server in the process. */
+  private val threadSeq = new AtomicLong
+  private val requestSeq = new AtomicLong
+
+  /** How long [[PromHttpServer.stop]] waits for in-flight handlers. */
+  private val StopWaitMs = 5000L
+
   /** Maps to the API's 503 `unavailable` error — Prometheus's
     * `errorUnavailable`, e.g. the admin endpoints when
     * `--web.enable-admin-api` is off. */
