@@ -67,11 +67,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
                            // start_time_unix_nano AND remote-write
                            // 2.0's created_timestamp — so counter-
                            // reset detection sees the reset
-                           createdZeroIngestion: Boolean = false,
-                           // request handlers run on this many threads
-                           // (Prometheus's --query.max-concurrency
-                           // default); requests beyond it queue
-                           maxConcurrency: Int = 20) {
+                           createdZeroIngestion: Boolean = false) {
 
   import PromHttpServer.{MixedTier, Rejection, Routed, UnsupportedHist}
 
@@ -100,7 +96,9 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     * `localCheckpoint` — holding only this lock, then takes the server
     * monitor just to publish the head and bump its version. Queries
     * read the versions under the monitor, so they never wait out a
-    * consolidation. */
+    * consolidation. Each append publishes its own head, so a request
+    * that appends to several heads (a remote-write or OTLP push)
+    * becomes visible to a concurrent query one head at a time. */
   private val appendLock = new Object
 
   private def boundLineage(df: DataFrame, appends: Int): DataFrame =
@@ -1627,16 +1625,17 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
   def table: DataFrame = wide
 
   /** Bind 127.0.0.1:`port` (0 = ephemeral) and serve; returns the
-    * bound port. Handlers run on a fresh pool of `maxConcurrency`
-    * daemon threads (`graft-http-<n>`); requests beyond the bound wait
-    * in the pool's queue — never refused, as queries wait at
+    * bound port. Handlers run on a fresh pool of
+    * [[PromHttpServer.MaxConcurrency]] daemon threads
+    * (`graft-http-<n>`); requests beyond the bound wait in the
+    * pool's queue — never refused, as queries wait at
     * Prometheus's query gate — and a client that stalls mid-body ties
     * up one thread, not the server. */
   def start(port: Int = 0): Int = synchronized {
     require(server == null, "server already started")
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.createContext("/", (ex: HttpExchange) => handle(ex))
-    pool = Executors.newFixedThreadPool(maxConcurrency, (r: Runnable) => {
+    pool = Executors.newFixedThreadPool(PromHttpServer.MaxConcurrency, (r: Runnable) => {
       val t = new Thread(r,
         s"graft-http-${PromHttpServer.threadSeq.incrementAndGet()}")
       t.setDaemon(true)
@@ -1693,7 +1692,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     try {
       val path = ex.getRequestURI.getPath
       sc.setJobGroup(s"graft-http-${PromHttpServer.requestSeq.incrementAndGet()}",
-        path, interruptOnCancel = true)
+        path)
       val body = ex.getRequestBody.readAllBytes()
       val params = parseParams(Option(ex.getRequestURI.getRawQuery),
         if (path == "/api/v1/write" || path == "/api/v1/read" ||
@@ -1791,6 +1790,14 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       "admin APIs need a data directory (dataDir)"))
   }
 
+  /** Serializes the three admin endpoints over the data directory, as
+    * Prometheus's DB mutex does: delete_series reads, merges and
+    * rewrites tombstone files and picks the next WAL segment, and
+    * clean_tombstones rewrites and removes blocks, so two of them at
+    * once could lose stones or bring deleted data back. Queries never
+    * read the data directory and do not take it. */
+  private val dataDirLock = new Object
+
   /** `/api/v1/admin/tsdb/snapshot?skip_head=` — materialize the data
     * dir under `<dataDir>/snapshots/<name>` ([[Backfill.snapshot]]:
     * blocks hard-link, the WAL head flushes as real blocks unless
@@ -1804,8 +1811,10 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       .withZone(java.time.ZoneOffset.UTC)
       .format(java.time.Instant.now())
     val name = f"$stamp-${System.nanoTime() & 0xffffffffffffL}%012x"
-    Backfill.snapshot(spark, dir, s"$dir/snapshots/$name",
-      skipHead = skipHead)
+    dataDirLock.synchronized {
+      Backfill.snapshot(spark, dir, s"$dir/snapshots/$name",
+        skipHead = skipHead)
+    }
     ok(ex, s"""{"name":${jstr(name)}}""")
   }
 
@@ -1820,7 +1829,9 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       throw new IllegalArgumentException("no match[] parameter provided")
     val mint = p.first("start").map(parseTime).getOrElse(Long.MinValue)
     val maxt = p.first("end").map(parseTime).getOrElse(Long.MaxValue)
-    sels.foreach(ms => TsdbAdmin.deleteSeriesDb(dir, ms, mint, maxt))
+    dataDirLock.synchronized {
+      sels.foreach(ms => TsdbAdmin.deleteSeriesDb(dir, ms, mint, maxt))
+    }
     ex.sendResponseHeaders(204, -1)
   }
 
@@ -1831,18 +1842,20 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     * 204 on success. */
   private def adminCleanTombstones(ex: HttpExchange): Unit = {
     val dir = adminDir
-    val stoned = graft.sources.tsdbblock.BlockMeta.list(dir).filter(m =>
-      graft.sources.tsdbblock.Tombstones.read(s"${m.dir}/tombstones").nonEmpty)
-    stoned.foreach { m =>
-      // range = the parent's own exclusive maxTime keeps the cleaned
-      // data in ONE block stamped with the same window end
-      TsdbAdmin.cleanTombstones(spark, Seq(m.dir), dir,
-        blockRangeMs = m.maxTime)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(): Unit
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
+      f.delete(): Unit
+    }
+    dataDirLock.synchronized {
+      val stoned = graft.sources.tsdbblock.BlockMeta.list(dir).filter(m =>
+        graft.sources.tsdbblock.Tombstones.read(s"${m.dir}/tombstones").nonEmpty)
+      stoned.foreach { m =>
+        // range = the parent's own exclusive maxTime keeps the cleaned
+        // data in ONE block stamped with the same window end
+        TsdbAdmin.cleanTombstones(spark, Seq(m.dir), dir,
+          blockRangeMs = m.maxTime)
+        rm(new java.io.File(m.dir))
       }
-      rm(new java.io.File(m.dir))
     }
     ex.sendResponseHeaders(204, -1)
   }
@@ -2446,10 +2459,11 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     if (isV2) {
       // the v2 spec's partial-write contract applies to ERROR
       // responses too: a sender reads the written-count headers to
-      // decide what to retry. This receiver is atomic (everything
-      // decodes and validates before the first append), so an error
-      // response truthfully reports zero — set up front, overwritten
-      // with the real counts on success.
+      // decide what to retry. Everything decodes and validates before
+      // the first append, so an error response truthfully reports
+      // zero — set up front, overwritten with the real counts on
+      // success. (A successful request's parts still publish one
+      // head at a time: see `appendLock`.)
       val h = ex.getResponseHeaders
       h.set("X-Prometheus-Remote-Write-Samples-Written", "0")
       h.set("X-Prometheus-Remote-Write-Histograms-Written", "0")
@@ -2928,6 +2942,10 @@ object PromHttpServer {
 
   /** How long [[PromHttpServer.stop]] waits for in-flight handlers. */
   private val StopWaitMs = 5000L
+
+  /** Handler threads per server: Prometheus's `--query.max-concurrency`
+    * default. Requests beyond it wait in the pool's queue. */
+  private[tsdb] val MaxConcurrency = 20
 
   /** Maps to the API's 503 `unavailable` error — Prometheus's
     * `errorUnavailable`, e.g. the admin endpoints when

@@ -21,7 +21,8 @@ import graft.SparkSpec
   * client holds one handler, concurrent answers equal serial ones,
   * concurrent writes lose nothing while reads stay live through a
   * head consolidation, each request's Spark jobs carry their own job
-  * group, and the pool's threads end with the server. */
+  * group, overlapping admin requests lose no tombstones, and the pool's
+  * threads end with the server. */
 class PromHttpConcurrencySpec extends SparkSpec {
   import PromHttpConcurrencySpec._
   import spark.implicits._
@@ -217,7 +218,6 @@ class PromHttpConcurrencySpec extends SparkSpec {
     try {
       val (rangePath, rangeParams) = panels.head
       val (instantPath, instantParams) = panels(2)
-      val (seriesPath, seriesParams) = panels(5)
       // two overlapping requests: each one's scan task waits until both
       // requests have one running
       Overlap.arm()
@@ -227,27 +227,64 @@ class PromHttpConcurrencySpec extends SparkSpec {
       }
       assert(both == Seq(200, 200))
       assert(Overlap.met.getCount == 0, "the two requests did not overlap")
-      // one handler thread, two requests in turn
-      withServer(new PromHttpServer(spark, store, maxConcurrency = 1)) { port =>
-        assert(get(port, instantPath, instantParams: _*)._1 == 200)
-        assert(get(port, seriesPath, seriesParams: _*)._1 == 200)
+      // one more request in turn than the pool has threads: the last
+      // runs on a thread an earlier request used
+      val serial = PromHttpServer.MaxConcurrency + 1
+      withServer(new PromHttpServer(spark, store)) { port =>
+        (0 until serial).foreach(_ =>
+          assert(get(port, instantPath, instantParams: _*)._1 == 200))
       }
       // the listener bus is asynchronous: wait until it goes quiet
       var seen = -1
       while (seen != jobs.size) { seen = jobs.size; Thread.sleep(500) }
       val groups = jobs.asScala.toSeq.groupMap(_._1)(_._2).map { case (d, gs) => d -> gs.toSet }
-      assert(groups.keySet == Set(rangePath, instantPath, seriesPath), groups)
+      assert(groups.keySet == Set(rangePath, instantPath), groups)
       // the overlapping requests ran under two distinct groups
       assert(groups(rangePath).size == 2, groups)
-      // the pool thread's next request ran under a fresh group of its own
-      assert(groups(instantPath).size == 1 && groups(seriesPath).size == 1, groups)
-      assert((groups(instantPath) ++ groups(seriesPath) ++ groups(rangePath)).size == 4, groups)
+      // every serial request, the reused thread's included, ran under a
+      // fresh group of its own
+      assert(groups(instantPath).size == serial, groups)
+      assert((groups(instantPath) ++ groups(rangePath)).size == serial + 2, groups)
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("overlapping delete_series requests keep every request's stones") {
+    import graft.sources.tsdbblock.{BlockMeta, Tombstones, TsdbBlockWriter,
+      TsdbDb, TsdbWalWriter}
+    // one block and one WAL, each holding one series per job
+    val jobs = (0 until 16).map(j => s"j$j")
+    val db = tmpDir("graft_admin_overlap_")
+    TsdbBlockWriter.write(jobs.map(j => (1000L, 1.0, Map("__name__" -> "up", "job" -> j)))
+      .toDF("time", "value", "labels"), db)
+    TsdbWalWriter.write(jobs.map(j => (3000L, 2.0, Map("__name__" -> "up", "job" -> j)))
+      .toDF("time", "value", "labels"), s"$db/wal", partitions = 1)
+    assert(TsdbDb.read(spark, db).count() == 2 * jobs.size)
+    withServer(new PromHttpServer(spark, store, dataDir = Some(db), adminApi = true)) { port =>
+      // every request deletes its own job, all at once
+      val codes = inParallel(jobs.size) { i =>
+        val sel = java.net.URLEncoder.encode(s"""{job="${jobs(i)}"}""", UTF_8)
+        client.send(
+          HttpRequest.newBuilder(URI.create(
+            s"http://127.0.0.1:$port/api/v1/admin/tsdb/delete_series?match[]=$sel"))
+            .timeout(Duration.ofSeconds(60))
+            .POST(HttpRequest.BodyPublishers.noBody()).build(),
+          HttpResponse.BodyHandlers.discarding()).statusCode()
+      }
+      assert(codes.forall(_ == 204), codes)
+    }
+    // the block holds one stone per job, and neither the block's nor
+    // the WAL's samples survive
+    val blocks = BlockMeta.list(db)
+    assert(blocks.size == 1)
+    assert(Tombstones.read(s"${blocks.head.dir}/tombstones").size == jobs.size)
+    val left = TsdbDb.read(spark, db).collect()
+      .map(r => r.getAs[Map[String, String]]("labels")("job")).toSeq
+    assert(left.isEmpty, left.sorted)
   }
 
   test("the handler pool is daemon, ends with stop(), and restarts fresh") {
     val before = graftHttpThreads
-    val srv = new PromHttpServer(spark, store, maxConcurrency = 3)
+    val srv = new PromHttpServer(spark, store)
     val port = srv.start()
     inParallel(3)(_ => get(port, "/-/healthy"))
     val mine = graftHttpThreads -- before
