@@ -177,7 +177,6 @@ object RelationalQueries {
     // non-equi predicate against a tiny build side, so the fact table
     // never shuffles (the scale-safe banded-join shape)
     "rel_q16_range_join" -> ((s, dir) => {
-      val s_ = s; import s_.implicits._
       val bands = s.range(0, 6).select(
         col("id").as("band"),
         (col("id") * 10).cast("double").as("lo"),

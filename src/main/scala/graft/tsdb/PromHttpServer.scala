@@ -7,7 +7,7 @@ import java.util.concurrent.{ExecutorService, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.util.control.NonFatal
@@ -69,9 +69,9 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
                            // reset detection sees the reset
                            createdZeroIngestion: Boolean = false) {
 
-  import PromHttpServer.{MixedTier, Rejection, Routed, UnsupportedHist}
+  import PromHttpServer.{Memo, MixedTier, Rejection, Routed, SparseRow,
+    UnsupportedHist}
 
-  @volatile private var wide: DataFrame = initial
   private var server: HttpServer = _
   private val startedAt: Long = System.currentTimeMillis()
 
@@ -85,84 +85,464 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     * Prometheus's own head, whose samples live in memory until flushed.
     * Superseded checkpoint RDDs are unreferenced afterwards and the
     * ContextCleaner evicts them. Queries between consolidations see at
-    * most `ConsolidateEvery` unions. */
+    * most `ConsolidateEvery` unions. Each head counts its own appends. */
   private val ConsolidateEvery = 32
-  private var wideAppends = 0
-  private var histAppends = 0
-  private var exemplarAppends = 0
-
-  /** Serializes the appends to the heads. An append builds its next
-    * head — the union, and on a consolidating append the eager
-    * `localCheckpoint` — holding only this lock, then takes the server
-    * monitor just to publish the head and bump its version. Queries
-    * read the versions under the monitor, so they never wait out a
-    * consolidation. Each append publishes its own head, so a request
-    * that appends to several heads (a remote-write or OTLP push)
-    * becomes visible to a concurrent query one head at a time. */
-  private val appendLock = new Object
 
   private def boundLineage(df: DataFrame, appends: Int): DataFrame =
     if (appends % ConsolidateEvery == 0) df.localCheckpoint(true) else df
 
-  private def appendWide(batch: DataFrame): Unit = appendLock.synchronized {
-    val n = wideAppends + 1
-    val next = boundLineage(
-      wide.unionByName(batch, allowMissingColumns = true), n)
-    synchronized { wide = next; wideAppends = n }
+  /** A WIDE head — the float samples or the exemplars — and the number
+    * of appends that built it. A push's rows are a one-append head of
+    * their own ([[floatBatch]], [[exemplarBatch]]). */
+  private final class Head(val df: DataFrame, val appends: Int) {
+    def append(batch: Head): Head = {
+      val n = appends + 1
+      new Head(boundLineage(
+        df.unionByName(batch.df, allowMissingColumns = true), n), n)
+    }
+
+    /** The metric names the head stores — the wide frame's
+      * `labels.name` universe (API-sized: a distinct over the
+      * dictionary-encoded name column), memoized on the head, so a push
+      * that leaves this head alone keeps it. Concurrent first readers
+      * wait on the memo and share its one job. */
+    lazy val names: Set[String] = {
+      val nameCol = TsdbSchema.labelColName("name")
+      if (!df.columns.contains(nameCol)) Set.empty
+      else df.select(col(s"`$nameCol`"))
+        .where(col(s"`$nameCol`").isNotNull)
+        .distinct().collect().map(_.getString(0)).toSet
+    }
   }
 
-  /** The served head (test hook: lineage-bound plan assertions). */
-  private[tsdb] def headTable: DataFrame = wide
+  /** NATIVE HISTOGRAMS pushed over remote-write 2.0 or OTLP: `dense`
+    * frames on the server's (schema, minExp, maxExp) grid, which the
+    * PromQL hist tier reads, and the same samples in FULL-fidelity
+    * `sparse` form, which the chunked remote-read responder streams
+    * back as histogram chunks. `names` is the metric-name set the head
+    * stores, kept driver-side (exact, no Spark job); it gates the
+    * per-selector native-vs-classic routing. A push's histograms are a
+    * one-append head of their own ([[histBatch]]). */
+  private final class HistHead(val dense: DataFrame,
+                               val sparse: Dataset[SparseRow],
+                               val names: Set[String], val appends: Int) {
+    def append(batch: HistHead): HistHead = {
+      import spark.implicits._
+      val n = appends + 1
+      new HistHead(
+        boundLineage(
+          dense.unionByName(batch.dense, allowMissingColumns = true), n),
+        boundLineage(sparse.toDF().unionByName(batch.sparse.toDF()), n)
+          .as[SparseRow],
+        names ++ batch.names, n)
+    }
 
-  /** NATIVE HISTOGRAMS pushed over remote-write 2.0 or OTLP land in a
-    * second head: dense frames on the server's (schema, minExp,
-    * maxExp) grid, queryable through the `histogram_*` scalar family
-    * (quantile/count/sum/avg/fraction/stddev/stdvar) — the functions
-    * whose results are FLOAT vectors and therefore fit the standard
-    * API response shape. */
-  @volatile private var histHead: Option[DataFrame] = None
+    /** Per native SERIES (full label set): the FIRST native sample's
+      * time — the migration point from which the native store owns the
+      * series ([[Shadowing.seriesSince]]; every read surface's
+      * time-aware float shadowing joins against it). Series-universe-
+      * sized and `localCheckpoint`ed: one small Spark job per hist
+      * head, memoized on it like [[Head.names]]. Keyed per SERIES, not
+      * per name: a partial fleet migration (some instances still
+      * pushing float under a migrated name) must keep its unmigrated
+      * series serving on every surface. */
+    lazy val seriesSince: DataFrame =
+      Shadowing.seriesSince(dense, lookbackMs).localCheckpoint(true)
+  }
+
+  /** ONE SNAPSHOT of the served heads: the float head, the
+    * native-histogram head (once a histogram arrived) and the exemplar
+    * head (when exemplar storage is on). Immutable: a push publishes a
+    * new snapshot once ([[publish]]), and a request reads one snapshot
+    * when it starts ([[Span]] carries it through routing). So a query
+    * sees a push whole or not at all, as Prometheus's head isolation
+    * guarantees for a committed appender, and every store-membership
+    * gate of one request answers for the same heads. */
+  private final class Heads(val float: Head, val hist: Option[HistHead],
+                            val exemplars: Option[Head]) {
+
+    /** This snapshot with one push's batches appended. A head the push
+      * leaves alone carries over, memos included. */
+    def append(floats: Option[Head], hists: Option[HistHead],
+               exs: Option[Head]): Heads =
+      new Heads(floats.fold(float)(float.append),
+        hists.map(b => hist.fold(b)(_.append(b))).orElse(hist),
+        exs.map(b => exemplars.fold(b)(_.append(b))).orElse(exemplars))
+
+    def histNames: Set[String] = hist.fold(Set.empty[String])(_.names)
+
+    def seriesSince: Option[DataFrame] = hist.map(_.seriesSince)
+
+    /** Per-SELECTOR native-vs-classic preference: Prometheus resolves
+      * native-over-classic when the SELECTOR's metric has both forms —
+      * not globally per function name — so a `histogram_*` call routes
+      * to the pushed-native head only when a selector inside it names a
+      * metric that head actually stores. Without this gate, one pushed
+      * native histogram silently turned every classic-bucket query
+      * (`histogram_quantile(0.9, rate(m_bucket[5m]))`) into an empty
+      * hist-head evaluation. Nameless selectors (`{job="x"}`) keep the
+      * head routing — under a histogram_* function they have no classic
+      * float-tier reading. The metric matcher may be spelled either way:
+      * `__name__` (the bare-prefix form `m{...}` and wire matchers) or
+      * `name` (this engine's storage metric label, which the text
+      * surface addresses directly — `{name="m"}`).
+      *
+      * Routing granularity is the WHOLE expression: it routes to the
+      * hist head only when EVERY name-bearing selector resolves to a
+      * stored native metric (`forall`, not `exists` — an expression
+      * mixing a native and a classic-bucket selector, e.g. a BinOp of
+      * two `histogram_quantile` calls, evaluates on the classic float
+      * tier, where the `_bucket` side has real readings; under `exists`
+      * the classic selector would silently read the hist head and come
+      * back empty). A per-selector split evaluation would need a mixed
+      * vector merge the response shape doesn't carry. */
+    def routesToHistHead(ast: PromQL.Expr, allowNameless: Boolean): Boolean =
+      hist.nonEmpty && {
+        val selNameMs = PromQL.selectorsOf(ast)
+          .map(_.filter(m => m.name == "__name__" || m.name == "name"))
+          .filter(_.nonEmpty)
+        // `allowNameless = false` (the RULES tier): a fully nameless
+        // expression stays on the float tier — a generic `{job="x"} > 5`
+        // rule must not flip tiers just because a native metric was ever
+        // pushed (query endpoints keep the nameless head routing: under
+        // a histogram_* function a nameless selector has no classic
+        // float-tier reading)
+        (allowNameless || selNameMs.nonEmpty) &&
+          selNameMs.forall(ms =>
+            stored(ms).nonEmpty)
+      }
+
+    private def stored(ms: Seq[graft.model.Matcher]): Set[String] =
+      histNames.filter(m => ms.forall(matchesMetric(_, m)))
+
+    /** Whether `e`'s name-bearing selectors STRADDLE the two stores: at
+      * least one resolves to a pushed-native metric AND at least one to
+      * the float/classic tier. The whole-expression `forall` routing
+      * would evaluate such an expression entirely on the float tier,
+      * where the native side has no series — a silently PARTIAL answer
+      * (`native or float` returned only the float rows, `float unless
+      * native` suppressed nothing). The router instead SPLITS the
+      * well-defined multi-operand shapes per side — set ops (pure label
+      * membership, values never consulted) and × ÷ by a float vector
+      * (the [[PromQLHist.scaleByVector]] join) — and rejects every
+      * other straddling shape with the loud 422 mixed-tier error,
+      * matching Prometheus's own refusal to combine a histogram and a
+      * float sample arithmetically. */
+    def straddlesTiers(e: PromQL.Expr): Boolean =
+      hist.nonEmpty && {
+        val tiers = PromQL.selectorsOf(e)
+          .map(_.filter(m => m.name == "__name__" || m.name == "name"))
+          .filter(_.nonEmpty)
+          .map(ms => stored(ms).nonEmpty)
+        tiers.contains(true) && tiers.contains(false)
+      }
+
+    /** Float-store names a matcher set selects BEYOND the native head:
+      * wide-store names matching `ms` that the hist head does NOT store
+      * (a name present in BOTH stores keeps the native preference —
+      * Prometheus resolves native-over-classic per series). The float
+      * names are [[Head.names]]; a query with no native-matching
+      * selector never computes them (the callers test the native side
+      * first). */
+    private def floatOnlyStored(ms: Seq[graft.model.Matcher]): Set[String] =
+      (float.names -- histNames)
+        .filter(m => ms.forall(matchesMetric(_, m)))
+
+    /** ONE selector SPANNING both stores (`{name=~"native|classic"}`):
+      * its name matchers resolve to ≥ 1 pushed-native metric AND ≥ 1
+      * float-only metric — the straddle class one level DOWN from
+      * multi-operand mixing: whole-expression routing would read only
+      * the hist head and the float metrics silently vanish. A BARE
+      * spanning selector unions both stores' rows (the API carries
+      * `value` and `histogram` entries side by side); shaped
+      * expressions over one either split-aggregate per Prometheus's
+      * mixed-type semantics or 422 loudly. */
+    private def selectorSpansStores(ms: Seq[graft.model.Matcher]): Boolean = {
+      val nameMs = ms.filter(m => m.name == "__name__" || m.name == "name")
+      nameMs.nonEmpty && stored(nameMs).nonEmpty &&
+        floatOnlyStored(nameMs).nonEmpty
+    }
+
+    def anySelectorSpans(e: PromQL.Expr): Boolean =
+      hist.nonEmpty && PromQL.selectorsOf(e).exists(selectorSpansStores)
+
+    /** Whether some name-bearing selector of `e` resolves to a
+      * pushed-native metric — its answer is typed by that metric, not by
+      * the samples one grid happens to hold. */
+    def namesNative(e: PromQL.Expr): Boolean =
+      PromQL.selectorsOf(e).exists { ms =>
+        val nameMs = ms.filter(m => m.name == "__name__" || m.name == "name")
+        nameMs.nonEmpty && stored(nameMs).nonEmpty
+      }
+
+    /** Whether a BARE selector must read BOTH stores — the union gate
+      * one level WIDER than [[selectorSpansStores]], covering every way
+      * float-store rows can hide behind hist-head routing:
+      *   - name matchers spanning a native and a float-only metric;
+      *   - a MIGRATED metric (stored in both — its pre-migration float
+      *     history must stitch under the native rows);
+      *   - a NAMELESS selector (`{job="x"}`) when a hist head exists —
+      *     both stores hold matching series (previously it silently
+      *     read only the float store).
+      * The float share is per-series time-shadowed ([[Span.floatShare]]),
+      * so the union can never double-count. */
+    def selectorUnionsStores(ms: Seq[graft.model.Matcher]): Boolean =
+      hist.nonEmpty && {
+        val nameMs = ms.filter(m => m.name == "__name__" || m.name == "name")
+        if (nameMs.isEmpty) namelessMayMatchHist(ms)
+        else stored(nameMs).nonEmpty &&
+          (floatOnlyStored(nameMs).nonEmpty ||
+            stored(nameMs).exists(float.names))
+      }
+
+    /** The float store's UNSHADOWED share at the raw-sample level — the
+      * input every plain float evaluation reads: per-SERIES, samples
+      * inside a native ownership window drop, everything else (float-only
+      * names, unmigrated series of a partially-migrated name, and
+      * pre-migration history) serves. The mixed-type AGGREGATION paths
+      * no longer stop at this raw-axis carve: their float share is the
+      * PER-STEP carved selector frame ([[Span.floatShare]], re-entered
+      * through [[PromQL.aggFrame]]), so
+      * the former staleness-boundary residual (a step within lookback
+      * after a series' migration seeing its last pre-migration sample —
+      * a spurious mixed group for sum/avg, a one-lookback double count
+      * for count) is carved exactly. A per-NAME carve here would
+      * silently drop LIVE unmigrated series — the partial-fleet
+      * data-loss class. */
+    def floatShareView: DataFrame = shadowCarved(float.df)
+
+    /** EVERY float-tier query evaluation reads through this carve: the
+      * given float view minus the samples native series OWN
+      * ([[Shadowing]], raw-sample axis) — a migrated series' dual-write
+      * float pushes can never leak into any float evaluation path (the
+      * bare-selector union paths additionally output-filter per
+      * evaluation step, the exact per-step form; the raw carve leaves
+      * only the bounded staleness-boundary residual where a
+      * pre-migration sample is still inside lookback of a post-migration
+      * step). No-op while no hist head exists. */
+    def shadowCarved(view: DataFrame): DataFrame =
+      dropShadowedFrame(view, col(TsdbSchema.TimeCol))
+
+    /** [[Shadowing.dropShadowed]] over a WIDE float frame, keyed on its
+      * label columns, against the hist head's per-series since table.
+      * `evalTime` = the frame's time axis (the grid column for range
+      * frames and raw matrices, the evaluation instant for instant
+      * vectors). */
+    def dropShadowedFrame(fv: DataFrame, evalTime: Column): DataFrame =
+      Shadowing.dropShadowed(fv, Shadowing.skeyOfWide(fv), evalTime,
+        seriesSince)
+
+    /** Metric names `e` touches that live in BOTH stores — each one's
+      * float share (pre-migration history, or unmigrated series of a
+      * partially-migrated fleet) cannot ride a shaped hist-tier
+      * evaluation. */
+    private def dualStoreNames(e: PromQL.Expr): Seq[String] =
+      if (hist.isEmpty) Nil
+      else PromQL.selectorsOf(e)
+        .map(_.filter(m => m.name == "__name__" || m.name == "name"))
+        .filter(_.nonEmpty)
+        .flatMap(ms => stored(ms).filter(float.names))
+        .distinct.sorted
+
+    /** Answers of [[unshadowedAmong]], per name set, for this snapshot. */
+    private val unshadowedMemo = new java.util.concurrent.ConcurrentHashMap[
+      Set[String], Memo[Set[String]]]()
+
+    /** Which dual-store `names` still have ≥ 1 UNSHADOWED float row (a
+      * sample outside every native ownership window — pre-migration
+      * history, or a live unmigrated series): the only names whose
+      * float share a shaped hist-tier evaluation actually misses. A
+      * fully-migrated metric whose float rows are ALL dual-write
+      * shadows must not warn forever (a permanent false-positive
+      * annotation). One carved name-distinct
+      * job per name set, memoized on the snapshot; the scan is
+      * restricted to THIS query's names (`isin` pushes to the
+      * metric-partitioned layout, so the job prunes to their files) —
+      * a whole-store distinct would make every hist-routed query and
+      * every /api/v1/rules render pay a store-wide job just to gate a
+      * warning string. */
+    private def unshadowedAmong(names: Seq[String]): Set[String] =
+      unshadowedMemo.computeIfAbsent(names.toSet, ns => new Memo({
+        val nameCol = TsdbSchema.labelColName("name")
+        shadowCarved(float.df)
+          .where(col(s"`$nameCol`").isin(ns.toSeq: _*))
+          .select(col(s"`$nameCol`")).distinct()
+          .collect().map(_.getString(0)).toSet
+      })).value
+
+    /** The loud half of the migrated-metric contract for SHAPED
+      * expressions: bare selectors, raw matrices, federate and remote
+      * read STITCH a migrated series (float history before its first
+      * native sample, native after); a shaped expression evaluates on
+      * the native store alone, and this warning says so instead of
+      * leaving the missing float share silent. Gated on an unshadowed
+      * float row actually existing ([[unshadowedAmong]]) — a
+      * cleanly-migrated metric whose only float rows are dual-write
+      * shadows has no missing share to warn about. */
+    def migrationWarnings(e: PromQL.Expr): Seq[String] = {
+      val dual0 = dualStoreNames(e)
+      val dual = if (dual0.isEmpty) dual0
+                 else dual0.filter(unshadowedAmong(dual0))
+      if (dual.isEmpty) Nil
+      else Seq("metric(s) " + dual.mkString(", ") + " also have " +
+        "float-store samples (pre-migration history or unmigrated " +
+        "series), which shaped expressions over the native store do " +
+        "not include — bare selectors and remote read serve the " +
+        "stitched series")
+    }
+
+    /** Cheap driver-side gate for NAMELESS selectors against the hist
+      * head: an Eq matcher demanding a NON-EMPTY value for a label name
+      * no native series carries can never match — schema-level (the
+      * hist head's label-column set), no Spark job. Skipping the hist
+      * side spares nameless float-only workloads the hist evaluation +
+      * union + shadow join they would otherwise pay. Conservative by
+      * design: regex/inequality matchers and empty-value Eq (`""` ≡
+      * absent — matches label-less series) pass through, so a skip is
+      * always provably correct. */
+    private def namelessMayMatchHist(ms: Seq[graft.model.Matcher]): Boolean =
+      hist.exists { h =>
+        val histLabels = TsdbSchema.labelColumns(h.dense)
+          .map(_.stripPrefix(TsdbSchema.LabelPrefix)).toSet
+        ms.forall {
+          case graft.model.Matcher.Eq(k, v) if v.nonEmpty =>
+            histLabels.contains(k) || k == "__name__" || k == "name"
+          case _ => true
+        }
+      }
+
+    /** The BOTH-STORES test for a bare selector inside a shaped
+      * expression: spanning name matchers, or a nameless selector some
+      * native series may match ([[namelessMayMatchHist]]) — the leaf
+      * test of [[spanningShaped]]. */
+    def shapedBothStores(arg: PromQL.Expr): Option[PromQL.Selector] =
+      arg match {
+        case s @ PromQL.Selector(ms, None, _, _)
+            if bothStoresSelectorMs(ms) => Some(s)
+        case _ => None
+      }
+
+    /** RANGE-selector twin of [[shapedBothStores]] — the argument shape
+      * of the over-time window family (`count_over_time({job="x"}[1h])`). */
+    def shapedBothStoresRange(arg: PromQL.Expr)
+        : Option[PromQL.Selector] = arg match {
+      case s @ PromQL.Selector(ms, Some(_), _, _)
+          if bothStoresSelectorMs(ms) => Some(s)
+      case _ => None
+    }
+
+    def bothStoresSelectorMs(ms: Seq[graft.model.Matcher]): Boolean =
+      selectorSpansStores(ms) || {
+        val nameMs =
+          ms.filter(m => m.name == "__name__" || m.name == "name")
+        nameMs.isEmpty && namelessMayMatchHist(ms)
+      }
+
+    /** SUBQUERY twin of [[shapedBothStoresRange]]: a subquery whose
+      * inner is a BARE both-stores selector (`{user="x"}[30s:5s]`) —
+      * the window-family composition applies on the subquery GRID. */
+    def subqueryBothStores(arg: PromQL.Expr)
+        : Option[PromQL.Subquery] = arg match {
+      case sq @ PromQL.Subquery(PromQL.Selector(ms, None, _, _),
+          _, _, _, _) if bothStoresSelectorMs(ms) => Some(sq)
+      case _ => None
+    }
+
+    /** A side whose FLOAT-TIER evaluation is the complete truth: every
+      * selector is name-bearing and resolves to NO pushed-native metric
+      * (a nameless selector could match native series — it must go
+      * through the lattice, never a bare float evaluation). */
+    def pureFloatSide(x: PromQL.Expr): Boolean = {
+      val sels = PromQL.selectorsOf(x)
+      sels.nonEmpty && sels.forall { ms =>
+        val nameMs =
+          ms.filter(m => m.name == "__name__" || m.name == "name")
+        nameMs.nonEmpty && stored(nameMs).isEmpty
+      }
+    }
+
+    /** The SERIES-METADATA view: the float head UNIONED with the pushed
+      * native-histogram head as label-only rows — Prometheus's series/
+      * labels/label-values APIs list native-histogram series like any
+      * other; reading only the float store would leave pushed-native
+      * metrics invisible to `/api/v1/series`, `/api/v1/labels` and
+      * `/api/v1/label/.../values`. The hist rows' `value` is a dummy 1.0
+      * (these APIs never read values — selection is labels + time). */
+    def metaView: DataFrame = hist match {
+      case None => float.df
+      case Some(h) =>
+        float.df.unionByName(
+          h.dense.drop(PromQLHist.HistCol)
+            .withColumn(TsdbSchema.ValueCol, lit(1.0)),
+          allowMissingColumns = true)
+    }
+  }
+
+  /** The published snapshot. A handler reads it once, when it starts. */
+  @volatile private var current: Heads =
+    new Heads(new Head(initial, 0), None, exemplars.map(new Head(_, 0)))
+
+  /** Serializes the pushes. A push builds every next head from the
+    * current snapshot — the unions, and on a head's consolidating
+    * append the eager `localCheckpoint` — holding only this lock, then
+    * publishes the new snapshot in one write. Queries never take it, so
+    * they never wait out a consolidation. */
+  private val appendLock = new Object
+
+  private def publish(next: Heads => Heads): Unit =
+    appendLock.synchronized { current = next(current) }
+
+  /** The served head (test hook: lineage-bound plan assertions). */
+  private[tsdb] def headTable: DataFrame = current.float.df
 
   /** Queryable pushed-histogram head (dense frames), if any arrived. */
-  def histTable: Option[DataFrame] = histHead
-
-  /** EXEMPLARS: the constructor-provided store plus every exemplar
-    * pushed over remote-write 2.0, in the [[Exemplars]] wide shape —
-    * what `/api/v1/query_exemplars` serves. */
-  @volatile private var exemplarHead: Option[DataFrame] = exemplars
-
-  /** The pushed histograms in FULL-fidelity sparse form — what the
-    * chunked remote-read responder streams back as histogram chunks
-    * (the dense [[histHead]] serves the PromQL tier; this head serves
-    * the wire). */
-  @volatile private var histSparseHead
-      : Option[org.apache.spark.sql.Dataset[(Map[String, String],
-          graft.sources.tsdbblock.WalReader.WalHistogram)]] = None
+  def histTable: Option[DataFrame] = current.hist.map(_.dense)
 
   private def histNLes: Int = histMaxExp - histMinExp + 3 // zero+grid+Inf
 
-  /** Metric names the pushed-histogram head stores — maintained
-    * driver-side under the head's lock (exact, no Spark job). Gates the
-    * per-selector native-vs-classic routing in the query endpoints. */
-  private var histMetricNames = Set.empty[String]
-
-  /** Long-form decoded rows → the served wide head. STALENESS markers
-    * (the StaleNaN bit pattern, which Prometheus forwards over remote
-    * write and the OTLP decoders emit for no-recorded-value points)
-    * become NULL-`value` rows — the engine's staleness representation
-    * ([[TsdbSchema.StaleNaNBits]]): detected HERE, the last place the
-    * raw bits exist before Spark canonicalizes NaN payloads. */
-  private def appendLongRows(
-      rows: Seq[(Long, Double, Map[String, String])]): Unit =
-    if (rows.nonEmpty) {
+  /** Long-form decoded rows as a one-append float [[Head]], None when
+    * there are none. STALENESS markers (the StaleNaN bit pattern, which
+    * Prometheus forwards over remote write and the OTLP decoders emit
+    * for no-recorded-value points) become NULL-`value` rows — the
+    * engine's staleness representation ([[TsdbSchema.StaleNaNBits]]):
+    * detected HERE, the last place the raw bits exist before Spark
+    * canonicalizes NaN payloads. */
+  private def floatBatch(
+      rows: Seq[(Long, Double, Map[String, String])]): Option[Head] =
+    if (rows.isEmpty) None
+    else {
       import spark.implicits._
       val longForm = rows.map { case (t, v, ls) =>
         (t, if (TsdbSchema.isStaleMarker(v)) None else Some(v), ls)
       }.toDF("time", "value", "labels")
-      appendWide(TsdbIngest.toWide(longForm))
+      Some(new Head(TsdbIngest.toWide(longForm), 1))
     }
 
-  private def appendHists(sparse: Seq[RemoteWrite.SparseHist]): Int = {
-    if (sparse.nonEmpty) {
+  /** A wire histogram's OWN schema field defines its bucket boundaries;
+    * densifying a schema-k histogram onto the server's schema-j grid
+    * reinterprets the indices on the wrong boundaries — silently wrong
+    * quantiles/fractions. Prometheus down-converts only across its own
+    * supported resolutions (by merging bucket pairs); this receiver
+    * rejects the mismatch as bad_data (400) so a schema-3 Prometheus or
+    * scale-20 OTel SDK fails LOUDLY. (Stale markers are exempt: they
+    * carry no bucket data.) */
+  private def requireGridSchema(hists: Seq[RemoteWrite.SparseHist]): Unit =
+    hists.find(h => !TsdbSchema.isStaleMarker(h.sum) &&
+        h.schema != histSchemaId).foreach { h =>
+      throw new IllegalArgumentException(
+        s"native histogram schema ${h.schema} (metric " +
+        s"${h.labels.getOrElse("__name__", "?")}) does not match the " +
+        s"receiver's grid schema $histSchemaId; re-send at the " +
+        "receiver's resolution or start the server with histSchemaId" +
+        s" = ${h.schema}")
+    }
+
+  /** A push's histograms as a one-append [[HistHead]], None when there
+    * are none. */
+  private def histBatch(sparse: Seq[RemoteWrite.SparseHist])
+      : Option[HistHead] =
+    if (sparse.isEmpty) None
+    else {
       // STALENESS markers (sum carries the StaleNaN bit pattern — what
       // Prometheus forwards over remote write and what the OTLP
       // decoders emit for FLAG_NO_RECORDED_VALUE points) land in the
@@ -173,22 +553,6 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       // payloads inside UnsafeRow.
       val (stale, live) =
         sparse.partition(h => TsdbSchema.isStaleMarker(h.sum))
-      // A wire histogram's OWN schema field defines its bucket
-      // boundaries; densifying a schema-k histogram onto the server's
-      // schema-j grid reinterprets the indices on the wrong boundaries
-      // — silently wrong quantiles/fractions. Prometheus down-converts
-      // only across its own supported resolutions (by merging bucket
-      // pairs); this receiver rejects the mismatch as bad_data (400)
-      // so a schema-3 Prometheus or scale-20 OTel SDK fails LOUDLY.
-      // (Stale markers are exempt: they carry no bucket data.)
-      live.find(_.schema != histSchemaId).foreach { h =>
-        throw new IllegalArgumentException(
-          s"native histogram schema ${h.schema} (metric " +
-          s"${h.labels.getOrElse("__name__", "?")}) does not match the " +
-          s"receiver's grid schema $histSchemaId; re-send at the " +
-          "receiver's resolution or start the server with histSchemaId" +
-          s" = ${h.schema}")
-      }
       import spark.implicits._
       val denseLive = RemoteWrite.denseFromSparse(
         spark.createDataset(live), histSchemaId, histMinExp, histMaxExp)
@@ -201,341 +565,18 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       val labelCols = names.map(n => col("labels").getItem(n)
         .as(TsdbSchema.labelColName(if (n == "__name__") "name" else n)))
       val wideH = dense.select(col("time") +: labelCols :+ col("hist"): _*)
-      // the wire-serving twin: full sparse samples, same lineage bound.
-      // Stale markers stay OUT of the sparse head: the NaN payload
-      // cannot survive a shuffle, and the chunked/sampled responders
-      // serve observed data, not staleness signals.
+      // the wire-serving twin: full sparse samples. Stale markers stay
+      // OUT of the sparse head: the NaN payload cannot survive a
+      // shuffle, and the chunked/sampled responders serve observed
+      // data, not staleness signals.
       val sparseRows = spark.createDataset(live.map(h =>
         (h.labels, graft.sources.tsdbblock.WalReader.WalHistogram(
           0L, h.time, h.resetHint, h.schema, h.zeroThreshold, h.zeroCount,
           h.count, h.sum, h.positive, h.negative, h.customValues,
           isFloat = false))))
-      appendLock.synchronized {
-        val n = histAppends + 1
-        val nextHead = boundLineage(histHead.fold(wideH)(
-          _.unionByName(wideH, allowMissingColumns = true)), n)
-        val nextSparse = boundLineage(histSparseHead.map(_.toDF())
-            .fold(sparseRows.toDF())(_.unionByName(sparseRows.toDF())), n)
-          .as[(Map[String, String],
-            graft.sources.tsdbblock.WalReader.WalHistogram)]
-        synchronized {
-          histHead = Some(nextHead)
-          histSparseHead = Some(nextSparse)
-          histAppends = n
-          histMetricNames ++= sparse.flatMap(_.labels.get("__name__"))
-        }
-      }
+      Some(new HistHead(wideH, sparseRows,
+        sparse.flatMap(_.labels.get("__name__")).toSet, 1))
     }
-    sparse.size
-  }
-
-  /** Per-SELECTOR native-vs-classic preference: Prometheus resolves
-    * native-over-classic when the SELECTOR's metric has both forms —
-    * not globally per function name — so a `histogram_*` call routes
-    * to the pushed-native head only when a selector inside it names a
-    * metric that head actually stores. Without this gate, one pushed
-    * native histogram silently turned every classic-bucket query
-    * (`histogram_quantile(0.9, rate(m_bucket[5m]))`) into an empty
-    * hist-head evaluation. Nameless selectors (`{job="x"}`) keep the
-    * head routing — under a histogram_* function they have no classic
-    * float-tier reading. The metric matcher may be spelled either way:
-    * `__name__` (the bare-prefix form `m{...}` and wire matchers) or
-    * `name` (this engine's storage metric label, which the text
-    * surface addresses directly — `{name="m"}`).
-    *
-    * Routing granularity is the WHOLE expression: it routes to the
-    * hist head only when EVERY name-bearing selector resolves to a
-    * stored native metric (`forall`, not `exists` — an expression
-    * mixing a native and a classic-bucket selector, e.g. a BinOp of
-    * two `histogram_quantile` calls, evaluates on the classic float
-    * tier, where the `_bucket` side has real readings; under `exists`
-    * the classic selector would silently read the hist head and come
-    * back empty). A per-selector split evaluation would need a mixed
-    * vector merge the response shape doesn't carry. */
-  private def routesToHistHead(ast: PromQL.Expr,
-                               allowNameless: Boolean): Boolean =
-    histHead.nonEmpty && {
-      val selNameMs = PromQL.selectorsOf(ast)
-        .map(_.filter(m => m.name == "__name__" || m.name == "name"))
-        .filter(_.nonEmpty)
-      // `allowNameless = false` (the RULES tier): a fully nameless
-      // expression stays on the float tier — a generic `{job="x"} > 5`
-      // rule must not flip tiers just because a native metric was ever
-      // pushed (query endpoints keep the nameless head routing: under
-      // a histogram_* function a nameless selector has no classic
-      // float-tier reading)
-      (allowNameless || selNameMs.nonEmpty) &&
-        selNameMs.forall(ms =>
-          stored(ms).nonEmpty)
-    }
-
-  private def stored(ms: Seq[graft.model.Matcher]): Set[String] =
-    synchronized(histMetricNames)
-      .filter(m => ms.forall(matchesMetric(_, m)))
-
-  /** Whether `e`'s name-bearing selectors STRADDLE the two stores: at
-    * least one resolves to a pushed-native metric AND at least one to
-    * the float/classic tier. The whole-expression `forall` routing
-    * would evaluate such an expression entirely on the float tier,
-    * where the native side has no series — a silently PARTIAL answer
-    * (`native or float` returned only the float rows, `float unless
-    * native` suppressed nothing). The router instead SPLITS the
-    * well-defined multi-operand shapes per side — set ops (pure label
-    * membership, values never consulted) and × ÷ by a float vector
-    * (the [[PromQLHist.scaleByVector]] join) — and rejects every
-    * other straddling shape with the loud 422 mixed-tier error,
-    * matching Prometheus's own refusal to combine a histogram and a
-    * float sample arithmetically. */
-  private def straddlesTiers(e: PromQL.Expr): Boolean =
-    histHead.nonEmpty && {
-      val tiers = PromQL.selectorsOf(e)
-        .map(_.filter(m => m.name == "__name__" || m.name == "name"))
-        .filter(_.nonEmpty)
-        .map(ms => stored(ms).nonEmpty)
-      tiers.contains(true) && tiers.contains(false)
-    }
-
-  /** Metric names the FLOAT head stores — the wide frame's
-    * `labels.name` universe, cached per append version (API-sized: a
-    * distinct over the dictionary-encoded name column, recomputed only
-    * after a write widened the head). Gates the spanning-selector
-    * check; a query with no native-matching selector never computes
-    * it (the callers test the native side first). */
-  private var floatNamesCache: (Int, Set[String]) = (-1, Set.empty)
-  /** Serializes name-universe RECOMPUTES only — concurrent cache
-    * misses after an append run ONE Spark job (the herd waits here,
-    * not on the server monitor, and followers reuse the leader's
-    * result via the double-check). */
-  private val nameCacheLock = new Object
-  private def floatMetricNames: Set[String] = {
-    // snapshot under the monitor, compute OFF it: the distinct is a
-    // (small) Spark job, and holding the server monitor through it
-    // would block every other synchronized path — appends, routing
-    // gates, notifier state — for its duration
-    val ver = synchronized(wideAppends)
-    val cached = synchronized(floatNamesCache)
-    if (cached._1 >= ver) cached._2
-    else nameCacheLock.synchronized {
-      val c2 = synchronized(floatNamesCache)
-      if (c2._1 >= ver) c2._2
-      else {
-        val frame = synchronized(wide)
-        val nameCol = TsdbSchema.labelColName("name")
-        val names =
-          if (!frame.columns.contains(nameCol)) Set.empty[String]
-          else frame.select(col(s"`$nameCol`"))
-            .where(col(s"`$nameCol`").isNotNull)
-            .distinct().collect().map(_.getString(0)).toSet
-        synchronized {
-          // advance-only: never regress over a racing newer version
-          if (floatNamesCache._1 < ver) floatNamesCache = (ver, names)
-        }
-        names
-      }
-    }
-  }
-
-  /** Per native SERIES (full label set): the FIRST native sample's
-    * time — the migration point from which the native store owns the
-    * series ([[Shadowing.seriesSince]]; every read surface's
-    * time-aware float shadowing joins against it). Series-universe-
-    * sized and `localCheckpoint`ed per hist-append version — one small
-    * Spark job per version, recomputed off-lock under the same
-    * herd-safe discipline as [[floatMetricNames]]. Keyed per SERIES,
-    * not per name: a partial fleet migration (some instances still
-    * pushing float under a migrated name) must keep its unmigrated
-    * series serving on every surface. */
-  private var seriesSinceCache: (Int, Option[DataFrame]) = (-1, None)
-  private def seriesSinceFrame: Option[DataFrame] = {
-    val ver = synchronized(histAppends)
-    val cached = synchronized(seriesSinceCache)
-    if (cached._1 >= ver) cached._2
-    else nameCacheLock.synchronized {
-      val c2 = synchronized(seriesSinceCache)
-      if (c2._1 >= ver) c2._2
-      else {
-        val since = synchronized(histHead)
-          .map(h => Shadowing.seriesSince(h, lookbackMs)
-            .localCheckpoint(true))
-        synchronized {
-          if (seriesSinceCache._1 < ver) seriesSinceCache = (ver, since)
-        }
-        since
-      }
-    }
-  }
-
-  /** Float-store names a matcher set selects BEYOND the native head:
-    * wide-store names matching `ms` that the hist head does NOT store
-    * (a name present in BOTH stores keeps the native preference —
-    * Prometheus resolves native-over-classic per series). */
-  private def floatOnlyStored(ms: Seq[graft.model.Matcher]): Set[String] =
-    (floatMetricNames -- synchronized(histMetricNames))
-      .filter(m => ms.forall(matchesMetric(_, m)))
-
-  /** ONE selector SPANNING both stores (`{name=~"native|classic"}`):
-    * its name matchers resolve to ≥ 1 pushed-native metric AND ≥ 1
-    * float-only metric — the straddle class one level DOWN from
-    * multi-operand mixing: whole-expression routing would read only
-    * the hist head and the float metrics silently vanish. A BARE
-    * spanning selector unions both stores' rows (the API carries
-    * `value` and `histogram` entries side by side); shaped
-    * expressions over one either split-aggregate per Prometheus's
-    * mixed-type semantics or 422 loudly. */
-  private def selectorSpansStores(ms: Seq[graft.model.Matcher]): Boolean = {
-    val nameMs = ms.filter(m => m.name == "__name__" || m.name == "name")
-    nameMs.nonEmpty && stored(nameMs).nonEmpty &&
-      floatOnlyStored(nameMs).nonEmpty
-  }
-
-  private def anySelectorSpans(e: PromQL.Expr): Boolean =
-    histHead.nonEmpty && PromQL.selectorsOf(e).exists(selectorSpansStores)
-
-  /** Whether some name-bearing selector of `e` resolves to a
-    * pushed-native metric — its answer is typed by that metric, not by
-    * the samples one grid happens to hold. */
-  private def namesNative(e: PromQL.Expr): Boolean =
-    PromQL.selectorsOf(e).exists { ms =>
-      val nameMs = ms.filter(m => m.name == "__name__" || m.name == "name")
-      nameMs.nonEmpty && stored(nameMs).nonEmpty
-    }
-
-  /** Whether a BARE selector must read BOTH stores — the union gate
-    * one level WIDER than [[selectorSpansStores]], covering every way
-    * float-store rows can hide behind hist-head routing:
-    *   - name matchers spanning a native and a float-only metric;
-    *   - a MIGRATED metric (stored in both — its pre-migration float
-    *     history must stitch under the native rows, the round-17
-    *     judge's time-axis find);
-    *   - a NAMELESS selector (`{job="x"}`) when a hist head exists —
-    *     both stores hold matching series (previously it silently
-    *     read only the float store).
-    * The float share is per-series time-shadowed ([[Span.floatShare]]),
-    * so the union can never double-count. */
-  private def selectorUnionsStores(ms: Seq[graft.model.Matcher]): Boolean =
-    histHead.nonEmpty && {
-      val nameMs = ms.filter(m => m.name == "__name__" || m.name == "name")
-      if (nameMs.isEmpty) namelessMayMatchHist(ms)
-      else stored(nameMs).nonEmpty &&
-        (floatOnlyStored(nameMs).nonEmpty ||
-          stored(nameMs).exists(floatMetricNames))
-    }
-
-  /** The float store's UNSHADOWED share at the raw-sample level — the
-    * input every plain float evaluation reads: per-SERIES, samples
-    * inside a native ownership window drop, everything else (float-only
-    * names, unmigrated series of a partially-migrated name, and
-    * pre-migration history) serves. The mixed-type AGGREGATION paths
-    * no longer stop at this raw-axis carve: their float share is the
-    * PER-STEP carved selector frame ([[Span.floatShare]], re-entered
-    * through [[PromQL.aggFrame]]), so
-    * the former staleness-boundary residual (a step within lookback
-    * after a series' migration seeing its last pre-migration sample —
-    * a spurious mixed group for sum/avg, a one-lookback double count
-    * for count) is carved exactly (round-18 judge item, closed). A
-    * per-NAME carve here would silently drop LIVE unmigrated series —
-    * the partial-fleet data-loss class (round-18 review find). */
-  private def floatShareView: DataFrame = shadowCarved(wide)
-
-  /** EVERY float-tier query evaluation reads through this carve: the
-    * given float view minus the samples native series OWN
-    * ([[Shadowing]], raw-sample axis) — a migrated series' dual-write
-    * float pushes can never leak into any float evaluation path (the
-    * bare-selector union paths additionally output-filter per
-    * evaluation step, the exact per-step form; the raw carve leaves
-    * only the bounded staleness-boundary residual where a
-    * pre-migration sample is still inside lookback of a post-migration
-    * step). No-op while no hist head exists. */
-  private def shadowCarved(view: DataFrame): DataFrame =
-    Shadowing.dropShadowed(view, Shadowing.skeyOfWide(view),
-      col(TsdbSchema.TimeCol), seriesSinceFrame)
-
-  /** Metric names `e` touches that live in BOTH stores — each one's
-    * float share (pre-migration history, or unmigrated series of a
-    * partially-migrated fleet) cannot ride a shaped hist-tier
-    * evaluation. */
-  private def dualStoreNames(e: PromQL.Expr): Seq[String] =
-    if (histHead.isEmpty) Nil
-    else PromQL.selectorsOf(e)
-      .map(_.filter(m => m.name == "__name__" || m.name == "name"))
-      .filter(_.nonEmpty)
-      .flatMap(ms => stored(ms).filter(floatMetricNames))
-      .distinct.sorted
-
-  /** Dual-store metric names that still have ≥ 1 UNSHADOWED float row
-    * (a sample outside every native ownership window — pre-migration
-    * history, or a live unmigrated series): the only names whose
-    * float share a shaped hist-tier evaluation actually misses. A
-    * fully-migrated metric whose float rows are ALL dual-write
-    * shadows must not warn forever (round-18 advisor find — a
-    * permanent false-positive annotation). Cached per (float, hist)
-    * append-version pair under the same herd-safe off-monitor
-    * discipline as [[floatMetricNames]]; the job is one carved
-    * name-distinct, dual-name-count sized output. */
-  private val unshadowedNameCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      ((Int, Int), Boolean)]()
-
-  /** Which of `names` still have ≥ 1 UNSHADOWED float row — cached
-    * PER NAME per (float, hist) append-version pair, and the
-    * recompute scan is restricted to the STALE names of THIS query
-    * (`isin` pushes to the metric-partitioned layout, so the job
-    * prunes to the touched names' files). The old whole-store
-    * distinct recomputed on EVERY float append, which under
-    * continuous remote-write ingestion made every hist-routed query
-    * and every /api/v1/rules render pay a store-wide job just to
-    * gate a warning string (review find). */
-  private def unshadowedAmong(names: Seq[String]): Set[String] =
-    if (names.isEmpty) Set.empty
-    else {
-      val ver = synchronized((wideAppends, histAppends))
-      def fresh(v: (Int, Int)): Boolean =
-        v._1 >= ver._1 && v._2 >= ver._2
-      def cachedTrue(n: String): Boolean =
-        Option(unshadowedNameCache.get(n))
-          .exists(c => fresh(c._1) && c._2)
-      val stale = names.filterNot(n =>
-        Option(unshadowedNameCache.get(n)).exists(c => fresh(c._1)))
-      if (stale.isEmpty) names.filter(cachedTrue).toSet
-      else nameCacheLock.synchronized {
-        val stale2 = stale.filterNot(n =>
-          Option(unshadowedNameCache.get(n)).exists(c => fresh(c._1)))
-        if (stale2.nonEmpty) {
-          val nameCol = TsdbSchema.labelColName("name")
-          val found = shadowCarved(synchronized(wide))
-            .where(col(s"`$nameCol`").isin(stale2: _*))
-            .select(col(s"`$nameCol`")).distinct()
-            .collect().map(_.getString(0)).toSet
-          stale2.foreach { n =>
-            unshadowedNameCache.merge(n, (ver, found(n)),
-              // advance-only: keep whichever entry is newer
-              (old, nw) => if (fresh(old._1)) old else nw)
-          }
-        }
-        names.filter(cachedTrue).toSet
-      }
-    }
-
-  /** The loud half of the migrated-metric contract for SHAPED
-    * expressions: bare selectors, raw matrices, federate and remote
-    * read STITCH a migrated series (float history before its first
-    * native sample, native after); a shaped expression evaluates on
-    * the native store alone, and this warning says so instead of
-    * leaving the missing float share silent. Gated on an unshadowed
-    * float row actually existing ([[unshadowedAmong]]) — a
-    * cleanly-migrated metric whose only float rows are dual-write
-    * shadows has no missing share to warn about. */
-  private def migrationWarnings(e: PromQL.Expr): Seq[String] = {
-    val dual0 = dualStoreNames(e)
-    val dual = if (dual0.isEmpty) dual0
-               else dual0.filter(unshadowedAmong(dual0))
-    if (dual.isEmpty) Nil
-    else Seq("metric(s) " + dual.mkString(", ") + " also have " +
-      "float-store samples (pre-migration history or unmigrated " +
-      "series), which shaped expressions over the native store do " +
-      "not include — bare selectors and remote read serve the " +
-      "stitched series")
-  }
 
   /** Value-ranked/statistic shapes over a HISTOGRAM-valued argument —
     * what Prometheus 3 answers by SKIPPING the histogram samples with
@@ -606,63 +647,6 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       else Nil)
   }
 
-  /** Cheap driver-side gate for NAMELESS selectors against the hist
-    * head: an Eq matcher demanding a NON-EMPTY value for a label name
-    * no native series carries can never match — schema-level (the
-    * hist head's label-column set), no Spark job. Skipping the hist
-    * side spares nameless float-only workloads the hist evaluation +
-    * union + shadow join they paid unconditionally before (round-18
-    * advisor find). Conservative by design: regex/inequality matchers
-    * and empty-value Eq (`""` ≡ absent — matches label-less series)
-    * pass through, so a skip is always provably correct. */
-  private def namelessMayMatchHist(ms: Seq[graft.model.Matcher]): Boolean =
-    synchronized(histHead).exists { h =>
-      val histLabels = TsdbSchema.labelColumns(h)
-        .map(_.stripPrefix(TsdbSchema.LabelPrefix)).toSet
-      ms.forall {
-        case graft.model.Matcher.Eq(k, v) if v.nonEmpty =>
-          histLabels.contains(k) || k == "__name__" || k == "name"
-        case _ => true
-      }
-    }
-
-  /** The BOTH-STORES test for a bare selector inside a shaped
-    * expression: spanning name matchers, or a nameless selector some
-    * native series may match ([[namelessMayMatchHist]]) — the leaf
-    * test of [[spanningShaped]]. */
-  private def shapedBothStores(arg: PromQL.Expr): Option[PromQL.Selector] =
-    arg match {
-      case s @ PromQL.Selector(ms, None, _, _)
-          if bothStoresSelectorMs(ms) => Some(s)
-      case _ => None
-    }
-
-  /** RANGE-selector twin of [[shapedBothStores]] — the argument shape
-    * of the over-time window family (`count_over_time({job="x"}[1h])`). */
-  private def shapedBothStoresRange(arg: PromQL.Expr)
-      : Option[PromQL.Selector] = arg match {
-    case s @ PromQL.Selector(ms, Some(_), _, _)
-        if bothStoresSelectorMs(ms) => Some(s)
-    case _ => None
-  }
-
-  private def bothStoresSelectorMs(ms: Seq[graft.model.Matcher]): Boolean =
-    selectorSpansStores(ms) || {
-      val nameMs =
-        ms.filter(m => m.name == "__name__" || m.name == "name")
-      nameMs.isEmpty && namelessMayMatchHist(ms)
-    }
-
-  /** SUBQUERY twin of [[shapedBothStoresRange]]: a subquery whose
-    * inner is a BARE both-stores selector (`{user="x"}[30s:5s]`) —
-    * the window-family composition applies on the subquery GRID. */
-  private def subqueryBothStores(arg: PromQL.Expr)
-      : Option[PromQL.Subquery] = arg match {
-    case sq @ PromQL.Subquery(PromQL.Selector(ms, None, _, _),
-        _, _, _, _) if bothStoresSelectorMs(ms) => Some(sq)
-    case _ => None
-  }
-
   /** Float-consuming subquery folds over a mixed inner: histogram
     * grid points skip with the info annotation (Prometheus's rule). */
   private val SubqueryFloatInfoOps = Set("min_over_time",
@@ -677,19 +661,6 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     "irate", "idelta", "changes", "resets", "deriv", "predict_linear",
     "holt_winters", "double_exponential_smoothing", "last_over_time",
     "first_over_time", "ts_of_last_over_time", "ts_of_first_over_time")
-
-  /** A side whose FLOAT-TIER evaluation is the complete truth: every
-    * selector is name-bearing and resolves to NO pushed-native metric
-    * (a nameless selector could match native series — it must go
-    * through the lattice, never a bare float evaluation). */
-  private def pureFloatSide(x: PromQL.Expr): Boolean = {
-    val sels = PromQL.selectorsOf(x)
-    sels.nonEmpty && sels.forall { ms =>
-      val nameMs =
-        ms.filter(m => m.name == "__name__" || m.name == "name")
-      nameMs.nonEmpty && stored(nameMs).isEmpty
-    }
-  }
 
   /** [[PromQL.InstantFns]] value maps the mixed lattice recurses
     * through — everything except the shapes handled elsewhere
@@ -770,12 +741,15 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     * evaluation step's offset-resolved reference time, so a
     * pre-migration float sample still inside lookback of a
     * post-migration step drops EXACTLY — the raw-axis input carve
-    * ([[floatShareView]]) left a one-lookback residual that spuriously
-    * marked sum/avg groups mixed and double-counted `count`. None = not
-    * a shape this lattice composes; [[route]] decides what that means.
-    * `by` and `without` grouping forms are twins throughout. */
+    * ([[Heads.floatShareView]]) left a one-lookback residual that
+    * spuriously marked sum/avg groups mixed and double-counted `count`.
+    * None = not a shape this lattice composes; [[route]] decides what
+    * that means. `by` and `without` grouping forms are twins
+    * throughout. */
   private def spanningShaped(e: PromQL.Expr, span: Span)
       : Option[Routed] = {
+    import span.heads.{bothStoresSelectorMs, pureFloatSide,
+      shapedBothStores, shapedBothStoresRange, subqueryBothStores}
     def rec(x: PromQL.Expr) = spanningShaped(x, span)
     // the two sides of a binary shape: a side composes through `side`
     // (the lattice) only when one of its selectors reads both stores;
@@ -1105,15 +1079,18 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     }
   }
 
-  /** Where one expression evaluates: the instant `start` (`step` 0,
-    * `end` = `start`) or the grid `start`..`end` by `step`, over a
-    * shadow-carved float view and a lookback. The query endpoints pass
-    * the served head ([[floatShareView]]) and the server lookback; the
-    * rules tier passes its group's accumulated view (wide + earlier
+  /** Where one expression evaluates: one request's snapshot of the
+    * `heads`, and the instant `start` (`step` 0, `end` = `start`) or the
+    * grid `start`..`end` by `step`, over a shadow-carved float view and
+    * a lookback. The query endpoints pass the snapshot's float head
+    * ([[Heads.floatShareView]]) and the server lookback; the rules tier
+    * passes its group's accumulated view (the float head + earlier
     * recorded-rule samples). Every store read of [[route]] and its
     * evaluators goes through here, so one evaluator serves the instant
-    * endpoint, the range endpoint and the rules tier. */
-  private final class Span(val start: Long, val end: Long, val step: Long,
+    * endpoint, the range endpoint and the rules tier, and every gate
+    * reads the one snapshot. */
+  private final class Span(val heads: Heads, val start: Long,
+                           val end: Long, val step: Long,
                            val floatView: DataFrame, val lb: Long) {
     def instant: Boolean = step == 0L
 
@@ -1122,9 +1099,9 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       * rate/…_over_time select a real window. */
     def hist(e: PromQL.Expr): DataFrame =
       if (instant)
-        PromQLHist.evalStrict(e, histHead.get, start, lb, histNLes)
+        PromQLHist.evalStrict(e, heads.hist.get.dense, start, lb, histNLes)
       else
-        PromQLHist.evalRange(e, histHead.get, start, end, step, lb,
+        PromQLHist.evalRange(e, heads.hist.get.dense, start, end, step, lb,
           histNLes)
 
     /** `e` on the float view — the float tier's own answer. */
@@ -1172,7 +1149,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       * filters per reference time (a pre-migration sample still inside
       * lookback of an owned step must yield to the native store). */
     def floatShare(s: PromQL.Selector): DataFrame =
-      dropShadowedFrame(floatEval(s), sampleRef(s))
+      heads.dropShadowedFrame(floatEval(s), sampleRef(s))
 
     /** `absent` over a both-stores selector: a `{<Eq-matcher labels>} 1`
       * row wherever BOTH stores match nothing — an instant probes the
@@ -1211,11 +1188,11 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
                      params: Seq[Double]): DataFrame = {
       val hook: (PromQL.Expr, DataFrame, Long, Long, Long, Long) =>
           DataFrame = (x, w, s0, e0, st0, lb0) =>
-        dropShadowedFrame(PromQL.toValueShape(
+        heads.dropShadowedFrame(PromQL.toValueShape(
           PromQL.evalRange(x, w, s0, e0, st0, lb0)),
           x match {
             case s: PromQL.Selector =>
-              new Span(s0, e0, st0, w, lb0).sampleRef(s)
+              new Span(heads, s0, e0, st0, w, lb0).sampleRef(s)
             case _ => col("t")
           })
       if (instant || sq.atMod.nonEmpty) {
@@ -1244,9 +1221,12 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     * would answer silently partial or silently empty. */
   private def route(ast: PromQL.Expr, span: Span)
       : Either[Rejection, Routed] = {
+    val heads = span.heads
+    import heads.{anySelectorSpans, migrationWarnings, selectorUnionsStores,
+      straddlesTiers}
     ast match {
       // no native head: the float tier answers alone, no Spark job first
-      case _ if histHead.isEmpty => oneStore(ast, span)
+      case _ if heads.hist.isEmpty => oneStore(ast, span)
       // a BARE selector reading BOTH stores (spanning name matchers, a
       // MIGRATED metric with float history, or a nameless selector with
       // a hist head): the union of both stores' vectors (`value` and
@@ -1262,9 +1242,10 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       case s @ PromQL.Selector(ms, Some(_), _, _)
           if span.instant && selectorUnionsStores(ms) =>
         val at = span.start
-        Right(Routed(PromQLHist.rawRange(s, histHead.get, at, at, at)
-          .unionByName(dropShadowedFrame(PromQL.rawRange(s, wide, at, at,
-            at), col("t")), allowMissingColumns = true), Nil, Nil))
+        Right(Routed(PromQLHist.rawRange(s, heads.hist.get.dense, at, at, at)
+          .unionByName(heads.dropShadowedFrame(PromQL.rawRange(s,
+            heads.float.df, at, at, at), col("t")),
+            allowMissingColumns = true), Nil, Nil))
       // SHAPED expressions over a SPANNING selector: the mixed-type
       // lattice where well-defined, everything else rejected loudly
       case _ if anySelectorSpans(ast) =>
@@ -1292,11 +1273,13 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     * [[namelessHistOk]]), else the float view. */
   private def oneStore(ast: PromQL.Expr, span: Span)
       : Either[Rejection, Routed] = {
+    val heads = span.heads
+    import heads.routesToHistHead
     val toHist = routesToHistHead(ast, allowNameless = false)
     // a native answer carries the unstitched-migration warning: a
     // migrated metric's float share is not in it
     def native(df: DataFrame, infos: Seq[String] = Nil) =
-      Right(Routed(df, migrationWarnings(ast), infos))
+      Right(Routed(df, heads.migrationWarnings(ast), infos))
     def plain(df: DataFrame) = Right(Routed(df, Nil, Nil))
     val at = span.start
     ast match {
@@ -1306,7 +1289,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       // timestamps, as a matrix
       case s @ PromQL.Selector(_, Some(_), _, _) if span.instant =>
         if (toHist)
-          plain(PromQLHist.rawRange(s, histHead.get, at, at, at))
+          plain(PromQLHist.rawRange(s, heads.hist.get.dense, at, at, at))
         else plain(PromQL.rawRange(s, span.floatView, at, at, at))
       // a BARE subquery (`expr[1h:5m]`) at the instant endpoint: the
       // inner evaluated on the subquery's absolute grid — a matrix
@@ -1315,8 +1298,8 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
         if ((PromQLHist.histEvaluable(inner) ||
             PromQLHist.floatEvaluable(inner)) &&
             routesToHistHead(inner, allowNameless = namelessHistOk(inner)))
-          native(PromQLHist.subqueryMatrix(sq, histHead.get, at, span.lb,
-            histNLes))
+          native(PromQLHist.subqueryMatrix(sq, heads.hist.get.dense, at,
+            span.lb, histNLes))
         else if (toHist) Left(UnsupportedHist)
         else plain(PromQL.subqueryMatrix(sq, span.floatView, at, span.lb,
           start = at, end = at))
@@ -1356,16 +1339,6 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     spark.range(0).select(col("id").as("t"),
       col("id").cast("double").as(TsdbSchema.ValueCol))
 
-  /** [[Shadowing.dropShadowed]] over a WIDE float frame, keyed on its
-    * label columns, against the cached per-series since table.
-    * `evalTime` = the frame's time axis (the grid column for range
-    * frames and raw matrices, the evaluation instant for instant
-    * vectors). */
-  private def dropShadowedFrame(fv: DataFrame,
-                                evalTime: Column): DataFrame =
-    Shadowing.dropShadowed(fv, Shadowing.skeyOfWide(fv), evalTime,
-      seriesSinceFrame)
-
   /** The split-tier evaluation LATTICE for an expression whose
     * selectors STRADDLE the two stores (one name pushed-native, one
     * float/classic): it decomposes recursively through the shapes
@@ -1386,6 +1359,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     * well-defined composition (genuinely mixed-VALUE arithmetic, a
     * spanning selector inside, an unsupported hist shape). */
   private def splitEval(e: PromQL.Expr, span: Span): Option[DataFrame] = {
+    import span.heads.{anySelectorSpans, routesToHistHead, straddlesTiers}
     def rec(x: PromQL.Expr) = splitEval(x, span)
     val extra = if (span.instant) Nil else Seq("t")
     def hasVal(df: DataFrame): Boolean =
@@ -1622,7 +1596,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
   }
 
   /** The served head (base table + every remote-write append). */
-  def table: DataFrame = wide
+  def table: DataFrame = current.float.df
 
   /** Bind 127.0.0.1:`port` (0 = ephemeral) and serve; returns the
     * bound port. Handlers run on a fresh pool of
@@ -1950,7 +1924,9 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     val limit = p.first("limit").map(_.toInt)
     require(limit.forall(_ >= 0), "limit must be non-negative")
     val ast = PromQL.parse(q)
-    val r = route(ast, new Span(at, at, 0L, floatShareView, lookbackMs))
+    val heads = current
+    val r = route(ast,
+      new Span(heads, at, at, 0L, heads.floatShareView, lookbackMs))
       .fold(rej => throw rej.http(q), identity)
     ast match {
       // a range-vector-typed expression (a bare range selector's raw
@@ -1986,32 +1962,17 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     require(limit.forall(_ >= 0), "limit must be non-negative")
     val ast = PromQL.parse(q)
     // range outputs carry the grid column `t` — matrix-ready
+    val heads = current
     val r = route(ast,
-      new Span(start, end, step, floatShareView, lookbackMs))
+      new Span(heads, start, end, step, heads.floatShareView, lookbackMs))
       .fold(rej => throw rej.http(q), identity)
     matrixResponse(ex, r.df, limit, r.warnings, r.infos)
-  }
-
-  /** The SERIES-METADATA view: the float head UNIONED with the pushed
-    * native-histogram head as label-only rows — Prometheus's series/
-    * labels/label-values APIs list native-histogram series like any
-    * other; reading only the float store would leave pushed-native
-    * metrics invisible to `/api/v1/series`, `/api/v1/labels` and
-    * `/api/v1/label/.../values`. The hist rows' `value` is a dummy 1.0
-    * (these APIs never read values — selection is labels + time). */
-  private def metaView: DataFrame = histHead match {
-    case None => wide
-    case Some(h) =>
-      wide.unionByName(
-        h.drop(PromQLHist.HistCol)
-          .withColumn(TsdbSchema.ValueCol, lit(1.0)),
-        allowMissingColumns = true)
   }
 
   private def labels(ex: HttpExchange, p: Params): Unit = {
     import spark.implicits._
     val (s, e) = window(p)
-    val t = TsdbTable(metaView)
+    val t = TsdbTable(current.metaView)
     val sels = p.all("match[]").map(PromQL.parseMatchers)
     val names =
       if (sels.isEmpty) TsdbMeta.labelNames(t, s, e, Nil)
@@ -2025,7 +1986,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
   private def labelValues(ex: HttpExchange, p: Params, label: String): Unit = {
     import spark.implicits._
     val (s, e) = window(p)
-    val t = TsdbTable(metaView)
+    val t = TsdbTable(current.metaView)
     val sels = p.all("match[]").map(PromQL.parseMatchers)
     val vs =
       if (sels.isEmpty) TsdbMeta.labelValues(t, label, s, e, Nil)
@@ -2038,7 +1999,8 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     val (s, e) = window(p)
     val sels = p.all("match[]").map(PromQL.parseMatchers)
     require(sels.nonEmpty, "no match[] parameter provided")
-    val rows = capped(TsdbMeta.seriesAny(TsdbTable(metaView), s, e, sels), p)
+    val rows = capped(
+      TsdbMeta.seriesAny(TsdbTable(current.metaView), s, e, sels), p)
     val cols = rows.columns
     val out = rows.collect().map { r =>
       cols.zipWithIndex.flatMap { case (c, i) =>
@@ -2049,7 +2011,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
   }
 
   private def queryExemplars(ex: HttpExchange, p: Params): Unit = {
-    val store = exemplarHead.getOrElse(
+    val store = current.exemplars.map(_.df).getOrElse(
       throw new IllegalArgumentException("exemplar storage is not enabled"))
     val q = required(p, "query")
     val (s, e) = window(p)
@@ -2087,12 +2049,12 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
   /** One rule group's ACTIVE alert elements at the last tick ≤ `at`:
     * (rule name, element labels, activeAt, value, state). Shared by the
     * rules/alerts endpoints and the Alertmanager notifier. */
-  private def groupActive(g: RuleFiles.Group, at: Long)
+  private def groupActive(g: RuleFiles.Group, at: Long, heads: Heads)
       : Seq[(String, Seq[(String, String)], Long, Double, String)] = {
     val interval = g.intervalMs.getOrElse(rulesIntervalMs)
     val lastTick = (at / interval) * interval
     // every rule reads through [[route]] — the query endpoints' one
-    // decision, over the group's accumulated view (wide + earlier
+    // decision, over the group's accumulated view (the float head + earlier
     // recorded-rule samples) — inside ONE per-rule containment block:
     // a rejection, a histogram-typed value or a build failure leaves
     // THIS rule empty (inactive; the rest of the group, /api/v1/alerts
@@ -2104,7 +2066,8 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
                  step: Long, lb: Long): DataFrame = {
       val key = PromQL.render(ast)
       val outcome =
-        try route(ast, new Span(s, e, step, shadowCarved(view), lb)) match {
+        try route(ast,
+          new Span(heads, s, e, step, heads.shadowCarved(view), lb)) match {
           case Left(rej) => Left(rej.rule(key))
           // a rule's value must be a FLOAT vector: histogram samples in
           // the answer would leak NULL values into the float-only rules
@@ -2115,9 +2078,9 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
           // float vector query_range renders (`sum({job="x"})` where
           // no native series has job="x")
           case Right(r) if r.df.columns.contains(PromQLHist.HistCol) &&
-              (namesNative(ast) ||
+              (heads.namesNative(ast) ||
                 !r.df.where(col(PromQLHist.HistCol).isNotNull).isEmpty) =>
-            Left((if (straddlesTiers(ast) || anySelectorSpans(ast))
+            Left((if (heads.straddlesTiers(ast) || heads.anySelectorSpans(ast))
               MixedTier else UnsupportedHist).rule(key))
           case Right(r) if r.df.columns.contains(PromQLHist.HistCol) =>
             val f = PromQL.toValueShape(r.df.drop(PromQLHist.HistCol))
@@ -2147,7 +2110,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
           emptyVector
       }
     }
-    val (_, alertsDf) = AlertRules.evaluateGroup(g.rules, wide,
+    val (_, alertsDf) = AlertRules.evaluateGroup(g.rules, heads.float.df,
       start = lastTick - (rulesHorizonMs / interval) * interval,
       end = lastTick, stepMs = interval, lookbackMs = lookbackMs,
       evalRangeFn = ruleEval)
@@ -2213,11 +2176,12 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
   def notifyNow(at: Long = System.currentTimeMillis()): Map[String, Int] = {
     val yaml = rules.getOrElse(return Map.empty)
     if (alertmanagers.isEmpty) return Map.empty
+    val heads = current
     val firingNow = RuleFiles.parse(yaml).flatMap { g =>
       val byRule = g.rules.collect {
         case r: AlertRules.AlertRule => r.name -> r
       }.toMap
-      groupActive(g, at).collect {
+      groupActive(g, at, heads).collect {
         case (name, ls, activeAt, _, "firing") =>
           val rule = byRule(name)
           val labels = (ls ++ rule.labels.toSeq ++ externalLabels :+
@@ -2273,9 +2237,10 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     val at = p.first("time").map(parseTime)
       .getOrElse(System.currentTimeMillis())
     import AlertRules.{AlertRule, RecordingRule}
+    val heads = current
     val groupsJson = RuleFiles.parse(yaml).map { g =>
       val interval = g.intervalMs.getOrElse(rulesIntervalMs)
-      val active = groupActive(g, at)
+      val active = groupActive(g, at, heads)
       def alertJson(name: String, rl: Map[String, String],
                     anns: Map[String, String]): (String, String) = {
         val mine = active.filter(_._1 == name)
@@ -2312,7 +2277,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
         key.flatMap(k => Option(ruleEvalErrors.get(k))) match {
           case Some(msg) => s""""health":"err","lastError":${jstr(msg)}}"""
           case None =>
-            val mw = ast.fold(Seq.empty[String])(migrationWarnings)
+            val mw = ast.fold(Seq.empty[String])(heads.migrationWarnings)
             val mwPart =
               if (mw.isEmpty) ""
               else s""","migrationWarning":${jstr(
@@ -2391,7 +2356,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
   private def statusTsdb(ex: HttpExchange): Unit = {
     // head stats count EVERY stored series — Prometheus's head is
     // unified, so pushed native-histogram series count too (metaView)
-    val stats = TsdbStats.headStats(TsdbTable(metaView), Long.MinValue,
+    val stats = TsdbStats.headStats(TsdbTable(current.metaView), Long.MinValue,
       Long.MaxValue, k = 10).collect()
     def section(stat: String): Map[String, Long] = stats
       .filter(_.getString(0) == stat)
@@ -2420,7 +2385,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     val at = p.first("time").map(parseTime)
       .getOrElse(System.currentTimeMillis())
     // the float side is per-series SHADOW-CARVED on BOTH axes: the
-    // sample axis first ([[floatShareView]] — an in-band dual-write
+    // sample axis first ([[Heads.floatShareView]] — an in-band dual-write
     // float is a shadow permanently and must never federate as the
     // "latest" sample after a rollback), then as of `at`: a series
     // already migrated to the native store (first native sample ≤ at)
@@ -2429,18 +2394,17 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     // metric sample twice in one scrape; a series NOT yet migrated
     // (or never) keeps its float rows, so pre-migration federation
     // and partial fleet migrations stay whole
-    val carvedIn = floatShareView
-    val carved = Shadowing.dropShadowed(carvedIn,
-      Shadowing.skeyOfWide(carvedIn), lit(at), seriesSinceFrame)
+    val heads = current
+    val carved = heads.dropShadowedFrame(heads.floatShareView, lit(at))
     val lines = Federate.federate(TsdbTable(carved), sels, at, lookbackMs,
       externalLabels)
     // pushed-native-histogram series federate classic-style (_bucket/
     // _count/_sum from the dense grid) — text exposition cannot carry
     // native histograms, and dropping the series silently breaks a
     // federation hierarchy (they matched, then vanished)
-    val all = histHead match {
+    val all = heads.hist match {
       case Some(hh) => lines.unionByName(
-        Federate.federateHists(hh, sels, at, lookbackMs, externalLabels))
+        Federate.federateHists(hh.dense, sels, at, lookbackMs, externalLabels))
       case None => lines
     }
     text(ex, 200, all.as[String].collect().mkString("", "\n", "\n"),
@@ -2460,36 +2424,33 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       // the v2 spec's partial-write contract applies to ERROR
       // responses too: a sender reads the written-count headers to
       // decide what to retry. Everything decodes and validates before
-      // the first append, so an error response truthfully reports
-      // zero — set up front, overwritten with the real counts on
-      // success. (A successful request's parts still publish one
-      // head at a time: see `appendLock`.)
+      // the push publishes, and it publishes whole, so an error
+      // response truthfully reports zero — set up front, overwritten
+      // with the real counts on success.
       val h = ex.getResponseHeaders
       h.set("X-Prometheus-Remote-Write-Samples-Written", "0")
       h.set("X-Prometheus-Remote-Write-Histograms-Written", "0")
       h.set("X-Prometheus-Remote-Write-Exemplars-Written", "0")
     }
-    var histsWritten = 0
-    var exemplarsWritten = 0
-    val raw: Seq[(Long, Double, Map[String, String])] =
+    // the request's float samples (wire labels), its histograms, the
+    // synthetic created-timestamp zero histograms, its exemplar rows and
+    // its metric metadata
+    val (raw, hists, histZeros, exRows, meta) =
       if (isV2) {
         val series = RemoteWrite2.decodeRequest(body)
-        histsWritten = appendHists(series.flatMap(sr =>
-          sr.histograms.map(_.copy(labels = sr.labels.toMap))))
-        exemplarsWritten = appendExemplars(series)
+        val hists = series.flatMap(sr =>
+          sr.histograms.map(_.copy(labels = sr.labels.toMap)))
+        requireGridSchema(hists)
         // v2 METADATA (field 5: type/unit/help per series) lands in the
         // served metadata view — Prometheus's v2 receiver stores it;
         // dropping it would leave /api/v1/metadata blind to pushed
         // metrics (the same silent-loss class as dropped histograms)
-        synchronized {
-          series.foreach { sr =>
-            if (sr.metricType != 0 || sr.unit.nonEmpty || sr.help.nonEmpty)
-              sr.labels.toMap.get("__name__").foreach { m =>
-                pushedMeta += m -> ((
-                  RemoteWrite2.TypeNames.lift(sr.metricType)
-                    .getOrElse("unspecified"), sr.unit, sr.help))
-              }
-          }
+        val meta = series.flatMap { sr =>
+          if (sr.metricType != 0 || sr.unit.nonEmpty || sr.help.nonEmpty)
+            sr.labels.toMap.get("__name__").map(m => m -> ((
+              RemoteWrite2.TypeNames.lift(sr.metricType)
+                .getOrElse("unspecified"), sr.unit, sr.help)))
+          else None
         }
         // created-timestamp zero ingestion, v2 form: TimeSeries.
         // created_timestamp (field 6) is the series' created/reset
@@ -2499,6 +2460,8 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
         // at the created time (Prometheus's CT ingestion appends one so
         // hist-tier rate/increase see the reset; previously only float
         // samples seeded zeros and hist series silently missed theirs).
+        // Synthetic rows are appended, but NOT counted in the response's
+        // Written headers (those report the request's own payload).
         val ctZeros =
           if (!createdZeroIngestion) Nil
           else freshCtZeros(series.collect {
@@ -2506,31 +2469,32 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
                 sr.createdTimestamp < sr.samples.map(_._1).min =>
               (sr.createdTimestamp, sr.labels.toMap)
           }).map { case (st, ls) => (st, 0.0, ls) }
-        if (createdZeroIngestion) {
-          val histZeros = freshCtZeros(series.collect {
+        val histZeros =
+          if (!createdZeroIngestion) Nil
+          else freshCtZeros(series.collect {
             case sr if sr.createdTimestamp > 0 && sr.histograms.nonEmpty &&
                 sr.createdTimestamp < sr.histograms.map(_.time).min =>
               (sr.createdTimestamp, sr.labels.toMap)
           }).map { case (st, ls) => emptyHistAt(st, ls) }
-          // synthetic rows: appended, but NOT counted in the response's
-          // Written headers (those report the request's own payload)
-          if (histZeros.nonEmpty) { appendHists(histZeros); () }
-        }
-        series.flatMap { sr =>
+        (series.flatMap { sr =>
           sr.samples.map { case (t, v) => (t, v, sr.labels.toMap) }
-        } ++ ctZeros
+        } ++ ctZeros, hists, histZeros, exemplarRowsOf(series), meta)
       }
       else {
         // v1 senders ALSO carry native histograms (send_native_
-        // histograms, Prometheus ≥ 2.40) and exemplars (send_exemplars)
-        // — a receiver that decodes only samples 204-acks the push
-        // while silently losing both (the OTLP-summary failure class).
-        // EVERY section decodes BEFORE the first append — a request
-        // whose samples are malformed (but whose other sections parse)
-        // must ingest NOTHING behind its error, the same atomicity
-        // contract as the OTLP receiver's.
+        // histograms, Prometheus ≥ 2.40), exemplars (send_exemplars)
+        // and METADATA (WriteRequest.metadata, field 3, which
+        // Prometheus sends by default — metadata_config.send, on since
+        // 2.23) — a receiver that decodes only samples 204-acks the
+        // push while silently losing them (the OTLP-summary failure
+        // class). EVERY section decodes BEFORE the push publishes — a
+        // request whose samples are malformed (but whose other sections
+        // parse) must ingest NOTHING behind its error, the same
+        // atomicity contract as the OTLP receiver's.
         val hists = RemoteWrite.decodeHistsOfRequest(body)
-        val meta = RemoteWrite.decodeMetadataOfRequest(body)
+        val meta = RemoteWrite.decodeMetadataOfRequest(body).map {
+          case (fam, tpe, unit, help) => fam -> ((tpe, unit, help))
+        }
         val exRows = RemoteWrite.decodeExemplarsOfRequest(body).map {
           case (lm, el, v, t) =>
             val lbls = lm.map { case (k, vv) =>
@@ -2540,41 +2504,35 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
             (t, v, lbls, traceId)
         }
         val samples = RemoteWrite.decodeRequest(body)
-        histsWritten = appendHists(hists)
-        // v1 METADATA (WriteRequest.metadata, field 3) — which
-        // Prometheus sends by default (metadata_config.send, on since
-        // 2.23) — feeds the same served view as the v2 branch's
-        // per-series Metadata; dropping it would leave
-        // /api/v1/metadata blind to every default-configured v1 sender
-        synchronized {
-          meta.foreach { case (fam, tpe, unit, help) =>
-            pushedMeta += fam -> ((tpe, unit, help))
-          }
-        }
-        exemplarsWritten = appendExemplarRows(exRows)
-        samples
+        requireGridSchema(hists)
+        (samples, hists, Nil, exRows, meta)
       }
-    // Prometheus appends staleness markers as FLOAT samples even for
-    // native-histogram series (one unified store there); this engine's
-    // stores are split, so a pushed marker whose metric lives in the
-    // hist head must ALSO end the HIST series — otherwise the float
-    // marker lands in a store with no live series and the histogram
-    // keeps serving past its death
-    val staleHistMarkers = {
-      val histNames = synchronized(histMetricNames)
-      raw.collect {
-        case (t, v, ls) if TsdbSchema.isStaleMarker(v) &&
-            ls.get("__name__").exists(histNames) =>
-          RemoteWrite.SparseHist(t, ls, 0.0, v, histSchemaId, 0.0, 0.0,
-            Nil, Nil)
-      }
-    }
-    if (staleHistMarkers.nonEmpty) { appendHists(staleHistMarkers); () }
     val decoded = raw.map { case (t, v, ls) =>
       (t, v, ls.map { case (k, vv) =>
         (if (k == "__name__") "name" else k) -> vv })
     }
-    appendLongRows(decoded)
+    val floats = floatBatch(decoded)
+    val exemplarsIn = exemplarBatch(exRows)
+    publish { heads =>
+      // Prometheus appends staleness markers as FLOAT samples even for
+      // native-histogram series (one unified store there); this
+      // engine's stores are split, so a pushed marker whose metric
+      // lives in the hist head — or arrives there with this request —
+      // must ALSO end the HIST series; otherwise the float marker lands
+      // in a store with no live series and the histogram keeps serving
+      // past its death
+      val natives = heads.histNames ++
+        (hists ++ histZeros).flatMap(_.labels.get("__name__"))
+      val staleHistMarkers = raw.collect {
+        case (t, v, ls) if TsdbSchema.isStaleMarker(v) &&
+            ls.get("__name__").exists(natives) =>
+          RemoteWrite.SparseHist(t, ls, 0.0, v, histSchemaId, 0.0, 0.0,
+            Nil, Nil)
+      }
+      heads.append(floats, histBatch(hists ++ histZeros ++ staleHistMarkers),
+        exemplarsIn)
+    }
+    synchronized { pushedMeta ++= meta }
     if (isV2) {
       // v2 receivers MUST report written counts (the spec's
       // partial-write contract)
@@ -2582,22 +2540,20 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       h.set("X-Prometheus-Remote-Write-Samples-Written",
         decoded.size.toString)
       h.set("X-Prometheus-Remote-Write-Histograms-Written",
-        histsWritten.toString)
+        hists.size.toString)
       h.set("X-Prometheus-Remote-Write-Exemplars-Written",
-        exemplarsWritten.toString)
+        exRows.size.toString)
     }
     ex.sendResponseHeaders(204, -1)
   }
 
-  /** Land a v2 request's EXEMPLARS in the queryable store (the
-    * [[Exemplars]] wide shape: owning series' label columns + time +
-    * value + trace_id) — `/api/v1/query_exemplars` serves them back.
-    * The trace id is the exemplar's `trace_id` label (Prometheus's
+  /** A v2 request's EXEMPLARS as rows for the queryable store. The
+    * trace id is the exemplar's `trace_id` label (Prometheus's
     * convention); exemplars without one keep their first label value,
-    * and label-less exemplars land with an empty id. Returns the count
-    * written. */
-  private def appendExemplars(series: Seq[RemoteWrite2.Rw2Series]): Int =
-    appendExemplarRows(series.flatMap { sr =>
+    * and label-less exemplars land with an empty id. */
+  private def exemplarRowsOf(series: Seq[RemoteWrite2.Rw2Series])
+      : Seq[(Long, Double, Map[String, String], String)] =
+    series.flatMap { sr =>
       val lbls = sr.labels.toMap.map { case (k, v) =>
         (if (k == "__name__") "name" else k) -> v }
       sr.exemplars.map { case (elbls, v, t) =>
@@ -2605,27 +2561,24 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
           elbls.sortBy(_._1).headOption.fold("")(_._2))
         (t, v, lbls, traceId)
       }
-    })
+    }
 
-  private def appendExemplarRows(
-      rows: Seq[(Long, Double, Map[String, String], String)]): Int = {
-    if (rows.nonEmpty) {
+  /** Exemplar rows as a one-append exemplar [[Head]] in the
+    * [[Exemplars]] wide shape (owning series' label columns + time +
+    * value + trace_id) — what `/api/v1/query_exemplars` serves. None
+    * when there are none. */
+  private def exemplarBatch(
+      rows: Seq[(Long, Double, Map[String, String], String)]): Option[Head] =
+    if (rows.isEmpty) None
+    else {
       import spark.implicits._
       val names = rows.flatMap(_._3.keys).distinct.sorted
       val labelCols = names.map(n =>
         col("labels").getItem(n).as(TsdbSchema.labelColName(n)))
-      val batch = rows.toDF("time", "value", "labels", "trace_id")
+      Some(new Head(rows.toDF("time", "value", "labels", "trace_id")
         .select(col("time") +: col("value") +: labelCols :+
-          col("trace_id"): _*)
-      appendLock.synchronized {
-        val n = exemplarAppends + 1
-        val next = boundLineage(exemplarHead.fold(batch)(
-          _.unionByName(batch, allowMissingColumns = true)), n)
-        synchronized { exemplarHead = Some(next); exemplarAppends = n }
-      }
+          col("trace_id"): _*), 1))
     }
-    rows.size
-  }
 
   /** Prometheus's OTLP receiver (`/api/v1/otlp/v1/metrics`, ≥ 2.47):
     * binary-protobuf ExportMetricsServiceRequest in, gauge/sum points
@@ -2676,6 +2629,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     // behind an error status)
     val expHistsFull = dec(OtlpProto.decodeHistsFull(raw))
     val expHists = expHistsFull.map(_._1)
+    requireGridSchema(expHists)
     // gauge/sum points PLUS explicit-bounds histograms PLUS summaries —
     // Prometheus's OTLP endpoint translates classic histograms into
     // _bucket/_count/_sum series and summaries into
@@ -2749,10 +2703,11 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
           elbls.toSeq.sortBy(_._1).headOption.fold("")(_._2))
         (t, v, lbls, traceId)
     }
-    // every section validated — appends start here
-    appendHists(expHists ++ histCtZeros)
-    appendLongRows(decoded)
-    appendExemplarRows(exemplarRows)
+    // every section validated — the push publishes here, once
+    val floats = floatBatch(decoded)
+    val hists = histBatch(expHists ++ histCtZeros)
+    val exemplarsIn = exemplarBatch(exemplarRows)
+    publish(_.append(floats, hists, exemplarsIn))
     ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")
     ex.sendResponseHeaders(200, -1)
   }
@@ -2776,24 +2731,25 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     // MIXED request whole to the float store (its native queries
     // answered empty) and nameless queries never saw native series —
     // the round-17 straddle class, closed on this surface too. The
-    // gates are CACHED name-universe checks (floatMetricNames
-    // recomputes off-lock once per append version; the first read
-    // after a write pays one small distinct job); a skipped store
-    // costs nothing. A SERIES stored in BOTH stores serves its native
-    // form from its FIRST native sample on (per-series time-aware
-    // shadowing, [[Shadowing]]: pre-migration float history stays
-    // readable, unmigrated series of a partially-migrated name serve
-    // in full, the overlapping float shadow never double-counts).
+    // gates are name-universe checks memoized on the request's
+    // snapshot ([[Head.names]]: the first read after a float push pays
+    // one small distinct job); a skipped store costs nothing. A
+    // SERIES stored in BOTH stores serves its native form from its
+    // FIRST native sample on (per-series time-aware shadowing,
+    // [[Shadowing]]: pre-migration float history stays readable,
+    // unmigrated series of a partially-migrated name serve in full, the
+    // overlapping float shadow never double-counts).
     // Wire matchers carry raw patterns; the gates (like the serve
     // paths) apply Prometheus's anchored semantics.
-    val hsOpt = histSparseHead
-    val natives = synchronized(histMetricNames)
+    val heads = current
+    val hsOpt = heads.hist.map(_.sparse)
+    val natives = heads.histNames
     def nameMs(q: RemoteRead.ReadQuery): Seq[graft.model.Matcher] =
       PromQL.anchorMatchers(q.matchers).filter(m =>
         m.name == "__name__" || m.name == "name")
     def wantsHist(q: RemoteRead.ReadQuery): Boolean = {
       val ms = nameMs(q)
-      // "" stands in for the ABSENT name here too: appendHists
+      // "" stands in for the ABSENT name here too: histBatch
       // tolerates nameless series and histSlice matches absent ≡ ""
       ms.isEmpty ||
         (natives + "").exists(m => ms.forall(matchesMetric(_, m)))
@@ -2804,27 +2760,28 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       // may be nameless, and a matcher set that matches the empty
       // name must still read the float store
       ms.isEmpty ||
-        (floatMetricNames + "").exists(m => ms.forall(matchesMetric(_, m)))
+        (heads.float.names + "").exists(m => ms.forall(matchesMetric(_, m)))
     }
+    val floats = TsdbTable(heads.float.df)
     if (wantsChunks) {
       ex.getResponseHeaders.set("Content-Type",
         "application/x-streamed-protobuf; proto=prometheus.ChunkedReadResponse")
       ex.sendResponseHeaders(200, 0) // 0 = chunked transfer encoding
       val out = ex.getResponseBody
       val frames =
-        (if (hsOpt.isEmpty) RemoteRead.serveChunked(TsdbTable(wide), body)
-         else RemoteRead.serveChunkedRouted(TsdbTable(wide), hsOpt, body,
-           wantsHist, wantsFloat, nativeSince = seriesSinceFrame))
+        (if (hsOpt.isEmpty) RemoteRead.serveChunked(floats, body)
+         else RemoteRead.serveChunkedRouted(floats, hsOpt, body,
+           wantsHist, wantsFloat, nativeSince = heads.seriesSince))
           .toLocalIterator()
       while (frames.hasNext) out.write(frames.next())
       out.flush()
     } else {
       val resp =
         if (hsOpt.isEmpty)
-          RemoteRead.serve(TsdbTable(wide), body, remoteReadSampleLimit)
-        else RemoteRead.serveRouted(TsdbTable(wide), hsOpt, body,
+          RemoteRead.serve(floats, body, remoteReadSampleLimit)
+        else RemoteRead.serveRouted(floats, hsOpt, body,
           remoteReadSampleLimit, wantsHist, wantsFloat,
-          nativeSince = seriesSinceFrame)
+          nativeSince = heads.seriesSince)
       ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")
       ex.getResponseHeaders.set("Content-Encoding", "snappy")
       ex.sendResponseHeaders(200, resp.length)
@@ -2986,6 +2943,16 @@ object PromHttpServer {
         "between float-valued sides, histogram × ÷ float-vector, and " +
         "sum/avg/count/min/max/topk/bottomk over a bare spanning " +
         "selector; rewrite anything else per tier)")
+
+  /** A pushed histogram in the sparse head: its labels and sample. */
+  private type SparseRow =
+    (Map[String, String], graft.sources.tsdbblock.WalReader.WalHistogram)
+
+  /** A value computed once, on first read; concurrent first readers
+    * wait for it. */
+  private final class Memo[T](compute: => T) {
+    lazy val value: T = compute
+  }
 
   /** One routed answer: the result frame and the evaluation's
     * annotations (mixed-type warnings, skipped-histogram infos, the

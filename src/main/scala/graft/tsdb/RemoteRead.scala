@@ -784,7 +784,7 @@ object RemoteRead {
       hs: Dataset[(Map[String, String],
         graft.sources.tsdbblock.WalReader.WalHistogram)],
       requestBytes: Array[Byte]): Dataset[Array[Byte]] = {
-    import graft.sources.tsdbblock.{HistChunk, WalReader}
+    import graft.sources.tsdbblock.WalReader
     val sp = hs.sparkSession
     import sp.implicits._
     val req = decodeReadRequest(requestBytes)

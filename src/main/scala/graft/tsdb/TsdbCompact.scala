@@ -2,7 +2,6 @@ package graft.tsdb
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
 
 /** Background compaction for the wide TSDB table — the Spark analogue of
   * Prometheus's TSDB compactor (the reference's block

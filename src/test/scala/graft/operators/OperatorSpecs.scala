@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class AsOfJoinSpec extends SparkSpec {
   import spark.implicits._

@@ -121,7 +121,7 @@ class TombstonesSpec extends SparkSpec {
   }
 
   test("deleteSeriesDb stones blocks AND the WAL head in one call") {
-    import graft.sources.tsdbblock.{TsdbDb, TsdbWalWriter, WalReader}
+    import graft.sources.tsdbblock.{TsdbDb, TsdbWalWriter}
     val db = tmpDir("graft_ts_db_")
     writeBlock(s"$db/block1")
     // head: the api series continues past the block

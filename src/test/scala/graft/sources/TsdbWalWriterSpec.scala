@@ -63,7 +63,6 @@ class TsdbWalWriterSpec extends SparkSpec {
     // reference wal → reader → our writer → reader: identical
     // (labels, time, value) multiset — 657,681 samples (count pinned by
     // TsdbWalSpec against the raw segments)
-    val s = spark; import s.implicits._
     def canon(dir: String) =
       spark.read.format("tsdb-wal").load(dir)
         .select(

@@ -20,9 +20,10 @@ import graft.SparkSpec
 /** The server runs request handlers on a bounded pool: a stalled
   * client holds one handler, concurrent answers equal serial ones,
   * concurrent writes lose nothing while reads stay live through a
-  * head consolidation, each request's Spark jobs carry their own job
-  * group, overlapping admin requests lose no tombstones, and the pool's
-  * threads end with the server. */
+  * head consolidation, a push becomes visible all at once, each
+  * request's Spark jobs carry their own job group, overlapping admin
+  * requests lose no tombstones, and the pool's threads end with the
+  * server. */
 class PromHttpConcurrencySpec extends SparkSpec {
   import PromHttpConcurrencySpec._
   import spark.implicits._
@@ -203,6 +204,59 @@ class PromHttpConcurrencySpec extends SparkSpec {
       assert(head.count() == baseRows + pushed.size)
       assert(math.abs(head.agg(sum("value")).collect().head.getDouble(0) -
         (baseSum + pushed.sum)) < 1e-6)
+    }
+  }
+
+  test("a push becomes visible all at once") {
+    // the held push is the 32nd float append, whose consolidation the
+    // Gate holds; its one series also carries a native histogram and an
+    // exemplar, which must stay invisible until the whole push is
+    Gate.arm()
+    val gated = store.coalesce(1).withColumn("value", holdInWrites(col("value")))
+    withServer(new PromHttpServer(spark, gated)) { port =>
+      val series = Seq("__name__" -> "held_seconds", "job" -> "api")
+      // one TimeSeries message: labels, the sample and the exemplar,
+      // then the histogram field (protobuf fields of one message concatenate)
+      def push(t: Long, v: Double): Array[Byte] =
+        RemoteWrite.encodeRequest(Seq(
+          RemoteWrite.encodeSeriesWithExemplars(series, Seq((t, v)),
+            Seq((Seq("trace_id" -> s"trace-$t"), v, t))) ++
+          RemoteWrite.encodeSeriesWithHistograms(Nil, Seq(RemoteWrite.SparseHist(
+            t, Map.empty, v, v, 0, 0.0, 0.0, Seq((1, v)), Nil)))))
+      // the first push makes the histogram head and the exemplar store
+      // exist, an hour before the held push (past its lookback)
+      val at = endMs + 3600000L
+      assert(post(port, "/api/v1/write", push(at - 3600000L, 3.0)) == 204)
+      (2 until 32).foreach { w =>
+        assert(post(port, "/api/v1/write", RemoteWrite.encodeRequest(Seq(
+          RemoteWrite.encodeSeries(Seq("__name__" -> "pushed_total", "w" -> w.toString),
+            Seq((at - 60000L, w.toDouble)))))) == 204)
+      }
+      def histCount: (Int, String) = get(port, "/api/v1/query",
+        "query" -> """histogram_count({name="held_seconds"})""", "time" -> sec(at))
+      def exemplars: (Int, String) = get(port, "/api/v1/query_exemplars",
+        "query" -> """{name="held_seconds"}""", "start" -> sec(at - 1000L), "end" -> sec(at + 1000L))
+      val whileHeld = new ConcurrentLinkedQueue[((Int, String), (Int, String))]()
+      val pushed = inParallel(2) { i =>
+        if (i == 0) post(port, "/api/v1/write", push(at, 7.0))
+        else {
+          try if (Gate.entered.await(120, TimeUnit.SECONDS))
+            whileHeld.add((histCount, exemplars))
+          finally Gate.release.countDown()
+          0
+        }
+      }
+      assert(pushed.head == 204)
+      assert(Gate.entered.getCount == 0, "the held push never ran its consolidation")
+      val held = whileHeld.asScala.toSeq
+      assert(held.size == 1)
+      val ((hc, hb), (ec, eb)) = held.head
+      assert(hc == 200 && hb.contains(""""result":[]"""), s"histogram while held: $hb")
+      assert(ec == 200 && !eb.contains(s"trace-$at"), s"exemplars while held: $eb")
+      val (hc2, hb2) = histCount
+      assert(hc2 == 200 && hb2.matches("""(?s).*,"7(\.0)?"\].*"""), hb2)
+      val (ec2, eb2) = exemplars
+      assert(ec2 == 200 && eb2.contains(s"trace-$at"), eb2)
     }
   }
 

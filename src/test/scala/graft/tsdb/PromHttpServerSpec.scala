@@ -4238,4 +4238,51 @@ class PromHttpServerSpec extends SparkSpec {
       }
     } finally srv.stop()
   }
+
+  test("MIXED MATRIX: a straddling series whose label value looks like " +
+      "JSON structure renders as ONE parseable object with both fields") {
+    // the mixed matrix assembles each object from rendered parts; a
+    // label value holding `},"values":[{` must neither split the series
+    // into two objects nor break the JSON
+    val hostile = """a},"values":[{b"""
+    val srv = new PromHttpServer(spark, wide)
+    val p = srv.start()
+    try {
+      def push(body: Array[Byte], v2: Boolean): Unit = {
+        val rb = HttpRequest.newBuilder(
+            URI.create(s"http://127.0.0.1:$p/api/v1/write"))
+          .POST(HttpRequest.BodyPublishers.ofByteArray(body))
+        if (v2) rb.header("Content-Type",
+          "application/x-protobuf;proto=io.prometheus.write.v2.Request")
+        val r = client.send(rb.build(),
+          HttpResponse.BodyHandlers.ofByteArray())
+        assert(r.statusCode() == 204, r.statusCode().toString)
+      }
+      val labels = Seq("__name__" -> "hostile_mig", "user" -> hostile)
+      // float history at 1s and 2s, then native from 5s on
+      push(RemoteWrite.encodeRequest(Seq(RemoteWrite.encodeSeries(labels,
+        Seq(1000L -> 1.0, 2000L -> 2.0)))), v2 = false)
+      def hist(t: Long, count: Double) = RemoteWrite.SparseHist(
+        time = t, labels = Map.empty, count = count, sum = count * 2,
+        schema = 0, zeroThreshold = 0.0, zeroCount = 0.0,
+        positive = Seq((1, count)), negative = Nil)
+      push(RemoteWrite2.encodeRequest(Seq(RemoteWrite2.Rw2Series(
+        labels = labels,
+        histograms = Seq(hist(5000L, 4.0), hist(9000L, 8.0))))), v2 = true)
+      val (c, b) = getAt(p, "/api/v1/query_range?query=" +
+        java.net.URLEncoder.encode("""{name="hostile_mig"}""", UTF_8) +
+        "&start=1&end=9&step=4")
+      assert(c == 200, b)
+      val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(b)
+      val result = json.path("data").path("result")
+      assert(result.isArray, b)
+      val objs = (0 until result.size).map(result.get)
+      assert(objs.size == 1, b)
+      val o = objs.head
+      assert(o.path("metric").path("user").asText == hostile, b)
+      assert(o.path("metric").path("__name__").asText == "hostile_mig", b)
+      assert(o.path("values").isArray && o.path("values").size == 1, b)
+      assert(o.path("histograms").isArray && o.path("histograms").size == 2, b)
+    } finally srv.stop()
+  }
 }
