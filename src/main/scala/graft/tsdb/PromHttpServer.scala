@@ -115,7 +115,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     }
   }
 
-  /** NATIVE HISTOGRAMS pushed over remote-write 2.0 or OTLP: `dense`
+  /** NATIVE HISTOGRAMS pushed over remote write or OTLP: `dense`
     * frames on the server's (schema, minExp, maxExp) grid, which the
     * PromQL hist tier reads, and the same samples in FULL-fidelity
     * `sparse` form, which the chunked remote-read responder streams
@@ -2356,8 +2356,8 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
   private def statusTsdb(ex: HttpExchange): Unit = {
     // head stats count EVERY stored series — Prometheus's head is
     // unified, so pushed native-histogram series count too (metaView)
-    val stats = TsdbStats.headStats(TsdbTable(current.metaView), Long.MinValue,
-      Long.MaxValue, k = 10).collect()
+    val stats = TsdbStats.headStats(TsdbTable(current.metaView),
+      Long.MinValue, Long.MaxValue, k = 10).collect()
     def section(stat: String): Map[String, Long] = stats
       .filter(_.getString(0) == stat)
       .map(r => r.getString(1) -> r.getLong(2)).toMap
