@@ -236,12 +236,13 @@ class PromHttpConcurrencySpec extends SparkSpec {
         "query" -> """histogram_count({name="held_seconds"})""", "time" -> sec(at))
       def exemplars: (Int, String) = get(port, "/api/v1/query_exemplars",
         "query" -> """{name="held_seconds"}""", "start" -> sec(at - 1000L), "end" -> sec(at + 1000L))
-      val whileHeld = new ConcurrentLinkedQueue[((Int, String), (Int, String))]()
+      val whileHeld = new ConcurrentLinkedQueue[((Int, String), (Int, String), Boolean)]()
       val pushed = inParallel(2) { i =>
         if (i == 0) post(port, "/api/v1/write", push(at, 7.0))
         else {
+          // the last field: the push was still held after both queries
           try if (Gate.entered.await(120, TimeUnit.SECONDS))
-            whileHeld.add((histCount, exemplars))
+            whileHeld.add((histCount, exemplars, Gate.release.getCount == 1))
           finally Gate.release.countDown()
           0
         }
@@ -250,7 +251,8 @@ class PromHttpConcurrencySpec extends SparkSpec {
       assert(Gate.entered.getCount == 0, "the held push never ran its consolidation")
       val held = whileHeld.asScala.toSeq
       assert(held.size == 1)
-      val ((hc, hb), (ec, eb)) = held.head
+      val ((hc, hb), (ec, eb), stillHeld) = held.head
+      assert(stillHeld, "the push was released before both queries answered")
       assert(hc == 200 && hb.contains(""""result":[]"""), s"histogram while held: $hb")
       assert(ec == 200 && !eb.contains(s"trace-$at"), s"exemplars while held: $eb")
       val (hc2, hb2) = histCount
