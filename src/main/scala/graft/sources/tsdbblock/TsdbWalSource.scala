@@ -313,7 +313,9 @@ object TsdbDb {
     * source as PLANNING-time series selection (non-matching series are
     * never scheduled, their chunks never fetched); every matcher is also
     * applied as a residual row filter so WAL rows and negative kinds get
-    * identical semantics. Absent label ≡ "" throughout (hello.go:339-349). */
+    * identical semantics. Absent label ≡ "" throughout (hello.go:339-349).
+    * A missing `dbDir` is an error naming it; a DB directory with neither
+    * blocks nor a WAL answers no rows. */
   def select(spark: SparkSession, dbDir: String,
              matchers: Seq[Matcher]): DataFrame = {
     val opts = matchers.collect {
@@ -330,7 +332,7 @@ object TsdbDb {
       }
     }
     val root = new java.io.File(dbDir)
-    val blockDirs = root.listFiles()
+    val blockDirs = WalReader.listDir(dbDir, "TSDB")
       .filter(f => f.isDirectory && new java.io.File(f, "index").isFile)
       .map(_.getPath).sorted
     val parts =
@@ -339,11 +341,15 @@ object TsdbDb {
         (if (new java.io.File(root, "wal").isDirectory)
           Seq(spark.read.format("tsdb-wal").load(s"$dbDir/wal"))
         else Nil)
+    // a DB directory with neither blocks nor a WAL holds no samples
+    val all = parts.reduceOption(_ unionByName _).getOrElse(
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        TsdbBlockSource.schema))
     // label-only predicates select whole series, so filtering commutes
     // with the (series, time) dedup — apply before it, shrinking the
     // shuffle to the matched series
-    val union = matchers.foldLeft(parts.reduce(_ unionByName _))(
-      (d, m) => d.where(residual(m)))
+    val union = matchers.foldLeft(all)((d, m) => d.where(residual(m)))
     // maps aren't comparable: dedup on the sorted entry list, then
     // rebuild the map. One shuffle; at scale this is the same
     // merge-dedup Prometheus does per queried chunk, done set-wise.
@@ -365,13 +371,14 @@ object TsdbDb {
     * every block's histogram chunks ([[TsdbBlockRecords]]) ∪ the WAL's
     * kind-7/8 records ([[TsdbWalRecords.readHistogramsFull]]), deduped
     * on (series, time) as the storage merge keeps one sample per
-    * series-timestamp across overlapping sources. */
+    * series-timestamp across overlapping sources. A missing `dbDir` is
+    * an error naming it. */
   def readHistograms(spark: SparkSession, dbDir: String)
       : org.apache.spark.sql.Dataset[(Map[String, String],
           WalReader.WalHistogram)] = {
     import spark.implicits._
     val root = new java.io.File(dbDir)
-    val blockDirs = root.listFiles()
+    val blockDirs = WalReader.listDir(dbDir, "TSDB")
       .filter(f => f.isDirectory && new java.io.File(f, "index").isFile)
       .map(_.getPath).sorted
     val parts =

@@ -51,17 +51,17 @@ object WalReader {
     * Prometheus WAL replay contract: the LATEST `checkpoint.NNNNNNNN`
     * directory first (it replaces every segment with index ≤ N; older
     * checkpoint dirs are deletion leftovers and are ignored), then the
-    * live segments with index > N. */
+    * live segments with index > N. A missing WAL directory is an
+    * error naming it, never an empty WAL. */
   def segments(walDir: String): Seq[String] = {
-    val dir = new java.io.File(walDir)
-    val files = dir.listFiles()
+    val files = listDir(walDir, "WAL")
     val cp = files
       .filter(f => f.isDirectory && f.getName.startsWith("checkpoint."))
       .flatMap(f => f.getName.stripPrefix("checkpoint.").toIntOption
         .map(_ -> f))
       .sortBy(_._1).lastOption
     val cpSegments = cp.toSeq.flatMap { case (_, d) =>
-      d.listFiles()
+      listDir(d.getPath, "WAL checkpoint")
         .filter(f => f.isFile && f.getName.forall(_.isDigit))
         .sortBy(_.getName.toInt).map(_.getPath).toSeq
     }
@@ -72,6 +72,15 @@ object WalReader {
       .sortBy(_.getName.toInt)
       .map(_.getPath).toSeq
   }
+
+  /** The entries of directory `path`; a missing path or a plain file
+    * fails with an error that names it (`File.listFiles` answers null
+    * for both). `what` says which directory the caller expected. */
+  private[tsdbblock] def listDir(path: String, what: String)
+      : Array[java.io.File] =
+    Option(new java.io.File(path).listFiles()).getOrElse(
+      throw new java.io.FileNotFoundException(
+        s"$what directory $path does not exist or is not a directory"))
 
   /** Reassembled, decompressed records of one segment. */
   def records(segmentPath: String): Iterator[Array[Byte]] =

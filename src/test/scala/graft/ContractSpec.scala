@@ -13,8 +13,19 @@ class ContractSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  // the queries that read the reference's own TSDB database, by the
+  // fixture path each reads: they run only where that path exists
+  private val fixtureQueries = Map(
+    "tsdb_q6_block" -> ReferenceFixture.Block,
+    "tsdb_q9_db" -> ReferenceFixture.Db,
+    "stream_q7_wal_tail" -> ReferenceFixture.Wal)
+
   test("every query runs at sf0.001 and yields columns") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+    assert(fixtureQueries.keySet.subsetOf(SparkEntry.queries.keySet))
+    val runnable = SparkEntry.queries.toSeq.sortBy(_._1).filter {
+      case (name, _) => fixtureQueries.get(name).forall(ReferenceFixture.present)
+    }
+    val failures = runnable.flatMap { case (name, fn) =>
       try {
         val df = fn(spark, Sf0001)
         assert(df.columns.nonEmpty)

@@ -21,10 +21,27 @@ object SparkTestBase {
   }
 }
 
+/** The reference's own Prometheus self-scrape database (FIXTURES.md §A):
+  * block 01GW1T7K3E9F9R361GDPVH8NZF plus its WAL. It is not in the
+  * repository; specs that check its content run only where it exists. */
+object ReferenceFixture {
+  val Db = "/root/reference"
+  val Block = s"$Db/01GW1T7K3E9F9R361GDPVH8NZF"
+  val Wal = s"$Db/wal"
+
+  def present(path: String): Boolean = new java.io.File(path).exists()
+}
+
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
   lazy val Sf0001 = "/root/testdata/sf0.001"
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Cancels the running spec unless the reference fixture `path`
+    * (under [[ReferenceFixture.Db]]) exists. */
+  def assumeFixture(path: String): Unit =
+    assume(ReferenceFixture.present(path),
+      s"reference fixture $path is absent")
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkSpec
+import graft.{ReferenceFixture, SparkSpec}
 import graft.model.Matcher
 import graft.tsdb.{TsdbIngest, TsdbTable}
 import org.apache.spark.sql.functions._
@@ -33,7 +33,7 @@ object ContentDigest {
 }
 
 class TsdbBlockSourceSpec extends SparkSpec {
-  private val block = "/root/reference/01GW1T7K3E9F9R361GDPVH8NZF"
+  private val block = ReferenceFixture.Block
 
   // meta.json ground truth
   private val NumSamples = 154529L
@@ -44,6 +44,7 @@ class TsdbBlockSourceSpec extends SparkSpec {
   private lazy val df = spark.read.format("tsdb-block").load(block)
 
   test("block scan: sample count, series count, time bounds match meta.json") {
+    assumeFixture(block)
     assert(df.count() == NumSamples)
     // maps aren't comparable in Spark — count distinct sorted entry lists
     val series = df.select(array_sort(map_entries(col("labels"))).as("l"))
@@ -55,6 +56,7 @@ class TsdbBlockSourceSpec extends SparkSpec {
   }
 
   test("golden content digest pins every decoded sample bit-exactly") {
+    assumeFixture(block)
     // order-independent bit-XOR of xxhash64 over each sample's canonical
     // (sorted-label series key, time, value): any flipped bit in the XOR
     // chunk decode, label dictionary, or timestamp delta chain changes
@@ -73,6 +75,7 @@ class TsdbBlockSourceSpec extends SparkSpec {
   }
 
   test("reference Q2 over a real block: up{instance,job} is one series") {
+    assumeFixture(block)
     // ingest long → wide sorted parquet, then the reference query shape
     val out = tmpDir("tsdb_block_wide")
     TsdbIngest.write(TsdbIngest.toWide(df), out)
@@ -91,6 +94,7 @@ class TsdbBlockSourceSpec extends SparkSpec {
   }
 
   test("time-range pushdown prunes chunks at planning") {
+    assumeFixture(block)
     val mid = (MinTime + MaxTime) / 2
     val pruned = spark.read.format("tsdb-block").load(block)
       .where(col("time") > mid)
@@ -103,6 +107,7 @@ class TsdbBlockSourceSpec extends SparkSpec {
   }
 
   test("inclusive bounds at the Long extremes saturate instead of wrapping") {
+    assumeFixture(block)
     // >= MinValue / <= MaxValue must be no-op pruning, not prune-everything
     val all = spark.read.format("tsdb-block").load(block)
       .where(col("time") >= Long.MinValue && col("time") <= Long.MaxValue)
@@ -110,6 +115,7 @@ class TsdbBlockSourceSpec extends SparkSpec {
   }
 
   test("partitioning splits series across tasks without double-reading") {
+    assumeFixture(block)
     val p4 = spark.read.format("tsdb-block")
       .option("partitions", 4).load(block)
     assert(p4.rdd.getNumPartitions == 4)
@@ -117,6 +123,7 @@ class TsdbBlockSourceSpec extends SparkSpec {
   }
 
   test("default partitioning is chunk-adaptive, not a fixed constant") {
+    assumeFixture(block)
     // round-20: without an explicit `partitions` option the split count
     // derives from pruned chunks / cores — the reference block (767
     // series, ~1.3k chunks) on local[4] must plan a handful of tasks
@@ -132,9 +139,10 @@ class TsdbBlockSourceSpec extends SparkSpec {
 
 class TsdbBlockPruningSpec extends graft.SparkSpec {
   import org.apache.spark.sql.functions._
-  private val block = "/root/reference/01GW1T7K3E9F9R361GDPVH8NZF"
+  private val block = ReferenceFixture.Block
 
   test("column pruning reaches the scan (labels dropped from ReadSchema)") {
+    assumeFixture(block)
     val df = spark.read.format("tsdb-block").load(block)
       .select(col("time"), col("value"))
     val desc = df.queryExecution.executedPlan.toString()
@@ -144,6 +152,7 @@ class TsdbBlockPruningSpec extends graft.SparkSpec {
   }
 
   test("matcher options select series at planning, exactly") {
+    assumeFixture(block)
     val df = spark.read.format("tsdb-block").load(block)
     val NumSamples = 154529L
     // the reference's canonical query via planning-time series selection

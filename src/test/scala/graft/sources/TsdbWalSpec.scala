@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkSpec
+import graft.{ReferenceFixture, SparkSpec}
 import graft.sources.tsdbblock.{TsdbDb, WalReader}
 import org.apache.spark.sql.functions._
 
@@ -11,13 +11,14 @@ import org.apache.spark.sql.functions._
   * extends past its maxTime (the uncompacted head).
   */
 class TsdbWalSpec extends SparkSpec {
-  private val db = "/root/reference"
+  private val db = ReferenceFixture.Db
   private val BlockMin = 1679382479083L
   private val BlockMax = 1679385600000L
   private val WalSamples = 657681L
   private val NumSeries = 767L
 
   test("WAL decode: all sample refs resolve; head extends past the block") {
+    assumeFixture(s"$db/wal")
     val dict = WalReader.seriesDict(s"$db/wal")
     assert(dict.size == NumSeries)
     val df = spark.read.format("tsdb-wal").load(s"$db/wal")
@@ -28,6 +29,7 @@ class TsdbWalSpec extends SparkSpec {
   }
 
   test("golden content digest pins every decoded WAL sample bit-exactly") {
+    assumeFixture(s"$db/wal")
     // same order-independent digest as the block spec (ContentDigest):
     // exact-value coverage for the snappy-framed record decode + series
     // dictionary resolution, where no SQL oracle can reach
@@ -41,6 +43,7 @@ class TsdbWalSpec extends SparkSpec {
   }
 
   test("a corrupted record CRC stops decode instead of yielding garbage") {
+    assumeFixture(s"$db/wal/00000000")
     val orig = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$db/wal/00000000"))
     assert(WalReader.records(s"$db/wal/00000000").nonEmpty)
@@ -54,6 +57,7 @@ class TsdbWalSpec extends SparkSpec {
   }
 
   test("a torn tail (truncated segment) terminates cleanly") {
+    assumeFixture(s"$db/wal/00000001")
     val orig = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$db/wal/00000001"))
     val full = WalReader.samples(s"$db/wal/00000001").size
@@ -75,6 +79,7 @@ class TsdbWalSpec extends SparkSpec {
   }
 
   test("whole-DB view: blocks ∪ WAL deduped on (series, time)") {
+    assumeFixture(db)
     val all = TsdbDb.read(spark, db)
     val n = all.count()
     // distinct by construction
@@ -91,6 +96,7 @@ class TsdbWalSpec extends SparkSpec {
   }
 
   test("streaming WAL tail: incremental delivery ≡ batch source, no dups") {
+    assumeFixture(s"$db/wal")
     // simulate a live WAL: torn first segment → completed → new segment
     val dir = java.nio.file.Files.createTempDirectory("wal_tail")
     val seg0 = java.nio.file.Files.readAllBytes(
@@ -357,6 +363,7 @@ class TsdbWalSpec extends SparkSpec {
   }
 
   test("stream_q7_wal_tail digest column ≡ batch source per-name digest") {
+    assumeFixture(s"$db/wal")
     // the driver's rows-only check now carries a content commitment:
     // the streaming query's per-name digest must equal the same fold
     // computed through the BATCH wal source — exact decoded content,
@@ -374,6 +381,7 @@ class TsdbWalSpec extends SparkSpec {
   }
 
   test("Querier.Select shape: matchers over the whole DB ≡ post-filter") {
+    assumeFixture(db)
     import graft.model.Matcher
     val got = TsdbDb.select(spark, db, Seq(
       Matcher.Eq("__name__", "up"),
@@ -398,6 +406,7 @@ class TsdbWalSpec extends SparkSpec {
   }
 
   test("WalReader.dicts ≡ (seriesDict, stoneDict) — the fused planning pass") {
+    assumeFixture(s"$db/wal")
     // round-19: the tsdb-wal scan plans with ONE fused pass over the
     // segment bytes instead of two; pin the equivalence on the
     // reference WAL (series) and a synthetic stone-bearing WAL (stones)
@@ -408,6 +417,7 @@ class TsdbWalSpec extends SparkSpec {
   }
 
   test("WalDicts blob round-trips the dictionaries through serialization") {
+    assumeFixture(s"$db/wal")
     // round-20: the scan broadcasts the dictionaries as ONE compact
     // byte blob (SizeEstimator/JavaSerializer no longer walk the nested
     // Map graph per execution); pin the encode→serialize→decode loop
@@ -428,6 +438,7 @@ class TsdbWalSpec extends SparkSpec {
   }
 
   test("ranged records: stitched split ranges ≡ the whole segment") {
+    assumeFixture(s"$db/wal")
     // round-20: intra-segment splits start at the record-boundary
     // offsets walMeta reports; a task consumes exactly the records
     // starting in [from, until) — no overlap, no gap, fragments of a
@@ -445,6 +456,7 @@ class TsdbWalSpec extends SparkSpec {
   }
 
   test("the tsdb-wal scan splits large segments into multiple tasks") {
+    assumeFixture(s"$db/wal")
     // round-20: the replay is no longer one task per segment — a
     // 2.7 MB segment on local[4] must split (splitBytes = total/cores
     // clamped to [256 KiB, maxPartitionBytes]) and the split read must

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkSpec
+import graft.{ReferenceFixture, SparkSpec}
 import graft.sources.tsdbblock.{TsdbWalWriter, WalReader}
 import org.apache.spark.sql.functions._
 
@@ -60,6 +60,7 @@ class TsdbWalWriterSpec extends SparkSpec {
   }
 
   test("re-writing the reference WAL reproduces every sample") {
+    assumeFixture(ReferenceFixture.Wal)
     // reference wal → reader → our writer → reader: identical
     // (labels, time, value) multiset — 657,681 samples (count pinned by
     // TsdbWalSpec against the raw segments)

@@ -132,6 +132,7 @@ class MetricPartitionSpec extends graft.SparkSpec {
   import graft.model.Matcher
 
   test("metric-partitioned layout: Eq(__name__) becomes a partition filter") {
+    assumeFixture(graft.ReferenceFixture.Block)
     val block = spark.read.format("tsdb-block")
       .load("/root/reference/01GW1T7K3E9F9R361GDPVH8NZF")
     val wide = TsdbIngest.toWide(block)
