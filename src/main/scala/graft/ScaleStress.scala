@@ -797,10 +797,10 @@ object ScaleStress {
       .agg(count(lit(1)).cast("double").as("value"))
     time(s"over-time combine ${factor}x")(
       graft.tsdb.PromQLHist.combineSeriesShares(hShare, fShare,
-        how = "sum").count())
+        how = "sum", graft.tsdb.TsdbSchema.metricLabel(xN)).count())
     time(s"over-time exclusive ${factor}x")(
-      graft.tsdb.PromQLHist.exclusiveSeriesShares(hShare, fShare)
-        ._1.count())
+      graft.tsdb.PromQLHist.exclusiveSeriesShares(hShare, fShare,
+        graft.tsdb.TsdbSchema.metricLabel(xN))._1.count())
     // ROUND-19 (optimization): the block writer's SINGLE payload
     // shuffle at Nx — the rewrite replaced the groupBy(slice, labels)
     // exchange + full-payload repartition(slice) with ONE pinned-width

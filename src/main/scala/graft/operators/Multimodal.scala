@@ -7,7 +7,6 @@ import javax.imageio.ImageIO
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing: image/audio/video payloads as opaque
   * BINARY columns with typed metadata, processed batch-wise per
@@ -40,17 +39,6 @@ import org.apache.spark.sql.types._
   *   - features are fixed-width arrays ⇒ columnar downstream.
   */
 object Multimodal {
-
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false), // image|audio|video
-    StructField("payload", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("sample_rate", IntegerType, nullable = true),
-      StructField("n_frames", IntegerType, nullable = true),
-      StructField("mime", StringType, nullable = true))), nullable = true)))
 
   final case class MediaMeta(width: Option[Int], height: Option[Int],
                              sample_rate: Option[Int], n_frames: Option[Int],

@@ -2232,7 +2232,7 @@ object TsdbQueries {
           element_at(col("pair"), 2).cast("double").as("value"))
     }),
     // Q155: the API's NATIVE-HISTOGRAM result shape
-    // ([[graft.tsdb.ApiJson.histVectorJson]]) — what /api/v1/query
+    // ([[graft.tsdb.ApiJson.vectorJson]]) — what /api/v1/query
     // serializes for histogram-valued expressions: per-series metric
     // map + `histogram: [ts, {count, sum, buckets}]` with populated
     // buckets only, open-left rule, string values. The rendered TEXT
@@ -2242,7 +2242,7 @@ object TsdbQueries {
     // construction (the q90 family's instant selector).
     "tsdb_q155_api_hist_json" -> ((s, dir) => {
       import org.apache.spark.sql.types.{ArrayType, StringType}
-      val json = graft.tsdb.ApiJson.histVectorJson(
+      val json = graft.tsdb.ApiJson.vectorJson(
         graft.tsdb.PromQLHist.eval(
           graft.tsdb.PromQL.parse("""{user=~"1.*"}"""),
           histDaily(s, dir), at = RangeEnd, lookbackMs = HistLookbackMs,
@@ -2669,7 +2669,8 @@ object TsdbQueries {
       val u = graft.tsdb.TsdbSchema.alignLabelSpellings(hv, fv)
         .unionByName(graft.tsdb.TsdbSchema.alignLabelSpellings(fv, hv),
           allowMissingColumns = true)
-      graft.tsdb.PromQLHist.limitKFrame(u, 4)
+      graft.tsdb.PromQLHist.limitKFrame(u, 4,
+        graft.tsdb.TsdbSchema.metricLabel(histDaily(s, dir)))
         .select(col("`labels.name`").as("name"),
           col("`labels.user`").as("user"), col("`labels.k`").as("k"),
           col("hist").getField("count").cast("long").as("n"),
@@ -2698,7 +2699,8 @@ object TsdbQueries {
       val f = graft.tsdb.PromQL.evalRange(graft.tsdb.PromQL.parse(q),
         carved, start = gs, end = ge, stepMs = st,
         lookbackMs = HistLookbackMs)
-      graft.tsdb.PromQLHist.combineSeriesShares(h, f, how = "sum")
+      graft.tsdb.PromQLHist.combineSeriesShares(h, f, how = "sum",
+        graft.tsdb.TsdbSchema.metricLabel(hh))
         .select(col("`labels.user`").as("user"), col("t"),
           col("value").cast("long").as("n"))
     }),
@@ -2720,7 +2722,8 @@ object TsdbQueries {
       val f = graft.tsdb.PromQL.evalRange(graft.tsdb.PromQL.parse(q),
         carved, start = gs, end = ge, stepMs = st,
         lookbackMs = HistLookbackMs)
-      graft.tsdb.PromQLHist.combineSeriesShares(h, f, how = "max")
+      graft.tsdb.PromQLHist.combineSeriesShares(h, f, how = "max",
+        graft.tsdb.TsdbSchema.metricLabel(hh))
         .select(col("`labels.user`").as("user"), col("t"), col("value"))
     }),
     // Q195: sum_over_time over the two stores — type-EXCLUSIVE per
@@ -2744,7 +2747,8 @@ object TsdbQueries {
       val f = graft.tsdb.PromQL.evalRange(graft.tsdb.PromQL.parse(q),
         carved, start = gs, end = ge, stepMs = st,
         lookbackMs = HistLookbackMs)
-      graft.tsdb.PromQLHist.exclusiveSeriesShares(h, f)._1
+      graft.tsdb.PromQLHist.exclusiveSeriesShares(h, f,
+          graft.tsdb.TsdbSchema.metricLabel(hh))._1
         .select(col("`labels.user`").as("user"), col("t"),
           col("hist").getField("count").cast("long").as("n"),
           col("value"))
@@ -2776,7 +2780,7 @@ object TsdbQueries {
       val (ht, ft) = ev(
         """ts_of_last_over_time({name="purchase", user=~"1.*"}[5d])""")
       graft.tsdb.PromQLHist.pickByTimeShares(hp, ht, fp, ft,
-        latest = true)
+        latest = true, graft.tsdb.TsdbSchema.metricLabel(hh))
         .select(col("`labels.user`").as("user"), col("t"),
           col("hist").getField("count").cast("long").as("n"),
           col("value"))
@@ -2801,12 +2805,13 @@ object TsdbQueries {
       val f = graft.tsdb.PromQL.evalRange(graft.tsdb.PromQL.parse(q),
         carved, start = gs, end = ge, stepMs = st,
         lookbackMs = HistLookbackMs)
-      val out = graft.tsdb.PromQLHist.exclusiveSeriesShares(h, f)._1
+      val metric = graft.tsdb.TsdbSchema.metricLabel(hh)
+      val out = graft.tsdb.PromQLHist.exclusiveSeriesShares(h, f, metric)._1
       val hc = col("hist")
       val floatRows = out.where(hc.isNull).drop("hist")
         .withColumn("value", round(col("value") * 2.0, 6))
       val histRows = graft.tsdb.PromQLHist.scaleHistFrame(
-        out.where(hc.isNotNull), 2.0)
+        out.where(hc.isNotNull), 2.0, metric)
       histRows.unionByName(floatRows, allowMissingColumns = true)
         .select(col("`labels.user`").as("user"), col("t"),
           col("hist").getField("count").cast("long").as("n"),

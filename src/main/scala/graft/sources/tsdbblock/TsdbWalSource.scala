@@ -1,6 +1,7 @@
 package graft.sources.tsdbblock
 
 import java.util
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -22,6 +23,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * tasks then decode size-balanced record ranges — a segment splits
   * into multiple tasks when it is large relative to the core count,
   * and WAL segments are bounded (128 MiB) so no split is ever huge.
+  * Planning uses the session active where the table loads, on the
+  * caller's thread — not `SparkSession.active` at planning time,
+  * which on another thread (an HTTP handler's) may be the default.
   */
 class TsdbWalSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "tsdb-wal"
@@ -29,25 +33,26 @@ class TsdbWalSource extends TableProvider with DataSourceRegister {
     TsdbBlockSource.schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
-    new TsdbWalTable(properties.get("path"))
+    new TsdbWalTable(properties.get("path"), SparkSession.active)
 }
 
-final class TsdbWalTable(path: String) extends Table with SupportsRead {
+final class TsdbWalTable(path: String, spark: SparkSession)
+    extends Table with SupportsRead {
   require(path != null, "tsdb-wal requires a WAL directory path")
   override def name(): String = s"tsdb-wal($path)"
   override def schema(): StructType = TsdbBlockSource.schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new TsdbWalScanBuilder(path)
+    new TsdbWalScanBuilder(path, spark)
 }
 
-final class TsdbWalScanBuilder(path: String)
+final class TsdbWalScanBuilder(path: String, spark: SparkSession)
     extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = TsdbBlockSource.schema
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
-  override def build(): Scan = new TsdbWalScan(path, required)
+  override def build(): Scan = new TsdbWalScan(path, required, spark)
 }
 
 /** One replay split: the records of `segment` whose start offset lies
@@ -69,7 +74,6 @@ final case class TsdbWalPartition(segment: String, from: Long, until: Long)
   * superseded broadcasts were never unpersisted. */
 private[tsdbblock] object WalDictCache {
   import org.apache.spark.broadcast.Broadcast
-  import org.apache.spark.sql.SparkSession
 
   final case class Entry(
       sig: Seq[(String, Long, Long)],
@@ -111,15 +115,14 @@ private[tsdbblock] object WalDictCache {
   }
 }
 
-final class TsdbWalScan(path: String, required: StructType)
-    extends Scan with Batch {
+final class TsdbWalScan(path: String, required: StructType,
+                        spark: SparkSession) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
     s"tsdb-wal $path, columns [${required.fieldNames.mkString(",")}]"
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val spark = org.apache.spark.sql.SparkSession.active
     val e = WalDictCache.get(spark, path)
     val totalBytes = math.max(1L, e.segmentBytes.values.sum)
     val parallelism = math.max(1, spark.sparkContext.defaultParallelism)
@@ -150,7 +153,6 @@ final class TsdbWalScan(path: String, required: StructType)
     // the cached broadcast: dictionaries are global (samples may
     // reference series defined in an earlier segment), shipped once as
     // a compact blob and decoded once per executor
-    val spark = org.apache.spark.sql.SparkSession.active
     val dictsB = WalDictCache.get(spark, path).dictsB
     (partition: InputPartition) => {
       val p = partition.asInstanceOf[TsdbWalPartition]
@@ -207,7 +209,7 @@ final class TsdbWalScan(path: String, required: StructType)
   * the sample scan: the driver reads only the tiny series records for
   * the ref→labels dictionary, one task decodes one segment. */
 object TsdbWalRecords {
-  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.DataFrame
 
   /** Exemplars with their owning series' labels resolved:
     * `(time LONG, value DOUBLE, labels MAP, exemplar MAP)` — the WAL
@@ -300,7 +302,7 @@ object TsdbWalRecords {
   * keeps one sample per series-timestamp across overlapping sources.
   */
 object TsdbDb {
-  import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+  import org.apache.spark.sql.{Column, DataFrame}
   import org.apache.spark.sql.functions._
   import graft.model.Matcher
 

@@ -71,8 +71,8 @@ object AlertRules {
     * visible to every LATER rule in the group — the precompute-then-
     * alert idiom). Recorded elements become wide samples: bare label
     * columns re-prefix to `labels.<n>`, the grid step becomes `time`,
-    * and the rule's record name lands in the metric label `labels.name`
-    * (this table's metric-name column). Returns (recorded samples,
+    * and the rule's record name lands in the table's metric label
+    * ([[TsdbSchema.metricLabel]] of `wide`). Returns (recorded samples,
     * alerts): one frame of every recorded sample and one of every
     * ALERTS row.
     *
@@ -89,6 +89,7 @@ object AlertRules {
                     evalRangeFn: (PromQL.Expr, DataFrame, Long, Long, Long,
                       Long) => DataFrame = PromQL.evalRange)
       : (Option[DataFrame], Option[DataFrame]) = {
+    val metric = TsdbSchema.metricLabel(wide)
     var view = wide
     var recorded: Option[DataFrame] = None
     var alerts: Option[DataFrame] = None
@@ -103,9 +104,9 @@ object AlertRules {
         // Prometheus recording semantics: the record name REPLACES the
         // metric name (__name__); all other labels carry over
         val labelCols = iv.columns.toSeq.filterNot(NonLabelCols)
-          .filterNot(c => c.stripPrefix(TsdbSchema.LabelPrefix) == "name")
+          .filterNot(c => c.stripPrefix(TsdbSchema.LabelPrefix) == metric)
         val samples = iv.select(
-          lit(record).as(TsdbSchema.labelColName("name")) +:
+          lit(record).as(TsdbSchema.labelColName(metric)) +:
             labelCols.map(c =>
               col(s"`$c`").as(TsdbSchema.labelColName(
                 c.stripPrefix(TsdbSchema.LabelPrefix)))) ++: Seq(

@@ -15,58 +15,77 @@ import org.apache.spark.sql.functions._
   * steps. Label keys render sorted, so the output is deterministic —
   * which lets the oracle round-trip the TEXT through `from_json` and
   * hash-compare the recovered samples.
+  *
+  * The served table's `metric` label ([[TsdbSchema.metricLabel]])
+  * renders as `__name__`; the one-argument forms read it off a frame
+  * that still carries its table's label columns.
   */
 object ApiJson {
 
-  /** Instant-vector frame (wide labels + `time` + `value`) → one JSON
-    * object per series, the `result` array elements of a vector
-    * response. `labels.name` renders as `__name__`; absent labels drop. */
-  def vectorJson(iv: DataFrame): DataFrame =
-    jsonOf(iv, "value",
-      concat(lit("["), tsSec(col("time")), lit(",\""),
-        col(TsdbSchema.ValueCol).cast("string"), lit("\"]")))
-
-  /** [[vectorJson]] with the series' `labels.Compare` sort key
-    * alongside (`skey`, `json`) — what the MIXED-shape responses
-    * interleave on, so histogram and float entries render in one
-    * label-ordered stream and a `limit` truncates label-ordered
+  /** Instant-vector frame (wide labels + `time` + `value`, or `hist`
+    * for a histogram vector) → one JSON object per series, the `result`
+    * array elements of a vector response, with the `value` pair or the
+    * `histogram` one in Prometheus's native-histogram API shape. Absent
+    * labels drop. `keyed = true` renders the series' `labels.Compare`
+    * sort key alongside (`skey`, `json`) — what the MIXED-shape
+    * responses interleave on, so histogram and float entries render in
+    * one label-ordered stream and a `limit` truncates label-ordered
     * instead of systematically preferring one kind. */
-  def vectorJsonKeyed(iv: DataFrame): DataFrame =
-    jsonOf(iv, "value",
-      concat(lit("["), tsSec(col("time")), lit(",\""),
-        col(TsdbSchema.ValueCol).cast("string"), lit("\"]")),
-      keyed = true)
+  def vectorJson(iv: DataFrame): DataFrame =
+    vectorJson(iv, TsdbSchema.metricLabel(iv))
 
-  /** Range-evaluation frame (labels + `t` + `value`, one row per series
-    * per step) → one JSON object per series with its sorted
-    * `values` pairs — the matrix response elements. */
+  def vectorJson(iv: DataFrame, metric: String,
+                 keyed: Boolean = false): DataFrame =
+    if (iv.columns.contains("hist"))
+      jsonOf(iv, metric, "histogram", histPair(col("time")), keyed)
+    else jsonOf(iv, metric, "value", valuePair(col("time")), keyed)
+
+  /** Range-evaluation frame (labels + `t` + `value` or `hist`, one row
+    * per series per step) → one JSON object per series with its sorted
+    * `values` (`histograms`) pairs — the matrix response elements. */
   def matrixJson(rv: DataFrame): DataFrame =
-    jsonOf(matrixGrouped(rv), "values", pairsPayload)
+    matrixJson(rv, TsdbSchema.metricLabel(rv))
+
+  def matrixJson(rv: DataFrame, metric: String): DataFrame = {
+    val (field, g) = matrixGrouped(rv)
+    jsonOf(g, metric, field, pairsPayload)
+  }
 
   /** [[matrixJson]]'s PARTS form: `(skey, metric, field, payload)`
-    * with the rendered metric map and the `values` pair list as
-    * SEPARATE columns — the mixed matrix responses assemble and merge
+    * with the rendered metric map and the pair list as SEPARATE
+    * columns — the mixed matrix responses assemble and merge
     * same-series objects driver-side from these. Substring surgery on
     * assembled JSON was unsound: '}' and ',' are legal unescaped
     * inside JSON strings, so a label VALUE ending in "}," made the
     * field-boundary search land inside the metric map (round-18
     * advisor find). */
-  def matrixJsonParts(rv: DataFrame): DataFrame =
-    partsOf(matrixGrouped(rv), "values", pairsPayload)
+  def matrixJsonParts(rv: DataFrame, metric: String): DataFrame = {
+    val (field, g) = matrixGrouped(rv)
+    partsOf(g, metric, field, pairsPayload)
+  }
 
-  private def matrixGrouped(rv: DataFrame): DataFrame = {
-    val labels = rv.columns.toSeq
-      .filterNot(Set("t", TsdbSchema.TimeCol, TsdbSchema.ValueCol))
-    val pair = concat(lit("["), tsSec(col("t")), lit(",\""),
-      col(TsdbSchema.ValueCol).cast("string"), lit("\"]"))
-    val grouped = rv.withColumn("_pair", struct(col("t"), pair.as("p")))
+  /** A range frame grouped per series with its time-sorted pairs as
+    * `_pairs`, and the field they render under. */
+  private def matrixGrouped(rv: DataFrame): (String, DataFrame) = {
+    val (field, pair) =
+      if (rv.columns.contains("hist")) ("histograms", histPair(col("t")))
+      else ("values", valuePair(col("t")))
+    val labels = rv.columns.toSeq.filterNot(
+      Set("t", TsdbSchema.TimeCol, TsdbSchema.ValueCol, "hist"))
+    val g = rv.withColumn("_pair", struct(col("t"), pair.as("p")))
       .groupBy(labels.map(c => col(s"`$c`")): _*)
       .agg(array_sort(collect_list(col("_pair"))).as("_pairs"))
     // a label-less frame aggregates globally, which yields one row even
     // over no input — no samples is no series, not an empty one
-    if (labels.isEmpty) grouped.where(size(col("_pairs")) > 0)
-    else grouped
+    (field, if (labels.isEmpty) g.where(size(col("_pairs")) > 0) else g)
   }
+
+  private def valuePair(t: Column): Column =
+    concat(lit("["), tsSec(t), lit(",\""),
+      col(TsdbSchema.ValueCol).cast("string"), lit("\"]"))
+
+  private def histPair(t: Column): Column =
+    concat(lit("["), tsSec(t), lit(","), histJson(col("hist")), lit("]"))
 
   /** The time-sorted pair array of a [[matrixGrouped]] frame rendered
     * as one JSON array. */
@@ -102,41 +121,6 @@ object ApiJson {
       lit("\",\"buckets\":["), concat_ws(",", buckets), lit("]}"))
   }
 
-  /** Instant HISTOGRAM-vector frame (wide labels + `time` + `hist`) →
-    * the vector response elements with the `histogram` field —
-    * Prometheus's native-histogram API shape. Map-side. */
-  def histVectorJson(hv: DataFrame): DataFrame =
-    jsonOf(hv, "histogram",
-      concat(lit("["), tsSec(col("time")), lit(","),
-        histJson(col("hist")), lit("]")))
-
-  /** [[histVectorJson]]'s keyed twin — see [[vectorJsonKeyed]]. */
-  def histVectorJsonKeyed(hv: DataFrame): DataFrame =
-    jsonOf(hv, "histogram",
-      concat(lit("["), tsSec(col("time")), lit(","),
-        histJson(col("hist")), lit("]")), keyed = true)
-
-  /** Range HISTOGRAM frame (labels + `t` + `hist`, one row per series
-    * per step) → matrix elements with the `histograms` pair list. */
-  def histMatrixJson(rv: DataFrame): DataFrame =
-    jsonOf(histMatrixGrouped(rv), "histograms", pairsPayload)
-
-  /** [[histMatrixJson]]'s PARTS form — see [[matrixJsonParts]]. */
-  def histMatrixJsonParts(rv: DataFrame): DataFrame =
-    partsOf(histMatrixGrouped(rv), "histograms", pairsPayload)
-
-  private def histMatrixGrouped(rv: DataFrame): DataFrame = {
-    val labels = rv.columns.toSeq.filterNot(Set("t", "hist"))
-    val pair = concat(lit("["), tsSec(col("t")), lit(","),
-      histJson(col("hist")), lit("]"))
-    val grouped = rv.withColumn("_pair", struct(col("t"), pair.as("p")))
-      .groupBy(labels.map(c => col(s"`$c`")): _*)
-      .agg(array_sort(collect_list(col("_pair"))).as("_pairs"))
-    // no histogram samples is no histogram series ([[matrixGrouped]])
-    if (labels.isEmpty) grouped.where(size(col("_pairs")) > 0)
-    else grouped
-  }
-
   private def tsSec(t: Column): Column =
     // epoch seconds with millisecond precision, no scientific notation
     concat((t / 1000).cast("long").cast("string"), lit("."),
@@ -147,9 +131,9 @@ object ApiJson {
     * `labels.Compare` sort key as `skey` (the [[Shadowing.escapedKey]]
     * encoding — binary string order ≡ Prometheus label order) for the
     * mixed-shape responses' interleave. */
-  private def jsonOf(df: DataFrame, field: String,
+  private def jsonOf(df: DataFrame, metric: String, field: String,
                      rendered: Column, keyed: Boolean = false): DataFrame = {
-    val entries = labelEntries(df, field)
+    val entries = labelEntries(df, metric, field)
     val json = concat(
       lit("""{"metric":"""), metricJson(entries),
       lit(s""","$field":"""), rendered, lit("}")).as("json")
@@ -162,9 +146,9 @@ object ApiJson {
     * rationale). `field` rides as a literal column so the union of the
     * two kinds orders deterministically by (skey, field) and the
     * driver knows each payload's field name without parsing. */
-  private def partsOf(df: DataFrame, field: String,
+  private def partsOf(df: DataFrame, metric: String, field: String,
                       rendered: Column): DataFrame = {
-    val entries = labelEntries(df, field)
+    val entries = labelEntries(df, metric, field)
     df.select(seriesKey(entries).as("skey"),
       metricJson(entries).as("metric"),
       lit(field).as("field"), rendered.as("payload"))
@@ -173,16 +157,14 @@ object ApiJson {
   /** The frame's label columns as (wire key, non-empty value) entry
     * structs — shared by the metric-map renderer and the series sort
     * key so the two can never disagree on the label set. */
-  private def labelEntries(df: DataFrame, field: String): Seq[Column] = {
+  private def labelEntries(df: DataFrame, metric: String,
+                           field: String): Seq[Column] = {
     val labelCols = df.columns.toSeq
       .filterNot(Set("t", TsdbSchema.TimeCol, TsdbSchema.ValueCol,
         "hist", "_pairs", field))
     labelCols.map { c =>
-      val key = c.stripPrefix(TsdbSchema.LabelPrefix) match {
-        case "name" => "__name__"
-        case other  => other
-      }
-      struct(lit(key).as("key"), nullif(col(s"`$c`"), lit("")).as("value"))
+      struct(lit(TsdbSchema.wireName(c, metric)).as("key"),
+        nullif(col(s"`$c`"), lit("")).as("value"))
     }
   }
 

@@ -53,7 +53,8 @@ object Backfill {
       defaultStepMs, lookbackMs)
     val rec = recorded.getOrElse(throw new IllegalArgumentException(
       "create-blocks-from rules: the file has no recording rules"))
-    fromSamples(Federate.longForm(rec), destRoot, blockRangeMs)
+    fromSamples(Federate.longForm(rec, TsdbSchema.metricLabel(rec)),
+      destRoot, blockRangeMs)
   }
 
   /** `/api/v1/admin/tsdb/snapshot`: materialize a consistent copy of

@@ -74,7 +74,8 @@ object Exemplars {
     * (never a scan per selector), matchers text-anchored. */
   def queryExpr(exemplars: DataFrame, query: String,
                 startMs: Long, endMs: Long): DataFrame = {
-    val sels = PromQL.selectorsOf(PromQL.parse(query))
+    val sels =
+      PromQL.selectorsOf(PromQL.renameMetric(PromQL.parse(query), exemplars))
     require(sels.nonEmpty,
       s"query_exemplars: no vector selectors in: $query")
     val known = TsdbSchema.labelColumns(exemplars)

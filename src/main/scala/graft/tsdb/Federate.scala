@@ -26,9 +26,10 @@ object Federate {
 
   /** Exposition lines for the newest in-lookback sample of every series
     * matching ANY of `selectors`, at scrape instant `at`. The table's
-    * metric-name label (`labels.name`) renders as the metric name;
-    * every other non-absent label renders inside the braces, keys
-    * sorted (deterministic output, as the exporter contract).
+    * metric-name label ([[TsdbSchema.metricLabel]]) renders as the
+    * metric name; every other non-absent label renders inside the
+    * braces, keys sorted (deterministic output, as the exporter
+    * contract).
     *
     * `externalLabels` reproduce Prometheus's federation contract: each
     * configured external label is added to every exported series that
@@ -39,8 +40,8 @@ object Federate {
                externalLabels: Seq[(String, String)] = Nil): DataFrame = {
     val slice = t.selectAny(Long.MinValue, Long.MaxValue, selectors)
     val iv = RangeVectors.instant(slice, at, lookbackMs)
-    SampleReaders.toOpenMetricsLines(
-      withExternal(longForm(iv), externalLabels))
+    SampleReaders.toOpenMetricsLines(withExternal(
+      longForm(iv, TsdbSchema.metricLabel(t.df)), externalLabels))
   }
 
   /** Native-histogram series federation. Prometheus can federate
@@ -55,12 +56,14 @@ object Federate {
     * Scale shape: one pruned scan + one partial-agg groupBy (latest
     * snapshot per series) + a map-side bucket explode — response is
     * series × buckets, never samples. External labels follow the same
-    * series-value-wins contract as [[federate]]. */
+    * series-value-wins contract as [[federate]]; the metric name is
+    * the head's [[TsdbSchema.metricLabel]] column. */
   def federateHists(hists: DataFrame, selectors: Seq[Seq[Matcher]],
                     at: Long, lookbackMs: Long,
                     externalLabels: Seq[(String, String)] = Nil)
       : DataFrame = {
     import TsdbSchema.{TimeCol, LabelPrefix, labelColName}
+    val metric = labelColName(TsdbSchema.metricLabel(hists))
     val known = TsdbSchema.labelColumns(hists)
       .map(_.stripPrefix(LabelPrefix)).toSet
     val anySel = selectors.map(ms => MatcherCompiler.compileAll(ms, known))
@@ -73,9 +76,9 @@ object Federate {
       .where(col("hist").isNotNull) // staleness: series ended
     // classic projection needs a metric name to suffix — a (degenerate)
     // nameless hist series cannot render as text exposition
-    if (!iv0.columns.contains(labelColName("name")))
+    if (!iv0.columns.contains(metric))
       return iv0.sparkSession.emptyDataFrame.select(lit("").as("line"))
-    val iv = iv0.where(col(s"`${labelColName("name")}`").isNotNull)
+    val iv = iv0.where(col(s"`$metric`").isNotNull)
     val h = col("hist")
     val les = h.getField("les"); val counts = h.getField("counts")
     // cumulative bucket counts (classic le-series are cumulative);
@@ -96,9 +99,8 @@ object Federate {
     val rows = iv.withColumn("_r", explode(concat(bucketRows, extraRows)))
     val labelCols = TsdbSchema.labelColumns(iv)
     val nameEntry = struct(lit("__name__").as("key"),
-      concat(col(s"`${labelColName("name")}`"), col("_r.suffix"))
-        .as("value"))
-    val baseEntries = labelCols.filterNot(_ == labelColName("name"))
+      concat(col(s"`$metric`"), col("_r.suffix")).as("value"))
+    val baseEntries = labelCols.filterNot(_ == metric)
       .map { c =>
         struct(lit(c.stripPrefix(LabelPrefix)).as("key"),
           nullif(col(s"`$c`"), lit("")).as("value"))
@@ -128,16 +130,15 @@ object Federate {
     }
 
   /** Wide instant-vector rows → the long `(time, value, labels MAP)`
-    * form the exporter consumes: `labels.name` becomes `__name__`,
-    * absent (NULL or `""`) labels drop out of the map. */
-  private[tsdb] def longForm(iv: DataFrame): DataFrame = {
+    * form the exporter consumes: the `metric` label column
+    * ([[TsdbSchema.metricLabel]] of the table the rows came from)
+    * becomes `__name__`, absent (NULL or `""`) labels drop out of the
+    * map. */
+  private[tsdb] def longForm(iv: DataFrame, metric: String): DataFrame = {
     val labelCols = TsdbSchema.labelColumns(iv)
     val entries = labelCols.map { c =>
-      val key = c.stripPrefix(TsdbSchema.LabelPrefix) match {
-        case "name" => "__name__"
-        case other  => other
-      }
-      struct(lit(key).as("key"), nullif(col(s"`$c`"), lit("")).as("value"))
+      struct(lit(TsdbSchema.wireName(c, metric)).as("key"),
+        nullif(col(s"`$c`"), lit("")).as("value"))
     }
     iv.select(
       col("time"), col("value"),

@@ -75,6 +75,18 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
   private var server: HttpServer = _
   private val startedAt: Long = System.currentTimeMillis()
 
+  /** The served table's metric label, decided once from `initial`:
+    * pushes store the wire `__name__` under it, queries' metric
+    * matchers address it ([[PromQL.renameMetric]] over `initial`),
+    * responses render it as `__name__`. */
+  private val metricLabel = TsdbSchema.metricLabel(initial)
+
+  /** A wire label name as the table stores it. */
+  private def storedName(k: String): String =
+    if (k == "__name__") metricLabel else k
+
+  private def apiLabel(c: String): String = TsdbSchema.wireName(c, metricLabel)
+
   /** RECEIVER LINEAGE CONTROL. Every push appends one `Union` node to
     * the head's logical plan; left unchecked, a long-running receiver's
     * plan grows one node per request — analysis cost and driver memory
@@ -102,12 +114,12 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     }
 
     /** The metric names the head stores — the wide frame's
-      * `labels.name` universe (API-sized: a distinct over the
+      * [[metricLabel]] universe (API-sized: a distinct over the
       * dictionary-encoded name column), memoized on the head, so a push
       * that leaves this head alone keeps it. Concurrent first readers
       * wait on the memo and share its one job. */
     lazy val names: Set[String] = {
-      val nameCol = TsdbSchema.labelColName("name")
+      val nameCol = TsdbSchema.labelColName(metricLabel)
       if (!df.columns.contains(nameCol)) Set.empty
       else df.select(col(s"`$nameCol`"))
         .where(col(s"`$nameCol`").isNotNull)
@@ -182,10 +194,9 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       * (`histogram_quantile(0.9, rate(m_bucket[5m]))`) into an empty
       * hist-head evaluation. Nameless selectors (`{job="x"}`) keep the
       * head routing — under a histogram_* function they have no classic
-      * float-tier reading. The metric matcher may be spelled either way:
-      * `__name__` (the bare-prefix form `m{...}` and wire matchers) or
-      * `name` (this engine's storage metric label, which the text
-      * surface addresses directly — `{name="m"}`).
+      * float-tier reading. Queries reach the gates with their
+      * `__name__` matchers already re-addressed to [[metricLabel]], so
+      * the metric matchers are exactly those on [[metricLabel]].
       *
       * Routing granularity is the WHOLE expression: it routes to the
       * hist head only when EVERY name-bearing selector resolves to a
@@ -198,8 +209,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       * vector merge the response shape doesn't carry. */
     def routesToHistHead(ast: PromQL.Expr, allowNameless: Boolean): Boolean =
       hist.nonEmpty && {
-        val selNameMs = PromQL.selectorsOf(ast)
-          .map(_.filter(m => m.name == "__name__" || m.name == "name"))
+        val selNameMs = PromQL.selectorsOf(ast).map(nameMatchers)
           .filter(_.nonEmpty)
         // `allowNameless = false` (the RULES tier): a fully nameless
         // expression stays on the float tier — a generic `{job="x"} > 5`
@@ -208,12 +218,14 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
         // a histogram_* function a nameless selector has no classic
         // float-tier reading)
         (allowNameless || selNameMs.nonEmpty) &&
-          selNameMs.forall(ms =>
-            stored(ms).nonEmpty)
+          selNameMs.forall(stored(_).nonEmpty)
       }
 
     private def stored(ms: Seq[graft.model.Matcher]): Set[String] =
       histNames.filter(m => ms.forall(matchesMetric(_, m)))
+
+    private def nameMatchers(ms: Seq[graft.model.Matcher]) =
+      ms.filter(_.name == metricLabel)
 
     /** Whether `e`'s name-bearing selectors STRADDLE the two stores: at
       * least one resolves to a pushed-native metric AND at least one to
@@ -230,8 +242,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       * float sample arithmetically. */
     def straddlesTiers(e: PromQL.Expr): Boolean =
       hist.nonEmpty && {
-        val tiers = PromQL.selectorsOf(e)
-          .map(_.filter(m => m.name == "__name__" || m.name == "name"))
+        val tiers = PromQL.selectorsOf(e).map(nameMatchers)
           .filter(_.nonEmpty)
           .map(ms => stored(ms).nonEmpty)
         tiers.contains(true) && tiers.contains(false)
@@ -258,7 +269,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       * expressions over one either split-aggregate per Prometheus's
       * mixed-type semantics or 422 loudly. */
     private def selectorSpansStores(ms: Seq[graft.model.Matcher]): Boolean = {
-      val nameMs = ms.filter(m => m.name == "__name__" || m.name == "name")
+      val nameMs = nameMatchers(ms)
       nameMs.nonEmpty && stored(nameMs).nonEmpty &&
         floatOnlyStored(nameMs).nonEmpty
     }
@@ -270,10 +281,8 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       * pushed-native metric — its answer is typed by that metric, not by
       * the samples one grid happens to hold. */
     def namesNative(e: PromQL.Expr): Boolean =
-      PromQL.selectorsOf(e).exists { ms =>
-        val nameMs = ms.filter(m => m.name == "__name__" || m.name == "name")
-        nameMs.nonEmpty && stored(nameMs).nonEmpty
-      }
+      PromQL.selectorsOf(e).map(nameMatchers)
+        .exists(ms => ms.nonEmpty && stored(ms).nonEmpty)
 
     /** Whether a BARE selector must read BOTH stores — the union gate
       * one level WIDER than [[selectorSpansStores]], covering every way
@@ -288,7 +297,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       * so the union can never double-count. */
     def selectorUnionsStores(ms: Seq[graft.model.Matcher]): Boolean =
       hist.nonEmpty && {
-        val nameMs = ms.filter(m => m.name == "__name__" || m.name == "name")
+        val nameMs = nameMatchers(ms)
         if (nameMs.isEmpty) namelessMayMatchHist(ms)
         else stored(nameMs).nonEmpty &&
           (floatOnlyStored(nameMs).nonEmpty ||
@@ -329,8 +338,8 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       * frames and raw matrices, the evaluation instant for instant
       * vectors). */
     def dropShadowedFrame(fv: DataFrame, evalTime: Column): DataFrame =
-      Shadowing.dropShadowed(fv, Shadowing.skeyOfWide(fv), evalTime,
-        seriesSince)
+      Shadowing.dropShadowed(fv, Shadowing.skeyOfWide(fv, metricLabel),
+        evalTime, seriesSince)
 
     /** Metric names `e` touches that live in BOTH stores — each one's
       * float share (pre-migration history, or unmigrated series of a
@@ -338,9 +347,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       * evaluation. */
     private def dualStoreNames(e: PromQL.Expr): Seq[String] =
       if (hist.isEmpty) Nil
-      else PromQL.selectorsOf(e)
-        .map(_.filter(m => m.name == "__name__" || m.name == "name"))
-        .filter(_.nonEmpty)
+      else PromQL.selectorsOf(e).map(nameMatchers).filter(_.nonEmpty)
         .flatMap(ms => stored(ms).filter(float.names))
         .distinct.sorted
 
@@ -363,7 +370,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       * warning string. */
     private def unshadowedAmong(names: Seq[String]): Set[String] =
       unshadowedMemo.computeIfAbsent(names.toSet, ns => new Memo({
-        val nameCol = TsdbSchema.labelColName("name")
+        val nameCol = TsdbSchema.labelColName(metricLabel)
         shadowCarved(float.df)
           .where(col(s"`$nameCol`").isin(ns.toSeq: _*))
           .select(col(s"`$nameCol`")).distinct()
@@ -406,7 +413,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
           .map(_.stripPrefix(TsdbSchema.LabelPrefix)).toSet
         ms.forall {
           case graft.model.Matcher.Eq(k, v) if v.nonEmpty =>
-            histLabels.contains(k) || k == "__name__" || k == "name"
+            histLabels.contains(k)
           case _ => true
         }
       }
@@ -432,11 +439,8 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     }
 
     def bothStoresSelectorMs(ms: Seq[graft.model.Matcher]): Boolean =
-      selectorSpansStores(ms) || {
-        val nameMs =
-          ms.filter(m => m.name == "__name__" || m.name == "name")
-        nameMs.isEmpty && namelessMayMatchHist(ms)
-      }
+      selectorSpansStores(ms) ||
+        nameMatchers(ms).isEmpty && namelessMayMatchHist(ms)
 
     /** SUBQUERY twin of [[shapedBothStoresRange]]: a subquery whose
       * inner is a BARE both-stores selector (`{user="x"}[30s:5s]`) —
@@ -455,8 +459,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     def pureFloatSide(x: PromQL.Expr): Boolean = {
       val sels = PromQL.selectorsOf(x)
       sels.nonEmpty && sels.forall { ms =>
-        val nameMs =
-          ms.filter(m => m.name == "__name__" || m.name == "name")
+        val nameMs = nameMatchers(ms)
         nameMs.nonEmpty && stored(nameMs).isEmpty
       }
     }
@@ -500,10 +503,11 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
 
   private def histNLes: Int = histMaxExp - histMinExp + 3 // zero+grid+Inf
 
-  /** Long-form decoded rows as a one-append float [[Head]], None when
-    * there are none. STALENESS markers (the StaleNaN bit pattern, which
-    * Prometheus forwards over remote write and the OTLP decoders emit
-    * for no-recorded-value points) become NULL-`value` rows — the
+  /** Long-form decoded rows (wire labels) as a one-append float
+    * [[Head]], None when there are none. STALENESS markers (the
+    * StaleNaN bit pattern, which Prometheus forwards over remote write
+    * and the OTLP decoders emit for no-recorded-value points) become
+    * NULL-`value` rows — the
     * engine's staleness representation ([[TsdbSchema.StaleNaNBits]]):
     * detected HERE, the last place the raw bits exist before Spark
     * canonicalizes NaN payloads. */
@@ -513,7 +517,8 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     else {
       import spark.implicits._
       val longForm = rows.map { case (t, v, ls) =>
-        (t, if (TsdbSchema.isStaleMarker(v)) None else Some(v), ls)
+        (t, if (TsdbSchema.isStaleMarker(v)) None else Some(v),
+          ls.map { case (k, lv) => storedName(k) -> lv })
       }.toDF("time", "value", "labels")
       Some(new Head(TsdbIngest.toWide(longForm), 1))
     }
@@ -537,8 +542,19 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
         s" = ${h.schema}")
     }
 
-  /** A push's histograms as a one-append [[HistHead]], None when there
-    * are none. */
+  /** Rejects (400 bad_data), before anything appends, a series that
+    * carries both `__name__` and a [[metricLabel]] label other than
+    * it: the table could store only one of the two values. */
+  private def requireStorable(series: Seq[Map[String, String]]): Unit =
+    series.find(ls => metricLabel != "__name__" &&
+      ls.contains("__name__") && ls.contains(metricLabel)).foreach { ls =>
+      throw new IllegalArgumentException(s"series ${ls("__name__")} " +
+        s"carries a `$metricLabel` label, but this table stores the " +
+        s"metric name in `$metricLabel`; rename or drop the label")
+    }
+
+  /** A push's histograms (wire labels) as a one-append [[HistHead]],
+    * None when there are none. */
   private def histBatch(sparse: Seq[RemoteWrite.SparseHist])
       : Option[HistHead] =
     if (sparse.isEmpty) None
@@ -563,7 +579,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
             lit(null).cast(denseLive.schema("hist").dataType).as("hist")))
       val names = sparse.flatMap(_.labels.keys).distinct.sorted
       val labelCols = names.map(n => col("labels").getItem(n)
-        .as(TsdbSchema.labelColName(if (n == "__name__") "name" else n)))
+        .as(TsdbSchema.labelColName(storedName(n))))
       val wideH = dense.select(col("time") +: labelCols :+ col("hist"): _*)
       // the wire-serving twin: full sparse samples. Stale markers stay
       // OUT of the sparse head: the NaN payload cannot survive a
@@ -682,16 +698,15 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       flipped: Boolean, bool: Boolean): (DataFrame, Seq[String]) = {
     // value-CHANGING ops drop the metric name on the MIXED path from
     // BOTH kinds: scaleHistFrame drops it from histogram rows and
-    // scalarOp's dropName only knows the `__name__` spelling, so a
-    // straddling series' two halves would otherwise render under two
-    // different metric identities (one with `__name__`, one without —
-    // the merged-series renderer could never reunite them). The
-    // comparison FILTER keeps rows unchanged, name included
-    // (Prometheus), and its histogram rows are skipped, so no split
-    // is reachable there.
+    // scalarOp's dropName only knows the `__name__` spelling, so on a
+    // `labels.name` table a straddling series' two halves would
+    // otherwise render under two different metric identities (one
+    // with `__name__`, one without — the merged-series renderer could
+    // never reunite them). The comparison FILTER keeps rows unchanged,
+    // name included (Prometheus), and its histogram rows are skipped,
+    // so no split is reachable there.
     def stripName(d: DataFrame): DataFrame =
-      d.drop(TsdbSchema.labelColName("name")).drop("name")
-        .drop(TsdbSchema.labelColName("__name__")).drop("__name__")
+      d.drop(TsdbSchema.labelColName(metricLabel)).drop(metricLabel)
     if (!df0.columns.contains(PromQLHist.HistCol)) {
       val out = PromQL.scalarOp(df0, op, lit(s), flipped, bool)
       (if (CmpOpSet(op) && !bool) out else stripName(out), Nil)
@@ -712,7 +727,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       if (scales)
         (f.unionByName(
           PromQLHist.scaleHistFrame(histRows,
-            if (op == "*") s else 1.0 / s),
+            if (op == "*") s else 1.0 / s, metricLabel),
           allowMissingColumns = true), Nil)
       else
         (f, if (histRows.isEmpty) Nil
@@ -836,7 +851,8 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       case PromQL.RankK("limitk", k, arg, by, w) =>
         shapedBothStores(arg).map { sel =>
           Routed(PromQLHist.limitKFrame(
-            unionShares(span.hist(sel), span.floatShare(sel)), k, by, w),
+            unionShares(span.hist(sel), span.floatShare(sel)), k,
+            metricLabel, by, w),
             Nil, Nil)
         }
       case PromQL.LimitRatio(r, arg) =>
@@ -885,7 +901,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
           if subqueryBothStores(arg).nonEmpty =>
         Some(Routed(PromQLHist.combineSeriesShares(span.hist(fn),
           span.subqueryFold("count_over_time", subqueryBothStores(arg).get,
-            params), how = "sum"), Nil, Nil))
+            params), how = "sum", metricLabel), Nil, Nil))
       case PromQL.Fn("present_over_time", arg, params)
           if subqueryBothStores(arg).nonEmpty =>
         // the hist tier folds subquery COUNTS — presence is the count
@@ -894,12 +910,13 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
           .withColumn(TsdbSchema.ValueCol, lit(1.0))
         Some(Routed(PromQLHist.combineSeriesShares(hPresent,
           span.subqueryFold("present_over_time", subqueryBothStores(arg).get,
-            params), how = "max"), Nil, Nil))
+            params), how = "max", metricLabel), Nil, Nil))
       case fn @ PromQL.Fn(op @ ("sum_over_time" | "avg_over_time"),
           arg, params) if subqueryBothStores(arg).nonEmpty =>
         val (out, mixed) = PromQLHist.exclusiveSeriesShares(
           span.hist(fn),
-          span.subqueryFold(op, subqueryBothStores(arg).get, params))
+          span.subqueryFold(op, subqueryBothStores(arg).get, params),
+          metricLabel)
         Some(Routed(out, if (mixed) mixedRangeWarning else Nil, Nil))
       case PromQL.Fn(op, arg, params)
           if subqueryBothStores(arg).nonEmpty &&
@@ -915,12 +932,12 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       case fn @ PromQL.Fn("count_over_time", arg, _) =>
         shapedBothStoresRange(arg).map { _ =>
           Routed(PromQLHist.combineSeriesShares(span.hist(fn),
-            span.floatEval(fn), how = "sum"), Nil, Nil)
+            span.floatEval(fn), how = "sum", metricLabel), Nil, Nil)
         }
       case fn @ PromQL.Fn("present_over_time", arg, _) =>
         shapedBothStoresRange(arg).map { _ =>
           Routed(PromQLHist.combineSeriesShares(span.hist(fn),
-            span.floatEval(fn), how = "max"), Nil, Nil)
+            span.floatEval(fn), how = "max", metricLabel), Nil, Nil)
         }
       case fn @ PromQL.Fn("absent_over_time", arg, _) =>
         shapedBothStoresRange(arg).map { _ =>
@@ -938,7 +955,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
           "increase" | "delta", arg, _) =>
         shapedBothStoresRange(arg).map { _ =>
           val (out, mixed) = PromQLHist.exclusiveSeriesShares(
-            span.hist(fn), span.floatEval(fn))
+            span.hist(fn), span.floatEval(fn), metricLabel)
           Routed(out, if (mixed) mixedRangeWarning else Nil, Nil)
         }
       // type-PRESERVING raw-sample picks over a both-stores selector:
@@ -956,7 +973,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
             else "ts_of_first_over_time", arg, Nil)
           Routed(PromQLHist.pickByTimeShares(span.hist(fn), span.hist(ts),
             span.floatEval(fn), span.floatEval(ts),
-            latest = op == "last_over_time"), Nil, Nil)
+            latest = op == "last_over_time", metricLabel), Nil, Nil)
         }
       // the ts_of extractors are sample-type-AGNOSTIC (the timestamp
       // of the latest/earliest sample, regardless of kind): shares
@@ -968,7 +985,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
           Routed(PromQLHist.combineSeriesShares(span.hist(fn),
             span.floatEval(fn),
             how = if (op == "ts_of_last_over_time") "max" else "min",
-            keepName = true), Nil, Nil)
+            metricLabel, keepName = true), Nil, Nil)
         }
       // float-only range shapes over a both-stores selector: the
       // float share answers; histogram samples in the window surface
@@ -1068,7 +1085,8 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       case PromQL.SetOp(op, on, l, r, ign) =>
         for {
           (Routed(ld, lw, li), Routed(rd, rw, ri)) <- latticePair(l, r, rec)
-        } yield Routed(PromQLHist.setOpFrames(op, ld, rd, on, ign),
+        } yield Routed(PromQLHist.setOpFrames(op, ld, rd, on, ign,
+          metricLabel),
           lw ++ rw, li ++ ri)
       // a BARE both-stores selector under a wrapper: the stitched
       // union frame itself (the router's bare case, reachable here
@@ -1370,7 +1388,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     e match {
       case PromQL.SetOp(op, onK, l, r, ign) if straddlesTiers(e) =>
         for { lf <- rec(l); rf <- rec(r) }
-          yield PromQLHist.setOpFrames(op, lf, rf, onK, ign)
+          yield PromQLHist.setOpFrames(op, lf, rf, onK, ign, metricLabel)
       case PromQL.BinOp(op, _, l, PromQL.ScalarLit(s), bool, "", _, Seq())
           if straddlesTiers(e) =>
         rec(l).filter(hasVal)
@@ -1388,11 +1406,11 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
               if !bool && (op == "*" || op == "/") &&
                 hasHist(lf) && hasVal(rf) =>
             Some(PromQLHist.scaleByVector(lf, rf, divide = op == "/",
-              onK, ign))
+              metricLabel, onK, ign))
           case (Some(lf), Some(rf))
               if !bool && op == "*" && hasHist(rf) && hasVal(lf) =>
             Some(PromQLHist.scaleByVector(rf, lf, divide = false,
-              onK, ign))
+              metricLabel, onK, ign))
           case _ => None
         }
       case _ if straddlesTiers(e) || anySelectorSpans(e) => None
@@ -1436,16 +1454,16 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
         // systematically preferring histogram series.
         val mat = iv.persist()
         try {
-          val h = ApiJson.histVectorJsonKeyed(
+          val h = ApiJson.vectorJson(
             mat.where(col(PromQLHist.HistCol).isNotNull)
-              .drop(TsdbSchema.ValueCol))
-          val f = ApiJson.vectorJsonKeyed(
+              .drop(TsdbSchema.ValueCol), metricLabel, keyed = true)
+          val f = ApiJson.vectorJson(
             mat.where(col(PromQLHist.HistCol).isNull)
-              .drop(PromQLHist.HistCol))
+              .drop(PromQLHist.HistCol), metricLabel, keyed = true)
           take(h.unionByName(f).orderBy(col("skey")).select(col("json")))
         } finally { mat.unpersist(); () }
-      } else if (hasH) take(ApiJson.histVectorJson(iv))
-      else take(ApiJson.vectorJson(iv))
+      } else if (hasH) take(ApiJson.vectorJson(iv, metricLabel))
+      else take(ApiJson.vectorJson(iv, metricLabel))
     respondCapped(ex, "vector", rows, limit, warnings, infos)
   }
 
@@ -1474,12 +1492,12 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
         // driver-side (API-sized strings), cap after.
         val mat = rv.persist()
         try {
-          val h = ApiJson.histMatrixJsonParts(
+          val h = ApiJson.matrixJsonParts(
             mat.where(col(PromQLHist.HistCol).isNotNull)
-              .drop(TsdbSchema.ValueCol, TsdbSchema.TimeCol))
+              .drop(TsdbSchema.ValueCol, TsdbSchema.TimeCol), metricLabel)
           val f = ApiJson.matrixJsonParts(
             mat.where(col(PromQLHist.HistCol).isNull)
-              .drop(PromQLHist.HistCol))
+              .drop(PromQLHist.HistCol), metricLabel)
           // field "histograms" < "values", matching the assembled
           // objects' lexicographic order — one label-ordered stream
           val keyed = h.unionByName(f)
@@ -1490,8 +1508,8 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
           mergeSameSeries(taken)
         } finally { mat.unpersist(); () }
       } else if (hasH)
-        take(ApiJson.histMatrixJson(rv.drop(TsdbSchema.TimeCol)))
-      else take(ApiJson.matrixJson(rv))
+        take(ApiJson.matrixJson(rv.drop(TsdbSchema.TimeCol), metricLabel))
+      else take(ApiJson.matrixJson(rv, metricLabel))
     respondCapped(ex, "matrix", rows, limit, warnings, infos)
   }
 
@@ -1923,7 +1941,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     // negative is the client's error, as in Prometheus)
     val limit = p.first("limit").map(_.toInt)
     require(limit.forall(_ >= 0), "limit must be non-negative")
-    val ast = PromQL.parse(q)
+    val ast = PromQL.renameMetric(PromQL.parse(q), initial)
     val heads = current
     val r = route(ast,
       new Span(heads, at, at, 0L, heads.floatShareView, lookbackMs))
@@ -1960,7 +1978,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     // negative = 400, as in Prometheus)
     val limit = p.first("limit").map(_.toInt)
     require(limit.forall(_ >= 0), "limit must be non-negative")
-    val ast = PromQL.parse(q)
+    val ast = PromQL.renameMetric(PromQL.parse(q), initial)
     // range outputs carry the grid column `t` — matrix-ready
     val heads = current
     val r = route(ast,
@@ -1973,7 +1991,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     import spark.implicits._
     val (s, e) = window(p)
     val t = TsdbTable(current.metaView)
-    val sels = p.all("match[]").map(PromQL.parseMatchers)
+    val sels = selectors(p)
     val names =
       if (sels.isEmpty) TsdbMeta.labelNames(t, s, e, Nil)
       else TsdbMeta.labelNamesAny(t, s, e, sels)
@@ -1987,17 +2005,20 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     import spark.implicits._
     val (s, e) = window(p)
     val t = TsdbTable(current.metaView)
-    val sels = p.all("match[]").map(PromQL.parseMatchers)
+    val sels = selectors(p)
+    // `__name__` (any of the metric's spellings) reads the metric label
+    val l = if (TsdbSchema.metricSpellings(initial)(label)) metricLabel
+            else label
     val vs =
-      if (sels.isEmpty) TsdbMeta.labelValues(t, label, s, e, Nil)
-      else TsdbMeta.labelValuesAny(t, label, s, e, sels)
+      if (sels.isEmpty) TsdbMeta.labelValues(t, l, s, e, Nil)
+      else TsdbMeta.labelValuesAny(t, l, s, e, sels)
     ok(ex, capped(vs, p).as[String].collect()
       .map(jstr).mkString("[", ",", "]"))
   }
 
   private def series(ex: HttpExchange, p: Params): Unit = {
     val (s, e) = window(p)
-    val sels = p.all("match[]").map(PromQL.parseMatchers)
+    val sels = selectors(p)
     require(sels.nonEmpty, "no match[] parameter provided")
     val rows = capped(
       TsdbMeta.seriesAny(TsdbTable(current.metaView), s, e, sels), p)
@@ -2062,9 +2083,10 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     // /api/v1/rules renders as health=err + lastError until a later
     // evaluation succeeds — Prometheus's per-rule-error blast radius,
     // never a silently inactive "ok"
-    def ruleEval(ast: PromQL.Expr, view: DataFrame, s: Long, e: Long,
+    def ruleEval(ast0: PromQL.Expr, view: DataFrame, s: Long, e: Long,
                  step: Long, lb: Long): DataFrame = {
-      val key = PromQL.render(ast)
+      val key = PromQL.render(ast0)
+      val ast = PromQL.renameMetric(ast0, initial)
       val outcome =
         try route(ast,
           new Span(heads, s, e, step, heads.shadowCarved(view), lb)) match {
@@ -2277,7 +2299,8 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
         key.flatMap(k => Option(ruleEvalErrors.get(k))) match {
           case Some(msg) => s""""health":"err","lastError":${jstr(msg)}}"""
           case None =>
-            val mw = ast.fold(Seq.empty[String])(heads.migrationWarnings)
+            val mw = ast.fold(Seq.empty[String])(a =>
+              heads.migrationWarnings(PromQL.renameMetric(a, initial)))
             val mwPart =
               if (mw.isEmpty) ""
               else s""","migrationWarning":${jstr(
@@ -2380,7 +2403,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
 
   private def federate(ex: HttpExchange, p: Params): Unit = {
     import spark.implicits._
-    val sels = p.all("match[]").map(PromQL.parseMatchers)
+    val sels = selectors(p)
     require(sels.nonEmpty, "no match[] parameter provided")
     val at = p.first("time").map(parseTime)
       .getOrElse(System.currentTimeMillis())
@@ -2415,9 +2438,9 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     // CONTENT NEGOTIATION (Remote-Write 2.0 spec): a v2 sender marks
     // the body `application/x-protobuf;proto=io.prometheus.write.v2
     // .Request` — decode with the symbol-table codec; anything else is
-    // the v1 WriteRequest. Wire labels carry `__name__`; this table's
-    // metric column is `name` — the same mapping RemoteRead.serve
-    // applies on its side.
+    // the v1 WriteRequest. Wire labels carry `__name__`, which the
+    // table stores under [[metricLabel]] — the name RemoteRead.serve
+    // reads back as `__name__`.
     val isV2 = Option(ex.getRequestHeaders.getFirst("Content-Type"))
       .exists(_.contains("io.prometheus.write.v2.Request"))
     if (isV2) {
@@ -2441,6 +2464,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
         val hists = series.flatMap(sr =>
           sr.histograms.map(_.copy(labels = sr.labels.toMap)))
         requireGridSchema(hists)
+        requireStorable(series.map(_.labels.toMap))
         // v2 METADATA (field 5: type/unit/help per series) lands in the
         // served metadata view — Prometheus's v2 receiver stores it;
         // dropping it would leave /api/v1/metadata blind to pushed
@@ -2478,7 +2502,9 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
           }).map { case (st, ls) => emptyHistAt(st, ls) }
         (series.flatMap { sr =>
           sr.samples.map { case (t, v) => (t, v, sr.labels.toMap) }
-        } ++ ctZeros, hists, histZeros, exemplarRowsOf(series), meta)
+        } ++ ctZeros, hists, histZeros, series.flatMap(sr =>
+          sr.exemplars.map { case (el, v, t) =>
+            (t, v, sr.labels.toMap, el.toMap) }), meta)
       }
       else {
         // v1 senders ALSO carry native histograms (send_native_
@@ -2496,22 +2522,15 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
           case (fam, tpe, unit, help) => fam -> ((tpe, unit, help))
         }
         val exRows = RemoteWrite.decodeExemplarsOfRequest(body).map {
-          case (lm, el, v, t) =>
-            val lbls = lm.map { case (k, vv) =>
-              (if (k == "__name__") "name" else k) -> vv }
-            val traceId = el.getOrElse("trace_id",
-              el.toSeq.sortBy(_._1).headOption.fold("")(_._2))
-            (t, v, lbls, traceId)
+          case (lm, el, v, t) => (t, v, lm, el)
         }
         val samples = RemoteWrite.decodeRequest(body)
         requireGridSchema(hists)
+        requireStorable(samples.map(_._3) ++ hists.map(_.labels) ++
+          exRows.map(_._3))
         (samples, hists, Nil, exRows, meta)
       }
-    val decoded = raw.map { case (t, v, ls) =>
-      (t, v, ls.map { case (k, vv) =>
-        (if (k == "__name__") "name" else k) -> vv })
-    }
-    val floats = floatBatch(decoded)
+    val floats = floatBatch(raw)
     val exemplarsIn = exemplarBatch(exRows)
     publish { heads =>
       // Prometheus appends staleness markers as FLOAT samples even for
@@ -2537,8 +2556,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       // v2 receivers MUST report written counts (the spec's
       // partial-write contract)
       val h = ex.getResponseHeaders
-      h.set("X-Prometheus-Remote-Write-Samples-Written",
-        decoded.size.toString)
+      h.set("X-Prometheus-Remote-Write-Samples-Written", raw.size.toString)
       h.set("X-Prometheus-Remote-Write-Histograms-Written",
         hists.size.toString)
       h.set("X-Prometheus-Remote-Write-Exemplars-Written",
@@ -2547,35 +2565,26 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     ex.sendResponseHeaders(204, -1)
   }
 
-  /** A v2 request's EXEMPLARS as rows for the queryable store. The
-    * trace id is the exemplar's `trace_id` label (Prometheus's
-    * convention); exemplars without one keep their first label value,
-    * and label-less exemplars land with an empty id. */
-  private def exemplarRowsOf(series: Seq[RemoteWrite2.Rw2Series])
-      : Seq[(Long, Double, Map[String, String], String)] =
-    series.flatMap { sr =>
-      val lbls = sr.labels.toMap.map { case (k, v) =>
-        (if (k == "__name__") "name" else k) -> v }
-      sr.exemplars.map { case (elbls, v, t) =>
-        val traceId = elbls.toMap.getOrElse("trace_id",
-          elbls.sortBy(_._1).headOption.fold("")(_._2))
-        (t, v, lbls, traceId)
-      }
-    }
-
-  /** Exemplar rows as a one-append exemplar [[Head]] in the
+  /** Exemplar rows — (time, value, owning series' wire labels,
+    * exemplar labels) — as a one-append exemplar [[Head]] in the
     * [[Exemplars]] wide shape (owning series' label columns + time +
     * value + trace_id) — what `/api/v1/query_exemplars` serves. None
-    * when there are none. */
-  private def exemplarBatch(
-      rows: Seq[(Long, Double, Map[String, String], String)]): Option[Head] =
+    * when there are none. The trace id is the exemplar's `trace_id`
+    * label (Prometheus's convention); exemplars without one keep their
+    * first label value, and label-less exemplars land with an empty
+    * id. */
+  private def exemplarBatch(rows: Seq[(Long, Double, Map[String, String],
+      Map[String, String])]): Option[Head] =
     if (rows.isEmpty) None
     else {
       import spark.implicits._
       val names = rows.flatMap(_._3.keys).distinct.sorted
       val labelCols = names.map(n =>
-        col("labels").getItem(n).as(TsdbSchema.labelColName(n)))
-      Some(new Head(rows.toDF("time", "value", "labels", "trace_id")
+        col("labels").getItem(n).as(TsdbSchema.labelColName(storedName(n))))
+      Some(new Head(rows.map { case (t, v, ls, el) =>
+          (t, v, ls, el.getOrElse("trace_id",
+            el.toSeq.sortBy(_._1).headOption.fold("")(_._2)))
+        }.toDF("time", "value", "labels", "trace_id")
         .select(col("time") +: col("value") +: labelCols :+
           col("trace_id"): _*), 1))
     }
@@ -2653,6 +2662,19 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
                else ls + ("__name__" -> (n + "_total")), st, true)
       case (t, v, ls, _, st) => (t, v, ls, st, false)
     }
+    // resource attributes: service.name/namespace/instance.id promote
+    // to job/instance on every series (inside the decoders), and the
+    // remaining resource attributes land as a `target_info` row — the
+    // PromQL info() tier's data source, exactly Prometheus's mapping
+    val others = dec(OtlpProto.decodeClassicHists(raw) ++
+      OtlpProto.decodeSummaries(raw) ++ OtlpProto.decodeTargetInfo(raw))
+    // exemplars attached to any data point land in the queryable store
+    // exactly like remote-write 2.0's (Prometheus's OTLP receiver
+    // does the same): trace id = the decoded trace_id hex, owning
+    // series = metric name + point attributes
+    val exemplarRows = dec(OtlpProto.decodeExemplarRows(raw))
+    requireStorable(samplesFull.map(_._3) ++ others.map(_._3) ++
+      expHists.map(_.labels) ++ exemplarRows.map(_._3))
     // created-timestamp zero ingestion (Prometheus's feature flag of
     // the same name, default OFF like there — the default semantics
     // are decode-and-ignore, relying on value-drop reset detection):
@@ -2678,33 +2700,10 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
         case (h, st) if st > 0 && st < h.time &&
             !TsdbSchema.isStaleMarker(h.sum) => (st, h.labels)
       }).map { case (st, ls) => emptyHistAt(st, ls) }
-    val samples =
-      samplesFull.map { case (t, v, ls, _, _) => (t, v, ls) } ++ ctZeros
-    // resource attributes: service.name/namespace/instance.id promote
-    // to job/instance on every series (inside the decoders), and the
-    // remaining resource attributes land as a `target_info` row — the
-    // PromQL info() tier's data source, exactly Prometheus's mapping
-    val decoded = dec(
-      samples ++ OtlpProto.decodeClassicHists(raw) ++
-        OtlpProto.decodeSummaries(raw) ++ OtlpProto.decodeTargetInfo(raw)
-    ).map { case (t, v, ls) =>
-      (t, v, ls.map { case (k, vv) =>
-        (if (k == "__name__") "name" else k) -> vv })
-    }
-    // exemplars attached to any data point land in the queryable store
-    // exactly like remote-write 2.0's (Prometheus's OTLP receiver
-    // does the same): trace id = the decoded trace_id hex, owning
-    // series = metric name + point attributes
-    val exemplarRows = dec(OtlpProto.decodeExemplarRows(raw)).map {
-      case (t, v, series, elbls) =>
-        val lbls = series.map { case (k, vv) =>
-          (if (k == "__name__") "name" else k) -> vv }
-        val traceId = elbls.getOrElse("trace_id",
-          elbls.toSeq.sortBy(_._1).headOption.fold("")(_._2))
-        (t, v, lbls, traceId)
-    }
     // every section validated — the push publishes here, once
-    val floats = floatBatch(decoded)
+    val floats = floatBatch(
+      samplesFull.map { case (t, v, ls, _, _) => (t, v, ls) } ++ ctZeros ++
+        others)
     val hists = histBatch(expHists ++ histCtZeros)
     val exemplarsIn = exemplarBatch(exemplarRows)
     publish(_.append(floats, hists, exemplarsIn))
@@ -2745,8 +2744,8 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     val hsOpt = heads.hist.map(_.sparse)
     val natives = heads.histNames
     def nameMs(q: RemoteRead.ReadQuery): Seq[graft.model.Matcher] =
-      PromQL.anchorMatchers(q.matchers).filter(m =>
-        m.name == "__name__" || m.name == "name")
+      PromQL.renameMetric(PromQL.anchorMatchers(q.matchers), initial)
+        .filter(_.name == metricLabel)
     def wantsHist(q: RemoteRead.ReadQuery): Boolean = {
       val ms = nameMs(q)
       // "" stands in for the ABSENT name here too: histBatch
@@ -2838,10 +2837,11 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
                         p: Params): org.apache.spark.sql.Dataset[T] =
     p.first("limit").map(_.toInt).filter(_ > 0).fold(ds)(ds.limit)
 
-  private def apiLabel(col: String): String = {
-    val n = col.stripPrefix(TsdbSchema.LabelPrefix)
-    if (n == "name") "__name__" else n
-  }
+  /** The repeated `match[]` selectors, addressed to the table
+    * ([[PromQL.renameMetric]]). */
+  private def selectors(p: Params): Seq[Seq[graft.model.Matcher]] =
+    p.all("match[]").map(m =>
+      PromQL.renameMetric(PromQL.parseMatchers(m), initial))
 
   private def sec(ms: Long): String =
     // Locale.ROOT: the f-interpolator uses the default locale, which

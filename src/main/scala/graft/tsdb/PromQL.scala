@@ -997,22 +997,47 @@ object PromQL {
     case Matcher.NotRe(n, p) => Matcher.NotRe(n, anchorPattern(p))
     case m => m
   }
-  private[tsdb] def anchorSelectors(e: Expr): Expr = e match {
-    case s: Selector => s.copy(matchers = anchorMatchers(s.matchers))
-    case Fn(n, a, p) => Fn(n, anchorSelectors(a), p)
-    case StrFn(n, a, s) => StrFn(n, anchorSelectors(a), s)
-    case CountValues(l, a, b, w) => CountValues(l, anchorSelectors(a), b, w)
-    case AggBy(o, b, a, q) => AggBy(o, b, anchorSelectors(a), q)
-    case AggWithout(o, w, a, q) => AggWithout(o, w, anchorSelectors(a), q)
-    case RankK(o, k, a, b, w) => RankK(o, k, anchorSelectors(a), b, w)
-    case LimitRatio(r, a) => LimitRatio(r, anchorSelectors(a))
-    case Info(a, sel) => Info(anchorSelectors(a), anchorMatchers(sel))
-    case sq: Subquery => sq.copy(arg = anchorSelectors(sq.arg))
+  private[tsdb] def anchorSelectors(e: Expr): Expr =
+    mapSelectors(e, anchorMatchers)
+
+  /** `e` with every selector's matcher set (and [[Info]]'s data-label
+    * selector) mapped by `f`. */
+  private def mapSelectors(e: Expr,
+                           f: Seq[Matcher] => Seq[Matcher]): Expr = e match {
+    case s: Selector => s.copy(matchers = f(s.matchers))
+    case Fn(n, a, p) => Fn(n, mapSelectors(a, f), p)
+    case StrFn(n, a, s) => StrFn(n, mapSelectors(a, f), s)
+    case CountValues(l, a, b, w) => CountValues(l, mapSelectors(a, f), b, w)
+    case AggBy(o, b, a, q) => AggBy(o, b, mapSelectors(a, f), q)
+    case AggWithout(o, w, a, q) => AggWithout(o, w, mapSelectors(a, f), q)
+    case RankK(o, k, a, b, w) => RankK(o, k, mapSelectors(a, f), b, w)
+    case LimitRatio(r, a) => LimitRatio(r, mapSelectors(a, f))
+    case Info(a, sel) => Info(mapSelectors(a, f), f(sel))
+    case sq: Subquery => sq.copy(arg = mapSelectors(sq.arg, f))
     case BinOp(op, on, l, r, b, c, i, cr) =>
-      BinOp(op, on, anchorSelectors(l), anchorSelectors(r), b, c, i, cr)
+      BinOp(op, on, mapSelectors(l, f), mapSelectors(r, f), b, c, i, cr)
     case SetOp(op, on, l, r, i) =>
-      SetOp(op, on, anchorSelectors(l), anchorSelectors(r), i)
+      SetOp(op, on, mapSelectors(l, f), mapSelectors(r, f), i)
     case other => other
+  }
+
+  /** `e` with its metric-name matchers (any of `table`'s
+    * [[TsdbSchema.metricSpellings]]) addressing the table's
+    * [[TsdbSchema.metricLabel]] — applied once to a query before it
+    * evaluates over that table. */
+  def renameMetric(e: Expr, table: DataFrame): Expr =
+    mapSelectors(e, renameMetric(_, table))
+
+  def renameMetric(ms: Seq[Matcher], table: DataFrame): Seq[Matcher] = {
+    val (metric, names) =
+      (TsdbSchema.metricLabel(table), TsdbSchema.metricSpellings(table))
+    ms.map {
+      case Matcher.Eq(n, v) if names(n)    => Matcher.Eq(metric, v)
+      case Matcher.NotEq(n, v) if names(n) => Matcher.NotEq(metric, v)
+      case Matcher.Re(n, p) if names(n)    => Matcher.Re(metric, p)
+      case Matcher.NotRe(n, p) if names(n) => Matcher.NotRe(metric, p)
+      case m => m
+    }
   }
 
   /** Parse an HTTP API `match[]` series selector — the TEXT form the
@@ -1031,7 +1056,7 @@ object PromQL {
     case Selector(ms, _, _, _) => Seq(anchorMatchers(ms))
     case Fn(_, a, _) => selectorsOf(a)
     case StrFn(_, a, _) => selectorsOf(a)
-    case CountValues(_, a, b, w) => selectorsOf(a)
+    case CountValues(_, a, _, _) => selectorsOf(a)
     case AggBy(_, _, a, _) => selectorsOf(a)
     case AggWithout(_, _, a, _) => selectorsOf(a)
     case RankK(_, _, a, _, _) => selectorsOf(a)
@@ -1067,7 +1092,7 @@ object PromQL {
     case Selector(ms, None, off, atm) =>
       RangeVectors.instant(TsdbTable(wide).select(ms),
         resolveAt(atm, at, start, end) - off, lookbackMs)
-    case Selector(ms, Some(_), _, _) =>
+    case Selector(_, Some(_), _, _) =>
       throw new IllegalArgumentException(
         "range selector must be wrapped in a range-vector function")
     case Fn("histogram_quantile", arg, params) =>
@@ -1127,7 +1152,8 @@ object PromQL {
       asAnchoredVector(name,
         evalRange(Fn(name, Selector(ms, Some(rangeMs), 0L, None), params),
           wide, t0, t0, stepMs = rangeMs, lookbackMs = lookbackMs))
-    case Fn(name, Selector(ms, Some(stepMs), off, atm), params) =>
+    // (an @-anchored selector under a range function is the case above)
+    case Fn(name, Selector(ms, Some(stepMs), off, _), params) =>
       val sel = live(TsdbTable(wide).select(start - off, end - off, ms))
       // a multi-stat kernel frame re-projected to labels+bucket+value —
       // the composable single-value vector form

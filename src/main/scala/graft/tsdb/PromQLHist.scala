@@ -69,7 +69,8 @@ import PromQL.{AggBy, AggWithout, AtAnchor, AtEnd, AtMs, AtStart, BinOp,
   *
   * `__name__` flows as in Prometheus: selectors and `last_over_time`
   * keep it; rate/increase, the other over-time folds, arithmetic,
-  * aggregation and the histogram_* functions drop it.
+  * aggregation and the histogram_* functions drop it. The name is the
+  * input frame's [[TsdbSchema.metricLabel]].
   *
   * Unsupported composition (grouped group_left/group_right matching
   * between histograms, rank over HISTOGRAM vectors, subqueries whose
@@ -85,7 +86,7 @@ import PromQL.{AggBy, AggWithout, AtAnchor, AtEnd, AtMs, AtStart, BinOp,
   * ≤ few-dozen-element array. No joins anywhere.
   */
 object PromQLHist {
-  import TsdbSchema.{TimeCol, labelCol, labelColName}
+  import TsdbSchema.{TimeCol, labelCol, labelColName, metricLabel}
 
   /** The histogram struct column every frame carries. */
   val HistCol = "hist"
@@ -309,7 +310,7 @@ object PromQLHist {
         if histEvaluable(inner) =>
       val grid = histSubqueryGrid(inner, rangeMs, sqStep,
         resolveAt(atm, at, start, end) - off, hists, lookbackMs, nLes)
-      dropMetric(grid.groupBy(grid.columns.toSeq
+      dropMetric(metricLabel(hists))(grid.groupBy(grid.columns.toSeq
           .filterNot(Seq("t", HistCol).contains(_))
           .map(c => col(s"`$c`")): _*)
         .agg(count(lit(1)).cast("double").as(TsdbSchema.ValueCol)))
@@ -369,7 +370,7 @@ object PromQLHist {
       atm match {
         case Some(_) =>
           val t0 = resolveAt(atm, at, start, end) - off
-          dropMetric(hists
+          dropMetric(metricLabel(hists))(hists
             .where(MatcherCompiler.compileAll(ms, known) &&
               col(TimeCol) > t0 - rangeMs && col(TimeCol) <= t0 &&
               col(HistCol).isNotNull)
@@ -378,7 +379,7 @@ object PromQLHist {
         case None =>
           val bucket = (floor(col(TimeCol) / rangeMs.toDouble) * rangeMs)
             .cast("long").as("bucket")
-          dropMetric(hists
+          dropMetric(metricLabel(hists))(hists
             .where(MatcherCompiler.compileAll(ms, known) &&
               col(TimeCol) > start - off && col(TimeCol) < end - off &&
               col(HistCol).isNotNull)
@@ -499,7 +500,7 @@ object PromQLHist {
           if histEvaluable(inner) =>
         val fanned = histSubqueryFanned(inner, rangeMs, sqStep, off,
           hists, start, end, stepMs, lookbackMs, nLes)
-        dropMetric(fanned.groupBy(fanned.columns.toSeq
+        dropMetric(metricLabel(hists))(fanned.groupBy(fanned.columns.toSeq
             .filterNot(Seq(TimeCol, HistCol).contains(_))
             .map(c => col(s"`$c`")): _*)
           .agg(count(lit(1)).cast("double").as(TsdbSchema.ValueCol)))
@@ -560,7 +561,7 @@ object PromQLHist {
         val nSteps = (end - start) / stepMs
         val (iLo, iHi) = RangeVectors.gridIdx(col(TimeCol) + off,
           col(TimeCol) + off + (rangeMs - 1), start, stepMs, nSteps)
-        dropMetric(hists
+        dropMetric(metricLabel(hists))(hists
           .where(MatcherCompiler.compileAll(ms, known) &&
             col(TimeCol) > start - off - rangeMs &&
             col(TimeCol) <= end - off && col(HistCol).isNotNull)
@@ -618,8 +619,8 @@ object PromQLHist {
         val sel = hists.where(MatcherCompiler.compileAll(ms, known) &&
           col(TimeCol) > start - off - rangeMs && col(TimeCol) <= end - off &&
           col(HistCol).isNotNull) // range selections skip stale markers
-        dropName(histSlidingRate(sel, rangeMs, stepMs, start, end, off,
-          nLes, asRate = name == "rate"))
+        dropMetric("__name__")(histSlidingRate(sel, rangeMs, stepMs, start,
+          end, off, nLes, asRate = name == "rate"))
       // @-anchored range function on a grid: the pinned window is a
       // constant — one single-point-grid evaluation (evalH's anchored
       // case) exploded to every step, like the anchored bare selector
@@ -662,7 +663,8 @@ object PromQLHist {
           col(HistCol).isNotNull) // range selections skip stale markers
         val folded = histSlidingOverTime(sel, rangeMs, stepMs, start, end,
           off, nLes, name)
-        if (KeepNameFolds(name)) folded else dropMetric(folded)
+        if (KeepNameFolds(name)) folded
+        else dropMetric(metricLabel(hists))(folded)
       // hist ± hist / hist × scalar / hist ÷ scalar, range mode — each
       // operand evaluates on the shared grid, so `t` joins the match
       // keys (histArith) or simply rides along (scaling)
@@ -671,39 +673,41 @@ object PromQLHist {
         histArith(
           evalHR(l, hists, start, end, stepMs, lookbackMs, nLes),
           evalHR(r, hists, start, end, stepMs, lookbackMs, nLes),
-          subtract = op == "-", on = on, ignoring = ign)
+          subtract = op == "-", on = on, ignoring = ign,
+          metric = metricLabel(hists))
       case BinOp("*", _, l, ScalarLit(s), false, _, _, _) =>
-        dropMetric(evalHR(l, hists, start, end, stepMs, lookbackMs, nLes))
-          .withColumn(HistCol, histScale(col(HistCol), lit(s)))
+        scaleHistFrame(evalHR(l, hists, start, end, stepMs, lookbackMs,
+          nLes), s, metricLabel(hists))
       case BinOp("*", _, ScalarLit(s), r, false, _, _, _) =>
-        dropMetric(evalHR(r, hists, start, end, stepMs, lookbackMs, nLes))
-          .withColumn(HistCol, histScale(col(HistCol), lit(s)))
+        scaleHistFrame(evalHR(r, hists, start, end, stepMs, lookbackMs,
+          nLes), s, metricLabel(hists))
       case BinOp("/", _, l, ScalarLit(s), false, _, _, _) =>
-        dropMetric(evalHR(l, hists, start, end, stepMs, lookbackMs, nLes))
-          .withColumn(HistCol, histScale(col(HistCol), lit(1.0 / s)))
+        scaleHistFrame(evalHR(l, hists, start, end, stepMs, lookbackMs,
+          nLes), 1.0 / s, metricLabel(hists))
       // set ops between histogram vectors on the shared grid
       case PromQL.SetOp(op, on, l, r, ign)
           if histEvaluable(l) && histEvaluable(r) =>
         setOpFrames(op,
           evalHR(l, hists, start, end, stepMs, lookbackMs, nLes),
-          evalHR(r, hists, start, end, stepMs, lookbackMs, nLes), on, ign)
+          evalHR(r, hists, start, end, stepMs, lookbackMs, nLes), on, ign,
+          metricLabel(hists))
       // hist ÷/× float-vector on the shared grid: both sides evaluate
       // per step, `t` joins the match keys through the scale join
       case BinOp("/", on, l, r, false, "", ign, Seq())
           if histEvaluable(l) && floatEvaluable(r) =>
         scaleByVector(evalHR(l, hists, start, end, stepMs, lookbackMs, nLes),
           evalRange(r, hists, start, end, stepMs, lookbackMs, nLes),
-          divide = true, on, ign)
+          divide = true, metricLabel(hists), on, ign)
       case BinOp("*", on, l, r, false, "", ign, Seq())
           if histEvaluable(l) && floatEvaluable(r) =>
         scaleByVector(evalHR(l, hists, start, end, stepMs, lookbackMs, nLes),
           evalRange(r, hists, start, end, stepMs, lookbackMs, nLes),
-          divide = false, on, ign)
+          divide = false, metricLabel(hists), on, ign)
       case BinOp("*", on, l, r, false, "", ign, Seq())
           if floatEvaluable(l) && histEvaluable(r) =>
         scaleByVector(evalHR(r, hists, start, end, stepMs, lookbackMs, nLes),
           evalRange(l, hists, start, end, stepMs, lookbackMs, nLes),
-          divide = false, on, ign)
+          divide = false, metricLabel(hists), on, ign)
       // histogram-valued subquery folds, range mode: ONE inner pass
       // over the covering grid, inner points fan to the outer steps
       // whose window contains them, one partial-agg fold per
@@ -717,7 +721,8 @@ object PromQLHist {
         val keys = fanned.columns.toSeq
           .filterNot(Seq(TimeCol, HistCol).contains(_)).map(c => col(s"`$c`"))
         val folded = foldOverTime(fanned, keys, nLes, name)
-        if (name == "last_over_time") folded else dropMetric(folded)
+        if (name == "last_over_time") folded
+        else dropMetric(metricLabel(hists))(folded)
       case f @ Fn("sum_over_time" | "avg_over_time" | "last_over_time",
               Subquery(inner, _, _, _, Some(_)), _)
           if histEvaluable(inner) =>
@@ -729,7 +734,7 @@ object PromQLHist {
       // across steps (the Prometheus contract for ratio sampling)
       case RankK("limitk", k, arg, by, w) if histEvaluable(arg) =>
         histLimitK(evalHR(arg, hists, start, end, stepMs, lookbackMs, nLes),
-          k, by, w)
+          k, by, w, metricLabel(hists))
       case LimitRatio(r, arg) if histEvaluable(arg) =>
         histLimitRatio(
           evalHR(arg, hists, start, end, stepMs, lookbackMs, nLes), r)
@@ -842,7 +847,8 @@ object PromQLHist {
       val sel = hists.where(MatcherCompiler.compileAll(ms, known) &&
         col(TimeCol) > start - off && col(TimeCol) < end - off &&
         col(HistCol).isNotNull) // range selections skip stale markers
-      dropName(histRate(sel, rangeMs, nLes, asRate = name == "rate"))
+      dropMetric("__name__")(
+        histRate(sel, rangeMs, nLes, asRate = name == "rate"))
     case Fn(name @ ("rate" | "increase"), _, _) =>
       throw new IllegalArgumentException(
         s"$name over histograms needs a range selector argument (m[duration])")
@@ -873,7 +879,7 @@ object PromQLHist {
         col(TimeCol) > start - off && col(TimeCol) < end - off &&
         col(HistCol).isNotNull) // range selections skip stale markers
       val folded = histOverTime(sel, rangeMs, nLes, name)
-      if (KeepNameFolds(name)) folded else dropMetric(folded)
+      if (KeepNameFolds(name)) folded else dropMetric(metricLabel(hists))(folded)
     // hist ± hist: one-to-one vector matching — `on(keys)` when given,
     // else the full label sets minus the metric name and any
     // `ignoring(keys)` (Prometheus matching), element-wise bucket
@@ -884,26 +890,28 @@ object PromQLHist {
       histArith(
         evalH(l, hists, at, lookbackMs, start, end, nLes),
         evalH(r, hists, at, lookbackMs, start, end, nLes),
-        subtract = op == "-", on = on, ignoring = ign)
+        subtract = op == "-", on = on, ignoring = ign,
+        metric = metricLabel(hists))
     // hist × scalar / hist ÷ scalar: every additive component scales
     // (Prometheus's histogram-scalar multiplication); arithmetic drops
     // the metric name
     case BinOp("*", _, l, ScalarLit(s), false, _, _, _) =>
-      dropMetric(evalH(l, hists, at, lookbackMs, start, end, nLes))
-        .withColumn(HistCol, histScale(col(HistCol), lit(s)))
+      scaleHistFrame(evalH(l, hists, at, lookbackMs, start, end, nLes),
+        s, metricLabel(hists))
     case BinOp("*", _, ScalarLit(s), r, false, _, _, _) =>
-      dropMetric(evalH(r, hists, at, lookbackMs, start, end, nLes))
-        .withColumn(HistCol, histScale(col(HistCol), lit(s)))
+      scaleHistFrame(evalH(r, hists, at, lookbackMs, start, end, nLes),
+        s, metricLabel(hists))
     case BinOp("/", _, l, ScalarLit(s), false, _, _, _) =>
-      dropMetric(evalH(l, hists, at, lookbackMs, start, end, nLes))
-        .withColumn(HistCol, histScale(col(HistCol), lit(1.0 / s)))
+      scaleHistFrame(evalH(l, hists, at, lookbackMs, start, end, nLes),
+        1.0 / s, metricLabel(hists))
     // set ops between HISTOGRAM vectors: membership joins, rows of the
     // surviving side unchanged (value-agnostic — Prometheus semantics)
     case PromQL.SetOp(op, on, l, r, ign)
         if histEvaluable(l) && histEvaluable(r) =>
       setOpFrames(op,
         evalH(l, hists, at, lookbackMs, start, end, nLes),
-        evalH(r, hists, at, lookbackMs, start, end, nLes), on, ign)
+        evalH(r, hists, at, lookbackMs, start, end, nLes), on, ign,
+        metricLabel(hists))
     // hist ÷ float-vector / hist × float-vector: histArith's keyed
     // join with histScale as the combine (`*` commutes; `float ÷
     // hist` is not a histogram and errors below)
@@ -911,17 +919,17 @@ object PromQLHist {
         if histEvaluable(l) && floatEvaluable(r) =>
       scaleByVector(evalH(l, hists, at, lookbackMs, start, end, nLes),
         eval(r, hists, at, lookbackMs, start, end, nLes),
-        divide = true, on, ign)
+        divide = true, metricLabel(hists), on, ign)
     case BinOp("*", on, l, r, false, "", ign, Seq())
         if histEvaluable(l) && floatEvaluable(r) =>
       scaleByVector(evalH(l, hists, at, lookbackMs, start, end, nLes),
         eval(r, hists, at, lookbackMs, start, end, nLes),
-        divide = false, on, ign)
+        divide = false, metricLabel(hists), on, ign)
     case BinOp("*", on, l, r, false, "", ign, Seq())
         if floatEvaluable(l) && histEvaluable(r) =>
       scaleByVector(evalH(r, hists, at, lookbackMs, start, end, nLes),
         eval(l, hists, at, lookbackMs, start, end, nLes),
-        divide = false, on, ign)
+        divide = false, metricLabel(hists), on, ign)
     // histogram-valued SUBQUERY folds: the inner evaluates ONCE over
     // the subquery's absolute-aligned grid, then the grid histograms
     // fold per series — merge (sum), scaled merge (avg), latest
@@ -936,13 +944,14 @@ object PromQLHist {
       val keys = grid.columns.toSeq
         .filterNot(Seq(TimeCol, HistCol).contains(_)).map(c => col(s"`$c`"))
       val folded = foldOverTime(grid, keys, nLes, name)
-      if (name == "last_over_time") folded else dropMetric(folded)
+      if (name == "last_over_time") folded
+      else dropMetric(metricLabel(hists))(folded)
     // limitk / limit_ratio over a HISTOGRAM vector: value-agnostic
     // series sampling, rows unchanged (topk/bottomk consult values
     // and keep erroring below, as Prometheus skips hists there)
     case RankK("limitk", k, arg, by, w) if histEvaluable(arg) =>
       histLimitK(evalH(arg, hists, at, lookbackMs, start, end, nLes),
-        k, by, w)
+        k, by, w, metricLabel(hists))
     case LimitRatio(r, arg) if histEvaluable(arg) =>
       histLimitRatio(evalH(arg, hists, at, lookbackMs, start, end, nLes), r)
     case other =>
@@ -1137,12 +1146,12 @@ object PromQLHist {
     * equi-join on those keys, never data-sized. */
   private def histArith(l0: DataFrame, r0: DataFrame,
                         subtract: Boolean, on: Seq[String],
-                        ignoring: Seq[String]): DataFrame = {
+                        ignoring: Seq[String], metric: String): DataFrame = {
     // `on(keys)` replaces the default key set outright (result labels
     // = the on keys, as in Prometheus); `ignoring(keys)` subtracts
     val keys =
       if (on.nonEmpty) on
-      else arithKeys(l0, r0).filterNot(ignoring.contains(_))
+      else arithKeys(l0, r0, metric).filterNot(ignoring.contains(_))
     val lg = Seq("bucket", "t").filter(l0.columns.contains)
     val rg = Seq("bucket", "t").filter(r0.columns.contains)
     val shared = lg.intersect(rg)
@@ -1188,11 +1197,11 @@ object PromQLHist {
     * side-by-side vector entries). Scale shape: the joins carry
     * series-count key tuples, never payloads. */
   def setOpFrames(op: String, lv: DataFrame, rv: DataFrame,
-                  on: Seq[String],
-                  ignoring: Seq[String]): DataFrame = {
+                  on: Seq[String], ignoring: Seq[String],
+                  metric: String = "__name__"): DataFrame = {
     val keys =
       if (on.nonEmpty) on
-      else arithKeys(lv, rv).filterNot(ignoring.contains(_))
+      else arithKeys(lv, rv, metric).filterNot(ignoring.contains(_))
     val grid = Seq("bucket", "t").filter(c =>
       lv.columns.contains(c) && rv.columns.contains(c))
     // one side's keys projected BARE + distinct — the membership set
@@ -1303,7 +1312,7 @@ object PromQLHist {
     * drops. Shares are series×steps-sized range-function outputs,
     * never sample-sized. */
   private def seriesShareFrames(h0: DataFrame, f0: DataFrame,
-                                keepName: Boolean = false)
+                                metric: String, keepName: Boolean = false)
       : (DataFrame, DataFrame, Seq[String]) = {
     // the METRIC-NAME label strips from both shares first: the hist
     // tier's folds drop it (Prometheus's over-time contract) while
@@ -1318,10 +1327,8 @@ object PromQLHist {
     // [[dupLabelsetGuard]], never a silent merge. `keepName` = the
     // last/first_over_time composition, whose folds KEEP the name on
     // both tiers — the name is a key there and metrics never collide.
-    def stripName(df: DataFrame): DataFrame =
-      NameLabels.foldLeft(df)((d, n) => d.drop(labelColName(n)).drop(n))
-    val hN = if (keepName) h0 else stripName(h0)
-    val fN = if (keepName) f0 else stripName(f0)
+    val hN = if (keepName) h0 else dropMetric(metric)(h0)
+    val fN = if (keepName) f0 else dropMetric(metric)(f0)
     val h1 = TsdbSchema.alignLabelSpellings(hN, fN).drop(TimeCol)
     val f1 = TsdbSchema.alignLabelSpellings(fN, hN).drop(TimeCol)
     def stripLonelyGrid(df: DataFrame, other: DataFrame): DataFrame =
@@ -1369,10 +1376,12 @@ object PromQLHist {
     * alike, so a series straddling its migration point inside one
     * window ADDS its unshadowed float samples to its native ones
     * (`"sum"`); presence clamps to one row (`"max"`), the earliest
-    * timestamp keeps the minimum (`"min"`). */
+    * timestamp keeps the minimum (`"min"`). `metric`: the served
+    * table's [[TsdbSchema.metricLabel]], here and below. */
   def combineSeriesShares(h0: DataFrame, f0: DataFrame, how: String,
+                          metric: String,
                           keepName: Boolean = false): DataFrame = {
-    val (h, f, keys) = seriesShareFrames(h0, f0, keepName)
+    val (h, f, keys) = seriesShareFrames(h0, f0, metric, keepName)
     def norm(df: DataFrame): DataFrame =
       df.select(keys.map(k => col(s"`$k`")) :+
         col(TsdbSchema.ValueCol).cast("double")
@@ -1395,9 +1404,9 @@ object PromQLHist {
     * Type-preserving: each surviving row keeps its own payload (the
     * histogram column or the float value). Returns the composed frame
     * and whether any (series, window) was dropped. */
-  def exclusiveSeriesShares(h0: DataFrame, f0: DataFrame)
+  def exclusiveSeriesShares(h0: DataFrame, f0: DataFrame, metric: String)
       : (DataFrame, Boolean) = {
-    val (h1, f1, keys) = seriesShareFrames(h0, f0)
+    val (h1, f1, keys) = seriesShareFrames(h0, f0, metric)
     // three consumers per share (own anti-join, other side's key set,
     // the mixed probe) — materialize once, as [[exclusiveAggShares]]
     val h = h1.localCheckpoint(true)
@@ -1416,8 +1425,9 @@ object PromQLHist {
     * constant — `hist * s` / `hist / s` under the mixed lattice's
     * vector-scalar wrapper (arithmetic drops the metric name, as the
     * scalar kernels do). */
-  def scaleHistFrame(hv: DataFrame, factor: Double): DataFrame =
-    dropMetric(hv).withColumn(HistCol, histScale(col(HistCol),
+  def scaleHistFrame(hv: DataFrame, factor: Double,
+                     metric: String): DataFrame =
+    dropMetric(metric)(hv).withColumn(HistCol, histScale(col(HistCol),
       lit(factor)))
 
   /** `last_over_time`/`first_over_time` over a both-stores selector:
@@ -1432,9 +1442,10 @@ object PromQLHist {
     * are series×steps-sized fold outputs; the joins are key-sized. */
   def pickByTimeShares(hPay0: DataFrame, hTs0: DataFrame,
                        fPay0: DataFrame, fTs0: DataFrame,
-                       latest: Boolean): DataFrame = {
-    val (h, f, keys) = seriesShareFrames(hPay0, fPay0, keepName = true)
-    val (ht, ft, _) = seriesShareFrames(hTs0, fTs0, keepName = true)
+                       latest: Boolean, metric: String): DataFrame = {
+    val (h, f, keys) =
+      seriesShareFrames(hPay0, fPay0, metric, keepName = true)
+    val (ht, ft, _) = seriesShareFrames(hTs0, fTs0, metric, keepName = true)
     def cond = keys.map(k => col(s"l.`$k`") <=> col(s"r.`$k`"))
       .reduceOption(_ && _).getOrElse(lit(true))
     def withTs(pay: DataFrame, ts: DataFrame): DataFrame = {
@@ -1478,13 +1489,14 @@ object PromQLHist {
     * the guard) — such callers must pre-normalize. The require below
     * rejects the detectable corruption: the same key spelled both
     * wide (`labels.k`) and bare (`k`) in one frame. */
-  private def arithKeys(l: DataFrame, r: DataFrame): Seq[String] = {
+  private def arithKeys(l: DataFrame, r: DataFrame,
+                        metric: String): Seq[String] = {
     def names(df: DataFrame): Seq[String] = {
       val bare = df.columns.toSeq
         .filterNot(Seq(HistCol, TimeCol, TsdbSchema.ValueCol,
           "rvalue", "rank", "t", "bucket").contains(_))
         .map(_.stripPrefix(TsdbSchema.LabelPrefix))
-        .filterNot(NameLabels.contains)
+        .filterNot(_ == metric)
       // an INTERNAL frame-normalization invariant, not a client input
       // error: IllegalStateException so the HTTP layer maps it to the
       // execution class, never 400 bad_data (the query was well-formed)
@@ -1526,14 +1538,14 @@ object PromQLHist {
     * series-count-sized keyed vectors (× grid steps); the join
     * shuffles key tuples + one struct, never samples. */
   private[tsdb] def scaleByVector(hv: DataFrame, fv: DataFrame,
-                                  divide: Boolean,
+                                  divide: Boolean, metric: String,
                                   on: Seq[String] = Nil,
                                   ignoring: Seq[String] = Nil): DataFrame = {
     require(fv.columns.contains(TsdbSchema.ValueCol),
       "scaleByVector: the scaling side must be a float instant vector")
     val keys =
       if (on.nonEmpty) on
-      else arithKeys(hv, fv).filterNot(ignoring.contains(_))
+      else arithKeys(hv, fv, metric).filterNot(ignoring.contains(_))
     val lg = Seq("bucket", "t").filter(hv.columns.contains)
     val rg = Seq("bucket", "t").filter(fv.columns.contains)
     val shared = lg.intersect(rg)
@@ -1650,8 +1662,12 @@ object PromQLHist {
     * the global instant form is orderBy+limit, the TakeOrdered k-heap
     * shape. */
   private def histLimitK(hv: DataFrame, k: Int, by: Seq[String],
-                         without: Seq[String]): DataFrame = {
-    val parts = (if (without.nonEmpty) withoutPartCols(hv, without)
+                         without: Seq[String], metric: String): DataFrame = {
+    // `without` partitions: every label but the listed ones and the
+    // metric name (the float tier's withoutGroupCols contract)
+    val parts = (if (without.nonEmpty)
+                   labelColsExcept(hv, without.toSet + metric)
+                     .map(c => col(s"`$c`"))
                  else by.map(partCol(hv, _))) ++ gridKeys(hv)
     if (parts.nonEmpty)
       hv.withColumn("_rk", row_number().over(
@@ -1676,9 +1692,10 @@ object PromQLHist {
     * samples with the same deterministic label order / hash band as
     * either tier alone. Prometheus 3's limitk/limit_ratio are
     * type-agnostic: k series regardless of sample kind. */
-  def limitKFrame(v: DataFrame, k: Int, by: Seq[String] = Nil,
+  def limitKFrame(v: DataFrame, k: Int, metric: String,
+                  by: Seq[String] = Nil,
                   without: Seq[String] = Nil): DataFrame =
-    histLimitK(v, k, by, without)
+    histLimitK(v, k, by, without, metric)
 
   def limitRatioFrame(v: DataFrame, r: Double): DataFrame =
     histLimitRatio(v, r)
@@ -1690,18 +1707,6 @@ object PromQLHist {
     if (df.columns.contains(labelColName(n))) labelCol(n)
     else if (df.columns.contains(n)) col(s"`$n`")
     else lit(null).cast("string")
-
-  /** `without (...)` partition keys: every label column EXCEPT the
-    * listed ones and the metric name (the float tier's
-    * withoutGroupCols contract). */
-  private def withoutPartCols(df: DataFrame, w: Seq[String]): Seq[Column] = {
-    val excluded = w.toSet ++ NameLabels
-    df.columns.toSeq.filter { c =>
-      val bare = c.stripPrefix(TsdbSchema.LabelPrefix)
-      (c.startsWith(TsdbSchema.LabelPrefix) || isBareLabel(df, c)) &&
-        !excluded.contains(bare)
-    }.map(c => col(s"`$c`"))
-  }
 
   /** Prometheus's one-to-one matching guard: more than one series per
     * match-group key tuple on a side is an error, never a silent cross
@@ -1775,7 +1780,7 @@ object PromQLHist {
   private def scalarize(hv: DataFrame, f: Column => Column): DataFrame = {
     val keep = hv.columns.filter(_ != HistCol)
       .map(c => col(s"`$c`")).toSeq
-    dropName(hv.select(keep :+
+    dropMetric("__name__")(hv.select(keep :+
       f(col(HistCol)).cast("double").as(TsdbSchema.ValueCol): _*))
   }
 
@@ -1793,15 +1798,18 @@ object PromQLHist {
 
   /** `without (...)` keys: every label column EXCEPT the named ones and
     * `__name__` (Prometheus drops the name in without() grouping). */
-  private def withoutKeys(df: DataFrame, w: Seq[String]): Seq[Column] = {
-    val excluded = w.toSet ++ Set("__name__")
-    df.columns.toSeq.filter { c =>
-      val bare = c.stripPrefix(TsdbSchema.LabelPrefix)
-      (c.startsWith(TsdbSchema.LabelPrefix) || isBareLabel(df, c)) &&
-        !excluded.contains(bare)
-    }.map(c => col(s"`$c`").as(c.stripPrefix(TsdbSchema.LabelPrefix))) ++
+  private def withoutKeys(df: DataFrame, w: Seq[String]): Seq[Column] =
+    labelColsExcept(df, w.toSet + "__name__")
+      .map(c => col(s"`$c`").as(c.stripPrefix(TsdbSchema.LabelPrefix))) ++
       gridKeys(df)
-  }
+
+  /** Every label column (wide or bare) whose label is not `excluded`. */
+  private def labelColsExcept(df: DataFrame,
+                              excluded: Set[String]): Seq[String] =
+    df.columns.toSeq.filter { c =>
+      (c.startsWith(TsdbSchema.LabelPrefix) || isBareLabel(df, c)) &&
+        !excluded.contains(c.stripPrefix(TsdbSchema.LabelPrefix))
+    }
 
   /** A bare (post-aggregation) label column: anything that is not the
     * histogram, a grid key, or the time axis. */
@@ -1813,15 +1821,6 @@ object PromQLHist {
     * through every aggregation. */
   private def gridKeys(df: DataFrame): Seq[Column] =
     Seq("bucket", "t").filter(df.columns.contains).map(col)
-
-  private def dropName(df: DataFrame): DataFrame =
-    df.drop(labelColName("__name__")).drop("__name__")
-
-  /** The hist tier's metric-name labels: the receivers store the
-    * wire's `__name__` as the `name` label
-    * ([[PromHttpServer.appendHists]]), and the text surface addresses
-    * it as `{name="m"}` — both spellings are the metric name here. */
-  private val NameLabels: Set[String] = Set("name", "__name__")
 
   /** Folds returning RAW samples keep the metric name (Prometheus's
     * last/first_over_time contract). The ts_of extractors keep it too
@@ -1835,11 +1834,12 @@ object PromQLHist {
     Set("last_over_time", "first_over_time",
       "ts_of_last_over_time", "ts_of_first_over_time")
 
-  /** Drop the metric-name label (both spellings) — arithmetic and the
+  /** Drop the metric-name label — `metric`, the stored frame's
+    * [[TsdbSchema.metricLabel]], wide or bare — arithmetic and the
     * over-time folds transform the value, so Prometheus drops
     * `__name__` from their outputs. */
-  private def dropMetric(df: DataFrame): DataFrame =
-    NameLabels.foldLeft(df)((d, n) => d.drop(labelColName(n)).drop(n))
+  private def dropMetric(metric: String)(df: DataFrame): DataFrame =
+    df.drop(labelColName(metric)).drop(metric)
 
   private def resolveAt(atm: Option[AtAnchor], default: Long,
                         start: Long, end: Long): Long = atm match {

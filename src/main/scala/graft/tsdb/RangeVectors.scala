@@ -520,28 +520,6 @@ object RangeVectors {
       .select(labels ++ Seq(col("t"), col(TsdbSchema.ValueCol)): _*)
   }
 
-  /** Sliding-window avg/min/max/count_over_time: per grid timestamp t,
-    * plain aggregates of the samples in (t - rangeMs, t] — samples fan
-    * out to the grid points in [time, time + range). */
-  def slidingOverTime(wide: DataFrame, rangeMs: Long, stepMs: Long,
-                      startMs: Long, endMs: Long): DataFrame = {
-    val labels = TsdbSchema.dynCols(wide)
-    val nSteps = (endMs - startMs) / stepMs
-    val v = col(TsdbSchema.ValueCol)
-    val (iLo, iHi) = gridIdx(col(TsdbSchema.TimeCol),
-      col(TsdbSchema.TimeCol) + (rangeMs - 1), startMs, stepMs, nSteps)
-    wide
-      .where(col(TsdbSchema.TimeCol) > startMs - rangeMs &&
-        col(TsdbSchema.TimeCol) <= endMs)
-      .withColumn("_ilo", iLo).withColumn("_ihi", iHi)
-      .where(col("_ilo") <= col("_ihi"))
-      .withColumn("_i", explode(sequence(col("_ilo"), col("_ihi"))))
-      .withColumn("t", lit(startMs) + col("_i") * stepMs)
-      .groupBy(labels :+ col("t"): _*)
-      .agg(count(lit(1)).as("n"), round(avg(v), 6).as("avg_v"),
-        min(v).as("min_v"), max(v).as("max_v"))
-  }
-
   /** The sliding fan-out skeleton shared by the single-value kernels:
     * prefilter to (start − range, end] (reaches the scan), explode each
     * sample to the grid points in [time, time + range), attach `t`.

@@ -170,24 +170,17 @@ object RemoteRead {
   // ---- selection ----------------------------------------------------
 
   /** One query's matched slice in the long `(time, value, labels)`
-    * form, name column mapped to `__name__`. [[TsdbTable.select]]'s
-    * range is EXCLUSIVE both ends (the reference's contract); remote
-    * read is INCLUSIVE, so the bounds widen by 1 (saturating). Wire
-    * matchers address `__name__`; storage calls that column `name`
-    * (the same mapping [[Federate.longForm]] applies outbound). */
+    * form, the table's [[TsdbSchema.metricLabel]] as the wire
+    * `__name__` both ways. [[TsdbTable.select]]'s range is EXCLUSIVE
+    * both ends (the reference's contract); remote read is INCLUSIVE, so
+    * the bounds widen by 1 (saturating). */
   private def slice(t: TsdbTable, q: ReadQuery): DataFrame = {
     val lo = if (q.startMs == Long.MinValue) Long.MinValue else q.startMs - 1
     val hi = if (q.endMs == Long.MaxValue) Long.MaxValue else q.endMs + 1
-    def st(n: String): String = if (n == "__name__") "name" else n
     // wire matchers carry Prometheus regex semantics: fully ANCHORED
     // (PromQL.anchorMatchers), unlike the engine's raw-pattern API
-    val ms = PromQL.anchorMatchers(q.matchers.map {
-      case Matcher.Eq(n, v)    => Matcher.Eq(st(n), v)
-      case Matcher.NotEq(n, v) => Matcher.NotEq(st(n), v)
-      case Matcher.Re(n, p)    => Matcher.Re(st(n), p)
-      case Matcher.NotRe(n, p) => Matcher.NotRe(st(n), p)
-    })
-    Federate.longForm(t.select(lo, hi, ms))
+    val ms = PromQL.anchorMatchers(PromQL.renameMetric(q.matchers, t.df))
+    Federate.longForm(t.select(lo, hi, ms), TsdbSchema.metricLabel(t.df))
   }
 
   /** NUL-escaped label-set sort key: lexicographic comparison of the

@@ -16,10 +16,6 @@ import org.apache.spark.sql.types._
   */
 object SampleReaders {
 
-  /** Long-form parquet: (time, value, labels) as written. */
-  def fromParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   /** CSV with columns `time,value,labels` where labels is encoded
     * `k1=v1;k2=v2` (no header assumptions beyond these names). */
   def fromCsv(spark: SparkSession, path: String): DataFrame =

@@ -50,22 +50,25 @@ object Shadowing {
     escapedKey(filter(array_sort(map_entries(labels)),
       e => e.getField("value").isNotNull && e.getField("value") =!= ""))
 
-  /** Series identity over a WIDE frame (storage label columns,
-    * `labels.name` mapped back to the wire `__name__` so the key space
-    * matches [[skeyOfLabelMap]]): NULL and empty values drop, entries
-    * sort by wire name in UTF-8 byte order — the same order
-    * `array_sort(map_entries(...))` produces at runtime. */
-  def skeyOfWide(df: DataFrame): Column = {
-    val pairs = TsdbSchema.labelColumns(df).map { c =>
-      val bare = c.stripPrefix(TsdbSchema.LabelPrefix)
-      (if (bare == "name") "__name__" else bare, col(s"`$c`"))
-    }.sortBy(_._1)(RemoteRead.utf8ByteOrder)
+  /** Series identity over a WIDE frame (storage label columns, the
+    * table's `metric` label column keyed as the wire `__name__` so the
+    * key space matches [[skeyOfLabelMap]]): NULL and empty values
+    * drop, entries sort by wire name in UTF-8 byte order — the same
+    * order `array_sort(map_entries(...))` produces at runtime. */
+  def skeyOfWide(df: DataFrame, metric: String): Column = {
+    val pairs = TsdbSchema.labelColumns(df)
+      .map(c => (TsdbSchema.wireName(c, metric), col(s"`$c`")))
+      .sortBy(_._1)(RemoteRead.utf8ByteOrder)
     if (pairs.isEmpty) lit("")
     else escapedKey(filter(
       array(pairs.map { case (k, v) =>
         struct(lit(k).as("key"), v.as("value")) }: _*),
       e => e.getField("value").isNotNull && e.getField("value") =!= ""))
   }
+
+  /** [[skeyOfWide]] over a stored frame or a selector's output. */
+  def skeyOfWide(df: DataFrame): Column =
+    skeyOfWide(df, TsdbSchema.metricLabel(df))
 
   /** Per-series migration WINDOWS of a NATIVE-HISTOGRAM head (wide
     * shape: label columns + `time` + `hist`): one `(__skey, __since,

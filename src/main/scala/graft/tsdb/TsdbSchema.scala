@@ -29,6 +29,29 @@ object TsdbSchema {
     * of the flat name, never a struct path. */
   def labelColName(name: String): String = LabelPrefix + name
 
+  /** THE metric-name label of a stored frame, decided here only:
+    * `__name__` if it has `labels.__name__` (converted stores; a
+    * `labels.name` beside it is an ordinary label), else `name` if it
+    * has `labels.name` (the driver tables), else `__name__`. */
+  def metricLabel(df: DataFrame): String =
+    if (df.columns.contains(labelColName("__name__"))) "__name__"
+    else if (df.columns.contains(labelColName("name"))) "name"
+    else "__name__"
+
+  /** The label names a query may spell a frame's metric with:
+    * `__name__`, and `name` where the frame has no `labels.name` (the
+    * driver spelling, which names no real label there). */
+  def metricSpellings(df: DataFrame): Set[String] =
+    if (df.columns.contains(labelColName("name"))) Set("__name__")
+    else Set("__name__", "name")
+
+  /** A label column's (wide or bare) name on the wire, where the
+    * table's `metric` label is `__name__`. */
+  def wireName(column: String, metric: String): String = {
+    val bare = column.stripPrefix(LabelPrefix)
+    if (bare == metric) "__name__" else bare
+  }
+
   /** Backtick-safe Column for a label column (literal dot in flat name). */
   def labelCol(name: String): Column = col(s"`${labelColName(name)}`")
 

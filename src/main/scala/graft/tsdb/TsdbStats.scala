@@ -56,7 +56,7 @@ object TsdbStats {
       .select(lit("totals").as("stat"), col("key"), col("n"))
 
     val byMetric = series
-      .groupBy(col("name").as("key"))
+      .groupBy(col(s"`${TsdbSchema.metricLabel(t.df)}`").as("key"))
       .agg(count(lit(1)).as("n"))
       .where(col("key").isNotNull)
       .select(lit("series_count_by_metric_name").as("stat"),

@@ -100,7 +100,7 @@ object TsdbProperties extends Properties("tsdb") {
         .map { case (k, ss) =>
           val vs = ss.map(s => (s.time, s.value)).sorted.map(_._2)
           val inc = vs.zip(0.0 +: vs.dropRight(1)).zipWithIndex.map {
-            case ((v, prev), 0) => 0.0
+            case (_, 0) => 0.0
             case ((v, prev), _) if v - prev < 0 => v // reset
             case ((v, prev), _) => v - prev
           }.sum
