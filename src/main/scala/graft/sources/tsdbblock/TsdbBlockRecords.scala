@@ -27,7 +27,7 @@ object TsdbBlockRecords {
       : Dataset[(Map[String, String], WalReader.WalHistogram)] = {
     import spark.implicits._
     val stones = Tombstones.read(s"$blockDir/tombstones")
-    val series = IndexReader.read(s"$blockDir/index")
+    val series = BlockIndexCache.get(blockDir).series
       .map(s => stones.get(s.ref).fold(s)(ivs => s.copy(deleted = ivs)))
       .flatMap { s =>
         val keep = s.chunks.filterNot(c => s.deleted.exists(iv =>

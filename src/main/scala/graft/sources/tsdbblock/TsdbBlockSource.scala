@@ -1,6 +1,7 @@
 package graft.sources.tsdbblock
 
 import java.util
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -10,6 +11,7 @@ import org.apache.spark.sql.sources.{DataSourceRegister, Filter, GreaterThan, Gr
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import graft.tsdb.TsdbSchema
 
 /** DataSource V2 for raw Prometheus TSDB block directories — the
   * reference's actual input format (SURVEY.md §2.1 S1/S2, §7.5 stretch
@@ -30,6 +32,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * (minTime, maxTime) — the TSDB analogue of parquet row-group pruning.
   * Filters are also left in the plan (returned as residual), so
   * semantics never depend on the pruning.
+  *
+  * Within a series the reader emits one row per timestamp: equal
+  * timestamps inside a chunk (a WAL's duplicates compacted into a
+  * block) collapse by the whole-DB merge's rule, and a timestamp that
+  * goes backwards fails the scan naming the block. Planning uses the
+  * session active where the table loads (see [[TsdbWalSource]]).
   */
 class TsdbBlockSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "tsdb-block"
@@ -39,7 +47,7 @@ class TsdbBlockSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
-    new TsdbBlockTable(properties.get("path"))
+    new TsdbBlockTable(properties.get("path"), SparkSession.active)
 }
 
 object TsdbBlockSource {
@@ -50,7 +58,54 @@ object TsdbBlockSource {
     StructField("labels", MapType(StringType, StringType), nullable = false)))
 }
 
-final class TsdbBlockTable(path: String) extends Table with SupportsRead {
+/** One parse of a block's index per `(path, length, mtime)`, shared by
+  * every planning of every scan over the block and by the whole-DB
+  * merge decision — the block twin of [[WalDictCache]]. Blocks are
+  * immutable once written (compaction writes new directories), so the
+  * signature only changes when the index does. Bounded LRU. */
+private[tsdbblock] object BlockIndexCache {
+  final case class Entry(sig: (Long, Long),
+                         series: Seq[IndexReader.SeriesEntry]) {
+    /** The range is the index's chunk bounds, not meta.json's (whose
+      * maxTime is the slice ceiling). Duplicate-free when label sets
+      * are unique and each series' chunks are strictly ordered and
+      * disjoint; equal timestamps inside one chunk collapse in the
+      * reader. */
+    lazy val facts: SourceFacts = {
+      val chunks = series.flatMap(_.chunks)
+      SourceFacts(
+        if (chunks.isEmpty) None
+        else Some((chunks.map(_.minTime).min, chunks.map(_.maxTime).max)),
+        series.map(_.labels).distinct.size == series.size &&
+          series.forall(s => s.chunks.iterator.zip(s.chunks.iterator.drop(1))
+            .forall { case (a, b) => a.maxTime < b.minTime }))
+    }
+  }
+
+  // enough entries for every block of a data directory (the merge
+  // decision and each scan's planning read them all), bounded by the
+  // series entries held rather than a block count alone
+  private val MaxEntries = 64
+  private val MaxSeries = 1L << 21
+  private val cache =
+    scala.collection.mutable.LinkedHashMap.empty[String, Entry]
+
+  def get(blockDir: String): Entry = synchronized {
+    val f = new java.io.File(blockDir, "index")
+    val sig = (f.length(), f.lastModified())
+    val e = cache.remove(f.getPath) // re-insert on hit: LRU order
+      .filter(_.sig == sig)
+      .getOrElse(Entry(sig, IndexReader.read(f.getPath)))
+    cache(f.getPath) = e
+    while (cache.size > 1 && (cache.size > MaxEntries ||
+        cache.valuesIterator.map(_.series.size.toLong).sum > MaxSeries))
+      cache.remove(cache.head._1)
+    e
+  }
+}
+
+final class TsdbBlockTable(path: String, spark: SparkSession)
+    extends Table with SupportsRead {
   require(path != null, "tsdb-block requires a block directory path")
   override def name(): String = s"tsdb-block($path)"
   override def schema(): StructType = TsdbBlockSource.schema
@@ -81,12 +136,12 @@ final class TsdbBlockTable(path: String) extends Table with SupportsRead {
     // count (scale-adaptive: a small block reads as a handful of tasks,
     // a 100 TB-era block saturates the cluster without a config edit)
     val partitions = Option(options.get("partitions")).map(_.toInt)
-    new TsdbBlockScanBuilder(path, partitions, matchers)
+    new TsdbBlockScanBuilder(path, partitions, spark, matchers)
   }
 }
 
 final class TsdbBlockScanBuilder(
-    path: String, partitions: Option[Int],
+    path: String, partitions: Option[Int], spark: SparkSession,
     matchers: Seq[IndexReader.SeriesEntry => Boolean] = Nil)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
@@ -119,14 +174,15 @@ final class TsdbBlockScanBuilder(
   override def pushedFilters(): Array[Filter] = pushed
 
   override def build(): Scan =
-    new TsdbBlockScan(path, partitions, timeLo, timeHi, required, matchers)
+    new TsdbBlockScan(path, partitions, spark, timeLo, timeHi, required,
+      matchers)
 }
 
 final case class TsdbSeriesPartition(
     series: Seq[IndexReader.SeriesEntry]) extends InputPartition
 
 final class TsdbBlockScan(path: String, partitions: Option[Int],
-                          timeLo: Long, timeHi: Long,
+                          spark: SparkSession, timeLo: Long, timeHi: Long,
                           required: StructType,
                           matchers: Seq[IndexReader.SeriesEntry => Boolean] = Nil)
     extends Scan with Batch {
@@ -147,7 +203,7 @@ final class TsdbBlockScan(path: String, partitions: Option[Int],
     // same plan-time pruning as the pushed time range — and partial
     // overlaps mask per-sample in the reader.
     val stones = Tombstones.read(s"$path/tombstones")
-    val all = IndexReader.read(s"$path/index")
+    val all = BlockIndexCache.get(path).series
       .filter(s => matchers.forall(_(s)))
       .map(s => stones.get(s.ref).fold(s)(ivs => s.copy(deleted = ivs)))
     val prunedSeries = all.flatMap { s =>
@@ -164,8 +220,7 @@ final class TsdbBlockScan(path: String, partitions: Option[Int],
     // throttled large blocks to 16 tasks at large scale
     val target = partitions.getOrElse {
       val totalChunks = prunedSeries.iterator.map(_.chunks.size.toLong).sum
-      val parallelism = math.max(1, org.apache.spark.sql.SparkSession
-        .active.sparkContext.defaultParallelism)
+      val parallelism = math.max(1, spark.sparkContext.defaultParallelism)
       math.min(parallelism.toLong,
         (totalChunks + ChunksPerTask - 1) / ChunksPerTask).toInt
     }
@@ -204,6 +259,8 @@ final class TsdbPartitionReader(path: String, part: TsdbSeriesPartition,
   private var chunkIt: Iterator[IndexReader.ChunkRef] = Iterator.empty
   private var labelsMap: ArrayBasedMapData = _
   private var deleted: Seq[Tombstones.Interval] = Nil
+  private var seriesLabels: Map[String, String] = Map.empty
+  private var lastTime = Long.MinValue
   private var ts: Array[Long] = Array.emptyLongArray
   private var vs: Array[Double] = Array.emptyDoubleArray
   private var i = 0
@@ -239,7 +296,39 @@ final class TsdbPartitionReader(path: String, part: TsdbSeriesPartition,
       f.readFully(data, fromHead, len - fromHead)
     }
     val decoded = XorChunk.decode(data)
-    ts = decoded._1; vs = decoded._2; i = 0
+    collapse(decoded._1, decoded._2)
+  }
+
+  /** Install a decoded chunk as the current run, one sample per
+    * timestamp: equal timestamps keep the least non-marker value (a
+    * marker only when every copy is one) — the rule of the whole-DB
+    * merge's `min(value)` — and a timestamp below the series' previous
+    * one fails, naming the block. Equal timestamps across a chunk
+    * boundary stay: the index shows them, and the merge takes them. */
+  private def collapse(cts: Array[Long], cvs: Array[Double]): Unit = {
+    var n = 0
+    var k = 0
+    while (k < cts.length) {
+      val t = cts(k)
+      if (n > 0 && t == cts(n - 1)) {
+        val a = cvs(n - 1)
+        val b = cvs(k)
+        if (TsdbSchema.isStaleMarker(a) ||
+            (!TsdbSchema.isStaleMarker(b) && b != a &&
+              java.lang.Double.compare(b, a) < 0))
+          cvs(n - 1) = b
+      } else {
+        if (t < lastTime)
+          throw new IllegalStateException(
+            s"block $path: series $seriesLabels goes back in time " +
+              s"($t after $lastTime)")
+        cts(n) = t; cvs(n) = cvs(k); lastTime = t; n += 1
+      }
+      k += 1
+    }
+    ts = if (n == cts.length) cts else java.util.Arrays.copyOf(cts, n)
+    vs = if (n == cvs.length) cvs else java.util.Arrays.copyOf(cvs, n)
+    i = 0
   }
 
   private def nextSeries(): Boolean = {
@@ -255,6 +344,8 @@ final class TsdbPartitionReader(path: String, part: TsdbSeriesPartition,
     }
     chunkIt = s.chunks.iterator
     deleted = s.deleted
+    seriesLabels = s.labels
+    lastTime = Long.MinValue
     true
   }
 
@@ -283,7 +374,7 @@ final class TsdbPartitionReader(path: String, part: TsdbSeriesPartition,
         // (UnsafeRow canonicalizes NaN payloads downstream)
         case "value" =>
           row.update(f,
-            if (graft.tsdb.TsdbSchema.isStaleMarker(vs(i))) null else vs(i))
+            if (TsdbSchema.isStaleMarker(vs(i))) null else vs(i))
         case "labels" => row.update(f, labelsMap)
       }
       f += 1

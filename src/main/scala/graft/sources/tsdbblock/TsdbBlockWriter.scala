@@ -551,8 +551,10 @@ object TsdbBlockWriter {
     * directories — the operation Prometheus runs when the head exceeds
     * its window, here as WAL reader ∘ block writer. Duplicate
     * (series, time) pairs (possible across overlapping WAL segments)
-    * pass through; [[TsdbDb.read]] dedupes at query time, as
-    * Prometheus's storage merge does. */
+    * are written as they are: adjacent equal timestamps inside one
+    * chunk, which the block reader collapses by the whole-DB merge's
+    * rule, or a chunk boundary at one timestamp, which the index shows
+    * and [[TsdbDb.read]] then merges. */
   def compactWal(spark: SparkSession, walDir: String, destRoot: String,
                  blockRangeMs: Long = 2L * 3600 * 1000): Seq[String] =
     write(spark.read.format("tsdb-wal").load(walDir), destRoot, blockRangeMs,

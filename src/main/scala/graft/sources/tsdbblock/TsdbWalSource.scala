@@ -62,8 +62,9 @@ final case class TsdbWalPartition(segment: String, from: Long, until: Long)
     extends InputPartition
 
 /** Per-WAL planning cache: ONE fused driver pass builds the global
-  * ref→labels dictionary, the head-tombstone map and the intra-segment
-  * split ladder, and ONE broadcast ships the dictionaries as a compact
+  * ref→labels dictionary, the head-tombstone map, the intra-segment
+  * split ladder and the sample facts the whole-DB merge decides on
+  * ([[SourceFacts]]), and ONE broadcast ships the dictionaries as a compact
   * byte blob ([[WalReader.WalDicts]]). Keyed by the segment signature
   * (name, length, mtime) — the WAL writer only ever creates NEW segment
   * or checkpoint files, so any mutation changes the signature. Without
@@ -80,7 +81,8 @@ private[tsdbblock] object WalDictCache {
       dictsB: Broadcast[WalReader.WalDicts],
       segments: Seq[String],
       segmentBytes: Map[String, Long],
-      splitCandidates: Map[String, Array[Long]])
+      splitCandidates: Map[String, Array[Long]],
+      facts: SourceFacts)
 
   private val MaxEntries = 8
   private val cache =
@@ -103,7 +105,7 @@ private[tsdbblock] object WalDictCache {
         val dictsB = spark.sparkContext.broadcast(
           WalReader.WalDicts(meta.series, meta.stones))
         val e = Entry(sig, dictsB, meta.segments, meta.segmentBytes,
-          meta.splitCandidates)
+          meta.splitCandidates, meta.facts)
         cache(walDir) = e
         if (cache.size > MaxEntries) {
           val (k, evicted) = cache.head
@@ -296,10 +298,32 @@ object TsdbWalRecords {
   }
 }
 
+/** What the whole-DB merge needs to know about one source, from
+  * metadata the driver reads anyway (a block's index, the WAL's
+  * planning pass): the inclusive time range of its float samples (None
+  * when it holds none) and whether it provably holds no two samples of
+  * one series at one timestamp. */
+final case class SourceFacts(range: Option[(Long, Long)],
+                             duplicateFree: Boolean) {
+  def overlaps(that: SourceFacts): Boolean =
+    range.zip(that.range).exists { case ((lo, hi), (lo2, hi2)) =>
+      lo <= hi2 && lo2 <= hi }
+}
+
 /** The reference's whole-DB view (hello.go:429-447: `DBReadOnly.Querier`
-  * over all blocks + the WAL head): union of every block directory and
-  * the WAL, deduplicated on (series, time) — Prometheus's storage merge
-  * keeps one sample per series-timestamp across overlapping sources.
+  * over all blocks + the WAL head): one sample per (series, time)
+  * across every block directory and the WAL, as Prometheus's storage
+  * merge keeps.
+  *
+  * Like that merge, it pays for deduplication only where two samples
+  * can collide. At construction the driver splits the sources: a
+  * source whose time range overlaps no other source's, and which
+  * provably holds no internal duplicate ([[SourceFacts]]), is unioned
+  * straight into the output; the rest go through one (series, time)
+  * aggregate, a shuffle. A disjoint, duplicate-free directory — blocks
+  * cut on time windows plus a newer WAL, the common case — therefore
+  * reads as a plain union of scans. Either way the frame has the scan
+  * schema and the same rows.
   */
 object TsdbDb {
   import org.apache.spark.sql.{Column, DataFrame}
@@ -317,7 +341,10 @@ object TsdbDb {
     * applied as a residual row filter so WAL rows and negative kinds get
     * identical semantics. Absent label ≡ "" throughout (hello.go:339-349).
     * A missing `dbDir` is an error naming it; a DB directory with neither
-    * blocks nor a WAL answers no rows. */
+    * blocks nor a WAL answers no rows.
+    *
+    * Which sources merge is decided per source, from the whole
+    * directory's facts, before any matcher narrows the series. */
   def select(spark: SparkSession, dbDir: String,
              matchers: Seq[Matcher]): DataFrame = {
     val opts = matchers.collect {
@@ -337,21 +364,25 @@ object TsdbDb {
     val blockDirs = WalReader.listDir(dbDir, "TSDB")
       .filter(f => f.isDirectory && new java.io.File(f, "index").isFile)
       .map(_.getPath).sorted
-    val parts =
-      blockDirs.map(d =>
-        spark.read.format("tsdb-block").options(opts).load(d)) ++
-        (if (new java.io.File(root, "wal").isDirectory)
-          Seq(spark.read.format("tsdb-wal").load(s"$dbDir/wal"))
-        else Nil)
-    // a DB directory with neither blocks nor a WAL holds no samples
-    val all = parts.reduceOption(_ unionByName _).getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        TsdbBlockSource.schema))
+    val sources =
+      blockDirs.toSeq.map(d =>
+        (spark.read.format("tsdb-block").options(opts).load(d),
+          BlockIndexCache.get(d).facts)) ++
+        (if (new java.io.File(root, "wal").isDirectory) {
+          val wal = s"$dbDir/wal"
+          Seq((spark.read.format("tsdb-wal").load(wal),
+            WalDictCache.get(spark, wal).facts))
+        } else Nil)
     // label-only predicates select whole series, so filtering commutes
     // with the (series, time) dedup — apply before it, shrinking the
     // shuffle to the matched series
-    val union = matchers.foldLeft(all)((d, m) => d.where(residual(m)))
+    def filtered(df: DataFrame) =
+      matchers.foldLeft(df)((d, m) => d.where(residual(m)))
+    val (merged, passed) = sources.indices.partition { i =>
+      val f = sources(i)._2
+      !f.duplicateFree ||
+        sources.indices.exists(j => j != i && f.overlaps(sources(j)._2))
+    }
     // maps aren't comparable: dedup on the sorted entry list, then
     // rebuild the map. One shuffle; at scale this is the same
     // merge-dedup Prometheus does per queried chunk, done set-wise.
@@ -361,12 +392,19 @@ object TsdbDb {
     // marker — but unlike the window it partial-aggregates map-side
     // (duplicates collapse BEFORE the exchange) and needs no
     // per-partition sort.
-    union
-      .withColumn("_entries", array_sort(map_entries(col("labels"))))
-      .groupBy(col("_entries"), col("time"))
-      .agg(min(col("value")).as("value"))
-      .select(col("time"), col("value"),
-        map_from_entries(col("_entries")).as("labels"))
+    val deduped = merged.map(i => filtered(sources(i)._1))
+      .reduceOption(_ unionByName _)
+      .map(_.withColumn("_entries", array_sort(map_entries(col("labels"))))
+        .groupBy(col("_entries"), col("time"))
+        .agg(min(col("value")).as("value"))
+        .select(col("time"), col("value"),
+          map_from_entries(col("_entries")).as("labels")))
+    (passed.map(i => filtered(sources(i)._1)) ++ deduped)
+      .reduceOption(_ unionByName _)
+      // a DB directory with neither blocks nor a WAL holds no samples
+      .getOrElse(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        TsdbBlockSource.schema))
   }
 
   /** The whole-DB NATIVE-HISTOGRAM view — the histogram twin of [[read]]:

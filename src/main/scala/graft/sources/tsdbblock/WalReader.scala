@@ -223,13 +223,24 @@ object WalReader {
       stones: Map[Long, Seq[Tombstones.Interval]],
       segments: Seq[String],
       segmentBytes: Map[String, Long],
-      splitCandidates: Map[String, Array[Long]])
+      splitCandidates: Map[String, Array[Long]],
+      facts: SourceFacts)
 
   private[tsdbblock] val CandidateStrideBytes: Long = 256L * 1024
 
+  /** The pass also walks the float samples (kind 2) for the whole-DB
+    * merge decision ([[TsdbDb.select]]): per ref, the time range, the
+    * last timestamp in replay order and whether every timestamp
+    * strictly increased. `facts` then covers only refs the dictionary
+    * defines (the scan drops orphans): their overall time range, and
+    * duplicate-free when each of them strictly increases and no two of
+    * them that hold samples share a label set. */
   def walMeta(walDir: String): WalMeta = {
     val series = mutable.Map.empty[Long, Map[String, String]]
     val stones = mutable.ArrayBuffer.empty[WalStone]
+    // ref → (min, max, last) time; refs whose times ever fail to rise
+    val times = mutable.LongMap.empty[Array[Long]]
+    val unordered = mutable.Set.empty[Long]
     val segs = segments(walDir)
     val segBytes = mutable.Map.empty[String, Long]
     val cands = mutable.Map.empty[String, Array[Long]]
@@ -249,6 +260,14 @@ object WalReader {
               val ref = r.be64()
               series(ref) = readLabels(r)
             }
+          case 2 => foreachSample(rec) { (ref, t, _) =>
+            times.get(ref) match {
+              case None => times(ref) = Array(t, t, t)
+              case Some(m) =>
+                if (t <= m(2)) unordered += ref
+                m(0) = math.min(m(0), t); m(1) = math.max(m(1), t); m(2) = t
+            }
+          }
           case 3 => stones ++= stonesOfRecord(rec)
           case _ =>
         }
@@ -259,7 +278,13 @@ object WalReader {
       .view.mapValues(ss =>
         Tombstones.merge(ss.map(s => Tombstones.Interval(s.mint, s.maxt))))
       .toMap
-    WalMeta(series.toMap, stoneMap, segs, segBytes.toMap, cands.toMap)
+    val live = times.filter { case (ref, _) => series.contains(ref) }
+    val range = live.valuesIterator.map(m => (m(0), m(1)))
+      .reduceOption((a, b) => (math.min(a._1, b._1), math.max(a._2, b._2)))
+    val duplicateFree = !live.keysIterator.exists(unordered) &&
+      live.keysIterator.map(series).toSet.size == live.size
+    WalMeta(series.toMap, stoneMap, segs, segBytes.toMap, cands.toMap,
+      SourceFacts(range, duplicateFree))
   }
 
   /** The global WAL dictionaries as ONE compact byte blob, decoded
@@ -485,19 +510,26 @@ object WalReader {
   /** The float samples of ONE reassembled record (empty for other
     * record kinds). */
   def samplesOfRecord(rec: Array[Byte]): Seq[WalSample] = {
-    if (rec.isEmpty || rec(0) != 2) return Nil
+    val out = mutable.ArrayBuffer.empty[WalSample]
+    foreachSample(rec) { (ref, time, vbits) =>
+      out += WalSample(ref, time, java.lang.Double.longBitsToDouble(vbits))
+    }
+    out.toSeq
+  }
+
+  /** `f(ref, time, value bits)` for each float sample of ONE reassembled
+    * record, without allocating a sample (nothing for other kinds). */
+  private def foreachSample(rec: Array[Byte])(f: (Long, Long, Long) => Unit)
+      : Unit = {
+    if (rec.isEmpty || rec(0) != 2) return
     val r = new ByteReader(rec, 1)
-    if (r.pos >= rec.length) return Nil
+    if (r.pos >= rec.length) return
     val baseRef = r.be64()
     val baseTime = r.be64() // int64 BE
-    val out = mutable.ArrayBuffer.empty[WalSample]
     while (r.pos < rec.length) {
       val dref = r.varint()
       val dtime = r.varint()
-      val vbits = r.be64()
-      out += WalSample(baseRef + dref, baseTime + dtime,
-        java.lang.Double.longBitsToDouble(vbits))
+      f(baseRef + dref, baseTime + dtime, r.be64())
     }
-    out.toSeq
   }
 }

@@ -12,9 +12,10 @@ import graft.model.Sample
   * concrete schema, then fill rows — commented path hello.go:216-233, and
   * what FrostDB's dynamic columns do incrementally inside `table.Write`)
   * map to:
-  *   pass 1: `select(explode(map_keys(labels))).distinct()` — a map-side
-  *           partial-aggregated distinct; at 100 TB this is a cheap
-  *           shuffle of label-NAME cardinality (thousands), not data size.
+  *   pass 1: `select(map_keys(labels)).distinct()`, flattened on the
+  *           driver — a map-side partial-aggregated distinct; at 100 TB
+  *           this is a cheap shuffle of label-name-SET cardinality
+  *           (thousands), not data size.
   *   pass 2: one projection `labels[name] AS labels.name` per discovered
   *           name — no shuffle at all; executed columnar + codegen'd.
   *
@@ -32,13 +33,19 @@ import graft.model.Sample
 object TsdbIngest {
   import TsdbSchema._
 
-  /** Pass 1 — discover the label-name universe (hello.go:216-233). */
+  /** Pass 1 — discover the label-name universe (hello.go:216-233): the
+    * distinct label-name SETS, flattened on the driver. A distinct over
+    * a column of the input's own grouping keys lets Catalyst drop an
+    * aggregate beneath it (`RemoveRedundantAggregates`), so discovery
+    * over [[graft.sources.tsdbblock.TsdbDb.read]] never pays for the
+    * (series, time) merge. */
   def labelNames(longForm: DataFrame): Seq[String] =
     longForm
-      .select(explode(map_keys(col(LabelsCol))).as("name"))
+      .select(map_keys(col(LabelsCol)).as("names"))
       .distinct()
-      .collect() // label-NAME cardinality: small by construction
-      .map(_.getString(0))
+      .collect() // distinct label-name sets: small by construction
+      .flatMap(r => Option(r.getSeq[String](0)).getOrElse(Nil))
+      .distinct
       .sorted
       .toSeq
 
