@@ -62,10 +62,47 @@ object TsdbBlockSource {
   * every planning of every scan over the block and by the whole-DB
   * merge decision — the block twin of [[WalDictCache]]. Blocks are
   * immutable once written (compaction writes new directories), so the
-  * signature only changes when the index does. Bounded LRU. */
-private[tsdbblock] object BlockIndexCache {
+  * signature only changes when the index does.
+  *
+  * An LRU bounded by the heap its parsed series hold, at most
+  * `budgetBytes`: each entry is charged [[BlockIndexCache.bytesOf]],
+  * least recently used entries go first, and an entry over the budget
+  * on its own is returned but not kept. */
+private[tsdbblock] class BlockIndexCache(budgetBytes: Long) {
+  import BlockIndexCache.Entry
+
+  private val cache =
+    scala.collection.mutable.LinkedHashMap.empty[String, Entry]
+  private var held = 0L
+
+  def get(blockDir: String): Entry = synchronized {
+    val f = new java.io.File(blockDir, "index")
+    val sig = (f.length(), f.lastModified())
+    val hit = cache.remove(f.getPath) // re-insert on hit: LRU order
+    hit.foreach(old => held -= old.bytes)
+    val e = hit.filter(_.sig == sig)
+      .getOrElse(Entry(sig, IndexReader.read(f.getPath)))
+    cache(f.getPath) = e
+    held += e.bytes
+    while (held > budgetBytes) {
+      val (k, old) = cache.head
+      cache.remove(k)
+      held -= old.bytes
+    }
+    e
+  }
+
+  private[tsdbblock] def cachedPaths: Seq[String] =
+    synchronized(cache.keys.toSeq)
+}
+
+/** The driver's cache, bounded at a thirty-second of the maximum heap. */
+private[tsdbblock] object BlockIndexCache
+    extends BlockIndexCache(Runtime.getRuntime.maxMemory / 32) {
   final case class Entry(sig: (Long, Long),
                          series: Seq[IndexReader.SeriesEntry]) {
+    val bytes: Long = bytesOf(series)
+
     /** The range is the index's chunk bounds, not meta.json's (whose
       * maxTime is the slice ceiling). Duplicate-free when label sets
       * are unique and each series' chunks are strictly ordered and
@@ -82,26 +119,16 @@ private[tsdbblock] object BlockIndexCache {
     }
   }
 
-  // enough entries for every block of a data directory (the merge
-  // decision and each scan's planning read them all), bounded by the
-  // series entries held rather than a block count alone
-  private val MaxEntries = 64
-  private val MaxSeries = 1L << 21
-  private val cache =
-    scala.collection.mutable.LinkedHashMap.empty[String, Entry]
-
-  def get(blockDir: String): Entry = synchronized {
-    val f = new java.io.File(blockDir, "index")
-    val sig = (f.length(), f.lastModified())
-    val e = cache.remove(f.getPath) // re-insert on hit: LRU order
-      .filter(_.sig == sig)
-      .getOrElse(Entry(sig, IndexReader.read(f.getPath)))
-    cache(f.getPath) = e
-    while (cache.size > 1 && (cache.size > MaxEntries ||
-        cache.valuesIterator.map(_.series.size.toLong).sum > MaxSeries))
-      cache.remove(cache.head._1)
-    e
-  }
+  /** The heap parsed series hold, from their shape: label strings are
+    * shared through the index's symbol table, so a series costs its
+    * entry, map and chunk list plus a map entry per label and a
+    * [[IndexReader.ChunkRef]] per chunk. The constants round up
+    * `SizeEstimator` measurements of parsed indexes (160 to 20,000
+    * series, 1 to 50 chunks and 4 to 12 labels each), which came to
+    * about 200 + 70 per label + 56 per chunk bytes. */
+  def bytesOf(series: Seq[IndexReader.SeriesEntry]): Long =
+    series.iterator.map(s => 256L + 80L * s.labels.size + 64L * s.chunks.size)
+      .sum
 }
 
 final class TsdbBlockTable(path: String, spark: SparkSession)

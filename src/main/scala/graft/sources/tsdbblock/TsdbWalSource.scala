@@ -62,10 +62,11 @@ final case class TsdbWalPartition(segment: String, from: Long, until: Long)
     extends InputPartition
 
 /** Per-WAL planning cache: ONE fused driver pass builds the global
-  * ref→labels dictionary, the head-tombstone map, the intra-segment
-  * split ladder and the sample facts the whole-DB merge decides on
-  * ([[SourceFacts]]), and ONE broadcast ships the dictionaries as a compact
-  * byte blob ([[WalReader.WalDicts]]). Keyed by the segment signature
+  * ref→labels dictionary, the head-tombstone map and the intra-segment
+  * split ladder (plus, only when the whole-DB merge asks, the sample
+  * facts it decides on, [[SourceFacts]]), and ONE broadcast ships the
+  * dictionaries as a compact byte blob ([[WalReader.WalDicts]]). Keyed
+  * by the segment signature
   * (name, length, mtime) — the WAL writer only ever creates NEW segment
   * or checkpoint files, so any mutation changes the signature. Without
   * this cache every execution of every scan over the same WAL re-read
@@ -82,7 +83,7 @@ private[tsdbblock] object WalDictCache {
       segments: Seq[String],
       segmentBytes: Map[String, Long],
       splitCandidates: Map[String, Array[Long]],
-      facts: SourceFacts)
+      facts: Option[SourceFacts])
 
   private val MaxEntries = 8
   private val cache =
@@ -94,14 +95,18 @@ private[tsdbblock] object WalDictCache {
       (p, f.length(), f.lastModified())
     }
 
-  def get(spark: SparkSession, walDir: String): Entry = synchronized {
+  /** `withFacts` walks the sample records too; a cached entry without
+    * the facts is then rebuilt. Only [[TsdbDb.select]] asks for them,
+    * and it does before planning any scan of the WAL. */
+  def get(spark: SparkSession, walDir: String,
+          withFacts: Boolean = false): Entry = synchronized {
     val sig = signature(walDir)
     cache.remove(walDir) match { // re-insert on hit: LRU order
-      case Some(e) if e.sig == sig =>
+      case Some(e) if e.sig == sig && (e.facts.isDefined || !withFacts) =>
         cache(walDir) = e; e
       case stale =>
         stale.foreach(_.dictsB.unpersist(false))
-        val meta = WalReader.walMeta(walDir)
+        val meta = WalReader.walMeta(walDir, withFacts)
         val dictsB = spark.sparkContext.broadcast(
           WalReader.WalDicts(meta.series, meta.stones))
         val e = Entry(sig, dictsB, meta.segments, meta.segmentBytes,
@@ -298,11 +303,11 @@ object TsdbWalRecords {
   }
 }
 
-/** What the whole-DB merge needs to know about one source, from
-  * metadata the driver reads anyway (a block's index, the WAL's
-  * planning pass): the inclusive time range of its float samples (None
-  * when it holds none) and whether it provably holds no two samples of
-  * one series at one timestamp. */
+/** What the whole-DB merge needs to know about one source, read on
+  * the driver (a block's index; the WAL's planning pass, extended to
+  * walk the sample records): the inclusive time range of its float
+  * samples (None when it holds none) and whether it provably holds no
+  * two samples of one series at one timestamp. */
 final case class SourceFacts(range: Option[(Long, Long)],
                              duplicateFree: Boolean) {
   def overlaps(that: SourceFacts): Boolean =
@@ -320,10 +325,16 @@ final case class SourceFacts(range: Option[(Long, Long)],
   * source whose time range overlaps no other source's, and which
   * provably holds no internal duplicate ([[SourceFacts]]), is unioned
   * straight into the output; the rest go through one (series, time)
-  * aggregate, a shuffle. A disjoint, duplicate-free directory — blocks
-  * cut on time windows plus a newer WAL, the common case — therefore
-  * reads as a plain union of scans. Either way the frame has the scan
-  * schema and the same rows.
+  * aggregate, a shuffle. A disjoint, duplicate-free directory (say,
+  * blocks cut on time windows plus a WAL that starts after the newest
+  * block) therefore reads as a plain union of scans. Either way the
+  * frame has the scan schema and the same rows.
+  *
+  * The decision costs one serial driver walk of every WAL float sample,
+  * once per WAL segment signature (the [[WalDictCache]] entry keeps the
+  * facts). The walk gives the WAL's range, which lets every block it
+  * does not overlap pass through; where the WAL overlaps every block,
+  * it buys nothing.
   */
 object TsdbDb {
   import org.apache.spark.sql.{Column, DataFrame}
@@ -371,7 +382,7 @@ object TsdbDb {
         (if (new java.io.File(root, "wal").isDirectory) {
           val wal = s"$dbDir/wal"
           Seq((spark.read.format("tsdb-wal").load(wal),
-            WalDictCache.get(spark, wal).facts))
+            WalDictCache.get(spark, wal, withFacts = true).facts.get))
         } else Nil)
     // label-only predicates select whole series, so filtering commutes
     // with the (series, time) dedup — apply before it, shrinking the

@@ -224,18 +224,20 @@ object WalReader {
       segments: Seq[String],
       segmentBytes: Map[String, Long],
       splitCandidates: Map[String, Array[Long]],
-      facts: SourceFacts)
+      facts: Option[SourceFacts])
 
   private[tsdbblock] val CandidateStrideBytes: Long = 256L * 1024
 
-  /** The pass also walks the float samples (kind 2) for the whole-DB
-    * merge decision ([[TsdbDb.select]]): per ref, the time range, the
-    * last timestamp in replay order and whether every timestamp
-    * strictly increased. `facts` then covers only refs the dictionary
-    * defines (the scan drops orphans): their overall time range, and
+  /** With `withFacts` the pass also walks every float sample (kind 2)
+    * for the whole-DB merge decision ([[TsdbDb.select]]), the only
+    * caller that reads them: per ref, the time range, the last
+    * timestamp in replay order and whether every timestamp strictly
+    * increased. `facts` then covers only refs the dictionary defines
+    * (the scan drops orphans): their overall time range, and
     * duplicate-free when each of them strictly increases and no two of
-    * them that hold samples share a label set. */
-  def walMeta(walDir: String): WalMeta = {
+    * them that hold samples share a label set. Without it the sample
+    * records are skipped and `facts` is None. */
+  def walMeta(walDir: String, withFacts: Boolean = false): WalMeta = {
     val series = mutable.Map.empty[Long, Map[String, String]]
     val stones = mutable.ArrayBuffer.empty[WalStone]
     // ref → (min, max, last) time; refs whose times ever fail to rise
@@ -260,7 +262,7 @@ object WalReader {
               val ref = r.be64()
               series(ref) = readLabels(r)
             }
-          case 2 => foreachSample(rec) { (ref, t, _) =>
+          case 2 if withFacts => foreachSample(rec) { (ref, t, _) =>
             times.get(ref) match {
               case None => times(ref) = Array(t, t, t)
               case Some(m) =>
@@ -278,13 +280,16 @@ object WalReader {
       .view.mapValues(ss =>
         Tombstones.merge(ss.map(s => Tombstones.Interval(s.mint, s.maxt))))
       .toMap
-    val live = times.filter { case (ref, _) => series.contains(ref) }
-    val range = live.valuesIterator.map(m => (m(0), m(1)))
-      .reduceOption((a, b) => (math.min(a._1, b._1), math.max(a._2, b._2)))
-    val duplicateFree = !live.keysIterator.exists(unordered) &&
-      live.keysIterator.map(series).toSet.size == live.size
+    val facts = Option.when(withFacts) {
+      val live = times.filter { case (ref, _) => series.contains(ref) }
+      SourceFacts(
+        live.valuesIterator.map(m => (m(0), m(1))).reduceOption((a, b) =>
+          (math.min(a._1, b._1), math.max(a._2, b._2))),
+        !live.keysIterator.exists(unordered) &&
+          live.keysIterator.map(series).toSet.size == live.size)
+    }
     WalMeta(series.toMap, stoneMap, segs, segBytes.toMap, cands.toMap,
-      SourceFacts(range, duplicateFree))
+      facts)
   }
 
   /** The global WAL dictionaries as ONE compact byte blob, decoded

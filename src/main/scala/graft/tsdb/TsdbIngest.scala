@@ -36,9 +36,11 @@ object TsdbIngest {
   /** Pass 1 — discover the label-name universe (hello.go:216-233): the
     * distinct label-name SETS, flattened on the driver. A distinct over
     * a column of the input's own grouping keys lets Catalyst drop an
-    * aggregate beneath it (`RemoveRedundantAggregates`), so discovery
-    * over [[graft.sources.tsdbblock.TsdbDb.read]] never pays for the
-    * (series, time) merge. */
+    * aggregate directly beneath it (`RemoveRedundantAggregates`). Over
+    * [[graft.sources.tsdbblock.TsdbDb.read]] that drops the (series,
+    * time) merge only when every source merges; where some sources pass
+    * through and some merge, the distinct sits above the union and the
+    * merged part's aggregate still runs (ROADMAP direction 6(d)). */
   def labelNames(longForm: DataFrame): Seq[String] =
     longForm
       .select(map_keys(col(LabelsCol)).as("names"))
