@@ -3,6 +3,7 @@ package graft.sources.tsdbblock
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
 /** Writer for raw Prometheus TSDB block directories — the write twin of
@@ -43,7 +44,10 @@ object TsdbBlockWriter {
 
   // ---- Gorilla XOR chunk encoder (inverse of XorChunk.decode) --------
 
-  /** Encode one chunk's samples (≤ 65535; callers cap at 120). */
+  /** Encode one chunk's samples (≤ 65535; callers cap at 120). Values
+    * are written as their RAW bits, so a staleness marker
+    * ([[graft.tsdb.TsdbSchema.StaleNaNBits]]) stays one on disk and on
+    * the wire, not an ordinary NaN. */
   def encodeXorChunk(ts: Array[Long], vs: Array[Double]): Array[Byte] = {
     val num = ts.length
     require(num == vs.length && num <= 0xffff, s"bad chunk size $num")
@@ -52,13 +56,13 @@ object TsdbBlockWriter {
     if (num == 0) return w.toBytes
 
     w.varint(ts(0))
-    w.writeBits(java.lang.Double.doubleToLongBits(vs(0)), 64)
+    w.writeBits(java.lang.Double.doubleToRawLongBits(vs(0)), 64)
     if (num == 1) return w.toBytes
 
     var leading = -1; var trailing = 0 // -1 ⇒ no reusable window yet
-    var prevBits = java.lang.Double.doubleToLongBits(vs(0))
+    var prevBits = java.lang.Double.doubleToRawLongBits(vs(0))
     def writeValue(v: Double): Unit = {
-      val bits = java.lang.Double.doubleToLongBits(v)
+      val bits = java.lang.Double.doubleToRawLongBits(v)
       val xor = prevBits ^ bits
       prevBits = bits
       if (xor == 0) w.writeBit(0)
@@ -182,24 +186,25 @@ object TsdbBlockWriter {
     // UTF-8 BYTE order, fewer labels first): the injective NUL-escaped
     // key under unsigned-byte ordering — a bare-NUL join is ambiguous
     // for NUL-bearing values, and Java String order (UTF-16 units)
-    // diverges from Go's byte order above the BMP
+    // diverges from Go's byte order above the BMP. Names sort in that
+    // byte order too, as `sort_array(map_entries(labels))` does in
+    // [[write]].
+    import graft.tsdb.RemoteRead.{labelSortKey, utf8ByteOrder}
     val series = seriesIn.toIndexedSeq
-      .map(s => s.copy(labels = s.labels.sortBy(_._1)))
-      .sortBy(s => graft.tsdb.RemoteRead.labelSortKey(s.labels))(
-        graft.tsdb.RemoteRead.utf8ByteOrder)
+      .map(s => s.copy(labels = s.labels.sortBy(_._1)(utf8ByteOrder)))
+      .sortBy(s => labelSortKey(s.labels))(utf8ByteOrder)
     writeBlockPresorted(dir, series.iterator, compaction, maxTimeCeil)
   }
 
   /** [[writeBlock]]'s streaming core: `seriesIt` must arrive already in
     * index order ([[graft.tsdb.RemoteRead.labelSortKey]] under
     * [[graft.tsdb.RemoteRead.utf8ByteOrder]], each series' labels
-    * name-sorted). Chunk bytes stream to `chunks/000001` AS EACH SERIES
-    * IS CONSUMED; only the per-series skeleton (labels + chunk metas —
-    * a few dozen bytes) is retained for the index sections. Per-task
-    * heap is therefore O(series metadata), NOT O(samples): the Spark
-    * write path used to materialize every (slice, series, samples) row
-    * hashed to the task before assembling blocks, an OOM at a 100 TB
-    * slice; now the sample payload exists only row-by-row. */
+    * name-sorted in that byte order). Chunk bytes stream to
+    * `chunks/000001` AS EACH SERIES IS CONSUMED; only the per-series
+    * skeleton (labels + chunk metas — a few dozen bytes) is retained
+    * for the index sections. Per-task heap is therefore O(series
+    * metadata), NOT O(samples): the sample payload exists only one
+    * series at a time. */
   private[tsdbblock] def writeBlockPresorted(dir: String,
       seriesIt: Iterator[SeriesData],
       compaction: CompactionMeta = CompactionMeta(),
@@ -554,7 +559,8 @@ object TsdbBlockWriter {
     * are written as they are: adjacent equal timestamps inside one
     * chunk, which the block reader collapses by the whole-DB merge's
     * rule, or a chunk boundary at one timestamp, which the index shows
-    * and [[TsdbDb.read]] then merges. */
+    * and [[TsdbDb.read]] then merges. A staleness marker (a NULL value
+    * in the WAL scan) is written as the marker and reads back NULL. */
   def compactWal(spark: SparkSession, walDir: String, destRoot: String,
                  blockRangeMs: Long = 2L * 3600 * 1000): Seq[String] =
     write(spark.read.format("tsdb-wal").load(walDir), destRoot, blockRangeMs,
@@ -600,140 +606,143 @@ object TsdbBlockWriter {
     names
   }
 
-  /** Write the long-form frame `(time LONG ms, value DOUBLE,
-    * labels MAP)` as one or more TSDB block directories under `root`,
-    * sliced by `blockRangeMs` (Prometheus's 2h default). ONE shuffle:
-    * samples group into (slice, series) with sorted sample arrays; each
-    * slice's series then land in one task (`repartition` on the slice
-    * key), which assembles its block directory independently — the
-    * compactor sharding model, no cross-task coordination. Returns the
-    * block dir names written. */
-  /** The write's GROUPING FRAME, factored out so its plan shape is
-    * testable (the write itself runs via mapPartitions + collect, so
-    * the plan never appears in a returned DataFrame): exactly ONE
-    * keyed exchange — `hashpartitioning(slice)` at the session's
-    * shuffle width — must serve both the (slice, labels) grouping
-    * (subset-of-clustering rule) and the one-block-per-task placement.
-    * PlanQualitySpec pins this. */
-  private[graft] def groupedForWrite(df: DataFrame, blockRangeMs: Long,
+  /** The write's PLACED, INDEX-ORDERED rows, factored out so its plan
+    * shape is testable (the write itself runs over the plan's rows, so
+    * the plan never appears in a returned DataFrame): one row per float
+    * or histogram sample, `(slice, entries, time, value, hist)`, where
+    * `entries` is the sorted `(key, value)` label list and exactly one
+    * of a marker-or-float `value` and a `hist` struct is set per kind.
+    *
+    * ONE exchange places the rows: `repartitionById` sends slice k to
+    * task k mod n (n = the session's shuffle width, pinned so AQE
+    * cannot coalesce the CPU-heavy encode), so consecutive slices —
+    * the blocks of one write — land in distinct tasks; a hash of the
+    * slice put neighbouring slices in one task. Inside a task the rows
+    * sort by (slice, entries, time, value, hist). Spark orders an array
+    * of (name, value) structs pairwise in UTF-8 byte order, shorter
+    * first — the order [[graft.tsdb.RemoteRead.labelSortKey]] gives
+    * under [[graft.tsdb.RemoteRead.utf8ByteOrder]] — so each slice's
+    * rows arrive as its block's series in index order, each series'
+    * samples time-ascending. PlanQualitySpec pins the one exchange. */
+  private[graft] def sortedForWrite(df: DataFrame, blockRangeMs: Long,
       hists: Option[Dataset[(Map[String, String],
-        WalReader.WalHistogram)]] = None)
-      : Dataset[(Long, Seq[(String, String)], Seq[(Long, Double)],
-          Seq[WalReader.WalHistogram])] = {
-    val spark = df.sparkSession
-    import spark.implicits._
+        WalReader.WalHistogram)]] = None): DataFrame = {
+    val width = df.sparkSession.sessionState.conf.numShufflePartitions
     def sliceOf(time: Column): Column =
       floor(time / lit(blockRangeMs.toDouble)).cast("long")
-    def sortedLabels(labels: Column): Column =
-      array_sort(transform(map_entries(labels),
-        e => struct(e.getField("key").as("_1"), e.getField("value").as("_2"))))
-    val histType = org.apache.spark.sql.Encoders
-      .product[WalReader.WalHistogram].schema
-    val floatLong = df.select(
+    val floats = df.select(
       sliceOf(col("time")).as("slice"),
-      sortedLabels(col("labels")).as("labels"),
-      struct(col("time").as("_1"), col("value").as("_2")).as("fs"),
-      lit(null).cast(histType).as("hs"))
-    // histogram samples ride the SAME grouping shuffle as the float
-    // samples (one union, one groupBy) — collect_list drops the null
-    // struct of the other kind, so each (slice, series) group lands with
-    // its float run and its histogram run side by side
-    val unioned = hists.fold(floatLong) { h =>
-      floatLong.unionByName(h.toDF("hlabels", "hist").select(
+      sort_array(map_entries(col("labels"))).as("entries"),
+      col("time"), col("value"),
+      lit(null).cast(HistEncoder.schema).as("hist"))
+    val all = hists.fold(floats) { h =>
+      floats.unionByName(h.toDF("labels", "hist").select(
         sliceOf(col("hist.time")).as("slice"),
-        sortedLabels(col("hlabels")).as("labels"),
-        lit(null).cast("struct<_1: long, _2: double>").as("fs"),
-        col("hist").as("hs")))
+        sort_array(map_entries(col("labels"))).as("entries"),
+        col("hist.time").as("time"), lit(null).cast("double").as("value"),
+        col("hist")))
     }
-    // ONE payload shuffle (was two): hash-partitioning on `slice` alone
-    // both satisfies the (slice, labels) grouping (a subset of the
-    // clustering keys co-locates every group) AND is already the
-    // one-block-per-task placement the old post-agg
-    // `.repartition(col("slice"))` re-shuffled the full aggregated
-    // payload to establish. The explicit width also pins the stage
-    // against AQE's byte-based coalescing, which squeezed the
-    // CPU-heavy block-encode stage to 2 tasks for 5 blocks on
-    // local[32] (measured on q111). At 100 TB this halves the bytes
-    // the block write moves across the network.
-    val grouped = unioned
-      .repartition(spark.sessionState.conf.numShufflePartitions,
-        col("slice"))
-      .groupBy(col("slice"), col("labels"))
-      // struct sort = field-by-field: fs by time; hs by (ref, time) —
-      // ref is constant within a series, so both land time-ascending
-      .agg(array_sort(collect_list(col("fs"))).as("samples"),
-        array_sort(collect_list(col("hs"))).as("hists"))
-      .as[(Long, Seq[(String, String)], Seq[(Long, Double)],
-           Seq[WalReader.WalHistogram])]
-    grouped
+    all.repartitionById(width, pmod(col("slice"), lit(width.toLong)).cast("int"))
+      .sortWithinPartitions(col("slice"), col("entries"), col("time"),
+        col("value"), col("hist"))
   }
 
+  private val HistEncoder =
+    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[WalReader.WalHistogram]()
+
+  /** Write the long-form frame `(time LONG ms, value DOUBLE,
+    * labels MAP)` — plus, given `hists`, native-histogram samples — as
+    * one TSDB block directory per `blockRangeMs` slice under `root`
+    * (Prometheus's 2h default). Returns the block dir names written.
+    *
+    * One sort, then a stream: [[sortedForWrite]] places each slice in
+    * its own task and orders its rows as the block's index; each task
+    * then walks its rows once, cutting a series where the (slice,
+    * labels) pair changes and a block where the slice does, into
+    * [[writeBlockPresorted]]. No aggregate collects a series' samples
+    * into an array, no row passes through an encoder (float samples
+    * are read straight off the sorted binary rows), and per-task heap
+    * stays O(one series + the block's skeleton) — Spark's external
+    * sort spills. The blocks are byte-identical to [[writeBlock]]'s
+    * over the same series (pinned by spec). A NULL value (the
+    * engine's staleness marker) is written as the marker
+    * ([[graft.tsdb.TsdbSchema.StaleNaNBits]]); equal timestamps in a
+    * series are written as they come, markers first and NaN last (the
+    * block reader collapses them by the whole-DB merge's rule). */
   def write(df: DataFrame, root: String,
             blockRangeMs: Long = 2L * 3600 * 1000,
             compaction: CompactionMeta = CompactionMeta(),
             hists: Option[Dataset[(Map[String, String],
               WalReader.WalHistogram)]] = None): Seq[String] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    // within each task, order rows by (slice, index order): the
-    // per-slice runs then STREAM into [[writeBlockPresorted]] one
-    // series at a time — per-task heap is O(one series + skeletons),
-    // not O(every slice hashed to the task) as the old
-    // `it.toSeq.groupBy` materialization was (a §5 OOM at a 100 TB
-    // slice, and the single-shuffle rewrite had made each task's pile
-    // BIGGER). Spark's external sort spills; the sample payload never
-    // piles up on the heap. The key is EXACTLY writeBlock's in-memory
-    // sort — labelSortKey over name-sorted labels, compared as UTF-8
-    // bytes (UTF8String binary order) — so the streamed block is
-    // byte-identical to the materialized one (pinned by spec).
-    val keyOf = udf((labels: Seq[(String, String)]) =>
-      graft.tsdb.RemoteRead.labelSortKey(labels.sortBy(_._1)))
-    val grouped = groupedForWrite(df, blockRangeMs, hists)
-      .toDF("slice", "labels", "samples", "hists")
-      .sortWithinPartitions(col("slice"), keyOf(col("labels")))
-      .as[(Long, Seq[(String, String)], Seq[(Long, Double)],
-           Seq[WalReader.WalHistogram])]
+    val rows = sortedForWrite(df, blockRangeMs, hists)
+    val qe = rows.queryExecution
     // write-side plan evidence for the optimization rounds (see
-    // groupedForWrite's scaladoc) — dump it on demand
+    // sortedForWrite's scaladoc) — dump it on demand
     if (sys.env.contains("SPARK_GRAFT_EXPLAIN_WRITES"))
-      System.err.println("=== TsdbBlockWriter.write grouped plan ===\n" +
-        grouped.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-    val names = grouped.mapPartitions { it =>
-      val buf = it.buffered
-      new Iterator[String] {
-        override def hasNext: Boolean = buf.hasNext
-        override def next(): String = {
-          val sliceId = buf.head._1
-          // name = ULID from (root, slice); if that dir already exists
-          // (same-root recompaction — e.g. leveling 5×2h blocks into the
-          // 10h block whose slice index collides with parent slice 0),
-          // salt deterministically until fresh so an existing block is
-          // never overwritten in place
-          var name = deterministicUlid(s"$root/$sliceId")
-          var salt = 0
-          while (new java.io.File(root, name).exists()) {
-            salt += 1
-            name = deterministicUlid(s"$root/$sliceId#$salt")
-          }
-          val run: Iterator[SeriesData] = new Iterator[SeriesData] {
-            override def hasNext: Boolean =
-              buf.hasNext && buf.head._1 == sliceId
-            override def next(): SeriesData = {
-              val (_, labels, samples, hs) = buf.next()
-              SeriesData(labels.sortBy(_._1), samples.map(_._1).toArray,
-                samples.map(_._2).toArray, hs)
+      System.err.println("=== TsdbBlockWriter.write sorted plan ===\n" +
+        qe.explainString(org.apache.spark.sql.execution.FormattedMode))
+    val histEncoder = HistEncoder.resolveAndBind()
+    val histFields = HistEncoder.schema.length
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+        Some("TsdbBlockWriter.write")) {
+      qe.toRdd.mapPartitions { it =>
+        val toHist = histEncoder.createDeserializer()
+        // made here, not captured: Java serialization of a closure's
+        // double canonicalizes NaN payloads, and the marker is one
+        val stale = java.lang.Double.longBitsToDouble(
+          graft.tsdb.TsdbSchema.StaleNaNBits)
+        // rows may be reused by the iterator: everything a row holds is
+        // read (or copied) before the next one is fetched
+        val rows = it.buffered
+        def inSeries(slice: Long, entries: ArrayData): Boolean =
+          rows.hasNext && rows.head.getLong(0) == slice &&
+            rows.head.getArray(1) == entries
+        new Iterator[String] {
+          override def hasNext: Boolean = rows.hasNext
+          override def next(): String = {
+            val sliceId = rows.head.getLong(0)
+            // name = ULID from (root, slice); if that dir already exists
+            // (same-root recompaction — e.g. leveling 5×2h blocks into the
+            // 10h block whose slice index collides with parent slice 0),
+            // salt deterministically until fresh so an existing block is
+            // never overwritten in place
+            var name = deterministicUlid(s"$root/$sliceId")
+            var salt = 0
+            while (new java.io.File(root, name).exists()) {
+              salt += 1
+              name = deterministicUlid(s"$root/$sliceId#$salt")
             }
+            val series: Iterator[SeriesData] = new Iterator[SeriesData] {
+              override def hasNext: Boolean =
+                rows.hasNext && rows.head.getLong(0) == sliceId
+              override def next(): SeriesData = {
+                val entries = rows.head.getArray(1).copy()
+                val labels = (0 until entries.numElements()).map { i =>
+                  val e = entries.getStruct(i, 2)
+                  (e.getUTF8String(0).toString, e.getUTF8String(1).toString)
+                }
+                val ts = Array.newBuilder[Long]
+                val vs = Array.newBuilder[Double]
+                val hs = Seq.newBuilder[WalReader.WalHistogram]
+                while (inSeries(sliceId, entries)) {
+                  val r = rows.next()
+                  if (r.isNullAt(4)) {
+                    ts += r.getLong(2)
+                    vs += (if (r.isNullAt(3)) stale else r.getDouble(3))
+                  } else hs += toHist(r.getStruct(4, histFields))
+                }
+                SeriesData(labels, ts.result(), vs.result(), hs.result())
+              }
+            }
+            // maxTime ceiling = the slice window end, as Prometheus's head
+            // compaction stamps it — range-aligned so the planner's
+            // full-window test works on our own blocks
+            writeBlockPresorted(s"$root/$name", series, compaction,
+              maxTimeCeil = Some((sliceId + 1) * blockRangeMs))
+            name
           }
-          // maxTime ceiling = the slice window end, as Prometheus's head
-          // compaction stamps it — range-aligned so the planner's
-          // full-window test works on our own blocks
-          writeBlockPresorted(s"$root/$name", run, compaction,
-            maxTimeCeil = Some((sliceId + 1) * blockRangeMs))
-          name
         }
-      }
-    }.collect().toSeq
-    names
+      }.collect().toSeq
+    }
   }
 }

@@ -83,7 +83,8 @@ private[tsdbblock] object WalDictCache {
       segments: Seq[String],
       segmentBytes: Map[String, Long],
       splitCandidates: Map[String, Array[Long]],
-      facts: Option[SourceFacts])
+      facts: Option[SourceFacts],
+      names: Option[EmittedNames])
 
   private val MaxEntries = 8
   private val cache =
@@ -110,7 +111,7 @@ private[tsdbblock] object WalDictCache {
         val dictsB = spark.sparkContext.broadcast(
           WalReader.WalDicts(meta.series, meta.stones))
         val e = Entry(sig, dictsB, meta.segments, meta.segmentBytes,
-          meta.splitCandidates, meta.facts)
+          meta.splitCandidates, meta.facts, meta.names)
         cache(walDir) = e
         if (cache.size > MaxEntries) {
           val (k, evicted) = cache.head
@@ -315,6 +316,51 @@ final case class SourceFacts(range: Option[(Long, Long)],
       lo <= hi2 && lo2 <= hi }
 }
 
+/** The label names of the series a source emits at least one row for,
+  * as far as the driver can tell without decoding a sample: `sure`
+  * holds every name of a series known to emit one, `unsure` the name
+  * sets of series that may or may not (each sample the driver can see
+  * lies under a tombstone, but not all under one). The answer is exact
+  * when every unsure set is already sure. */
+final case class EmittedNames(sure: Set[String], unsure: Set[Set[String]]) {
+  def ++(that: EmittedNames): EmittedNames =
+    EmittedNames(sure ++ that.sure, unsure ++ that.unsure)
+  def exact: Option[Seq[String]] =
+    Option.when(unsure.forall(_.subsetOf(sure)))(sure.toSeq.sorted)
+}
+
+object EmittedNames {
+  /** Fold `series` in. `emits` answers Some(true) for a series that
+    * surely emits a row, Some(false) for one that surely does not, None
+    * when the driver cannot tell; it runs only for a series with a name
+    * not yet sure, so it is asked about a few series per name set. */
+  def of[S](series: Iterator[S])(names: S => Iterable[String])(
+      emits: S => Option[Boolean]): EmittedNames = {
+    val sure = scala.collection.mutable.Set.empty[String]
+    val unsure = scala.collection.mutable.Set.empty[Set[String]]
+    series.foreach { s =>
+      val ns = names(s)
+      if (!ns.forall(sure)) emits(s) match {
+        case Some(true) => sure ++= ns
+        case Some(false) => ()
+        case None => unsure += ns.toSet
+      }
+    }
+    EmittedNames(sure.toSet, unsure.toSet)
+  }
+
+  /** Whether a run of samples (a chunk, a WAL ref's samples) whose first
+    * and last timestamps are `lo` and `hi` emits a row under the merged
+    * tombstones `ivs`: surely when an endpoint lies outside them (both
+    * are sample times), surely not when one interval covers both, and
+    * unknown when two intervals cover them — a sample in the gap would
+    * show only in a decode. */
+  def run(ivs: Seq[Tombstones.Interval], lo: Long, hi: Long): Option[Boolean] =
+    if (!Tombstones.deleted(ivs, lo) || !Tombstones.deleted(ivs, hi)) Some(true)
+    else if (ivs.exists(iv => iv.mint <= lo && hi <= iv.maxt)) Some(false)
+    else None
+}
+
 /** The reference's whole-DB view (hello.go:429-447: `DBReadOnly.Querier`
   * over all blocks + the WAL head): one sample per (series, time)
   * across every block directory and the WAL, as Prometheus's storage
@@ -355,7 +401,9 @@ object TsdbDb {
     * blocks nor a WAL answers no rows.
     *
     * Which sources merge is decided per source, from the whole
-    * directory's facts, before any matcher narrows the series. */
+    * directory's facts, before any matcher narrows the series. Without
+    * matchers the frame also carries its label names, where the same
+    * driver reads can tell them ([[labelNames]]). */
   def select(spark: SparkSession, dbDir: String,
              matchers: Seq[Matcher]): DataFrame = {
     val opts = matchers.collect {
@@ -375,15 +423,14 @@ object TsdbDb {
     val blockDirs = WalReader.listDir(dbDir, "TSDB")
       .filter(f => f.isDirectory && new java.io.File(f, "index").isFile)
       .map(_.getPath).sorted
+    val wal = Option.when(new java.io.File(root, "wal").isDirectory)(
+      WalDictCache.get(spark, s"$dbDir/wal", withFacts = true))
     val sources =
       blockDirs.toSeq.map(d =>
         (spark.read.format("tsdb-block").options(opts).load(d),
           BlockIndexCache.get(d).facts)) ++
-        (if (new java.io.File(root, "wal").isDirectory) {
-          val wal = s"$dbDir/wal"
-          Seq((spark.read.format("tsdb-wal").load(wal),
-            WalDictCache.get(spark, wal, withFacts = true).facts.get))
-        } else Nil)
+        wal.map(e => (spark.read.format("tsdb-wal").load(s"$dbDir/wal"),
+          e.facts.get))
     // label-only predicates select whole series, so filtering commutes
     // with the (series, time) dedup — apply before it, shrinking the
     // shuffle to the matched series
@@ -410,12 +457,66 @@ object TsdbDb {
         .agg(min(col("value")).as("value"))
         .select(col("time"), col("value"),
           map_from_entries(col("_entries")).as("labels")))
-    (passed.map(i => filtered(sources(i)._1)) ++ deduped)
+    val out = (passed.map(i => filtered(sources(i)._1)) ++ deduped)
       .reduceOption(_ unionByName _)
       // a DB directory with neither blocks nor a WAL holds no samples
       .getOrElse(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         TsdbBlockSource.schema))
+    // the merge keeps at least one row of every (series, time) it takes
+    // in, so the whole frame's names are the union of its sources'
+    if (matchers.isEmpty)
+      (blockDirs.toSeq.map(blockNames) ++ wal.flatMap(_.names))
+        .foldLeft(EmittedNames(Set.empty, Set.empty))(_ ++ _)
+        .exact.foreach(out.queryExecution.analyzed.setTagValue(NamesTag, _))
+    out
+  }
+
+  private val NamesTag =
+    org.apache.spark.sql.catalyst.trees.TreeNodeTag[Seq[String]](
+      "graft.tsdb.labelNames")
+
+  /** The sorted label names of the rows of `df`, known without a Spark
+    * job when `df` is exactly a frame [[select]] built without matchers
+    * (the names ride on its analyzed plan's root, so any frame derived
+    * from it — a filter, a projection, a union — has none) and the
+    * driver could tell them from the index, tombstones and WAL
+    * dictionary it had already read; None otherwise. They are the
+    * names of the directory as `select` saw it, the snapshot its merge
+    * decision was taken on. */
+  def labelNames(df: DataFrame): Option[Seq[String]] =
+    df.queryExecution.analyzed.getTagValue(NamesTag)
+
+  /** A block's [[EmittedNames]]: a series emits a float row when one of
+    * its XOR chunks has an endpoint outside the series' tombstones. The
+    * index does not say a chunk's encoding, so the chunk's header is
+    * read — for the few series whose names are not yet sure. */
+  private def blockNames(dir: String): EmittedNames = {
+    val stones = Tombstones.read(s"$dir/tombstones")
+    val files =
+      scala.collection.mutable.Map.empty[Int, java.io.RandomAccessFile]
+    def isXor(c: IndexReader.ChunkRef): Boolean = {
+      val f = files.getOrElseUpdate(c.segment, new java.io.RandomAccessFile(
+        f"$dir/chunks/${c.segment + 1}%06d", "r"))
+      f.seek(c.offset)
+      // uvarint length (≤ 5 bytes for 32-bit sizes), then the encoding;
+      // read answers -1 past the end, which ends the varint too
+      var b = f.read()
+      while (b > 0x7f) b = f.read()
+      b >= 0 && f.read() == 1
+    }
+    try EmittedNames.of(BlockIndexCache.get(dir).series.iterator)(
+        _.labels.keys) { s =>
+      val ivs = stones.getOrElse(s.ref, Nil)
+      // the float chunks that may emit: each surely (Some(true)) or
+      // maybe (None); lazy, so the first sure one ends the reads
+      val runs = s.chunks.to(LazyList)
+        .map(c => c -> EmittedNames.run(ivs, c.minTime, c.maxTime))
+        .collect { case (c, r) if !r.contains(false) && isXor(c) => r }
+      if (runs.exists(_.contains(true))) Some(true)
+      else if (runs.nonEmpty) None
+      else Some(false)
+    } finally files.values.foreach(_.close())
   }
 
   /** The whole-DB NATIVE-HISTOGRAM view — the histogram twin of [[read]]:

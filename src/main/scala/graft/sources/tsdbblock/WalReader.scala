@@ -224,7 +224,8 @@ object WalReader {
       segments: Seq[String],
       segmentBytes: Map[String, Long],
       splitCandidates: Map[String, Array[Long]],
-      facts: Option[SourceFacts])
+      facts: Option[SourceFacts],
+      names: Option[EmittedNames])
 
   private[tsdbblock] val CandidateStrideBytes: Long = 256L * 1024
 
@@ -235,8 +236,11 @@ object WalReader {
     * increased. `facts` then covers only refs the dictionary defines
     * (the scan drops orphans): their overall time range, and
     * duplicate-free when each of them strictly increases and no two of
-    * them that hold samples share a label set. Without it the sample
-    * records are skipped and `facts` is None. */
+    * them that hold samples share a label set; and `names` gives the
+    * label names of the refs the scan emits a row for, judged from
+    * each ref's first and last timestamp against its WAL tombstones
+    * ([[EmittedNames.run]]). Without it the sample records are skipped
+    * and `facts` and `names` are None. */
   def walMeta(walDir: String, withFacts: Boolean = false): WalMeta = {
     val series = mutable.Map.empty[Long, Map[String, String]]
     val stones = mutable.ArrayBuffer.empty[WalStone]
@@ -288,8 +292,13 @@ object WalReader {
         !live.keysIterator.exists(unordered) &&
           live.keysIterator.map(series).toSet.size == live.size)
     }
+    val names = Option.when(withFacts)(
+      EmittedNames.of(times.iterator.filter(r => series.contains(r._1)))(
+          r => series(r._1).keys) { case (ref, m) =>
+        EmittedNames.run(stoneMap.getOrElse(ref, Nil), m(0), m(1))
+      })
     WalMeta(series.toMap, stoneMap, segs, segBytes.toMap, cands.toMap,
-      facts)
+      facts, names)
   }
 
   /** The global WAL dictionaries as ONE compact byte blob, decoded

@@ -33,23 +33,28 @@ import graft.model.Sample
 object TsdbIngest {
   import TsdbSchema._
 
-  /** Pass 1 — discover the label-name universe (hello.go:216-233): the
-    * distinct label-name SETS, flattened on the driver. A distinct over
-    * a column of the input's own grouping keys lets Catalyst drop an
-    * aggregate directly beneath it (`RemoveRedundantAggregates`). Over
-    * [[graft.sources.tsdbblock.TsdbDb.read]] that drops the (series,
-    * time) merge only when every source merges; where some sources pass
-    * through and some merge, the distinct sits above the union and the
-    * merged part's aggregate still runs (ROADMAP direction 6(d)). */
+  /** Pass 1 — discover the label-name universe (hello.go:216-233).
+    * Over exactly the frame [[graft.sources.tsdbblock.TsdbDb.read]]
+    * (or `select` without matchers) returned, the names come from the
+    * block indexes, tombstones and WAL dictionary that call already
+    * read, with no Spark job ([[graft.sources.tsdbblock.TsdbDb.labelNames]]).
+    * Any other frame — one derived from it included — takes the decode
+    * pass: the distinct label-name SETS, flattened on the driver. A
+    * distinct over a column of the input's own grouping keys lets
+    * Catalyst drop an aggregate directly beneath it
+    * (`RemoveRedundantAggregates`); over a directory where some sources
+    * pass through and some merge, the distinct sits above the union
+    * and the merged part's aggregate still runs (ROADMAP 6(d)). */
   def labelNames(longForm: DataFrame): Seq[String] =
-    longForm
-      .select(map_keys(col(LabelsCol)).as("names"))
-      .distinct()
-      .collect() // distinct label-name sets: small by construction
-      .flatMap(r => Option(r.getSeq[String](0)).getOrElse(Nil))
-      .distinct
-      .sorted
-      .toSeq
+    graft.sources.tsdbblock.TsdbDb.labelNames(longForm).getOrElse(
+      longForm
+        .select(map_keys(col(LabelsCol)).as("names"))
+        .distinct()
+        .collect() // distinct label-name sets: small by construction
+        .flatMap(r => Option(r.getSeq[String](0)).getOrElse(Nil))
+        .distinct
+        .sorted
+        .toSeq)
 
   /** Pass 2 — pivot long form to the wide dynamic-column form. Absent
     * label ⇒ NULL (map lookup of a missing key is NULL — exactly the

@@ -612,12 +612,13 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("block write groups + places blocks through ONE keyed exchange") {
-    // round-19 rewrite: the old plan grouped by (slice, labels) and then
-    // re-shuffled the FULL aggregated payload by slice for block
-    // placement. hash(slice) alone satisfies both (subset of the
-    // clustering keys), so the write must carry exactly one keyed
-    // exchange — on `slice`, at the session's shuffle width (pinned,
-    // REPARTITION_BY_NUM, so AQE cannot coalesce the CPU-heavy encode).
+    // the write is one placed sort: `repartitionById` on the slice both
+    // groups each block's rows into one task and places consecutive
+    // slices in distinct tasks, so the plan carries exactly one keyed
+    // exchange — a partition-id pass-through on `slice`, at the
+    // session's shuffle width (pinned, REPARTITION_BY_NUM, so AQE
+    // cannot coalesce the CPU-heavy encode) — and no aggregate collects
+    // a series' samples (the sort within the task does the grouping).
     import org.apache.spark.sql.functions._
     val long = SparkEntry.queries("tsdb_q1_scan")(spark, Sf0001)
       .select(col("time"), col("value"),
@@ -625,15 +626,19 @@ class PlanQualitySpec extends SparkSpec {
           lit("user"), coalesce(col("`labels.user`"), lit("")))
           .as("labels"))
     val plan = graft.sources.tsdbblock.TsdbBlockWriter
-      .groupedForWrite(long, blockRangeMs = 7L * 86400000L)
+      .sortedForWrite(long, blockRangeMs = 7L * 86400000L)
       .queryExecution.executedPlan.toString()
-    val keyed = "hashpartitioning\\(slice".r.findAllIn(plan).size
-    assert(keyed == 1,
-      s"block write must hash-partition ONCE on slice ($keyed):\n$plan")
-    assert(!plan.contains("RoundRobinPartitioning") ||
-      keyedExchanges(plan) == 1,
-      s"only the scan fan-out may add a non-keyed exchange:\n$plan")
+    val placed = "(?i)shufflepartitionidpassthrough\\([^\\n]*slice".r
+      .findAllIn(plan).size
+    assert(placed == 1,
+      s"block write must place blocks ONCE by slice id ($placed):\n$plan")
+    assert(keyedExchanges(plan) == 1,
+      s"the slice placement must be the only keyed exchange:\n$plan")
     assert(plan.contains("REPARTITION_BY_NUM"),
-      s"the grouping width must be pinned against AQE coalescing:\n$plan")
+      s"the placement width must be pinned against AQE coalescing:\n$plan")
+    assert(!plan.contains("ObjectHashAggregate") &&
+      !plan.contains("HashAggregate") && !plan.contains("SortAggregate"),
+      s"no aggregate may collect a series' samples:\n$plan")
   }
+
 }
