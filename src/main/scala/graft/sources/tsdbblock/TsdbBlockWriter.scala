@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import graft.tsdb.RemoteRead.utf8ByteOrder
 
 /** Writer for raw Prometheus TSDB block directories — the write twin of
   * [[TsdbBlockSource]], making block compatibility bidirectional: the
@@ -189,7 +190,7 @@ object TsdbBlockWriter {
     // diverges from Go's byte order above the BMP. Names sort in that
     // byte order too, as `sort_array(map_entries(labels))` does in
     // [[write]].
-    import graft.tsdb.RemoteRead.{labelSortKey, utf8ByteOrder}
+    import graft.tsdb.RemoteRead.labelSortKey
     val series = seriesIn.toIndexedSeq
       .map(s => s.copy(labels = s.labels.sortBy(_._1)(utf8ByteOrder)))
       .sortBy(s => labelSortKey(s.labels))(utf8ByteOrder)
@@ -315,9 +316,9 @@ object TsdbBlockWriter {
     val iw = new ByteWriter
     iw.be32(0xbaaad700L); iw.u8(2)
 
-    // symbol table: sorted unique strings; series entries refer by index
+    // symbol table: unique strings in Prometheus's (UTF-8) byte order
     val symbols = series.flatMap(_.flatMap(p => Seq(p._1, p._2)))
-      .distinct.sorted
+      .distinct.sorted(utf8ByteOrder)
     val symIdx = symbols.zipWithIndex.toMap
     val symbolsStart = iw.size
     val symBody = new ByteWriter
@@ -383,8 +384,9 @@ object TsdbBlockWriter {
           scala.collection.mutable.ArrayBuffer[Long]()) += seriesRefs(si)
       }
     }
-    val labelNames = valueSets.keys.toSeq.sorted
-    val valuesByName = labelNames.map(n => n -> valueSets(n).toSeq.sorted)
+    val labelNames = valueSets.keys.toSeq.sorted(utf8ByteOrder)
+    val valuesByName =
+      labelNames.map(n => n -> valueSets(n).toSeq.sorted(utf8ByteOrder))
     pad16()
     val labelIndicesStart = iw.size
     val labelIndexOff = scala.collection.mutable.Map[String, Long]()

@@ -8,7 +8,12 @@ import java.util.concurrent.atomic.AtomicLong
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.NativeBridge
+import org.apache.spark.sql.types.StructType
 
 import scala.util.control.NonFatal
 
@@ -87,77 +92,95 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
 
   private def apiLabel(c: String): String = TsdbSchema.wireName(c, metricLabel)
 
-  /** RECEIVER LINEAGE CONTROL. Every push appends one `Union` node to
-    * the head's logical plan; left unchecked, a long-running receiver's
-    * plan grows one node per request — analysis cost and driver memory
-    * grow linearly and every query re-plans the whole chain. So every
-    * [[ConsolidateEvery]] appends the head is `localCheckpoint`ed
-    * (eager): the union materializes into block-manager storage and the
-    * logical plan collapses to a single leaf — the same shape as
-    * Prometheus's own head, whose samples live in memory until flushed.
-    * Superseded checkpoint RDDs are unreferenced afterwards and the
-    * ContextCleaner evicts them. Queries between consolidations see at
-    * most `ConsolidateEvery` unions. Each head counts its own appends. */
-  private val ConsolidateEvery = 32
+  /** Rows pushed since start: long-form rows in `schema`, each encoded
+    * once by its push, and the stored label and metric names they carry. */
+  private final case class Pushed(schema: StructType,
+      rows: Vector[InternalRow], labels: Set[String], metrics: Set[String]) {
+    def ++(b: Pushed): Pushed =
+      Pushed(schema, rows ++ b.rows, labels ++ b.labels, metrics ++ b.metrics)
+  }
 
-  private def boundLineage(df: DataFrame, appends: Int): DataFrame =
-    if (appends % ConsolidateEvery == 0) df.localCheckpoint(true) else df
+  /** A WIDE head — the float samples or the exemplars — in two parts:
+    * the `store` the server was given, read where it lies and never
+    * unioned into or copied, and the rows `pushed` since start as ONE
+    * `LocalRelation` leaf, its `labels` widened in place over the
+    * driver-known names (no distinct job). `df` is the store itself until
+    * the first push, then one `Union` however many pushes follow. */
+  private final class Head(store: Option[DataFrame],
+                           val pushed: Option[Pushed]) {
+    def append(b: Pushed): Head = new Head(store, Some(pushed.fold(b)(_ ++ b)))
 
-  /** A WIDE head — the float samples or the exemplars — and the number
-    * of appends that built it. A push's rows are a one-append head of
-    * their own ([[floatBatch]], [[exemplarBatch]]). */
-  private final class Head(val df: DataFrame, val appends: Int) {
-    def append(batch: Head): Head = {
-      val n = appends + 1
-      new Head(boundLineage(
-        df.unionByName(batch.df, allowMissingColumns = true), n), n)
-    }
-
-    /** The metric names the head stores — the wide frame's
-      * [[metricLabel]] universe (API-sized: a distinct over the
-      * dictionary-encoded name column), memoized on the head, so a push
-      * that leaves this head alone keeps it. Concurrent first readers
-      * wait on the memo and share its one job. */
-    lazy val names: Set[String] = {
-      val nameCol = TsdbSchema.labelColName(metricLabel)
-      if (!df.columns.contains(nameCol)) Set.empty
-      else df.select(col(s"`$nameCol`"))
-        .where(col(s"`$nameCol`").isNotNull)
-        .distinct().collect().map(_.getString(0)).toSet
+    val df: DataFrame = pushed.fold(store.get) { p =>
+      val leaf = NativeBridge.ofRows(spark,
+        LocalRelation(DataTypeUtils.toAttributes(p.schema), p.rows))
+      val wide = leaf.select(leaf.columns.toSeq.flatMap {
+        case TsdbSchema.LabelsCol => p.labels.toSeq.sorted.map(n =>
+          col(TsdbSchema.LabelsCol).getItem(n).as(TsdbSchema.labelColName(n)))
+        case c => Seq(col(c))
+      }: _*)
+      store.fold(wide)(_.unionByName(wide, allowMissingColumns = true))
     }
   }
 
-  /** NATIVE HISTOGRAMS pushed over remote write or OTLP: `dense`
-    * frames on the server's (schema, minExp, maxExp) grid, which the
-    * PromQL hist tier reads, and the same samples in FULL-fidelity
-    * `sparse` form, which the chunked remote-read responder streams
-    * back as histogram chunks. `names` is the metric-name set the head
-    * stores, kept driver-side (exact, no Spark job); it gates the
-    * per-selector native-vs-classic routing. A push's histograms are a
-    * one-append head of their own ([[histBatch]]). */
-  private final class HistHead(val dense: DataFrame,
-                               val sparse: Dataset[SparseRow],
-                               val names: Set[String], val appends: Int) {
-    def append(batch: HistHead): HistHead = {
+  /** The metric names `initial` stores (a distinct over its name
+    * column): one job per server, on the first read that needs it and
+    * never at start-up; pushes never discard it. */
+  private val storeNames = new Memo({
+    val nameCol = TsdbSchema.labelColName(metricLabel)
+    if (!initial.columns.contains(nameCol)) Set.empty[String]
+    else initial.select(col(s"`$nameCol`"))
+      .where(col(s"`$nameCol`").isNotNull)
+      .distinct().collect().map(_.getString(0)).toSet
+  })
+
+  /** NATIVE HISTOGRAMS pushed over remote write or OTLP, kept on the
+    * driver: `dense` frames on the server's (schema, minExp, maxExp)
+    * grid for the PromQL hist tier and `sparse` FULL-fidelity samples
+    * for remote read, each one leaf built on the snapshot's first read.
+    * `names`, the metric names it stores, gates native routing. */
+  private final class HistHead(
+      private val pushed: Vector[RemoteWrite.SparseHist],
+      val names: Set[String]) {
+    def append(b: HistHead): HistHead =
+      new HistHead(pushed ++ b.pushed, names ++ b.names)
+
+    // STALENESS markers (sum carries the StaleNaN bit pattern) are told
+    // apart on the driver, before Spark canonicalizes NaN payloads
+    private lazy val (stale, live) =
+      pushed.partition(h => TsdbSchema.isStaleMarker(h.sum))
+
+    // stale markers become NULL-hist rows: the hist tier's lookback ends
+    // the series there (the float tier's NULL-value contract)
+    lazy val dense: DataFrame = {
       import spark.implicits._
-      val n = appends + 1
-      new HistHead(
-        boundLineage(
-          dense.unionByName(batch.dense, allowMissingColumns = true), n),
-        boundLineage(sparse.toDF().unionByName(batch.sparse.toDF()), n)
-          .as[SparseRow],
-        names ++ batch.names, n)
+      val denseLive = RemoteWrite.denseFromSparse(
+        spark.createDataset(live), histSchemaId, histMinExp, histMaxExp)
+      val withStale =
+        if (stale.isEmpty) denseLive
+        else denseLive.unionByName(spark.createDataset(stale).toDF()
+          .select(col("time"), col("labels"),
+            lit(null).cast(denseLive.schema("hist").dataType).as("hist")))
+      val labelCols = pushed.flatMap(_.labels.keys).distinct.sorted
+        .map(n => col("labels").getItem(n)
+          .as(TsdbSchema.labelColName(storedName(n))))
+      withStale.select(col("time") +: labelCols :+ col("hist"): _*)
     }
 
-    /** Per native SERIES (full label set): the FIRST native sample's
-      * time — the migration point from which the native store owns the
-      * series ([[Shadowing.seriesSince]]; every read surface's
-      * time-aware float shadowing joins against it). Series-universe-
-      * sized and `localCheckpoint`ed: one small Spark job per hist
-      * head, memoized on it like [[Head.names]]. Keyed per SERIES, not
-      * per name: a partial fleet migration (some instances still
-      * pushing float under a migrated name) must keep its unmigrated
-      * series serving on every surface. */
+    // stale markers stay out: remote read serves observed data
+    lazy val sparse: Dataset[SparseRow] = {
+      import spark.implicits._
+      spark.createDataset(live.map(h =>
+        (h.labels, graft.sources.tsdbblock.WalReader.WalHistogram(
+          0L, h.time, h.resetHint, h.schema, h.zeroThreshold, h.zeroCount,
+          h.count, h.sum, h.positive, h.negative, h.customValues,
+          isFloat = false))))
+    }
+
+    /** Per native SERIES (full label set, not per name: a partially
+      * migrated fleet keeps its float series serving): the FIRST native
+      * sample's time, from which the native store owns the series
+      * ([[Shadowing.seriesSince]]). One small `localCheckpoint`ed job
+      * per hist head, on its first read. */
     lazy val seriesSince: DataFrame =
       Shadowing.seriesSince(dense, lookbackMs).localCheckpoint(true)
   }
@@ -173,13 +196,19 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
   private final class Heads(val float: Head, val hist: Option[HistHead],
                             val exemplars: Option[Head]) {
 
-    /** This snapshot with one push's batches appended. A head the push
-      * leaves alone carries over, memos included. */
-    def append(floats: Option[Head], hists: Option[HistHead],
-               exs: Option[Head]): Heads =
+    /** This snapshot with one push's batches appended; a head the push
+      * leaves alone carries over. */
+    def append(floats: Option[Pushed], hists: Option[HistHead],
+               exs: Option[Pushed]): Heads =
       new Heads(floats.fold(float)(float.append),
         hists.map(b => hist.fold(b)(_.append(b))).orElse(hist),
-        exs.map(b => exemplars.fold(b)(_.append(b))).orElse(exemplars))
+        exs.map(b => exemplars.fold(new Head(None, Some(b)))(_.append(b)))
+          .orElse(exemplars))
+
+    /** The metric names the float head stores: the store's
+      * ([[storeNames]]) and the pushes' (driver-side). */
+    lazy val floatNames: Set[String] =
+      storeNames.value ++ float.pushed.fold(Set.empty[String])(_.metrics)
 
     def histNames: Set[String] = hist.fold(Set.empty[String])(_.names)
 
@@ -252,11 +281,11 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
       * wide-store names matching `ms` that the hist head does NOT store
       * (a name present in BOTH stores keeps the native preference —
       * Prometheus resolves native-over-classic per series). The float
-      * names are [[Head.names]]; a query with no native-matching
+      * names are [[Heads.floatNames]]; a query with no native-matching
       * selector never computes them (the callers test the native side
       * first). */
     private def floatOnlyStored(ms: Seq[graft.model.Matcher]): Set[String] =
-      (float.names -- histNames)
+      (floatNames -- histNames)
         .filter(m => ms.forall(matchesMetric(_, m)))
 
     /** ONE selector SPANNING both stores (`{name=~"native|classic"}`):
@@ -301,7 +330,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
         if (nameMs.isEmpty) namelessMayMatchHist(ms)
         else stored(nameMs).nonEmpty &&
           (floatOnlyStored(nameMs).nonEmpty ||
-            stored(nameMs).exists(float.names))
+            stored(nameMs).exists(floatNames))
       }
 
     /** The float store's UNSHADOWED share at the raw-sample level — the
@@ -348,7 +377,7 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     private def dualStoreNames(e: PromQL.Expr): Seq[String] =
       if (hist.isEmpty) Nil
       else PromQL.selectorsOf(e).map(nameMatchers).filter(_.nonEmpty)
-        .flatMap(ms => stored(ms).filter(float.names))
+        .flatMap(ms => stored(ms).filter(floatNames))
         .distinct.sorted
 
     /** Answers of [[unshadowedAmong]], per name set, for this snapshot. */
@@ -483,13 +512,12 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
 
   /** The published snapshot. A handler reads it once, when it starts. */
   @volatile private var current: Heads =
-    new Heads(new Head(initial, 0), None, exemplars.map(new Head(_, 0)))
+    new Heads(new Head(Some(initial), None), None,
+      exemplars.map(e => new Head(Some(e), None)))
 
   /** Serializes the pushes. A push builds every next head from the
-    * current snapshot — the unions, and on a head's consolidating
-    * append the eager `localCheckpoint` — holding only this lock, then
-    * publishes the new snapshot in one write. Queries never take it, so
-    * they never wait out a consolidation. */
+    * current snapshot holding only this lock, then publishes the new
+    * snapshot in one write. Queries never take it. */
   private val appendLock = new Object
 
   private def publish(next: Heads => Heads): Unit =
@@ -498,29 +526,42 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
   /** The served head (test hook: lineage-bound plan assertions). */
   private[tsdb] def headTable: DataFrame = current.float.df
 
+  /** One snapshot's float, dense-histogram and exemplar frames (test
+    * hook: a push publishes whole). */
+  private[tsdb] def snapshotTables = {
+    val h = current
+    (h.float.df, h.hist.map(_.dense), h.exemplars.map(_.df))
+  }
+
   /** Queryable pushed-histogram head (dense frames), if any arrived. */
   def histTable: Option[DataFrame] = current.hist.map(_.dense)
 
   private def histNLes: Int = histMaxExp - histMinExp + 3 // zero+grid+Inf
 
-  /** Long-form decoded rows (wire labels) as a one-append float
-    * [[Head]], None when there are none. STALENESS markers (the
-    * StaleNaN bit pattern, which Prometheus forwards over remote write
-    * and the OTLP decoders emit for no-recorded-value points) become
-    * NULL-`value` rows — the
+  /** A push's long-form rows (`labels` keyed by stored names), each
+    * encoded once: the `LocalRelation` a local `toDF` builds. */
+  private def pushedOf(longForm: DataFrame,
+                       labels: Seq[Map[String, String]]): Pushed =
+    Pushed(longForm.schema, longForm.queryExecution.analyzed.collectFirst {
+        case l: LocalRelation => l.data.toVector }.get,
+      labels.flatMap(_.keys).toSet, labels.flatMap(_.get(metricLabel)).toSet)
+
+  /** Long-form decoded rows (wire labels) as a push's float rows, None
+    * when there are none. STALENESS markers (the StaleNaN bit pattern,
+    * which Prometheus forwards over remote write and the OTLP decoders
+    * emit for no-recorded-value points) become NULL-`value` rows — the
     * engine's staleness representation ([[TsdbSchema.StaleNaNBits]]):
-    * detected HERE, the last place the raw bits exist before Spark
-    * canonicalizes NaN payloads. */
+    * detected HERE, before Spark canonicalizes NaN payloads. */
   private def floatBatch(
-      rows: Seq[(Long, Double, Map[String, String])]): Option[Head] =
+      rows: Seq[(Long, Double, Map[String, String])]): Option[Pushed] =
     if (rows.isEmpty) None
     else {
       import spark.implicits._
-      val longForm = rows.map { case (t, v, ls) =>
+      val stored = rows.map { case (t, v, ls) =>
         (t, if (TsdbSchema.isStaleMarker(v)) None else Some(v),
           ls.map { case (k, lv) => storedName(k) -> lv })
-      }.toDF("time", "value", "labels")
-      Some(new Head(TsdbIngest.toWide(longForm), 1))
+      }
+      Some(pushedOf(stored.toDF("time", "value", "labels"), stored.map(_._3)))
     }
 
   /** A wire histogram's OWN schema field defines its bucket boundaries;
@@ -553,46 +594,13 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
         s"metric name in `$metricLabel`; rename or drop the label")
     }
 
-  /** A push's histograms (wire labels) as a one-append [[HistHead]],
+  /** A push's histograms (wire labels) as a [[HistHead]] of their own,
     * None when there are none. */
   private def histBatch(sparse: Seq[RemoteWrite.SparseHist])
       : Option[HistHead] =
     if (sparse.isEmpty) None
-    else {
-      // STALENESS markers (sum carries the StaleNaN bit pattern — what
-      // Prometheus forwards over remote write and what the OTLP
-      // decoders emit for FLAG_NO_RECORDED_VALUE points) land in the
-      // dense head as NULL-hist rows: the hist tier's instant lookback
-      // ends the series at them and its range selections skip them
-      // (the float tier's NULL-value contract). Detected HERE — the
-      // last place the raw bits exist before Spark canonicalizes NaN
-      // payloads inside UnsafeRow.
-      val (stale, live) =
-        sparse.partition(h => TsdbSchema.isStaleMarker(h.sum))
-      import spark.implicits._
-      val denseLive = RemoteWrite.denseFromSparse(
-        spark.createDataset(live), histSchemaId, histMinExp, histMaxExp)
-      val dense =
-        if (stale.isEmpty) denseLive
-        else denseLive.unionByName(spark.createDataset(stale).toDF()
-          .select(col("time"), col("labels"),
-            lit(null).cast(denseLive.schema("hist").dataType).as("hist")))
-      val names = sparse.flatMap(_.labels.keys).distinct.sorted
-      val labelCols = names.map(n => col("labels").getItem(n)
-        .as(TsdbSchema.labelColName(storedName(n))))
-      val wideH = dense.select(col("time") +: labelCols :+ col("hist"): _*)
-      // the wire-serving twin: full sparse samples. Stale markers stay
-      // OUT of the sparse head: the NaN payload cannot survive a
-      // shuffle, and the chunked/sampled responders serve observed
-      // data, not staleness signals.
-      val sparseRows = spark.createDataset(live.map(h =>
-        (h.labels, graft.sources.tsdbblock.WalReader.WalHistogram(
-          0L, h.time, h.resetHint, h.schema, h.zeroThreshold, h.zeroCount,
-          h.count, h.sum, h.positive, h.negative, h.customValues,
-          isFloat = false))))
-      Some(new HistHead(wideH, sparseRows,
-        sparse.flatMap(_.labels.get("__name__")).toSet, 1))
-    }
+    else Some(new HistHead(sparse.toVector,
+      sparse.flatMap(_.labels.get("__name__")).toSet))
 
   /** Value-ranked/statistic shapes over a HISTOGRAM-valued argument —
     * what Prometheus 3 answers by SKIPPING the histogram samples with
@@ -2566,27 +2574,22 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
   }
 
   /** Exemplar rows — (time, value, owning series' wire labels,
-    * exemplar labels) — as a one-append exemplar [[Head]] in the
-    * [[Exemplars]] wide shape (owning series' label columns + time +
-    * value + trace_id) — what `/api/v1/query_exemplars` serves. None
-    * when there are none. The trace id is the exemplar's `trace_id`
-    * label (Prometheus's convention); exemplars without one keep their
-    * first label value, and label-less exemplars land with an empty
-    * id. */
+    * exemplar labels) — as a push's rows of the [[Exemplars]] shape
+    * (time, value, labels, trace_id), None when there are none. The
+    * trace id is the exemplar's `trace_id` label (Prometheus's
+    * convention), else its first label value, else empty. */
   private def exemplarBatch(rows: Seq[(Long, Double, Map[String, String],
-      Map[String, String])]): Option[Head] =
+      Map[String, String])]): Option[Pushed] =
     if (rows.isEmpty) None
     else {
       import spark.implicits._
-      val names = rows.flatMap(_._3.keys).distinct.sorted
-      val labelCols = names.map(n =>
-        col("labels").getItem(n).as(TsdbSchema.labelColName(storedName(n))))
-      Some(new Head(rows.map { case (t, v, ls, el) =>
-          (t, v, ls, el.getOrElse("trace_id",
+      val stored = rows.map { case (t, v, ls, el) =>
+        (t, v, ls.map { case (k, lv) => storedName(k) -> lv },
+          el.getOrElse("trace_id",
             el.toSeq.sortBy(_._1).headOption.fold("")(_._2)))
-        }.toDF("time", "value", "labels", "trace_id")
-        .select(col("time") +: col("value") +: labelCols :+
-          col("trace_id"): _*), 1))
+      }
+      Some(pushedOf(stored.toDF("time", "value", "labels", "trace_id"),
+        stored.map(_._3)))
     }
 
   /** Prometheus's OTLP receiver (`/api/v1/otlp/v1/metrics`, ≥ 2.47):
@@ -2726,14 +2729,10 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     // store(s) its matchers resolve to — native histograms, float
     // samples, or BOTH (a nameless query, or a regex spanning the
     // stores), merged in labels.Compare order by the routed
-    // responders. The old per-REQUEST forall gate silently flipped a
-    // MIXED request whole to the float store (its native queries
-    // answered empty) and nameless queries never saw native series —
-    // the round-17 straddle class, closed on this surface too. The
-    // gates are name-universe checks memoized on the request's
-    // snapshot ([[Head.names]]: the first read after a float push pays
-    // one small distinct job); a skipped store costs nothing. A
-    // SERIES stored in BOTH stores serves its native form from its
+    // responders (a per-REQUEST gate would flip a mixed request whole
+    // to one store). The gates are name-universe checks on the
+    // request's snapshot ([[Heads.floatNames]]); a skipped store costs
+    // nothing. A SERIES stored in BOTH stores serves its native form from its
     // FIRST native sample on (per-series time-aware shadowing,
     // [[Shadowing]]: pre-migration float history stays readable,
     // unmigrated series of a partially-migrated name serve in full, the
@@ -2746,21 +2745,15 @@ final class PromHttpServer(spark: SparkSession, initial: DataFrame,
     def nameMs(q: RemoteRead.ReadQuery): Seq[graft.model.Matcher] =
       PromQL.renameMetric(PromQL.anchorMatchers(q.matchers), initial)
         .filter(_.name == metricLabel)
-    def wantsHist(q: RemoteRead.ReadQuery): Boolean = {
+    // "" stands in for the ABSENT name (the P3 rule): series of either
+    // store may be nameless, and a matcher set that matches the empty
+    // name must still read that store
+    def wants(names: => Set[String])(q: RemoteRead.ReadQuery): Boolean = {
       val ms = nameMs(q)
-      // "" stands in for the ABSENT name here too: histBatch
-      // tolerates nameless series and histSlice matches absent ≡ ""
-      ms.isEmpty ||
-        (natives + "").exists(m => ms.forall(matchesMetric(_, m)))
+      ms.isEmpty || (names + "").exists(m => ms.forall(matchesMetric(_, m)))
     }
-    def wantsFloat(q: RemoteRead.ReadQuery): Boolean = {
-      val ms = nameMs(q)
-      // "" stands in for the ABSENT name (the P3 rule): float series
-      // may be nameless, and a matcher set that matches the empty
-      // name must still read the float store
-      ms.isEmpty ||
-        (heads.float.names + "").exists(m => ms.forall(matchesMetric(_, m)))
-    }
+    val wantsHist = wants(natives) _
+    val wantsFloat = wants(heads.floatNames) _
     val floats = TsdbTable(heads.float.df)
     if (wantsChunks) {
       ex.getResponseHeaders.set("Content-Type",

@@ -88,6 +88,46 @@ class TsdbBlockWriterSpec extends SparkSpec {
     assert(tomb.toSeq === empty)
   }
 
+  test("the index lists symbols and postings in UTF-8 byte order") {
+    // U+1F600 is a surrogate pair in UTF-16 and so sorts BEFORE U+FFFD
+    // in Java String order, but after it in UTF-8 byte order — the
+    // order Prometheus binary-searches the symbol and postings tables in
+    val (smiley, replacement) = ("\uD83D\uDE00", "\uFFFD")
+    val dir = tmpDir("graft_blockw_utf8_")
+    val series = Seq(smiley, replacement, "a").map(v =>
+      TsdbBlockWriter.SeriesData(Seq("__name__" -> "m", "v" -> v),
+        Array(1000L), Array(1.0)))
+    TsdbBlockWriter.writeBlock(dir, series)
+
+    import graft.sources.tsdbblock.Binary.ByteReader
+    val buf = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, "index"))
+    val toc = new ByteReader(buf, buf.length - 52)
+    val offsets = Seq.fill(6)(toc.be64().toInt)
+    def str(r: ByteReader): String =
+      new String(r.bytes(r.uvarint().toInt), java.nio.charset.StandardCharsets.UTF_8)
+    val sym = new ByteReader(buf, offsets.head)
+    sym.be32()
+    val symbols = Seq.fill(sym.be32().toInt)(str(sym))
+    val pot = new ByteReader(buf, offsets(5))
+    pot.be32()
+    val postings = Seq.fill(pot.be32().toInt) {
+      assert(pot.uvarint() === 2L)
+      val kv = (str(pot), str(pot))
+      pot.uvarint()
+      kv
+    }
+    val byteOrder = graft.tsdb.RemoteRead.utf8ByteOrder
+    assert(symbols === Seq("__name__", "a", "m", "v", replacement, smiley))
+    assert(symbols === symbols.sorted(byteOrder))
+    assert(postings === Seq(("", ""), ("__name__", "m"), ("v", "a"),
+      ("v", replacement), ("v", smiley)))
+
+    val got = spark.read.format("tsdb-block").load(dir)
+      .select(col("labels")("v")).collect().map(_.getString(0)).toSet
+    assert(got === Set(smiley, replacement, "a"))
+  }
+
   test("UTF-8 metric and label NAMES round-trip block and WAL storage") {
     // Prometheus 3 UTF-8 names: the index/WAL formats carry label
     // names as length-prefixed bytes, so dotted and non-ASCII NAMES

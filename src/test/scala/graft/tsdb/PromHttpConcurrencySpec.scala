@@ -19,11 +19,11 @@ import graft.SparkSpec
 
 /** The server runs request handlers on a bounded pool: a stalled
   * client holds one handler, concurrent answers equal serial ones,
-  * concurrent writes lose nothing while reads stay live through a
-  * head consolidation, a push becomes visible all at once, each
-  * request's Spark jobs carry their own job group, overlapping admin
-  * requests lose no tombstones, and the pool's threads end with the
-  * server. */
+  * concurrent writers lose nothing while reads stay live, a held read
+  * neither blocks pushes nor sees them, a push becomes visible all at
+  * once, each request's Spark jobs carry their own job group,
+  * overlapping admin requests lose no tombstones, and the pool's
+  * threads end with the server. */
 class PromHttpConcurrencySpec extends SparkSpec {
   import PromHttpConcurrencySpec._
   import spark.implicits._
@@ -149,26 +149,19 @@ class PromHttpConcurrencySpec extends SparkSpec {
     }
   }
 
-  test("concurrent writes lose nothing, and reads stay live during a consolidation") {
-    // the store's values pass through a UDF that, inside a
-    // remote-write request's Spark job, holds its task until released:
-    // the only such job that reads the store is the 32nd append's
-    // consolidation, so the test holds that write in flight
-    Gate.arm()
-    val gated = store.coalesce(1).withColumn("value", holdInWrites(col("value")))
-    val srv = new PromHttpServer(spark, gated)
+  test("concurrent writers lose no acknowledged sample") {
+    val srv = new PromHttpServer(spark, store)
     withServer(srv) { port =>
       val (baseRows, baseSum) = {
         val r = store.agg(sum("value")).collect().head
         (store.count(), r.getDouble(0))
       }
-      val writers = 4
-      val writesEach = 9 // 36 appends: one consolidation at the 32nd
+      val writers = 8
+      val writesEach = 8
       val acked = new ConcurrentLinkedQueue[Seq[Double]]()
       val liveQueries = new ConcurrentLinkedQueue[Int]()
       val writersDone = new CountDownLatch(writers)
-      val whileHeld = new ConcurrentLinkedQueue[(Int, Boolean)]()
-      inParallel(writers + 3) { i =>
+      inParallel(writers + 2) { i =>
         if (i < writers) try {
           (0 until writesEach).foreach { w =>
             val values = (0 until 3).map(j => (i * 1000 + w * 10 + j).toDouble)
@@ -178,25 +171,10 @@ class PromHttpConcurrencySpec extends SparkSpec {
             if (post(port, "/api/v1/write", payload) == 204) acked.add(values)
           }
         } finally writersDone.countDown()
-        else if (i < writers + 2) {
-          while (writersDone.getCount > 0) liveQueries.add(get(port, "/api/v1/query",
-            "query" -> "sum by (job) (rate(http_requests_total[5m]))",
-            "time" -> sec(endMs))._1)
-        } else {
-          // the watcher: once the consolidation is held, a query must
-          // answer while that write is still in flight
-          if (Gate.entered.await(120, TimeUnit.SECONDS)) {
-            val (c, _) = get(port, "/api/v1/query",
-              "query" -> """http_requests_total{job="api",instance="i0"}""",
-              "time" -> sec(endMs))
-            whileHeld.add((c, Gate.release.getCount == 1))
-          }
-          Gate.release.countDown()
-        }
+        else while (writersDone.getCount > 0) liveQueries.add(get(port, "/api/v1/query",
+          "query" -> "sum by (job) (rate(http_requests_total[5m]))",
+          "time" -> sec(endMs))._1)
       }
-      assert(Gate.entered.getCount == 0, "the consolidating write never ran its job")
-      assert(whileHeld.asScala.toSeq == Seq((200, true)),
-        s"query during the held consolidation: ${whileHeld.asScala}")
       assert(acked.size == writers * writesEach)
       assert(liveQueries.asScala.nonEmpty && liveQueries.asScala.forall(_ == 200))
       val pushed = acked.asScala.toSeq.flatten
@@ -207,58 +185,89 @@ class PromHttpConcurrencySpec extends SparkSpec {
     }
   }
 
-  test("a push becomes visible all at once") {
-    // the held push is the 32nd float append, whose consolidation the
-    // Gate holds; its one series also carries a native histogram and an
-    // exemplar, which must stay invisible until the whole push is
+  test("a held read neither blocks pushes nor sees them") {
+    val q = Seq("query" -> """sum({job="api"})""", "time" -> sec(endMs))
+    val before = withServer(new PromHttpServer(spark, store))(get(_, "/api/v1/query", q: _*))
+    assert(before._1 == 200 && !before._2.contains(""""result":[]"""), before)
+    // the store's values pass through a UDF that, inside a query
+    // request's Spark job, holds its task until released
     Gate.arm()
-    val gated = store.coalesce(1).withColumn("value", holdInWrites(col("value")))
+    val gated = store.coalesce(1).withColumn("value", holdInQueries(col("value")))
     withServer(new PromHttpServer(spark, gated)) { port =>
-      val series = Seq("__name__" -> "held_seconds", "job" -> "api")
-      // one TimeSeries message: labels, the sample and the exemplar,
-      // then the histogram field (protobuf fields of one message concatenate)
-      def push(t: Long, v: Double): Array[Byte] =
-        RemoteWrite.encodeRequest(Seq(
-          RemoteWrite.encodeSeriesWithExemplars(series, Seq((t, v)),
-            Seq((Seq("trace_id" -> s"trace-$t"), v, t))) ++
-          RemoteWrite.encodeSeriesWithHistograms(Nil, Seq(RemoteWrite.SparseHist(
-            t, Map.empty, v, v, 0, 0.0, 0.0, Seq((1, v)), Nil)))))
-      // the first push makes the histogram head and the exemplar store
-      // exist, an hour before the held push (past its lookback)
-      val at = endMs + 3600000L
-      assert(post(port, "/api/v1/write", push(at - 3600000L, 3.0)) == 204)
-      (2 until 32).foreach { w =>
-        assert(post(port, "/api/v1/write", RemoteWrite.encodeRequest(Seq(
-          RemoteWrite.encodeSeries(Seq("__name__" -> "pushed_total", "w" -> w.toString),
-            Seq((at - 60000L, w.toDouble)))))) == 204)
-      }
-      def histCount: (Int, String) = get(port, "/api/v1/query",
-        "query" -> """histogram_count({name="held_seconds"})""", "time" -> sec(at))
-      def exemplars: (Int, String) = get(port, "/api/v1/query_exemplars",
-        "query" -> """{name="held_seconds"}""", "start" -> sec(at - 1000L), "end" -> sec(at + 1000L))
-      val whileHeld = new ConcurrentLinkedQueue[((Int, String), (Int, String), Boolean)]()
-      val pushed = inParallel(2) { i =>
-        if (i == 0) post(port, "/api/v1/write", push(at, 7.0))
+      val pushes = 5
+      val whileHeld = new ConcurrentLinkedQueue[(Seq[Int], Boolean)]()
+      val answers = inParallel(2) { i =>
+        if (i == 0) get(port, "/api/v1/query", q: _*)
         else {
-          // the last field: the push was still held after both queries
+          // the last field: the read was still held after every push
           try if (Gate.entered.await(120, TimeUnit.SECONDS))
-            whileHeld.add((histCount, exemplars, Gate.release.getCount == 1))
+            whileHeld.add(((0 until pushes).map(w => post(port, "/api/v1/write",
+              RemoteWrite.encodeRequest(Seq(RemoteWrite.encodeSeries(
+                Seq("__name__" -> "late_total", "job" -> "api", "w" -> w.toString),
+                Seq((endMs, 1.0))))))), Gate.release.getCount == 1))
           finally Gate.release.countDown()
-          0
+          (0, "")
         }
       }
-      assert(pushed.head == 204)
-      assert(Gate.entered.getCount == 0, "the held push never ran its consolidation")
-      val held = whileHeld.asScala.toSeq
-      assert(held.size == 1)
-      val ((hc, hb), (ec, eb), stillHeld) = held.head
-      assert(stillHeld, "the push was released before both queries answered")
-      assert(hc == 200 && hb.contains(""""result":[]"""), s"histogram while held: $hb")
-      assert(ec == 200 && !eb.contains(s"trace-$at"), s"exemplars while held: $eb")
-      val (hc2, hb2) = histCount
-      assert(hc2 == 200 && hb2.matches("""(?s).*,"7(\.0)?"\].*"""), hb2)
-      val (ec2, eb2) = exemplars
-      assert(ec2 == 200 && eb2.contains(s"trace-$at"), eb2)
+      assert(Gate.entered.getCount == 0, "the read never ran its job")
+      assert(whileHeld.asScala.toSeq == Seq((Seq.fill(pushes)(204), true)),
+        s"pushes during the held read: ${whileHeld.asScala}")
+      // the held read answers from the snapshot it started with
+      assert(answers.head == before)
+      val (c, b) = get(port, "/api/v1/query",
+        "query" -> """count({job="api"})""", "time" -> sec(endMs))
+      assert(c == 200 && b.contains(s""","${14 + pushes}.0"]"""), b)
+    }
+  }
+
+  test("a concurrent poller never sees part of a push") {
+    val srv = new PromHttpServer(spark, store)
+    withServer(srv) { port =>
+      // one TimeSeries message per push: labels, the float sample and
+      // its exemplar, then the histogram field (protobuf fields of one
+      // message concatenate)
+      def push(k: Int): Array[Byte] = {
+        val t = endMs + 1000L * (k + 1)
+        RemoteWrite.encodeRequest(Seq(
+          RemoteWrite.encodeSeriesWithExemplars(
+            Seq("__name__" -> "held_seconds", "job" -> "api"), Seq((t, k.toDouble)),
+            Seq((Seq("trace_id" -> s"trace-$k"), k.toDouble, t))) ++
+          RemoteWrite.encodeSeriesWithHistograms(Nil, Seq(RemoteWrite.SparseHist(
+            t, Map.empty, k.toDouble, k.toDouble, 0, 0.0, 0.0, Seq((1, k.toDouble)), Nil)))))
+      }
+      val pushes = 30
+      type Snapshot = (DataFrame, Option[DataFrame], Option[DataFrame])
+      def same(a: Snapshot, b: Snapshot): Boolean = (a._1 eq b._1) &&
+        (a._2.orNull eq b._2.orNull) && (a._3.orNull eq b._3.orNull)
+      // the poller keeps every distinct snapshot it reads while the
+      // pushes go on; each is counted afterwards
+      val seen = new ConcurrentLinkedQueue[Snapshot]()
+      val pushing = new CountDownLatch(1)
+      val codes = inParallel(2) { i =>
+        if (i == 0) try (0 until pushes).map(k => post(port, "/api/v1/write", push(k)))
+        finally pushing.countDown()
+        else {
+          var last: Snapshot = null
+          while (pushing.getCount > 0) {
+            val s = srv.snapshotTables
+            if (last == null || !same(s, last)) { seen.add(s); last = s }
+          }
+          Nil
+        }
+      }
+      assert(codes.head == Seq.fill(pushes)(204))
+      val held = col("`labels.__name__`") === "held_seconds"
+      val counts = seen.asScala.toSeq.map { case (f, h, e) =>
+        (f.where(held).count(), h.fold(0L)(_.where(held).count()),
+          e.fold(0L)(_.where(held).count()))
+      }
+      assert(counts.size > 1, "the poller saw no push land")
+      counts.foreach { case (f, h, e) =>
+        assert(f == h && h == e, s"a snapshot holds part of a push: $counts")
+      }
+      val (f, h, e) = srv.snapshotTables
+      assert((f.where(held).count(), h.get.count(), e.get.count()) ==
+        ((pushes.toLong, pushes.toLong, pushes.toLong)))
     }
   }
 
@@ -357,7 +366,7 @@ class PromHttpConcurrencySpec extends SparkSpec {
 }
 
 object PromHttpConcurrencySpec {
-  /** Holds a remote-write request's store-reading task until released. */
+  /** Holds a query request's store-reading task until released. */
   object Gate {
     @volatile var entered = new CountDownLatch(1)
     @volatile var release = new CountDownLatch(1)
@@ -374,8 +383,8 @@ object PromHttpConcurrencySpec {
     Option(TaskContext.get()).flatMap(tc =>
       Option(tc.getLocalProperty("spark.job.description"))).getOrElse("")
 
-  val holdInWrites = udf { (v: Double) =>
-    if (description == "/api/v1/write" && Gate.release.getCount > 0) {
+  val holdInQueries = udf { (v: Double) =>
+    if (description == "/api/v1/query" && Gate.release.getCount > 0) {
       Gate.entered.countDown()
       // released by the test, or on timeout (nothing answered while held)
       Gate.release.await(30, TimeUnit.SECONDS)
