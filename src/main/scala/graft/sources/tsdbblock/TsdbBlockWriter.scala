@@ -678,11 +678,6 @@ object TsdbBlockWriter {
               WalReader.WalHistogram)]] = None): Seq[String] = {
     val rows = sortedForWrite(df, blockRangeMs, hists)
     val qe = rows.queryExecution
-    // write-side plan evidence for the optimization rounds (see
-    // sortedForWrite's scaladoc) — dump it on demand
-    if (sys.env.contains("SPARK_GRAFT_EXPLAIN_WRITES"))
-      System.err.println("=== TsdbBlockWriter.write sorted plan ===\n" +
-        qe.explainString(org.apache.spark.sql.execution.FormattedMode))
     val histEncoder = HistEncoder.resolveAndBind()
     val histFields = HistEncoder.schema.length
     org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,

@@ -401,9 +401,10 @@ object TsdbDb {
     * blocks nor a WAL answers no rows.
     *
     * Which sources merge is decided per source, from the whole
-    * directory's facts, before any matcher narrows the series. Without
-    * matchers the frame also carries its label names, where the same
-    * driver reads can tell them ([[labelNames]]). */
+    * directory's facts, before any matcher narrows the series. The
+    * frame carries the time range its sources span ([[timeRange]]) and,
+    * without matchers, its label names, where the same driver reads can
+    * tell them ([[labelNames]]). */
   def select(spark: SparkSession, dbDir: String,
              matchers: Seq[Matcher]): DataFrame = {
     val opts = matchers.collect {
@@ -463,6 +464,10 @@ object TsdbDb {
       .getOrElse(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         TsdbBlockSource.schema))
+    // every row lies in its source's range, matchers or not
+    sources.flatMap(_._2.range).reduceOption((a, b) =>
+      (math.min(a._1, b._1), math.max(a._2, b._2)))
+      .foreach(withTimeRange(out, _))
     // the merge keeps at least one row of every (series, time) it takes
     // in, so the whole frame's names are the union of its sources'
     if (matchers.isEmpty)
@@ -486,6 +491,26 @@ object TsdbDb {
     * decision was taken on. */
   def labelNames(df: DataFrame): Option[Seq[String]] =
     df.queryExecution.analyzed.getTagValue(NamesTag)
+
+  private val RangeTag =
+    org.apache.spark.sql.catalyst.trees.TreeNodeTag[(Long, Long)](
+      "graft.tsdb.timeRange")
+
+  /** An inclusive `(lo, hi)` bound on the `time` of every row of `df`,
+    * known without a Spark job when `df` is a frame [[select]] built
+    * (the union of its sources' [[SourceFacts]] ranges) or one a caller
+    * passed the bound on to with [[withTimeRange]]; None otherwise. Like
+    * [[labelNames]], it rides on the analyzed plan's root, so a frame
+    * derived from a tagged one has none. */
+  def timeRange(df: DataFrame): Option[(Long, Long)] =
+    df.queryExecution.analyzed.getTagValue(RangeTag)
+
+  /** Tag `df` with `range`, which must bound the `time` of its rows — a
+    * projection of a tagged frame that keeps `time` unchanged keeps it. */
+  private[graft] def withTimeRange(df: DataFrame, range: (Long, Long)): DataFrame = {
+    df.queryExecution.analyzed.setTagValue(RangeTag, range)
+    df
+  }
 
   /** A block's [[EmittedNames]]: a series emits a float row when one of
     * its XOR chunks has an endpoint outside the series' tombstones. The

@@ -2,7 +2,10 @@ package graft.sources.tsdbblock
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 /** Writer for the Prometheus write-ahead log (wlog) — the write twin of
@@ -21,12 +24,13 @@ import org.apache.spark.sql.functions._
   * (ref, time) plus raw float bits.
   *
   * Scale model: a WAL segment is self-contained here — each Spark task
-  * writes its own segment (series records first, then its samples),
-  * with refs made globally unique by folding the partition id into the
-  * high bits. Replay (the reader's global dict pass) is unaffected:
-  * refs are arbitrary identifiers, uniqueness is the only contract. So
-  * WAL write-out distributes one-segment-per-task with zero
-  * coordination, the same shape as block write-out. */
+  * streams its own segment (each series' record, then that series'
+  * samples), with refs made globally unique by folding the segment
+  * index into the high bits. Replay (the reader's global dict pass) is
+  * unaffected: refs are arbitrary identifiers, uniqueness is the only
+  * contract. So WAL write-out distributes one-segment-per-task with zero
+  * coordination, the same shape as block write-out: one placed
+  * exchange, a sort inside each task, a stream to disk. */
 object TsdbWalWriter {
 
   private val PageSize = 32 * 1024
@@ -75,7 +79,7 @@ object TsdbWalWriter {
     samples.foreach { case (ref, t, v) =>
       varint(ref - baseRef)
       varint(t - baseTime)
-      be64(java.lang.Double.doubleToLongBits(v))
+      be64(java.lang.Double.doubleToRawLongBits(v))
     }
     b.toByteArray
   }
@@ -123,7 +127,7 @@ object TsdbWalWriter {
     exemplars.foreach { case (ref, t, v, labels) =>
       varint(ref - baseRef)
       varint(t - baseTime)
-      be64(java.lang.Double.doubleToLongBits(v))
+      be64(java.lang.Double.doubleToRawLongBits(v))
       uvarint(labels.size.toLong)
       labels.foreach { case (k, value) => str(k); str(value) }
     }
@@ -169,7 +173,7 @@ object TsdbWalWriter {
       b.write(x.toInt)
     }
     def varint(v: Long): Unit = uvarint((v << 1) ^ (v >> 63))
-    def fbits(v: Double): Unit = be64(java.lang.Double.doubleToLongBits(v))
+    def fbits(v: Double): Unit = be64(java.lang.Double.doubleToRawLongBits(v))
     def integral(v: Double, what: String): Long = {
       require(v == math.rint(v) && !v.isInfinite,
         s"integer histogram record needs integral $what, got $v")
@@ -286,14 +290,93 @@ object TsdbWalWriter {
     ((live ++ cp) :+ -1).max + 1
   }
 
+  /** The WAL write's PLACED, SERIES-ORDERED rows, factored out so its
+    * plan shape is testable (the write runs over the plan's rows, so the
+    * plan never appears in a returned DataFrame): one row per sample,
+    * `(entries, time, payload…)`, where `entries` is the sorted
+    * `(key, value)` label list.
+    *
+    * ONE exchange places the rows: `repartitionById` sends a series to
+    * task `pmod(hash(entries), partitions)`, the task that writes its
+    * segment, at a width AQE cannot coalesce (REPARTITION_BY_NUM). Inside
+    * a task the rows sort by (entries, time, payload…), so each series'
+    * samples arrive together and time-ascending. PlanQualitySpec pins
+    * the one exchange. */
+  private[graft] def placedForWal(df: DataFrame, partitions: Int,
+                                  payload: Column*): DataFrame = {
+    val rows = df.select(sort_array(map_entries(col("labels"))).as("entries") +:
+      col("time") +: payload: _*)
+    rows.repartitionById(partitions,
+        pmod(hash(col("entries")), lit(partitions)))
+      .sortWithinPartitions(rows.columns.toSeq.map(c => col(s"`$c`")): _*)
+  }
+
+  /** Stream [[placedForWal]]'s rows as one segment per task, numbered
+    * from `base`. Each task walks its rows once: where `entries` changes
+    * a series starts, with the ref `(segment << 32) | i` (i counting from
+    * 1 within the segment), its series record, then the records
+    * `samples` makes of its rows, which it must consume. Per-task heap
+    * is O(one record): no row passes through an encoder and no aggregate
+    * collects a series. A task with no rows writes an empty segment, and
+    * so does the driver for a task Spark never ran (a plan it proved
+    * empty), so the numbering has no gaps: Prometheus refuses a WAL
+    * whose segments are not sequential. Returns the segment count. */
+  private def writePlaced(placed: DataFrame, walDir: String, base: Int,
+      partitions: Int, what: String)(
+      samples: (Long, Iterator[InternalRow]) => Iterator[Array[Byte]]): Int = {
+    Files.createDirectories(Paths.get(walDir))
+    val qe = placed.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(what)) {
+      qe.toRdd.foreachPartition { it =>
+        val seg = base + TaskContext.getPartitionId()
+        // rows may be reused by the iterator: each is read before the
+        // next one is fetched
+        val rows = it.buffered
+        var i = 0L
+        val records = new Iterator[Iterator[Array[Byte]]] {
+          override def hasNext: Boolean = rows.hasNext
+          override def next(): Iterator[Array[Byte]] = {
+            val entries = rows.head.getArray(0).copy()
+            val labels = (0 until entries.numElements()).map { k =>
+              val e = entries.getStruct(k, 2)
+              (e.getUTF8String(0).toString, e.getUTF8String(1).toString)
+            }
+            i += 1
+            val ref = (seg.toLong << 32) | i
+            val series = new Iterator[InternalRow] {
+              override def hasNext: Boolean =
+                rows.hasNext && rows.head.getArray(0) == entries
+              override def next(): InternalRow = rows.next()
+            }
+            Iterator.single(seriesRecord(Seq(ref -> labels))) ++
+              samples(ref, series)
+          }
+        }.flatten
+        writeSegment(f"$walDir/$seg%08d", records)
+      }
+    }
+    fillSegments(walDir, base, partitions)
+    partitions
+  }
+
+  /** Write the segments `base until base + n` that no task wrote (Spark
+    * runs no task over a plan it proved empty) as empty ones. */
+  private def fillSegments(walDir: String, base: Int, n: Int): Unit =
+    (base until base + n).map(s => f"$walDir/$s%08d")
+      .filterNot(p => new java.io.File(p).exists())
+      .foreach(writeSegment(_, Iterator.empty))
+
   /** Write the long-form frame `(time LONG ms, value DOUBLE,
-    * labels MAP)` as a WAL directory: ONE shuffle groups samples into
-    * series; each task writes one self-contained segment (its series
-    * records, then time-ordered samples records). Segment names continue
-    * the dir's numbering (append semantics — a second batch lands after
-    * existing segments and checkpoints); refs fold the segment index
-    * into the high bits for global uniqueness. Returns the segment
-    * count written by this call.
+    * labels MAP)` as `partitions` WAL segments: [[placedForWal]] places
+    * each series in one task and orders its samples, and
+    * [[writePlaced]] streams every task's series into its segment
+    * (series record, then time-ordered samples records). Segment names
+    * continue the dir's numbering (append semantics — a second batch
+    * lands after existing segments and checkpoints); refs fold the
+    * segment index into the high bits for global uniqueness. A NULL
+    * value (the engine's staleness marker) is written as the marker
+    * ([[graft.tsdb.TsdbSchema.StaleNaNBits]]). Returns the segment
+    * count written by this call, which is `partitions`.
     *
     * `baseSegment` pins the first segment index instead of continuing
     * the numbering — the IDEMPOTENCE hook for streaming sinks: a
@@ -301,79 +384,29 @@ object TsdbWalWriter {
     * is written whole by one task), so at-least-once replay never
     * duplicates samples.
     *
-    * MEMORY CONTRACT: each task MATERIALIZES its whole segment
-    * (`it.toSeq`) before writing — series refs are assigned positionally
-    * within the segment, and the record stream interleaves series and
-    * sample records, so the segment cannot stream out one group at a
-    * time. `partitions` is therefore a TASK-MEMORY knob, not (only) a
-    * parallelism knob: per-task heap ≈ input bytes / partitions, and
-    * the right setting keeps each segment near Prometheus's own 128 MB
-    * segment target — size it with [[partitionsForBytes]]. At 100 TB
-    * the WAL path is for micro-batch tails (the block writer is the
-    * bulk path), so segments stay batch-sized by construction. */
+    * `partitions` sets the segment count; a task streams its segment
+    * and holds one record at a time, so it is not a memory knob. Size it
+    * with [[partitionsForBytes]] to keep segments near Prometheus's own
+    * 128 MB target. */
   def write(df: DataFrame, walDir: String, partitions: Int = 4,
             baseSegment: Option[Int] = None): Int = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    Files.createDirectories(Paths.get(walDir))
     val base = baseSegment.getOrElse(nextSegmentIndex(walDir))
-    // The series grouping is CPU-heavy (per-series list build + sort)
-    // but byte-light, so AQE's byte-based partition coalescing shrinks
-    // it below core count (measured: the q113 agg stage ran 8-wide on
-    // local[32], ~2.8 s). An explicit repartition on the grouping key
-    // pins the width — the planner reuses the exchange for the groupBy
-    // (hash(labels, width) satisfies the clustering), so this is still
-    // ONE grouping shuffle, just at a width AQE cannot coalesce. The
-    // round-robin repartition below it is the SEGMENT-SIZING knob and
-    // stays: it balances series across exactly `partitions` segments
-    // independent of key skew (a hash-by-labels into `partitions`
-    // buckets would make segment sizes skew-dependent).
-    val width = math.max(spark.sessionState.conf.numShufflePartitions,
-      partitions)
-    val grouped = df
-      .select(array_sort(transform(map_entries(col("labels")),
-          e => struct(e.getField("key").as("_1"), e.getField("value").as("_2"))))
-        .as("labels"), col("time"), col("value"))
-      .repartition(width, col("labels"))
-      .groupBy(col("labels"))
-      .agg(array_sort(collect_list(struct(col("time").as("_1"),
-        col("value").as("_2")))).as("samples"))
-      .repartition(partitions)
-      .as[(Seq[(String, String)], Seq[(Long, Double)])]
-    // write-side plan evidence on demand (see TsdbBlockWriter.write)
-    if (sys.env.contains("SPARK_GRAFT_EXPLAIN_WRITES"))
-      System.err.println("=== TsdbWalWriter.write grouped plan ===\n" +
-        grouped.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-    val segs = grouped.mapPartitions { it =>
-      val seg = base + org.apache.spark.TaskContext.getPartitionId()
-      val series = it.toSeq
-      if (series.isEmpty) Iterator.empty
-      else {
-        val withRefs = series.zipWithIndex.map { case ((labels, samples), i) =>
-          ((seg.toLong << 32) | (i.toLong + 1), labels, samples)
-        }
-        val seriesRecs = withRefs.grouped(1000).map(g =>
-          seriesRecord(g.map(s => (s._1, s._2))))
-        val sampleRecs = withRefs.iterator.flatMap { case (ref, _, samples) =>
-          samples.grouped(SamplesPerRecord).map(g =>
-            samplesRecord(g.map { case (t, v) => (ref, t, v) }))
-        }
-        val path = f"$walDir/$seg%08d"
-        writeSegment(path, seriesRecs ++ sampleRecs)
-        Iterator.single(path)
-      }
-    }.collect()
-    segs.length
+    writePlaced(placedForWal(df, partitions, col("value")), walDir, base,
+        partitions, "TsdbWalWriter.write") { (ref, series) =>
+      // made here, not captured: Java serialization of a closure's
+      // double canonicalizes NaN payloads, and the marker is one
+      val stale = java.lang.Double.longBitsToDouble(
+        graft.tsdb.TsdbSchema.StaleNaNBits)
+      series.map(r => (ref, r.getLong(1), if (r.isNullAt(2)) stale else r.getDouble(2)))
+        .grouped(SamplesPerRecord).map(samplesRecord)
+    }
   }
 
-  /** [[write]]'s partition-sizing helper: the partition count that
-    * keeps each task's materialized segment near `targetSegmentBytes`
-    * (default 128 MB — Prometheus's own `wlog` segment size, and a
-    * comfortable per-task heap slice on any executor profile).
-    * `estimatedBytes` is the caller's estimate of the encoded payload
-    * (long-form input bytes are a safe upper bound: WAL records varint-
-    * and delta-compress below raw size). */
+  /** The segment count that keeps each of [[write]]'s segments near
+    * `targetSegmentBytes` (default 128 MB — Prometheus's own `wlog`
+    * segment size). `estimatedBytes` is the caller's estimate of the
+    * encoded payload (long-form input bytes are a safe upper bound: WAL
+    * records varint- and delta-compress below raw size). */
   def partitionsForBytes(estimatedBytes: Long,
                          targetSegmentBytes: Long = 128L << 20): Int =
     math.max(1, math.ceil(
@@ -387,61 +420,27 @@ object TsdbWalWriter {
     * dense→sparse mapping is [[graft.tsdb.RemoteWrite.encodeHistRequests]]'s:
     * counts(0) (the `(-Inf,0]` bucket) → zero count, dense position
     * p ≥ 1 → sparse index `minExp + p − 1`, overflow rides as
-    * `maxExp + 1`. Same sharding as [[write]]: one self-contained
-    * segment per task. Returns the segment count. */
+    * `maxExp + 1`. Same placed stream as [[write]]: one segment per
+    * task. Returns the segment count. */
   def writeHistograms(df: DataFrame, walDir: String, schemaId: Int,
                       minExp: Int, maxExp: Int, float: Boolean,
                       partitions: Int = 2): Int = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    Files.createDirectories(Paths.get(walDir))
-    val base = nextSegmentIndex(walDir)
-    // same width pin as [[write]]: one grouping shuffle, AQE-proof width
-    val width = math.max(spark.sessionState.conf.numShufflePartitions,
-      partitions)
-    val grouped = df
-      .select(array_sort(transform(map_entries(col("labels")),
-          e => struct(e.getField("key").as("_1"), e.getField("value").as("_2"))))
-        .as("labels"), col("time"), col("hist"))
-      .repartition(width, col("labels"))
-      .groupBy(col("labels"))
-      .agg(array_sort(collect_list(struct(
-        col("time").as("_1"),
-        col("hist.count").as("_2"), col("hist.sum").as("_3"),
-        element_at(col("hist.counts"), 1).as("_4"),
-        slice(col("hist.counts"), 2, maxExp - minExp + 2).as("_5"))))
-        .as("hists"))
-      .repartition(partitions)
-      .as[(Seq[(String, String)],
-           Seq[(Long, Double, Double, Double, Seq[Double])])]
-    val segs = grouped.mapPartitions { it =>
-      val seg = base + org.apache.spark.TaskContext.getPartitionId()
-      val series = it.toSeq
-      if (series.isEmpty) Iterator.empty
-      else {
-        val withRefs = series.zipWithIndex.map { case ((labels, hists), i) =>
-          ((seg.toLong << 32) | (i.toLong + 1), labels, hists)
+    val rows = placedForWal(df, partitions, col("hist.count"),
+      col("hist.sum"), element_at(col("hist.counts"), 1).as("zero"),
+      slice(col("hist.counts"), 2, maxExp - minExp + 2).as("buckets"))
+    writePlaced(rows, walDir, nextSegmentIndex(walDir), partitions,
+        "TsdbWalWriter.writeHistograms") { (ref, series) =>
+      series.map { r =>
+        val buckets = r.getArray(5).toDoubleArray()
+        val sparse = buckets.indices.collect {
+          case i if buckets(i) != 0.0 => (minExp + i, buckets(i))
         }
-        val seriesRecs = withRefs.grouped(1000).map(g =>
-          seriesRecord(g.map(s => (s._1, s._2))))
-        val histRecs = withRefs.iterator.flatMap { case (ref, _, hists) =>
-          hists.grouped(100).map { g =>
-            histogramRecord(g.map { case (t, cnt, sm, zero, buckets) =>
-              val sparse = buckets.zipWithIndex.collect {
-                case (c, i) if c != 0.0 => (minExp + i, c)
-              }
-              WalReader.WalHistogram(ref, t, counterResetHint = 0,
-                schema = schemaId, zeroThreshold = 0.0, zeroCount = zero,
-                count = cnt, sum = sm, positive = sparse, negative = Nil,
-                customValues = Nil, isFloat = float)
-            }, float)
-          }
-        }
-        writeSegment(f"$walDir/$seg%08d", seriesRecs ++ histRecs)
-        Iterator.single(seg)
-      }
-    }.collect()
-    segs.length
+        WalReader.WalHistogram(ref, r.getLong(1), counterResetHint = 0,
+          schema = schemaId, zeroThreshold = 0.0, zeroCount = r.getDouble(4),
+          count = r.getDouble(2), sum = r.getDouble(3), positive = sparse,
+          negative = Nil, customValues = Nil, isFloat = float)
+      }.grouped(100).map(histogramRecord(_, float))
+    }
   }
 
   /** Append EXEMPLARS to an existing WAL: each exemplar row
@@ -472,18 +471,17 @@ object TsdbWalWriter {
       .as[(Long, Double, Seq[(String, String)], Seq[(String, String)])]
       .repartition(partitions)
     val counts = rows.mapPartitions { it =>
-      val seg = base + org.apache.spark.TaskContext.getPartitionId()
+      val seg = base + TaskContext.getPartitionId()
       val dict = invB.value
       val resolved = it.flatMap { case (t, v, labels, ex) =>
         dict.get(labels).map(ref => (ref, t, v, ex))
       }.toSeq.sortBy(e => (e._1, e._2))
-      if (resolved.isEmpty) Iterator.empty
-      else {
-        writeSegment(f"$walDir/$seg%08d",
-          resolved.grouped(SamplesPerRecord).map(exemplarRecord))
-        Iterator.single(resolved.size.toLong)
-      }
+      // written even when empty: segment numbers stay sequential
+      writeSegment(f"$walDir/$seg%08d",
+        resolved.grouped(SamplesPerRecord).map(exemplarRecord))
+      Iterator.single(resolved.size.toLong)
     }.collect()
+    fillSegments(walDir, base, partitions)
     counts.sum
   }
 

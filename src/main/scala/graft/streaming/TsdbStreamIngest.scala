@@ -60,9 +60,13 @@ object TsdbStreamIngest {
     * caller can `TsdbWalWriter.checkpoint` the dir between (not
     * during) runs exactly as Prometheus truncates its head.
     *
-    * Scale: per batch, ONE shuffle (the series groupBy inside
-    * [[TsdbWalWriter.write]]) and one self-contained segment per task
-    * — state-free, so throughput tracks arrival rate. */
+    * Every batch writes exactly `partitions` segments, empty ones
+    * included, so the numbering stays sequential across batches.
+    *
+    * Scale: per batch, ONE exchange (the series placement inside
+    * [[graft.sources.tsdbblock.TsdbWalWriter.write]]), a sort within
+    * each task and one streamed segment per task — state-free, so
+    * throughput tracks arrival rate. */
   def startWalSink(samples: DataFrame, walDir: String, checkpoint: String,
                    partitions: Int = 4): StreamingQuery =
     samples.writeStream

@@ -3,6 +3,7 @@ package graft.tsdb
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Sample
+import graft.sources.tsdbblock.TsdbDb
 
 /** Ingest pipeline: long-form samples → wide dynamic-column parquet table
   * (SURVEY.md §2.1 S1-S3/S5/S6, §3.1; reference `readTsdb` first half,
@@ -21,9 +22,9 @@ import graft.model.Sample
   *
   * Write layout (≡ simpleSchema() knobs, hello.go:120-157):
   *   - sorted by (time ASC, label cols ASC NULLS FIRST) — hello.go:148-155.
-  *     At scale: `repartitionByRange(time)` + `sortWithinPartitions`, so
-  *     the global sort is one range shuffle and each parquet file covers a
-  *     tight time slice ⇒ row-group min/max stats prune time-range queries.
+  *     At scale: one time-placing shuffle + `sortWithinPartitions`, so
+  *     each parquet file covers a tight, disjoint time slice ⇒ row-group
+  *     min/max stats prune time-range queries (see [[write]]).
   *   - snappy + dictionary encoding: Spark parquet defaults already match
   *     (dictionary ≡ RLE_DICTIONARY on label columns).
   *   - later batches carrying NEW label names simply write a superset
@@ -46,7 +47,7 @@ object TsdbIngest {
     * pass through and some merge, the distinct sits above the union
     * and the merged part's aggregate still runs (ROADMAP 6(d)). */
   def labelNames(longForm: DataFrame): Seq[String] =
-    graft.sources.tsdbblock.TsdbDb.labelNames(longForm).getOrElse(
+    TsdbDb.labelNames(longForm).getOrElse(
       longForm
         .select(map_keys(col(LabelsCol)).as("names"))
         .distinct()
@@ -64,22 +65,38 @@ object TsdbIngest {
   def toWide(longForm: DataFrame, names: Seq[String]): DataFrame = {
     val labelCols: Seq[Column] =
       names.map(n => col(LabelsCol).getItem(n).as(labelColName(n)))
-    longForm.select(col(TimeCol) +: col(ValueCol) +: labelCols: _*)
+    val wide = longForm.select(col(TimeCol) +: col(ValueCol) +: labelCols: _*)
+    // `time` passes through unchanged, so the input's known range holds
+    TsdbDb.timeRange(longForm).fold(wide)(TsdbDb.withTimeRange(wide, _))
   }
 
   def toWide(longForm: DataFrame): DataFrame =
     toWide(longForm, labelNames(longForm))
 
-  /** Sorted, pruning-friendly parquet write (R2; hello.go:148-155).
-    * `timePartitions` sizes the range shuffle — at 100 TB pick
-    * bytes/partition ≈ 128-512 MB; here the caller passes a small count.
-    */
+  /** Sorted, pruning-friendly parquet write (R2; hello.go:148-155):
+    * `timePartitions` time-disjoint files, each sorted by (time, label
+    * columns asc, nulls first). At 100 TB pick bytes/partition ≈
+    * 128-512 MB; here the caller passes a small count.
+    *
+    * ONE exchange places the rows. When the driver already knows a bound
+    * on the frame's times ([[TsdbDb.timeRange]]: a [[TsdbDb.read]] frame,
+    * through [[toWide]]), it is a `repartitionById` over
+    * `timePartitions` equal time slices, clamped to the bound, and no
+    * job runs before it. Any other frame takes `repartitionByRange(time)`,
+    * whose partition bounds cost a sampling job over the input. */
   def write(wide: DataFrame, path: String, timePartitions: Int = 8,
             mode: SaveMode = SaveMode.Overwrite): Unit = {
     val sortCols: Seq[Column] =
       col(TimeCol).asc +: labelColumns(wide).map(c => col(s"`$c`").asc_nulls_first)
-    wide
-      .repartitionByRange(timePartitions, col(TimeCol))
+    val placed = TsdbDb.timeRange(wide) match {
+      case Some((lo, hi)) =>
+        val span = ((hi - lo) / timePartitions + 1).toDouble
+        val slice = floor((col(TimeCol) - lit(lo)) / lit(span))
+        wide.repartitionById(timePartitions,
+          least(greatest(slice, lit(0L)), lit(timePartitions - 1L)).cast("int"))
+      case None => wide.repartitionByRange(timePartitions, col(TimeCol))
+    }
+    placed
       .sortWithinPartitions(sortCols: _*)
       .write
       .mode(mode)

@@ -641,4 +641,32 @@ class PlanQualitySpec extends SparkSpec {
       s"no aggregate may collect a series' samples:\n$plan")
   }
 
+  test("WAL write places each series through ONE keyed exchange") {
+    // `repartitionById` on a hash of the sorted label entries puts each
+    // series in the task that writes its segment, at the segment count
+    // (REPARTITION_BY_NUM, so AQE cannot coalesce segments away); the
+    // sort within the task groups the series, so no aggregate collects
+    // its samples and no second exchange balances segments
+    import org.apache.spark.sql.functions._
+    val long = SparkEntry.queries("tsdb_q1_scan")(spark, Sf0001)
+      .select(col("time"), col("value"),
+        map(lit("__name__"), coalesce(col("`labels.name`"), lit("")),
+          lit("user"), coalesce(col("`labels.user`"), lit("")))
+          .as("labels"))
+    val plan = graft.sources.tsdbblock.TsdbWalWriter
+      .placedForWal(long, 4, col("value"))
+      .queryExecution.executedPlan.toString()
+    val placed = "(?i)shufflepartitionidpassthrough\\([^\\n]*entries".r
+      .findAllIn(plan).size
+    assert(placed == 1,
+      s"WAL write must place series ONCE by their entries ($placed):\n$plan")
+    assert(keyedExchanges(plan) == 1,
+      s"the series placement must be the only keyed exchange:\n$plan")
+    assert(plan.contains("REPARTITION_BY_NUM"),
+      s"the segment count must be pinned against AQE coalescing:\n$plan")
+    assert(!plan.contains("ObjectHashAggregate") &&
+      !plan.contains("HashAggregate") && !plan.contains("SortAggregate"),
+      s"no aggregate may collect a series' samples:\n$plan")
+  }
+
 }
