@@ -1,11 +1,45 @@
 package graft.sources.tsdbblock
 
-/** Little decoding helpers for the Prometheus TSDB on-disk formats
-  * (public format docs: prometheus/tsdb/docs/format/{index,chunks}.md;
-  * reference consumes these via the prometheus library — SURVEY.md §2.1
-  * S1/S2, hello.go:50-74).
+/** The byte and bit codecs of the Prometheus TSDB on-disk formats
+  * (public format docs: prometheus/tsdb/docs/format/{index,chunks,
+  * tombstones,wal}.md; the reference consumes these via the prometheus
+  * library — SURVEY.md §2.1 S1/S2, hello.go:50-74), the counterpart of
+  * Prometheus's `tsdb/encoding` `Encbuf`/`Decbuf`.
   */
 object Binary {
+
+  /** CRC32-Castagnoli, the checksum Prometheus uses throughout. */
+  def crc32c(b: Array[Byte], from: Int, len: Int): Long = {
+    val c = new java.util.zip.CRC32C
+    c.update(b, from, len)
+    c.getValue
+  }
+
+  /** Growable byte buffer writing what [[ByteReader]] reads. */
+  final class ByteWriter extends java.io.ByteArrayOutputStream {
+    def u8(v: Int): Unit = write(v & 0xff)
+    def be16(v: Int): Unit = { u8(v >>> 8); u8(v) }
+    def be32(v: Long): Unit = {
+      u8((v >>> 24).toInt); u8((v >>> 16).toInt); u8((v >>> 8).toInt); u8(v.toInt)
+    }
+    def be64(v: Long): Unit = { be32(v >>> 32); be32(v) }
+    /** LEB128 unsigned varint (Go binary.PutUvarint). */
+    def uvarint(v: Long): Unit = {
+      var x = v
+      while ((x & ~0x7fL) != 0) { write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
+      write(x.toInt)
+    }
+    /** Zigzag signed varint (Go binary.PutVarint). */
+    def varint(v: Long): Unit = uvarint((v << 1) ^ (v >> 63))
+    def bytes(b: Array[Byte]): Unit = write(b, 0, b.length)
+    /** A uvarint-length-prefixed UTF-8 string. */
+    def str(s: String): Unit = {
+      val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      uvarint(b.length.toLong); bytes(b)
+    }
+    /** [[crc32c]] of the bytes written from position `from` on. */
+    def crc32c(from: Int = 0): Long = Binary.crc32c(buf, from, count - from)
+  }
 
   /** Byte-cursor over an array with Go-style varint decoding. */
   final class ByteReader(val buf: Array[Byte], var pos: Int) {

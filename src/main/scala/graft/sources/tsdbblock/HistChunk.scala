@@ -5,9 +5,9 @@ import WalReader.WalHistogram
 
 /** Codec for Prometheus NATIVE-HISTOGRAM chunks — encodings 2 (integer
   * histogram) and 3 (float histogram) of the chunks-segment format,
-  * the sibling of [[XorChunk]]/[[TsdbBlockWriter.encodeXorChunk]]
-  * (encoding 1). The reference itself consumes only float chunks
-  * (`chunkenc.ValFloat`, hello.go:490); this codec is what lets the
+  * the sibling of [[XorChunk]] (encoding 1). The reference itself
+  * consumes only float chunks (`chunkenc.ValFloat`, hello.go:490);
+  * this codec is what lets the
   * engine's OWN lifecycle paths (head flush, snapshot, compaction —
   * the q108–q139 family) carry the histogram samples its WAL, wire and
   * query tiers already handle, instead of silently dropping them.

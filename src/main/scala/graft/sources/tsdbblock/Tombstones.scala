@@ -1,7 +1,7 @@
 package graft.sources.tsdbblock
 
-import java.nio.file.{Files, Paths}
-import Binary.ByteReader
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import Binary.{ByteReader, ByteWriter}
 
 /** Reader/writer for the Prometheus TSDB tombstones file — the deletion
   * markers a block carries until the next compaction rewrites it
@@ -26,12 +26,6 @@ object Tombstones {
 
   private val Magic = 0x0130ba30L
 
-  private def crc32c(b: Array[Byte], from: Int, len: Int): Long = {
-    val c = new java.util.zip.CRC32C
-    c.update(b, from, len)
-    c.getValue
-  }
-
   /** Parse a tombstones file into ref → merged, sorted intervals.
     * Missing file ≡ empty (older blocks may lack it). */
   def read(path: String): Map[Long, Seq[Interval]] = {
@@ -43,11 +37,8 @@ object Tombstones {
     require(r.be32() == Magic, s"not a tombstones file: $path")
     val version = r.u8()
     require(version == 1, s"unsupported tombstones version $version")
-    val stored = {
-      val t = new ByteReader(buf, buf.length - 4)
-      t.be32()
-    }
-    require(crc32c(buf, 5, buf.length - 9) == stored,
+    val stored = new ByteReader(buf, buf.length - 4).be32()
+    require(Binary.crc32c(buf, 5, buf.length - 9) == stored,
       s"tombstones checksum mismatch: $path")
     val out = scala.collection.mutable.Map
       .empty[Long, List[Interval]].withDefaultValue(Nil)
@@ -61,29 +52,26 @@ object Tombstones {
   }
 
   /** Write (replacing) a tombstones file. Intervals are merged per ref
-    * so the on-disk form is canonical regardless of delete order. */
+    * so the on-disk form is canonical regardless of delete order. The
+    * file is replaced atomically (written as `tombstones.tmp`, then
+    * renamed over it, as Prometheus's `fileutil.Replace` does): a scan
+    * planning concurrently reads the old stones or the new, never a
+    * short file. */
   def write(path: String, stones: Map[Long, Seq[Interval]]): Unit = {
-    val body = new java.io.ByteArrayOutputStream()
-    def uvarint(v: Long): Unit = {
-      var x = v
-      while ((x & ~0x7fL) != 0) { body.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
-      body.write(x.toInt)
-    }
-    def varint(v: Long): Unit = uvarint((v << 1) ^ (v >> 63))
+    val w = new ByteWriter
+    w.be32(Magic); w.u8(1)
     stones.toSeq.sortBy(_._1).foreach { case (ref, ivs) =>
       merge(ivs).foreach { iv =>
-        uvarint(ref); varint(iv.mint); varint(iv.maxt)
+        w.uvarint(ref); w.varint(iv.mint); w.varint(iv.maxt)
       }
     }
-    val stonesBytes = body.toByteArray
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(Array[Byte](0x01, 0x30.toByte, 0xba.toByte, 0x30.toByte), 0, 4)
-    out.write(1)
-    out.write(stonesBytes, 0, stonesBytes.length)
-    val c = crc32c(stonesBytes, 0, stonesBytes.length)
-    out.write(((c >>> 24) & 0xff).toInt); out.write(((c >>> 16) & 0xff).toInt)
-    out.write(((c >>> 8) & 0xff).toInt); out.write((c & 0xff).toInt)
-    Files.write(Paths.get(path), out.toByteArray)
+    w.be32(w.crc32c(5))
+    val tmp = Paths.get(s"$path.tmp")
+    try {
+      Files.write(tmp, w.toByteArray)
+      Files.move(tmp, Paths.get(path), StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+    } catch { case t: Throwable => Files.deleteIfExists(tmp); throw t }
   }
 
   /** Union two stone maps (delete-on-top-of-delete). */

@@ -10,67 +10,36 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * paths (snapshot, backfill, compaction — the q108–q139 family)
   * round-trip the histogram samples its WAL, wire and query tiers carry.
   *
-  * Distribution model mirrors the float scan ([[TsdbBlockSource]]): the
-  * driver reads only the index to plan; series round-robin across
-  * partitions; each task seeks its own chunks. Float (XOR) chunks cost
-  * one 8-byte header read each — the encoding byte routes, nothing
-  * decodes. Tombstones prune fully-deleted chunks at planning time and
-  * mask per-sample in the reader, exactly as the float path does.
+  * Planned as the float scan is ([[TsdbBlockSource.planSeries]]): the
+  * driver reads only the index and tombstones, fully deleted chunks
+  * never schedule, and the task count follows the chunk count. Each
+  * task fetches its own chunks ([[ChunkFile.Reader]]); a float (XOR)
+  * chunk costs one 8-byte header read — the encoding byte routes,
+  * nothing decodes. Partly deleted chunks mask per sample.
   */
 object TsdbBlockRecords {
 
   /** FULL-fidelity histogram samples `(labels, sample)` from one block
     * directory — every [[WalReader.WalHistogram]] field survives, so a
     * compaction re-encode is lossless. */
-  def readHistograms(spark: SparkSession, blockDir: String,
-                     partitions: Int = 16)
+  def readHistograms(spark: SparkSession, blockDir: String)
       : Dataset[(Map[String, String], WalReader.WalHistogram)] = {
     import spark.implicits._
-    val stones = Tombstones.read(s"$blockDir/tombstones")
-    val series = BlockIndexCache.get(blockDir).series
-      .map(s => stones.get(s.ref).fold(s)(ivs => s.copy(deleted = ivs)))
-      .flatMap { s =>
-        val keep = s.chunks.filterNot(c => s.deleted.exists(iv =>
-          iv.mint <= c.minTime && c.maxTime <= iv.maxt))
-        if (keep.isEmpty) None else Some(s.copy(chunks = keep))
-      }
-    val n = math.max(1, math.min(partitions, series.size))
-    val slices = (0 until n).map(p =>
-      series.zipWithIndex.collect { case (s, i) if i % n == p => s })
-    val rdd = spark.sparkContext.parallelize(slices, n).flatMap { part =>
-      val segments =
-        scala.collection.mutable.Map.empty[Int, java.io.RandomAccessFile]
-      def segment(k: Int): java.io.RandomAccessFile =
-        segments.getOrElseUpdate(k, new java.io.RandomAccessFile(
-          f"$blockDir/chunks/${k + 1}%06d", "r"))
+    val slices = TsdbBlockSource.planSeries(spark, blockDir, None)
+    val rdd = spark.sparkContext.parallelize(slices, slices.size).flatMap { part =>
       // streaming scan: files close at task end, samples never buffer
+      val chunks = new ChunkFile.Reader(blockDir)
       Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ =>
-          segments.values.foreach(_.close())))
+        _.addTaskCompletionListener[Unit](_ => chunks.close()))
       part.iterator.flatMap { s =>
         s.chunks.iterator.flatMap { c =>
-          val f = segment(c.segment)
-          f.seek(c.offset)
-          val head = new Array[Byte](8)
-          f.readFully(head)
-          val hr = new Binary.ByteReader(head, 0)
-          val len = hr.uvarint().toInt
-          val enc = hr.u8()
-          if (enc != HistChunk.EncHistogram &&
-              enc != HistChunk.EncFloatHistogram) Iterator.empty
-          else {
-            val data = new Array[Byte](len)
-            val fromHead = math.min(len, head.length - hr.pos)
-            System.arraycopy(head, hr.pos, data, 0, fromHead)
-            if (fromHead < len) {
-              f.seek(c.offset + hr.pos + fromHead)
-              f.readFully(data, fromHead, len - fromHead)
-            }
-            HistChunk.decode(data, enc == HistChunk.EncFloatHistogram)
-              .iterator
-              .filterNot(h => Tombstones.deleted(s.deleted, h.time))
-              .map(h => (s.labels, h))
-          }
+          val (enc, data) = chunks.fetch(c)(e =>
+            e == HistChunk.EncHistogram || e == HistChunk.EncFloatHistogram)
+          if (data == null) Iterator.empty
+          else HistChunk.decode(data, enc == HistChunk.EncFloatHistogram)
+            .iterator
+            .filterNot(h => Tombstones.deleted(s.deleted, h.time))
+            .map(h => (s.labels, h))
         }
       }
     }
@@ -80,10 +49,9 @@ object TsdbBlockRecords {
   /** The [[graft.tsdb.RemoteWrite.SparseHist]] view — what
     * [[graft.tsdb.RemoteWrite.denseFromSparse]] and the PromQLHist
     * query tier consume. */
-  def readHistogramsSparse(spark: SparkSession, blockDir: String,
-                           partitions: Int = 16)
+  def readHistogramsSparse(spark: SparkSession, blockDir: String)
       : Dataset[graft.tsdb.RemoteWrite.SparseHist] =
-    sparseView(readHistograms(spark, blockDir, partitions))
+    sparseView(readHistograms(spark, blockDir))
 
   /** Project a full-fidelity histogram frame (this scan's,
     * [[TsdbDb.readHistograms]]', or the WAL's) down to the query tier's

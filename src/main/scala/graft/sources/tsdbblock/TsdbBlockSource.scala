@@ -3,7 +3,7 @@ package graft.sources.tsdbblock
 import java.util
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -56,6 +56,54 @@ object TsdbBlockSource {
     // nullable: staleness markers decode to NULL (TsdbSchema.isStaleMarker)
     StructField("value", DoubleType, nullable = true),
     StructField("labels", MapType(StringType, StringType), nullable = false)))
+
+  /** A label set as a `labels` column value, keys sorted. */
+  private[tsdbblock] def labelMap(labels: Map[String, String]): ArrayBasedMapData = {
+    val keys = labels.keys.toArray.sorted
+    new ArrayBasedMapData(
+      ArrayData.toArrayData(keys.map(UTF8String.fromString)),
+      ArrayData.toArrayData(keys.map(k => UTF8String.fromString(labels(k)))))
+  }
+
+  /** The label pairs of a `sort_array(map_entries(labels))` value. */
+  private[tsdbblock] def labelPairs(entries: ArrayData): Seq[(String, String)] =
+    (0 until entries.numElements()).map { i =>
+      val e = entries.getStruct(i, 2)
+      (e.getUTF8String(0).toString, e.getUTF8String(1).toString)
+    }
+
+  /** A block scan's tasks, planned on the driver from the index alone:
+    * the series `select` keeps, tombstones attached, their chunks that
+    * `inRange` keeps and no stone wholly covers (partial overlaps mask
+    * per sample in the reader), emptied series dropped, the rest
+    * round-robin into tasks. Without `partitions`, one task per
+    * ~2,048 chunks up to the core count (measured ~25 µs per sf0.1
+    * chunk decode, ~100 µs for a full 120-sample chunk ⇒ tasks in the
+    * 50–200 ms band): a small block reads as a handful of tasks, a
+    * large one fills the cluster. */
+  private[tsdbblock] def planSeries(spark: SparkSession, path: String,
+      partitions: Option[Int],
+      select: IndexReader.SeriesEntry => Boolean = _ => true,
+      inRange: IndexReader.ChunkRef => Boolean = _ => true)
+      : Seq[Seq[IndexReader.SeriesEntry]] = {
+    val stones = Tombstones.read(s"$path/tombstones")
+    val series = BlockIndexCache.get(path).series.filter(select).flatMap { s =>
+      val deleted = stones.getOrElse(s.ref, Nil)
+      val keep = s.chunks.filter(c => inRange(c) &&
+        !deleted.exists(iv => iv.mint <= c.minTime && c.maxTime <= iv.maxt))
+      Option.when(keep.nonEmpty)(s.copy(chunks = keep, deleted = deleted))
+    }
+    val target = partitions.getOrElse {
+      val chunks = series.iterator.map(_.chunks.size.toLong).sum
+      math.min(math.max(1, spark.sparkContext.defaultParallelism).toLong,
+        (chunks + ChunksPerTask - 1) / ChunksPerTask).toInt
+    }
+    val n = math.max(1, math.min(target, series.size))
+    (0 until n).map(p =>
+      series.zipWithIndex.collect { case (s, i) if i % n == p => s })
+  }
+
+  private val ChunksPerTask = 2048L
 }
 
 /** One parse of a block's index per `(path, length, mtime)`, shared by
@@ -220,45 +268,11 @@ final class TsdbBlockScan(path: String, partitions: Option[Int],
       s"${matchers.size} series matchers, " +
       s"columns [${required.fieldNames.mkString(",")}]"
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    // driver-side: index only. Select series by matcher options (exact —
-    // labels are series constants), prune chunks against the pushed time
-    // range, drop emptied series, then round-robin series into
-    // partitions to balance sample counts.
-    // Tombstones (deletion markers awaiting compaction) attach here: a
-    // chunk fully inside a deleted interval is never scheduled — the
-    // same plan-time pruning as the pushed time range — and partial
-    // overlaps mask per-sample in the reader.
-    val stones = Tombstones.read(s"$path/tombstones")
-    val all = BlockIndexCache.get(path).series
-      .filter(s => matchers.forall(_(s)))
-      .map(s => stones.get(s.ref).fold(s)(ivs => s.copy(deleted = ivs)))
-    val prunedSeries = all.flatMap { s =>
-      val keep = s.chunks.filter(c => c.maxTime > timeLo && c.minTime < timeHi)
-        .filterNot(c => s.deleted.exists(iv =>
-          iv.mint <= c.minTime && c.maxTime <= iv.maxt))
-      if (keep.isEmpty) None else Some(s.copy(chunks = keep))
-    }
-    // split-count derivation (when no explicit `partitions` option):
-    // one task per ~ChunksPerTask pruned chunks (measured ~25 µs per
-    // sf0.1 chunk decode, ~100 µs for a full 120-sample chunk ⇒ tasks
-    // in the 50-200 ms band), capped at the core count — the old fixed
-    // 16 manufactured 16 near-empty tasks per block at small scale and
-    // throttled large blocks to 16 tasks at large scale
-    val target = partitions.getOrElse {
-      val totalChunks = prunedSeries.iterator.map(_.chunks.size.toLong).sum
-      val parallelism = math.max(1, spark.sparkContext.defaultParallelism)
-      math.min(parallelism.toLong,
-        (totalChunks + ChunksPerTask - 1) / ChunksPerTask).toInt
-    }
-    val n = math.max(1, math.min(target, prunedSeries.size))
-    (0 until n).map { p =>
-      TsdbSeriesPartition(prunedSeries.zipWithIndex
-        .collect { case (s, i) if i % n == p => s }): InputPartition
-    }.toArray
-  }
-
-  private val ChunksPerTask = 2048L
+  override def planInputPartitions(): Array[InputPartition] =
+    TsdbBlockSource.planSeries(spark, path, partitions,
+      s => matchers.forall(_(s)),
+      c => c.maxTime > timeLo && c.minTime < timeHi)
+      .map(TsdbSeriesPartition(_): InputPartition).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new TsdbReaderFactory(path, required.fieldNames)
@@ -270,18 +284,15 @@ final class TsdbReaderFactory(path: String, fields: Array[String])
     new TsdbPartitionReader(path, partition.asInstanceOf[TsdbSeriesPartition], fields)
 }
 
-/** Streams (time, value, labels) rows for a slice of series. Chunk
-  * segment files are read lazily, one ranged read per chunk (seek +
-  * exact length) — never whole-file on small partitions. */
+/** Streams (time, value, labels) rows for a slice of series. Chunks
+  * are read lazily, one ranged read per chunk ([[ChunkFile.Reader]]) —
+  * never whole-file on small partitions. */
 final class TsdbPartitionReader(path: String, part: TsdbSeriesPartition,
                                 fields: Array[String])
     extends PartitionReader[InternalRow] {
-  import Binary.ByteReader
-
   private val wantLabels = fields.contains("labels")
 
-  private val segments =
-    scala.collection.mutable.Map.empty[Int, java.io.RandomAccessFile]
+  private val chunks = new ChunkFile.Reader(path)
   private val seriesIt = part.series.iterator
   private var chunkIt: Iterator[IndexReader.ChunkRef] = Iterator.empty
   private var labelsMap: ArrayBasedMapData = _
@@ -292,36 +303,17 @@ final class TsdbPartitionReader(path: String, part: TsdbSeriesPartition,
   private var vs: Array[Double] = Array.emptyDoubleArray
   private var i = 0
 
-  private def segment(n: Int): java.io.RandomAccessFile =
-    segments.getOrElseUpdate(n, new java.io.RandomAccessFile(
-      f"$path/chunks/${n + 1}%06d", "r"))
-
   private def loadChunk(c: IndexReader.ChunkRef): Unit = {
-    val f = segment(c.segment)
-    f.seek(c.offset)
-    // uvarint len (≤ 5 bytes for 32-bit sizes) + enc byte: read a small
-    // header window first, then exactly the payload
-    val head = new Array[Byte](8)
-    f.readFully(head)
-    val hr = new ByteReader(head, 0)
-    val len = hr.uvarint().toInt
-    val enc = hr.u8()
     // histogram chunks (encodings 2/3) carry a different value type —
     // the float scan skips them without reading the payload, exactly as
-    // the WAL sample scan ignores kinds 7/8 (TsdbBlockRecords reads
+    // the WAL sample scan ignores kinds 7/8 ([[TsdbBlockRecords]] scans
     // them); anything else is corruption and fails loudly
+    val (enc, data) = chunks.fetch(c)(_ == XorChunk.EncXor)
     if (enc == HistChunk.EncHistogram || enc == HistChunk.EncFloatHistogram) {
       ts = Array.emptyLongArray; vs = Array.emptyDoubleArray; i = 0
       return
     }
-    require(enc == 1, s"unsupported chunk encoding $enc (only XOR=1)")
-    val data = new Array[Byte](len)
-    val fromHead = math.min(len, head.length - hr.pos)
-    System.arraycopy(head, hr.pos, data, 0, fromHead)
-    if (fromHead < len) {
-      f.seek(c.offset + hr.pos + fromHead)
-      f.readFully(data, fromHead, len - fromHead)
-    }
+    require(enc == XorChunk.EncXor, s"unsupported chunk encoding $enc (only XOR=1)")
     val decoded = XorChunk.decode(data)
     collapse(decoded._1, decoded._2)
   }
@@ -361,14 +353,8 @@ final class TsdbPartitionReader(path: String, part: TsdbSeriesPartition,
   private def nextSeries(): Boolean = {
     if (!seriesIt.hasNext) return false
     val s = seriesIt.next()
-    if (wantLabels) { // pruned away ⇒ never materialize the map
-      val keys = s.labels.keys.toArray.sorted
-      labelsMap = new ArrayBasedMapData(
-        org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-          keys.map(UTF8String.fromString)),
-        org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-          keys.map(k => UTF8String.fromString(s.labels(k)))))
-    }
+    // pruned away ⇒ never materialize the map
+    if (wantLabels) labelsMap = TsdbBlockSource.labelMap(s.labels)
     chunkIt = s.chunks.iterator
     deleted = s.deleted
     seriesLabels = s.labels
@@ -410,5 +396,5 @@ final class TsdbPartitionReader(path: String, part: TsdbSeriesPartition,
     row
   }
 
-  override def close(): Unit = segments.values.foreach(_.close())
+  override def close(): Unit = chunks.close()
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import graft.tsdb.RemoteRead.utf8ByteOrder
+import Binary.ByteWriter
 
 /** Writer for raw Prometheus TSDB block directories — the write twin of
   * [[TsdbBlockSource]], making block compatibility bidirectional: the
@@ -23,9 +24,7 @@ import graft.tsdb.RemoteRead.utf8ByteOrder
   * about a block refers to any other block.
   *
   * Format notes (all from the public docs):
-  *   - chunks segment: magic 0x85BD40DD, version 1, 3 pad bytes; each
-  *     chunk = uvarint len | encoding 1 (XOR) | data | CRC32-Castagnoli
-  *     over encoding+data; chunk ref = segment<<32 | offset of the len.
+  *   - chunks: one segment, `chunks/000001` ([[ChunkFile]]).
   *   - index: magic 0xBAAAD700 version 2; symbol table (sorted, unique
   *     strings); series section (16-byte-aligned entries, label refs
   *     into symbols, delta-encoded chunk metas, per-entry CRC32-C);
@@ -38,108 +37,6 @@ import graft.tsdb.RemoteRead.utf8ByteOrder
   *     chunk.
   */
 object TsdbBlockWriter {
-
-  // ---- bit-level writer: [[Binary.BitWriter]] (shared with the
-  // histogram chunk codec in [[HistChunk]]) --------------------------
-  private type BitWriter = Binary.BitWriter
-
-  // ---- Gorilla XOR chunk encoder (inverse of XorChunk.decode) --------
-
-  /** Encode one chunk's samples (≤ 65535; callers cap at 120). Values
-    * are written as their RAW bits, so a staleness marker
-    * ([[graft.tsdb.TsdbSchema.StaleNaNBits]]) stays one on disk and on
-    * the wire, not an ordinary NaN. */
-  def encodeXorChunk(ts: Array[Long], vs: Array[Double]): Array[Byte] = {
-    val num = ts.length
-    require(num == vs.length && num <= 0xffff, s"bad chunk size $num")
-    val w = new BitWriter
-    w.writeByte((num >> 8) & 0xff); w.writeByte(num & 0xff)
-    if (num == 0) return w.toBytes
-
-    w.varint(ts(0))
-    w.writeBits(java.lang.Double.doubleToRawLongBits(vs(0)), 64)
-    if (num == 1) return w.toBytes
-
-    var leading = -1; var trailing = 0 // -1 ⇒ no reusable window yet
-    var prevBits = java.lang.Double.doubleToRawLongBits(vs(0))
-    def writeValue(v: Double): Unit = {
-      val bits = java.lang.Double.doubleToRawLongBits(v)
-      val xor = prevBits ^ bits
-      prevBits = bits
-      if (xor == 0) w.writeBit(0)
-      else {
-        w.writeBit(1)
-        var lead = java.lang.Long.numberOfLeadingZeros(xor)
-        val trail = java.lang.Long.numberOfTrailingZeros(xor)
-        if (lead > 31) lead = 31 // 5-bit field
-        if (leading != -1 && lead >= leading && trail >= trailing) {
-          // reuse the previous window
-          w.writeBit(0)
-          w.writeBits(xor >>> trailing, 64 - leading - trailing)
-        } else {
-          leading = lead; trailing = trail
-          val sig = 64 - leading - trailing
-          w.writeBit(1)
-          w.writeBits(leading.toLong, 5)
-          // 6-bit sigbits field: 64 is stored as 0 (decoder: 0 ⇒ 64)
-          w.writeBits(if (sig == 64) 0L else sig.toLong, 6)
-          w.writeBits(xor >>> trailing, sig)
-        }
-      }
-    }
-
-    var tDelta = ts(1) - ts(0)
-    require(tDelta >= 0, "chunk timestamps must be sorted")
-    w.uvarint(tDelta)
-    writeValue(vs(1))
-
-    var i = 2
-    while (i < num) {
-      val nd = ts(i) - ts(i - 1)
-      val dod = nd - tDelta
-      tDelta = nd
-      // prefix-coded delta-of-delta windows per xor.go bitRange:
-      // n-bit window holds -((1<<(n-1))-1) .. 1<<(n-1)
-      def inRange(n: Int): Boolean =
-        -((1L << (n - 1)) - 1) <= dod && dod <= (1L << (n - 1))
-      if (dod == 0) w.writeBit(0)
-      else if (inRange(14)) { w.writeBits(0x2, 2); w.writeBits(dod & 0x3fff, 14) }
-      else if (inRange(17)) { w.writeBits(0x6, 3); w.writeBits(dod & 0x1ffff, 17) }
-      else if (inRange(20)) { w.writeBits(0xe, 4); w.writeBits(dod & 0xfffff, 20) }
-      else { w.writeBits(0xf, 4); w.writeBits(dod, 64) }
-      writeValue(vs(i))
-      i += 1
-    }
-    w.toBytes
-  }
-
-  // ---- byte-level helpers -------------------------------------------
-
-  private final class ByteWriter {
-    val buf = new java.io.ByteArrayOutputStream()
-    def size: Int = buf.size()
-    def u8(v: Int): Unit = buf.write(v & 0xff)
-    def be32(v: Long): Unit = {
-      buf.write(((v >>> 24) & 0xff).toInt); buf.write(((v >>> 16) & 0xff).toInt)
-      buf.write(((v >>> 8) & 0xff).toInt); buf.write((v & 0xff).toInt)
-    }
-    def be64(v: Long): Unit = { be32(v >>> 32); be32(v & 0xffffffffL) }
-    def uvarint(v: Long): Unit = {
-      var x = v
-      while ((x & ~0x7fL) != 0) { buf.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
-      buf.write(x.toInt)
-    }
-    def varint(v: Long): Unit = uvarint((v << 1) ^ (v >> 63))
-    def bytes(b: Array[Byte]): Unit = buf.write(b, 0, b.length)
-    def toBytes: Array[Byte] = buf.toByteArray
-  }
-
-  /** CRC32-Castagnoli, the checksum Prometheus uses throughout. */
-  private def crc32c(b: Array[Byte], from: Int, len: Int): Long = {
-    val c = new java.util.zip.CRC32C
-    c.update(b, from, len)
-    c.getValue
-  }
 
   // ---- block assembly -----------------------------------------------
 
@@ -220,54 +117,18 @@ object TsdbBlockWriter {
   /** Delete what [[assembleBlock]] writes, then the directory if that
     * leaves it empty — a pre-existing directory's other files stay. */
   private def removePartialBlock(dir: String): Unit =
-    Seq(Paths.get(dir, "chunks", "000001"), Paths.get(dir, "chunks"),
+    Seq(Paths.get(ChunkFile.path(dir, 0)), Paths.get(dir, "chunks"),
         Paths.get(dir, "index"), Paths.get(dir, "tombstones"),
         Paths.get(dir, "meta.json"), Paths.get(dir)).foreach { p =>
       try Files.deleteIfExists(p)
       catch { case _: java.nio.file.DirectoryNotEmptyException => () }
     }
 
-  /** A chunk ref is `segment << 32 | offset` and every chunk goes to
-    * segment 0, so an offset past 32 bits would spill into the segment
-    * field and point the index at the wrong file — refuse it instead. */
-  private[sources] def chunkRef(offset: Long): Long = {
-    require(offset <= 0xFFFFFFFFL,
-      s"chunk offset $offset exceeds the 4 GiB a single chunks segment " +
-        "can address; write smaller blocks (a shorter block range)")
-    offset
-  }
-
   private def assembleBlock(dir: String, seriesIt: Iterator[SeriesData],
       compaction: CompactionMeta,
       maxTimeCeil: Option[Long]): (Long, Long, Long) = {
-    Files.createDirectories(Paths.get(dir, "chunks"))
-
-    // ---- chunks segment 000001 (chunk refs carry segment INDEX 0:
-    // ref>>>32 is zero-based, file names are one-based), streamed ----
-    val chunksOut = new java.io.BufferedOutputStream(
-      Files.newOutputStream(Paths.get(dir, "chunks", "000001")), 1 << 20)
-    var chunksOff = 0L
-    def putBytes(bs: Array[Byte]): Unit = {
-      chunksOut.write(bs); chunksOff += bs.length
-    }
-    run { // header — same bytes the buffered writer produced
-      val h = new ByteWriter
-      h.be32(0x85bd40ddL); h.u8(1); h.u8(0); h.u8(0); h.u8(0)
-      putBytes(h.toBytes)
-    }
-    def putChunk(encoding: Int, data: Array[Byte]): Long = {
-      val ref = chunkRef(chunksOff) // segment 0 in the high 32 bits
-      // CRC (Castagnoli) covers encoding byte + data
-      val body = new Array[Byte](1 + data.length)
-      body(0) = encoding.toByte
-      System.arraycopy(data, 0, body, 1, data.length)
-      val w = new ByteWriter
-      w.uvarint(data.length.toLong)
-      w.bytes(body)
-      w.be32(crc32c(body, 0, body.length))
-      putBytes(w.toBytes)
-      ref
-    }
+    // ---- chunks segment 000001, streamed ----
+    val chunks = new ChunkFile.Writer(dir)
     // the skeletons: INDEXED — random-accessed by position below
     // (`chunkMetas(si)`); a List-backed Seq here turned that into
     // O(series²) list hops (~100 s of pure List.drop at 67k series)
@@ -283,7 +144,7 @@ object TsdbBlockWriter {
         val n = math.min(MaxSamplesPerChunk, s.ts.length - off)
         val cts = java.util.Arrays.copyOfRange(s.ts, off, off + n)
         val cvs = java.util.Arrays.copyOfRange(s.vs, off, off + n)
-        val ref = putChunk(1, encodeXorChunk(cts, cvs)) // encoding: XOR
+        val ref = chunks.put(XorChunk.EncXor, XorChunk.encode(cts, cvs))
         metas += ChunkMeta(cts(0), cts(n - 1), ref)
         off += n
       }
@@ -292,7 +153,7 @@ object TsdbBlockWriter {
           maxPerChunk = MaxSamplesPerChunk).foreach { batch =>
         val enc = if (batch.head.isFloat) HistChunk.EncFloatHistogram
                   else HistChunk.EncHistogram
-        val ref = putChunk(enc, HistChunk.encode(batch, batch.head.isFloat))
+        val ref = chunks.put(enc, HistChunk.encode(batch, batch.head.isFloat))
         metas += ChunkMeta(batch.head.time, batch.last.time, ref)
       }
       // the index delta-encodes chunk metas as a non-overlapping,
@@ -308,29 +169,28 @@ object TsdbBlockWriter {
       labelsBuf += s.labels
       metasBuf += sorted
       numSamples += s.ts.length.toLong + s.hists.size
-    } finally chunksOut.close()
+    } finally chunks.close()
     val series = labelsBuf // skeleton view: labels by series position
     val chunkMetas = metasBuf
 
     // ---- index ----
     val iw = new ByteWriter
     iw.be32(0xbaaad700L); iw.u8(2)
+    // a section or entry: `len | body | crc32c(body)`, len BE32 except
+    // on series entries (uvarint)
+    val body = new ByteWriter
+    def section(uvarintLen: Boolean = false)(fill: ByteWriter => Unit): Unit = {
+      body.reset(); fill(body)
+      if (uvarintLen) iw.uvarint(body.size.toLong) else iw.be32(body.size.toLong)
+      body.writeTo(iw); iw.be32(body.crc32c())
+    }
 
     // symbol table: unique strings in Prometheus's (UTF-8) byte order
     val symbols = series.flatMap(_.flatMap(p => Seq(p._1, p._2)))
       .distinct.sorted(utf8ByteOrder)
     val symIdx = symbols.zipWithIndex.toMap
     val symbolsStart = iw.size
-    val symBody = new ByteWriter
-    symBody.be32(symbols.size.toLong)
-    symbols.foreach { s =>
-      val b = s.getBytes(UTF_8)
-      symBody.uvarint(b.length.toLong); symBody.bytes(b)
-    }
-    val symBytes = symBody.toBytes
-    iw.be32(symBytes.length.toLong)
-    iw.bytes(symBytes)
-    iw.be32(crc32c(symBytes, 0, symBytes.length))
+    section() { b => b.be32(symbols.size.toLong); symbols.foreach(b.str) }
 
     // series section: entries 16-byte aligned from file start;
     // series ref (used by postings) = offset / 16
@@ -341,31 +201,28 @@ object TsdbBlockWriter {
     series.zipWithIndex.foreach { case (s, si) =>
       pad16()
       seriesRefs(si) = iw.size.toLong / 16
-      val e = new ByteWriter
-      e.uvarint(s.size.toLong)
-      s.foreach { case (k, v) =>
-        e.uvarint(symIdx(k).toLong); e.uvarint(symIdx(v).toLong)
-      }
-      val metas = chunkMetas(si)
-      e.uvarint(metas.size.toLong)
-      if (metas.nonEmpty) {
-        val h = metas.head
-        e.varint(h.minT)
-        e.uvarint(h.maxT - h.minT)
-        e.uvarint(h.ref)
-        var prevMaxT = h.maxT
-        var prevRef = h.ref
-        metas.tail.foreach { m =>
-          e.uvarint(m.minT - prevMaxT)
-          e.uvarint(m.maxT - m.minT)
-          e.varint(m.ref - prevRef)
-          prevMaxT = m.maxT; prevRef = m.ref
+      section(uvarintLen = true) { e =>
+        e.uvarint(s.size.toLong)
+        s.foreach { case (k, v) =>
+          e.uvarint(symIdx(k).toLong); e.uvarint(symIdx(v).toLong)
+        }
+        val metas = chunkMetas(si)
+        e.uvarint(metas.size.toLong)
+        if (metas.nonEmpty) {
+          val h = metas.head
+          e.varint(h.minT)
+          e.uvarint(h.maxT - h.minT)
+          e.uvarint(h.ref)
+          var prevMaxT = h.maxT
+          var prevRef = h.ref
+          metas.tail.foreach { m =>
+            e.uvarint(m.minT - prevMaxT)
+            e.uvarint(m.maxT - m.minT)
+            e.varint(m.ref - prevRef)
+            prevMaxT = m.maxT; prevRef = m.ref
+          }
         }
       }
-      val body = e.toBytes
-      iw.uvarint(body.length.toLong)
-      iw.bytes(body)
-      iw.be32(crc32c(body, 0, body.length))
     }
 
     // ONE pass over series builds both inverted structures — per-name
@@ -392,14 +249,11 @@ object TsdbBlockWriter {
     val labelIndexOff = scala.collection.mutable.Map[String, Long]()
     valuesByName.foreach { case (name, values) =>
       labelIndexOff(name) = iw.size.toLong
-      val b = new ByteWriter
-      b.be32(1L) // #names in this composite index
-      b.be32(values.size.toLong)
-      values.foreach(v => b.be32(symIdx(v).toLong))
-      val body = b.toBytes
-      iw.be32(body.length.toLong)
-      iw.bytes(body)
-      iw.be32(crc32c(body, 0, body.length))
+      section() { b =>
+        b.be32(1L) // #names in this composite index
+        b.be32(values.size.toLong)
+        values.foreach(v => b.be32(symIdx(v).toLong))
+      }
     }
 
     // postings: one list per (name, value) pair + the all-postings list
@@ -409,13 +263,7 @@ object TsdbBlockWriter {
     val postingOff = Seq.newBuilder[((String, String), Long)]
     def writePostings(key: (String, String), refs: Seq[Long]): Unit = {
       postingOff += key -> iw.size.toLong
-      val b = new ByteWriter
-      b.be32(refs.size.toLong)
-      refs.foreach(b.be32)
-      val body = b.toBytes
-      iw.be32(body.length.toLong)
-      iw.bytes(body)
-      iw.be32(crc32c(body, 0, body.length))
+      section() { b => b.be32(refs.size.toLong); refs.foreach(b.be32) }
     }
     writePostings(("", ""), seriesRefs.toSeq) // all-postings first
     valuesByName.foreach { case (name, values) =>
@@ -428,63 +276,35 @@ object TsdbBlockWriter {
     // label offset table: name → its label index entry
     pad16()
     val labelOffsetTableStart = iw.size
-    run {
-      val b = new ByteWriter
+    section() { b =>
       b.be32(labelNames.size.toLong)
       labelNames.foreach { n =>
-        val nb = n.getBytes(UTF_8)
         b.uvarint(1L) // #parts
-        b.uvarint(nb.length.toLong); b.bytes(nb)
-        b.uvarint(labelIndexOff(n))
+        b.str(n); b.uvarint(labelIndexOff(n))
       }
-      val body = b.toBytes
-      iw.be32(body.length.toLong)
-      iw.bytes(body)
-      iw.be32(crc32c(body, 0, body.length))
     }
 
     // postings offset table: (name, value) → postings list
     pad16()
     val postingsOffsetTableStart = iw.size
-    run {
+    section() { b =>
       val entries = postingOff.result()
-      val b = new ByteWriter
       b.be32(entries.size.toLong)
       entries.foreach { case ((n, v), off) =>
-        val nb = n.getBytes(UTF_8); val vb = v.getBytes(UTF_8)
         b.uvarint(2L) // #parts
-        b.uvarint(nb.length.toLong); b.bytes(nb)
-        b.uvarint(vb.length.toLong); b.bytes(vb)
-        b.uvarint(off)
+        b.str(n); b.str(v); b.uvarint(off)
       }
-      val body = b.toBytes
-      iw.be32(body.length.toLong)
-      iw.bytes(body)
-      iw.be32(crc32c(body, 0, body.length))
     }
 
     // TOC: 6 section refs + crc of the refs
-    val toc = new ByteWriter
-    toc.be64(symbolsStart.toLong)
-    toc.be64(seriesStart.toLong)
-    toc.be64(labelIndicesStart.toLong)
-    toc.be64(labelOffsetTableStart.toLong)
-    toc.be64(postingsStart.toLong)
-    toc.be64(postingsOffsetTableStart.toLong)
-    val tocBytes = toc.toBytes
-    iw.bytes(tocBytes)
-    iw.be32(crc32c(tocBytes, 0, tocBytes.length))
-    Files.write(Paths.get(dir, "index"), iw.toBytes)
+    val tocStart = iw.size
+    Seq(symbolsStart, seriesStart, labelIndicesStart, labelOffsetTableStart,
+      postingsStart, postingsOffsetTableStart).foreach(o => iw.be64(o.toLong))
+    iw.be32(iw.crc32c(tocStart))
+    Files.write(Paths.get(dir, "index"), iw.toByteArray)
 
-    // ---- tombstones (empty) + meta.json ----
-    // magic | version | (no entries) | crc32c(entries) — byte-identical
-    // to the reference block's own 9-byte empty tombstones file
-    run {
-      val out = new ByteWriter
-      out.be32(0x0130ba30L); out.u8(1)
-      out.be32(crc32c(Array.emptyByteArray, 0, 0))
-      Files.write(Paths.get(dir, "tombstones"), out.toBytes)
-    }
+    // ---- tombstones (empty: the reference block's own 9 bytes) ----
+    Tombstones.write(s"$dir/tombstones", Map.empty)
 
     val numChunks = chunkMetas.map(_.size.toLong).sum
     // min/max over the CHUNK metas — covers float and histogram samples
@@ -528,8 +348,6 @@ object TsdbBlockWriter {
     Files.write(Paths.get(dir, "meta.json"), meta.getBytes(UTF_8))
     (series.size.toLong, numChunks, numSamples)
   }
-
-  private def run[T](body: => T): T = body
 
   /** A valid 26-char Crockford-base32 ULID, derived deterministically
     * from the directory name (no wall clock — block identity must be
@@ -714,10 +532,7 @@ object TsdbBlockWriter {
                 rows.hasNext && rows.head.getLong(0) == sliceId
               override def next(): SeriesData = {
                 val entries = rows.head.getArray(1).copy()
-                val labels = (0 until entries.numElements()).map { i =>
-                  val e = entries.getStruct(i, 2)
-                  (e.getUTF8String(0).toString, e.getUTF8String(1).toString)
-                }
+                val labels = TsdbBlockSource.labelPairs(entries)
                 val ts = Array.newBuilder[Long]
                 val vs = Array.newBuilder[Double]
                 val hs = Seq.newBuilder[WalReader.WalHistogram]

@@ -3,14 +3,13 @@ package graft.sources.tsdbblock
 import java.util
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 over a Prometheus WAL directory — the head samples the
   * reference's `DBReadOnly.Querier` merges with block data
@@ -182,13 +181,8 @@ final class TsdbWalScan(path: String, required: StructType,
 
         override def get(): InternalRow = {
           val labels = if (!wantLabels) null
-          else mapCache.getOrElseUpdate(cur.ref, {
-            val m = dict(cur.ref)
-            val keys = m.keys.toArray.sorted
-            new ArrayBasedMapData(
-              ArrayData.toArrayData(keys.map(UTF8String.fromString)),
-              ArrayData.toArrayData(keys.map(k => UTF8String.fromString(m(k)))))
-          })
+          else mapCache.getOrElseUpdate(cur.ref,
+            TsdbBlockSource.labelMap(dict(cur.ref)))
           val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(fields.length)
           var f = 0
           while (f < fields.length) {
@@ -277,9 +271,6 @@ object TsdbWalRecords {
     spark.createDataset(rdd)
   }
 
-  private val TypeNames = Array("unknown", "counter", "gauge", "histogram",
-    "gaugehistogram", "summary", "info", "stateset")
-
   /** The `/api/v1/metadata` view: DISTINCT (metric, type, unit, help)
     * resolved through the series dictionary. Metadata volume is
     * label-universe-sized, so the per-segment decode is metadata-only
@@ -295,7 +286,8 @@ object TsdbWalRecords {
         WalReader.metadata(seg).flatMap(m =>
           d.get(m.ref).map { lbls =>
             (lbls.getOrElse("__name__", ""),
-              TypeNames.lift(m.metricType).getOrElse("unknown"),
+              graft.tsdb.RemoteWrite.MetaTypeNames.lift(m.metricType)
+                .getOrElse("unknown"),
               m.fields.getOrElse("unit", ""), m.fields.getOrElse("help", ""))
           })
       }
@@ -518,18 +510,9 @@ object TsdbDb {
     * read — for the few series whose names are not yet sure. */
   private def blockNames(dir: String): EmittedNames = {
     val stones = Tombstones.read(s"$dir/tombstones")
-    val files =
-      scala.collection.mutable.Map.empty[Int, java.io.RandomAccessFile]
-    def isXor(c: IndexReader.ChunkRef): Boolean = {
-      val f = files.getOrElseUpdate(c.segment, new java.io.RandomAccessFile(
-        f"$dir/chunks/${c.segment + 1}%06d", "r"))
-      f.seek(c.offset)
-      // uvarint length (≤ 5 bytes for 32-bit sizes), then the encoding;
-      // read answers -1 past the end, which ends the varint too
-      var b = f.read()
-      while (b > 0x7f) b = f.read()
-      b >= 0 && f.read() == 1
-    }
+    val chunks = new ChunkFile.Reader(dir)
+    def isXor(c: IndexReader.ChunkRef): Boolean =
+      chunks.fetch(c)(_ => false)._1 == XorChunk.EncXor
     try EmittedNames.of(BlockIndexCache.get(dir).series.iterator)(
         _.labels.keys) { s =>
       val ivs = stones.getOrElse(s.ref, Nil)
@@ -541,7 +524,7 @@ object TsdbDb {
       if (runs.exists(_.contains(true))) Some(true)
       else if (runs.nonEmpty) None
       else Some(false)
-    } finally files.values.foreach(_.close())
+    } finally chunks.close()
   }
 
   /** The whole-DB NATIVE-HISTOGRAM view — the histogram twin of [[read]]:

@@ -209,13 +209,7 @@ private[tsdbblock] object TsdbWalStreamReaders {
   private def labelCache(p: TsdbWalSlicePartition)
       : Long => ArrayBasedMapData = {
     val cache = scala.collection.mutable.Map.empty[Long, ArrayBasedMapData]
-    ref => cache.getOrElseUpdate(ref, {
-      val m = p.dict(ref)
-      val keys = m.keys.toArray.sorted
-      new ArrayBasedMapData(
-        ArrayData.toArrayData(keys.map(UTF8String.fromString)),
-        ArrayData.toArrayData(keys.map(k => UTF8String.fromString(m(k)))))
-    })
+    ref => cache.getOrElseUpdate(ref, TsdbBlockSource.labelMap(p.dict(ref)))
   }
 
   private[tsdbblock] def sampleReader(p: TsdbWalSlicePartition)
@@ -254,22 +248,11 @@ private[tsdbblock] object TsdbWalStreamReaders {
       override def next(): Boolean =
         if (it.hasNext) { cur = it.next(); true } else false
 
-      private def strMap(m: Map[String, String]): ArrayBasedMapData = {
-        val keys = m.keys.toArray.sorted
-        new ArrayBasedMapData(
-          ArrayData.toArrayData(keys.map(UTF8String.fromString)),
-          ArrayData.toArrayData(keys.map(k =>
-            UTF8String.fromString(m(k)))))
-      }
-
       override def get(): InternalRow =
         new GenericInternalRow(Array[Any](
-          cur.time, cur.value, labels(cur.ref), strMap(cur.labels)))
+          cur.time, cur.value, labels(cur.ref), TsdbBlockSource.labelMap(cur.labels)))
       override def close(): Unit = ()
     }
-
-  private val TypeNames = Array("unknown", "counter", "gauge",
-    "histogram", "gaugehistogram", "summary", "info", "stateset")
 
   /** Kind-6 metadata records resolved to (metric, type, unit, help) —
     * RAW records (the API view de-duplicates downstream). */
@@ -288,8 +271,8 @@ private[tsdbblock] object TsdbWalStreamReaders {
         val metric = p.dict(cur.ref).getOrElse("__name__", "")
         new GenericInternalRow(Array[Any](
           UTF8String.fromString(metric),
-          UTF8String.fromString(TypeNames.lift(cur.metricType)
-            .getOrElse("unknown")),
+          UTF8String.fromString(graft.tsdb.RemoteWrite.MetaTypeNames
+            .lift(cur.metricType).getOrElse("unknown")),
           UTF8String.fromString(cur.fields.getOrElse("unit", "")),
           UTF8String.fromString(cur.fields.getOrElse("help", ""))))
       }

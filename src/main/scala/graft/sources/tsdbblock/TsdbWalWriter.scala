@@ -1,12 +1,13 @@
 package graft.sources.tsdbblock
 
-import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
+import scala.util.Using
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import Binary.ByteWriter
 
 /** Writer for the Prometheus write-ahead log (wlog) — the write twin of
   * [[TsdbWalSource]]/[[WalReader]], completing the data-directory story
@@ -40,24 +41,19 @@ object TsdbWalWriter {
 
   /** Series record (kind 1): repeated (ref BE64, #labels, k/v strings). */
   def seriesRecord(series: Seq[(Long, Seq[(String, String)])]): Array[Byte] = {
-    val b = new java.io.ByteArrayOutputStream()
-    def be64(v: Long): Unit = { var i = 56; while (i >= 0) { b.write(((v >>> i) & 0xff).toInt); i -= 8 } }
-    def uvarint(v: Long): Unit = {
-      var x = v
-      while ((x & ~0x7fL) != 0) { b.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
-      b.write(x.toInt)
-    }
-    b.write(1)
+    val w = new ByteWriter
+    w.u8(1)
     series.foreach { case (ref, labels) =>
-      be64(ref)
-      uvarint(labels.size.toLong)
-      labels.foreach { case (k, v) =>
-        val kb = k.getBytes(UTF_8); val vb = v.getBytes(UTF_8)
-        uvarint(kb.length.toLong); b.write(kb, 0, kb.length)
-        uvarint(vb.length.toLong); b.write(vb, 0, vb.length)
-      }
+      w.be64(ref)
+      labelSet(w, labels)
     }
-    b.toByteArray
+    w.toByteArray
+  }
+
+  /** A label set: uvarint count, then each name and value. */
+  private def labelSet(w: ByteWriter, labels: Seq[(String, String)]): Unit = {
+    w.uvarint(labels.size.toLong)
+    labels.foreach { case (k, v) => w.str(k); w.str(v) }
   }
 
   /** Samples record (kind 2): base (ref, time) BE64 then per sample
@@ -65,42 +61,28 @@ object TsdbWalWriter {
     * against the base, as the reader decodes them. */
   def samplesRecord(samples: Seq[(Long, Long, Double)]): Array[Byte] = {
     require(samples.nonEmpty, "empty samples record")
-    val b = new java.io.ByteArrayOutputStream()
-    def be64(v: Long): Unit = { var i = 56; while (i >= 0) { b.write(((v >>> i) & 0xff).toInt); i -= 8 } }
-    def uvarint(v: Long): Unit = {
-      var x = v
-      while ((x & ~0x7fL) != 0) { b.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
-      b.write(x.toInt)
-    }
-    def varint(v: Long): Unit = uvarint((v << 1) ^ (v >> 63))
-    b.write(2)
+    val w = new ByteWriter
+    w.u8(2)
     val (baseRef, baseTime, _) = samples.head
-    be64(baseRef); be64(baseTime)
+    w.be64(baseRef); w.be64(baseTime)
     samples.foreach { case (ref, t, v) =>
-      varint(ref - baseRef)
-      varint(t - baseTime)
-      be64(java.lang.Double.doubleToRawLongBits(v))
+      w.varint(ref - baseRef)
+      w.varint(t - baseTime)
+      w.be64(java.lang.Double.doubleToRawLongBits(v))
     }
-    b.toByteArray
+    w.toByteArray
   }
 
   /** Tombstones record (kind 3): flat (ref BE64, mint/maxt varint)
     * triples — inclusive intervals, the WAL twin of the tombstones
     * file. */
   def tombstonesRecord(stones: Seq[(Long, Long, Long)]): Array[Byte] = {
-    val b = new java.io.ByteArrayOutputStream()
-    def be64(v: Long): Unit = { var i = 56; while (i >= 0) { b.write(((v >>> i) & 0xff).toInt); i -= 8 } }
-    def uvarint(v: Long): Unit = {
-      var x = v
-      while ((x & ~0x7fL) != 0) { b.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
-      b.write(x.toInt)
-    }
-    def varint(v: Long): Unit = uvarint((v << 1) ^ (v >> 63))
-    b.write(3)
+    val w = new ByteWriter
+    w.u8(3)
     stones.foreach { case (ref, mint, maxt) =>
-      be64(ref); varint(mint); varint(maxt)
+      w.be64(ref); w.varint(mint); w.varint(maxt)
     }
-    b.toByteArray
+    w.toByteArray
   }
 
   /** Exemplars record (kind 4): the samples framing (base ref/time
@@ -109,29 +91,17 @@ object TsdbWalWriter {
   def exemplarRecord(
       exemplars: Seq[(Long, Long, Double, Seq[(String, String)])]): Array[Byte] = {
     require(exemplars.nonEmpty, "empty exemplar record")
-    val b = new java.io.ByteArrayOutputStream()
-    def be64(v: Long): Unit = { var i = 56; while (i >= 0) { b.write(((v >>> i) & 0xff).toInt); i -= 8 } }
-    def uvarint(v: Long): Unit = {
-      var x = v
-      while ((x & ~0x7fL) != 0) { b.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
-      b.write(x.toInt)
-    }
-    def varint(v: Long): Unit = uvarint((v << 1) ^ (v >> 63))
-    def str(s: String): Unit = {
-      val sb = s.getBytes(UTF_8)
-      uvarint(sb.length.toLong); b.write(sb, 0, sb.length)
-    }
-    b.write(4)
+    val w = new ByteWriter
+    w.u8(4)
     val (baseRef, baseTime, _, _) = exemplars.head
-    be64(baseRef); be64(baseTime)
+    w.be64(baseRef); w.be64(baseTime)
     exemplars.foreach { case (ref, t, v, labels) =>
-      varint(ref - baseRef)
-      varint(t - baseTime)
-      be64(java.lang.Double.doubleToRawLongBits(v))
-      uvarint(labels.size.toLong)
-      labels.foreach { case (k, value) => str(k); str(value) }
+      w.varint(ref - baseRef)
+      w.varint(t - baseTime)
+      w.be64(java.lang.Double.doubleToRawLongBits(v))
+      labelSet(w, labels)
     }
-    b.toByteArray
+    w.toByteArray
   }
 
   /** Metadata record (kind 6): repeated (series ref uvarint,
@@ -139,23 +109,13 @@ object TsdbWalWriter {
     * `unit` and `help`). */
   def metadataRecord(
       entries: Seq[(Long, Int, Seq[(String, String)])]): Array[Byte] = {
-    val b = new java.io.ByteArrayOutputStream()
-    def uvarint(v: Long): Unit = {
-      var x = v
-      while ((x & ~0x7fL) != 0) { b.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
-      b.write(x.toInt)
-    }
-    def str(s: String): Unit = {
-      val sb = s.getBytes(UTF_8)
-      uvarint(sb.length.toLong); b.write(sb, 0, sb.length)
-    }
-    b.write(6)
+    val w = new ByteWriter
+    w.u8(6)
     entries.foreach { case (ref, typ, fields) =>
-      uvarint(ref); b.write(typ & 0xff)
-      uvarint(fields.size.toLong)
-      fields.foreach { case (k, v) => str(k); str(v) }
+      w.uvarint(ref); w.u8(typ)
+      labelSet(w, fields)
     }
-    b.toByteArray
+    w.toByteArray
   }
 
   /** Native-histogram record (kind 7 integer / kind 8 float) — the
@@ -165,49 +125,42 @@ object TsdbWalWriter {
   def histogramRecord(hists: Seq[WalReader.WalHistogram],
                       float: Boolean): Array[Byte] = {
     require(hists.nonEmpty, "empty histogram record")
-    val b = new java.io.ByteArrayOutputStream()
-    def be64(v: Long): Unit = { var i = 56; while (i >= 0) { b.write(((v >>> i) & 0xff).toInt); i -= 8 } }
-    def uvarint(v: Long): Unit = {
-      var x = v
-      while ((x & ~0x7fL) != 0) { b.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
-      b.write(x.toInt)
-    }
-    def varint(v: Long): Unit = uvarint((v << 1) ^ (v >> 63))
-    def fbits(v: Double): Unit = be64(java.lang.Double.doubleToRawLongBits(v))
+    val w = new ByteWriter
+    def fbits(v: Double): Unit = w.be64(java.lang.Double.doubleToRawLongBits(v))
     def integral(v: Double, what: String): Long = {
       require(v == math.rint(v) && !v.isInfinite,
         s"integer histogram record needs integral $what, got $v")
       v.toLong
     }
     def writeSpans(spans: Seq[(Int, Int)]): Unit = {
-      uvarint(spans.size.toLong)
+      w.uvarint(spans.size.toLong)
       spans.foreach { case (off, len) =>
-        varint(off.toLong); uvarint(len.toLong)
+        w.varint(off.toLong); w.uvarint(len.toLong)
       }
     }
     def writeValues(values: Seq[Double]): Unit = {
-      uvarint(values.size.toLong)
+      w.uvarint(values.size.toLong)
       if (float) values.foreach(fbits)
       else { // absolute → delta
         var prev = 0L
         values.foreach { v =>
           val c = integral(v, "bucket count")
-          varint(c - prev); prev = c
+          w.varint(c - prev); prev = c
         }
       }
     }
-    b.write(if (float) 8 else 7)
-    be64(hists.head.ref); be64(hists.head.time)
+    w.u8(if (float) 8 else 7)
+    w.be64(hists.head.ref); w.be64(hists.head.time)
     hists.foreach { h =>
-      varint(h.ref - hists.head.ref)
-      varint(h.time - hists.head.time)
-      b.write(h.counterResetHint & 0xff)
-      varint(h.schema.toLong)
+      w.varint(h.ref - hists.head.ref)
+      w.varint(h.time - hists.head.time)
+      w.u8(h.counterResetHint)
+      w.varint(h.schema.toLong)
       fbits(h.zeroThreshold)
       if (float) { fbits(h.zeroCount); fbits(h.count) }
       else {
-        uvarint(integral(h.zeroCount, "zero count"))
-        uvarint(integral(h.count, "count"))
+        w.uvarint(integral(h.zeroCount, "zero count"))
+        w.uvarint(integral(h.count, "count"))
       }
       fbits(h.sum)
       // Prometheus field order: both span lists, then both bucket lists
@@ -218,11 +171,11 @@ object TsdbWalWriter {
       writeValues(posValues)
       writeValues(negValues)
       if (h.schema == -53) {
-        uvarint(h.customValues.size.toLong)
+        w.uvarint(h.customValues.size.toLong)
         h.customValues.foreach(fbits)
       }
     }
-    b.toByteArray
+    w.toByteArray
   }
 
   // ---- page/fragment framing ----------------------------------------
@@ -230,47 +183,48 @@ object TsdbWalWriter {
   /** Frame whole records into 32 KiB pages: fragments sized to the page
     * remainder, 7-byte headers, zero padding when < 7 bytes remain.
     * Records ≥ `compressFrom` bytes are snappy-compressed (flag bit 3),
-    * matching the reader's per-record decompression. */
+    * matching the reader's per-record decompression. When `records`
+    * throws, the stream closes and the partial file is removed before
+    * the error goes on. */
   def writeSegment(path: String, records: Iterator[Array[Byte]],
                    compressFrom: Int = 128): Unit = {
-    val out = new java.io.BufferedOutputStream(
-      Files.newOutputStream(Paths.get(path)), 1 << 16)
-    var pagePos = 0
-    def pad(): Unit = {
-      while (pagePos % PageSize != 0) { out.write(0); pagePos += 1 }
-    }
-    records.foreach { rec =>
-      val (data, snappy) =
-        if (rec.length >= compressFrom)
-          (org.xerial.snappy.Snappy.compress(rec), true)
-        else (rec, false)
-      var off = 0
-      var first = true
-      while (off < data.length || first) {
-        if (PageSize - (pagePos % PageSize) < 7 + 1) pad() // room for header+1
-        val room = PageSize - (pagePos % PageSize) - 7
-        val n = math.min(room, data.length - off)
-        val last = off + n == data.length
-        val kind =
-          if (first && last) 1
-          else if (first) 2
-          else if (last) 4
-          else 3
-        val typ = kind | (if (snappy) SnappyFlag else 0)
-        val crc = new java.util.zip.CRC32C
-        crc.update(data, off, n)
-        val c = crc.getValue
-        out.write(typ)
-        out.write((n >> 8) & 0xff); out.write(n & 0xff)
-        out.write(((c >>> 24) & 0xff).toInt); out.write(((c >>> 16) & 0xff).toInt)
-        out.write(((c >>> 8) & 0xff).toInt); out.write((c & 0xff).toInt)
-        out.write(data, off, n)
-        pagePos += 7 + n
-        off += n
-        first = false
+    val file = Paths.get(path)
+    try Using.resource(new java.io.BufferedOutputStream(
+        Files.newOutputStream(file), 1 << 16)) { out =>
+      val header = new ByteWriter
+      var pagePos = 0
+      def pad(): Unit = {
+        while (pagePos % PageSize != 0) { out.write(0); pagePos += 1 }
       }
-    }
-    out.close()
+      records.foreach { rec =>
+        val (data, snappy) =
+          if (rec.length >= compressFrom)
+            (org.xerial.snappy.Snappy.compress(rec), true)
+          else (rec, false)
+        var off = 0
+        var first = true
+        while (off < data.length || first) {
+          if (PageSize - (pagePos % PageSize) < 7 + 1) pad() // room for header+1
+          val room = PageSize - (pagePos % PageSize) - 7
+          val n = math.min(room, data.length - off)
+          val last = off + n == data.length
+          val kind =
+            if (first && last) 1
+            else if (first) 2
+            else if (last) 4
+            else 3
+          header.reset()
+          header.u8(kind | (if (snappy) SnappyFlag else 0))
+          header.be16(n)
+          header.be32(Binary.crc32c(data, off, n))
+          header.writeTo(out)
+          out.write(data, off, n)
+          pagePos += 7 + n
+          off += n
+          first = false
+        }
+      }
+    } catch { case t: Throwable => Files.deleteIfExists(file); throw t }
   }
 
   // ---- Spark orchestration ------------------------------------------
@@ -337,10 +291,7 @@ object TsdbWalWriter {
           override def hasNext: Boolean = rows.hasNext
           override def next(): Iterator[Array[Byte]] = {
             val entries = rows.head.getArray(0).copy()
-            val labels = (0 until entries.numElements()).map { k =>
-              val e = entries.getStruct(k, 2)
-              (e.getUTF8String(0).toString, e.getUTF8String(1).toString)
-            }
+            val labels = TsdbBlockSource.labelPairs(entries)
             i += 1
             val ref = (seg.toLong << 32) | i
             val series = new Iterator[InternalRow] {

@@ -131,14 +131,11 @@ object WalReader {
             }
             val len = ((buf(pos + 1) & 0xff) << 8) | (buf(pos + 2) & 0xff)
             if (pos + 7 + len > buf.length) { nextRec = null; return } // torn tail
-            val stored = ((buf(pos + 3) & 0xff) << 24) | ((buf(pos + 4) & 0xff) << 16) |
-              ((buf(pos + 5) & 0xff) << 8) | (buf(pos + 6) & 0xff)
-            val data = java.util.Arrays.copyOfRange(buf, pos + 7, pos + 7 + len)
-            val crc = new java.util.zip.CRC32C
-            crc.update(data)
             // checksum mismatch ⇒ torn/corrupt write; stop at the last
             // valid record, which is how Prometheus treats a damaged tail
-            if (crc.getValue != (stored.toLong & 0xffffffffL)) { nextRec = null; return }
+            if (Binary.crc32c(buf, pos + 7, len) !=
+                new Binary.ByteReader(buf, pos + 3).be32()) { nextRec = null; return }
+            val data = java.util.Arrays.copyOfRange(buf, pos + 7, pos + 7 + len)
             val recStart = pos.toLong
             pos += 7 + len
             if ((typ & SnappyFlag) != 0) fragSnappy = true

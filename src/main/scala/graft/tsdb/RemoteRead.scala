@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.xerial.snappy.Snappy
 import graft.model.Matcher
-import graft.sources.tsdbblock.{TsdbBlockWriter, XorChunk}
+import graft.sources.tsdbblock.XorChunk
+import graft.sources.tsdbblock.Binary.{ByteReader, ByteWriter, crc32c}
 import RemoteWrite.{ProtoReader, ProtoWriter}
 
 /** The Prometheus REMOTE READ protocol — the read twin of the
@@ -998,11 +999,9 @@ object RemoteRead {
     val out = Seq.newBuilder[Array[Byte]]
     var pos = 0
     while (pos < body.length) {
-      var len = 0L; var shift = 0; var p = pos; var b = 0
-      do {
-        b = body(p) & 0xff; len |= (b & 0x7fL) << shift; shift += 7; p += 1
-      } while ((b & 0x80) != 0)
-      val end = p + 4 + len.toInt
+      val r = new ByteReader(body, pos)
+      val len = r.uvarint()
+      val end = r.pos + 4 + len.toInt
       require(end <= body.length, "truncated frame stream")
       out += java.util.Arrays.copyOfRange(body, pos, end)
       pos = end
@@ -1013,22 +1012,12 @@ object RemoteRead {
   /** Verify a streamed frame (uvarint len ++ BE crc32c ++ data) and
     * return the data range. */
   private def unframe(f: Array[Byte]): (Int, Int) = {
-    val r = new ProtoReader(f, 0, f.length)
-    val len = r.varint().toInt
-    val varintLen = {
-      var n = 1; var x = len.toLong
-      while ((x & ~0x7fL) != 0) { n += 1; x >>>= 7 }
-      n
-    }
-    val dataFrom = varintLen + 4
-    require(dataFrom + len == f.length, "bad frame length")
-    val crc = new java.util.zip.CRC32C
-    crc.update(f, dataFrom, len)
-    val want = ((f(varintLen) & 0xffL) << 24) |
-      ((f(varintLen + 1) & 0xffL) << 16) |
-      ((f(varintLen + 2) & 0xffL) << 8) | (f(varintLen + 3) & 0xffL)
-    require(crc.getValue == want, "frame crc32c mismatch")
-    (dataFrom, dataFrom + len)
+    val r = new ByteReader(f, 0)
+    val len = r.uvarint().toInt
+    require(r.pos + 4 + len == f.length, "bad frame length")
+    val want = r.be32()
+    require(crc32c(f, r.pos, len) == want, "frame crc32c mismatch")
+    (r.pos, r.pos + len)
   }
 
   private def encodeChunkedSeries(queryIndex: Int,
@@ -1047,7 +1036,7 @@ object RemoteRead {
       cw.int64(1, ts.head)
       cw.int64(2, ts.last)
       cw.int64(3, 1L) // Encoding.XOR
-      cw.bytes(4, TsdbBlockWriter.encodeXorChunk(ts, vs))
+      cw.bytes(4, XorChunk.encode(ts, vs))
       sw.bytes(2, cw.toBytes)
     }
     val w = new ProtoWriter
@@ -1059,17 +1048,11 @@ object RemoteRead {
   /** Prometheus chunked-transport framing: uvarint(len) ++ BE
     * crc32c(data) ++ data. */
   private[tsdb] def frame(data: Array[Byte]): Array[Byte] = {
-    val w = new ProtoWriter
-    w.varint(data.length.toLong)
-    val crc = new java.util.zip.CRC32C
-    crc.update(data)
-    val c = crc.getValue
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(w.toBytes)
-    out.write(((c >>> 24) & 0xff).toInt); out.write(((c >>> 16) & 0xff).toInt)
-    out.write(((c >>> 8) & 0xff).toInt); out.write((c & 0xff).toInt)
-    out.write(data, 0, data.length)
-    out.toByteArray
+    val w = new ByteWriter
+    w.uvarint(data.length.toLong)
+    w.be32(crc32c(data, 0, data.length))
+    w.bytes(data)
+    w.toByteArray
   }
 
   /** Client-side decode of streamed frames → `(query_index, time,
@@ -1080,22 +1063,8 @@ object RemoteRead {
     val s = frames.sparkSession
     import s.implicits._
     frames.flatMap { f =>
-      val r = new ProtoReader(f, 0, f.length)
-      val len = r.varint().toInt
-      // frame = varint ++ crc32c(4) ++ data
-      val varintLen = {
-        var n = 1; var x = len.toLong
-        while ((x & ~0x7fL) != 0) { n += 1; x >>>= 7 }
-        n
-      }
-      val dataFrom = varintLen + 4
-      require(dataFrom + len == f.length, "bad frame length")
-      val crc = new java.util.zip.CRC32C
-      crc.update(f, dataFrom, len)
-      val want = ((f(varintLen) & 0xffL) << 24) | ((f(varintLen + 1) & 0xffL) << 16) |
-        ((f(varintLen + 2) & 0xffL) << 8) | (f(varintLen + 3) & 0xffL)
-      require(crc.getValue == want, "frame crc32c mismatch")
-      decodeChunkedResponse(f, dataFrom, dataFrom + len)
+      val (from, until) = unframe(f)
+      decodeChunkedResponse(f, from, until)
     }.toDF("qidx", "time", "value", "labels")
   }
 

@@ -60,6 +60,27 @@ class TombstonesSpec extends SparkSpec {
     intercept[IllegalArgumentException] { Tombstones.read(p) }
   }
 
+  test("write replaces the file through a renamed temporary") {
+    val dir = tmpDir("graft_ts_replace_")
+    writeBlock(dir)
+    val p = s"$dir/tombstones"
+    val stones = Map(0L -> Seq(Tombstones.Interval(5, 9)),
+      3L -> Seq(Tombstones.Interval(1, 2), Tombstones.Interval(7, 8)))
+    Tombstones.write(p, stones)
+    assert(Tombstones.read(p) === stones)
+    val old = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p))
+    // a reader that opened the file before a rewrite still reads the old
+    // stones whole: the new file replaces it, never truncates it
+    val opened = new java.io.FileInputStream(p)
+    try {
+      Tombstones.write(p, Map(3L -> Seq(Tombstones.Interval(4, 4))))
+      assert(opened.readAllBytes().toSeq === old.toSeq)
+    } finally opened.close()
+    assert(Tombstones.read(p) === Map(3L -> Seq(Tombstones.Interval(4, 4))))
+    assert(new java.io.File(dir).list().toSet ===
+      Set("chunks", "index", "meta.json", "tombstones"))
+  }
+
   test("deleteSeries masks partial overlap and prunes covered chunks") {
     val dir = tmpDir("graft_ts_del_")
     writeBlock(dir)

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.{ReferenceFixture, SparkSpec}
-import graft.sources.tsdbblock.{IndexReader, TsdbBlockWriter, WalReader, XorChunk}
+import graft.sources.tsdbblock.{ChunkFile, IndexReader, TsdbBlockWriter, WalReader, XorChunk}
 import org.apache.spark.sql.functions._
 
 /** The block writer against the block reader: Gorilla chunk round
@@ -27,7 +27,7 @@ class TsdbBlockWriterSpec extends SparkSpec {
       ((0L until 50L).map(i => i * 1000L).toArray,
         (0 until 50).map(i => 100.0 + i * 0.125).toArray))
     cases.foreach { case (ts, vs) =>
-      val (dts, dvs) = XorChunk.decode(TsdbBlockWriter.encodeXorChunk(ts, vs))
+      val (dts, dvs) = XorChunk.decode(XorChunk.encode(ts, vs))
       assert(dts.toSeq === ts.toSeq)
       assert(dvs.toSeq.map(java.lang.Double.doubleToLongBits(_)) ===
         vs.toSeq.map(java.lang.Double.doubleToLongBits(_)),
@@ -39,9 +39,9 @@ class TsdbBlockWriterSpec extends SparkSpec {
       "ref") {
     // the ref's high 32 bits are the segment index: 0xFFFFFFFF is the
     // last offset segment 0 can address
-    assert(TsdbBlockWriter.chunkRef(0xFFFFFFFFL) === 0xFFFFFFFFL)
+    assert(ChunkFile.chunkRef(0xFFFFFFFFL) === 0xFFFFFFFFL)
     val e = intercept[IllegalArgumentException] {
-      TsdbBlockWriter.chunkRef(0x100000000L)
+      ChunkFile.chunkRef(0x100000000L)
     }
     assert(e.getMessage.contains("4 GiB"), e.getMessage)
   }

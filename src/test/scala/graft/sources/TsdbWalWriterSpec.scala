@@ -25,6 +25,29 @@ class TsdbWalWriterSpec extends SparkSpec {
     assert(back(2).toSeq === mid.toSeq)
   }
 
+  test("a segment whose records throw leaves no file and no open handle") {
+    val dir = tmpDir("graft_walw_fail_")
+    val path = s"$dir/00000000"
+    // the integer histogram record refuses a fractional count mid-stream
+    val bad = WalReader.WalHistogram(1L, 1000L, 0, 0, 0.0, 0.0, 1.5, 1.0,
+      Nil, Nil, Nil, isFloat = false)
+    def records = Iterator(TsdbWalWriter.seriesRecord(Seq(1L -> Seq("a" -> "b")))) ++
+      Iterator.continually(TsdbWalWriter.histogramRecord(Seq(bad), float = false))
+    def fail(): Unit = {
+      val e = intercept[IllegalArgumentException] {
+        TsdbWalWriter.writeSegment(path, records)
+      }
+      assert(e.getMessage.contains("integral count"), e.getMessage)
+      assert(!new java.io.File(path).exists())
+    }
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.UnixOperatingSystemMXBean]
+    fail() // warm-up: classes load, and may open files, once
+    val before = os.getOpenFileDescriptorCount
+    (1 to 50).foreach(_ => fail())
+    assert(os.getOpenFileDescriptorCount === before)
+  }
+
   test("series + samples records decode through WalReader") {
     val dir = tmpDir("graft_walw2_")
     val series = Seq(
